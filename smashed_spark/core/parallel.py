@@ -103,12 +103,10 @@ def _scan_bytes(df: DataFrame) -> "int | None":
 
 def ensure_min_parallelism(
     df: DataFrame,
-    multiple: int = 1,
     bytes_per_task: "int | None" = None,
 ) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``defaultParallelism *
-    multiple`` partitions iff it currently has fewer — identity
-    otherwise.
+    """Round-robin repartition ``df`` up to ``defaultParallelism``
+    partitions iff it currently has fewer — identity otherwise.
 
     ``bytes_per_task`` (r17, VERDICT item 3) additionally caps the
     widen target at ``ceil(input_file_bytes / bytes_per_task)`` so a
@@ -131,7 +129,7 @@ def ensure_min_parallelism(
     """
     _assert_scan_rooted(df)
     sc = df.sparkSession.sparkContext
-    want = max(1, sc.defaultParallelism * multiple)
+    want = sc.defaultParallelism
     if bytes_per_task is not None and bytes_per_task > 0:
         size = _scan_bytes(df)
         if size is not None:

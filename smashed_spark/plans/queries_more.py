@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import MERSENNE_P, hash_coeffs
-from .registry import load, query
+from .registry import _bind_gate_dir, _claim_gate_dir, load, query
 
 # Bloom geometry for the sample_mix fold — shared by the gate call and
 # the oracle CTEs (the CMS-fold convention) so the two sides can never
@@ -504,72 +504,18 @@ _IO_SKIP_UPPER = 175
 _IO_CACHE_THRESHOLD = 300
 
 
-def _bind_io_zdocs_path() -> str:
-    import os
-    import tempfile
-
-    # explicit override wins: a driver that runs gates in SPAWNED
-    # workers (where a re-import would re-bind under a new pid and
-    # diverge from the oracle string baked in the parent) can pin one
-    # shared location for both the writer and the oracle
-    override = os.environ.get("SMASHED_IO_ZDOCS_DIR")
-    if override:
-        return override
-    return os.path.join(
-        tempfile.gettempdir(), f"smashed_io_zdocs_{os.getpid()}"
-    )
-
-
 # Z-clustered-copy path shared by the gate (writer) and the
-# footer-audit oracle (parquet_metadata reader).  The driver
-# materializes every oracle STRING before any gate runs, so the path
-# must be deterministic ahead of the write — pid-keyed (not mkdtemp'd)
-# so concurrent drive processes never collide.  Bound ONCE at import
-# (not per call): a fork after import copies this constant, so the
-# writer and the oracle can never disagree even if the gate runs in a
-# forked worker while the oracle string was built in the parent.
-# SPAWN caveat: a spawn-started worker re-imports this module under a
-# new pid and would bind a different path — set SMASHED_IO_ZDOCS_DIR
-# in that configuration so parent and worker agree.
-# DuckDB only touches the files at EXECUTE time, which the drive
-# sequences after the Spark run (the gate write is mode=overwrite, so
-# a stale directory from a crashed earlier run is replaced before the
-# oracle reads).
-_IO_ZDOCS_PATH = _bind_io_zdocs_path()
+# footer-audit oracle (parquet_metadata reader); see _bind_gate_dir for
+# the import-time binding and SMASHED_IO_ZDOCS_DIR override.  DuckDB
+# only touches the files at EXECUTE time, which the drive sequences
+# after the Spark run (the gate write is mode=overwrite, so a stale
+# directory from a crashed earlier run is replaced before the oracle
+# reads).
+_IO_ZDOCS_PATH = _bind_gate_dir("SMASHED_IO_ZDOCS_DIR", "smashed_io_zdocs")
 
 
 def _io_zdocs_path() -> str:
     return _IO_ZDOCS_PATH
-
-
-def _claim_io_zdocs_dir(path: str, env_var: str = "SMASHED_IO_ZDOCS_DIR") -> None:
-    """Refuse to write through a path another user pre-created.
-
-    The pid-keyed name is predictable, so on a multi-user host someone
-    could pre-create or symlink it and have the gate's overwrite follow
-    the link.  Claim the directory first: create it 0o700 if absent,
-    and if it already exists require that it is a real directory (not a
-    symlink) owned by us — otherwise fail loudly instead of rewriting
-    foreign files.
-    """
-    import os
-
-    if os.path.islink(path):
-        raise RuntimeError(
-            f"gate staging dir {path!r} is a symlink — refusing "
-            "to write through it (pre-created by another process?). "
-            f"Set {env_var} to a private location."
-        )
-    try:
-        os.makedirs(path, mode=0o700)
-    except FileExistsError:
-        st = os.stat(path, follow_symlinks=False)
-        if hasattr(os, "geteuid") and st.st_uid != os.geteuid():
-            raise RuntimeError(
-                f"gate staging dir {path!r} exists and is owned "
-                f"by uid {st.st_uid}, not us — refusing to overwrite. "
-                f"Set {env_var} to a private location."
-            )
 
 
 def _io_roundtrip_oracle() -> str:
@@ -686,7 +632,7 @@ def q_io_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").repartition(8)
 
     zdocs = _io_zdocs_path()
-    _claim_io_zdocs_dir(zdocs)
+    _claim_gate_dir(zdocs, "SMASHED_IO_ZDOCS_DIR")
     atexit.register(shutil.rmtree, zdocs, ignore_errors=True)
 
     import os
@@ -2170,24 +2116,11 @@ def q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNAP_PRUNE_LOWER = 320
 
 
-def _bind_snapshot_table_path() -> str:
-    import os
-    import tempfile
-
-    override = os.environ.get("SMASHED_SNAPSHOT_DIR")
-    if override:
-        return override
-    return os.path.join(
-        tempfile.gettempdir(), f"smashed_snap_gate_{os.getpid()}"
-    )
-
-
-# same import-time-binding + claim discipline as _IO_ZDOCS_PATH above
-# (the oracle string embeds this path, and the driver materializes
-# every oracle string before any gate runs); see that comment for the
-# fork/spawn rationale.  SMASHED_SNAPSHOT_DIR overrides for spawned
-# workers / multi-user hosts.
-_SNAP_STAGING_PATH = _bind_snapshot_table_path()
+# same import-time binding + claim discipline as _IO_ZDOCS_PATH above
+# (the oracle string embeds this path)
+_SNAP_STAGING_PATH = _bind_gate_dir(
+    "SMASHED_SNAPSHOT_DIR", "smashed_snap_gate"
+)
 
 
 def _snapshot_lifecycle_oracle() -> str:
@@ -2315,7 +2248,7 @@ def q_snapshot_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    _claim_io_zdocs_dir(_SNAP_STAGING_PATH, env_var="SMASHED_SNAPSHOT_DIR")
+    _claim_gate_dir(_SNAP_STAGING_PATH, "SMASHED_SNAPSHOT_DIR")
     atexit.register(shutil.rmtree, _SNAP_STAGING_PATH, ignore_errors=True)
     table = f"{_SNAP_STAGING_PATH}/table"
     # a crashed earlier run's versions would shift allocation and

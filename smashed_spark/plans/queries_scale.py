@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_P, hash_coeffs
-from .registry import load, query
+from .registry import _bind_gate_dir, _claim_gate_dir, load, query
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments
@@ -581,24 +581,10 @@ _MODELQ_CTE = (
 )
 
 
-def _bind_bpe_stage_path() -> str:
-    """Import-time binding for the gate's persisted BPE merge table —
-    same pid-keyed pattern (and SMASHED_BPE_DIR override) as the
-    snapshot gate's staging path: the oracle string embeds this path,
-    and DuckDB reads the file AFTER the Spark side has fit and saved
-    it (oracles execute after their query in the driver's compare)."""
-    import os
-    import tempfile
-
-    override = os.environ.get("SMASHED_BPE_DIR")
-    if override:
-        return override
-    return os.path.join(
-        tempfile.gettempdir(), f"smashed_bpe_gate_{os.getpid()}"
-    )
-
-
-_BPE_STAGE_PATH = _bind_bpe_stage_path()
+# the gate's persisted BPE merge table: the oracle string embeds this
+# path, and DuckDB reads the file AFTER the Spark side has fit and saved
+# it (oracles execute after their query in the driver's compare)
+_BPE_STAGE_PATH = _bind_gate_dir("SMASHED_BPE_DIR", "smashed_bpe_gate")
 
 # one fit per (process, sf_dir): the merge table is deterministic for
 # a given corpus, so bench reps and repeated gate invocations reuse it
@@ -613,12 +599,11 @@ def _bpe_gate_merges(spark, sf_dir: str, bpe_words):
     import shutil
 
     from ..functions.bpe import fit_bpe_merges, save_bpe_merges
-    from .queries_more import _claim_io_zdocs_dir
     from .registry import load
 
     merges = _BPE_MERGES_CACHE.get(sf_dir)
     if merges is None:
-        _claim_io_zdocs_dir(_BPE_STAGE_PATH, env_var="SMASHED_BPE_DIR")
+        _claim_gate_dir(_BPE_STAGE_PATH, "SMASHED_BPE_DIR")
         if not _BPE_MERGES_CACHE:
             atexit.register(
                 shutil.rmtree, _BPE_STAGE_PATH, ignore_errors=True
@@ -2110,23 +2095,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(inc)
 
 
-def _bind_media_gate_path() -> str:
-    import os
-    import tempfile
-
-    # same contract as queries_more._IO_ZDOCS_PATH (TRAP 22): the drive
-    # materializes oracle strings BEFORE gates run, so the path must be
-    # deterministic ahead of the write — pid-keyed, bound once at
-    # import, env-overridable for spawn-started workers
-    override = os.environ.get("SMASHED_MEDIA_GATE_DIR")
-    if override:
-        return override
-    return os.path.join(
-        tempfile.gettempdir(), f"smashed_media_gate_{os.getpid()}"
-    )
-
-
-_MEDIA_GATE_PATH = _bind_media_gate_path()
+_MEDIA_GATE_PATH = _bind_gate_dir(
+    "SMASHED_MEDIA_GATE_DIR", "smashed_media_gate"
+)
 
 
 def _synth_media_batches(batches):
@@ -2267,14 +2238,12 @@ def q_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
         FrameSampleMapper,
         MediaHeaderMapper,
     )
-    from .queries_more import _claim_io_zdocs_dir
-
     ensure_shipped(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("media")
     )
 
-    _claim_io_zdocs_dir(_MEDIA_GATE_PATH, env_var="SMASHED_MEDIA_GATE_DIR")
+    _claim_gate_dir(_MEDIA_GATE_PATH, "SMASHED_MEDIA_GATE_DIR")
     atexit.register(shutil.rmtree, _MEDIA_GATE_PATH, ignore_errors=True)
     docs.select("doc_id").mapInPandas(
         _synth_media_batches, "doc_id long, media_blob binary"

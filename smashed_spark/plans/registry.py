@@ -72,6 +72,57 @@ def query(name: str, oracle: Optional[Union[str, Callable[[], str]]] = None):
     return deco
 
 
+def _bind_gate_dir(env_var: str, stem: str) -> str:
+    """Staging dir a gate writes and its oracle string reads.
+
+    The driver materializes every oracle string before any gate runs,
+    so the path must be known ahead of the write: pid-keyed (not
+    mkdtemp'd) so concurrent drive processes never collide, and bound
+    ONCE at import by the caller, so a worker forked after import
+    copies the same constant and the writer and the oracle cannot
+    disagree.  A spawn-started worker re-imports under a new pid and
+    would bind a different path — ``env_var`` pins one shared location
+    for that configuration (and for multi-user hosts).
+    """
+    import os
+    import tempfile
+
+    override = os.environ.get(env_var)
+    if override:
+        return override
+    return os.path.join(tempfile.gettempdir(), f"{stem}_{os.getpid()}")
+
+
+def _claim_gate_dir(path: str, env_var: str) -> None:
+    """Refuse to write through a path another user pre-created.
+
+    The pid-keyed name is predictable, so on a multi-user host someone
+    could pre-create or symlink it and have the gate's overwrite follow
+    the link.  Claim the directory first: create it 0o700 if absent,
+    and if it already exists require that it is a real directory (not a
+    symlink) owned by us — otherwise fail loudly instead of rewriting
+    foreign files.
+    """
+    import os
+
+    if os.path.islink(path):
+        raise RuntimeError(
+            f"gate staging dir {path!r} is a symlink — refusing "
+            "to write through it (pre-created by another process?). "
+            f"Set {env_var} to a private location."
+        )
+    try:
+        os.makedirs(path, mode=0o700)
+    except FileExistsError:
+        st = os.stat(path, follow_symlinks=False)
+        if hasattr(os, "geteuid") and st.st_uid != os.geteuid():
+            raise RuntimeError(
+                f"gate staging dir {path!r} exists and is owned "
+                f"by uid {st.st_uid}, not us — refusing to overwrite. "
+                f"Set {env_var} to a private location."
+            )
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a testdata table.
 

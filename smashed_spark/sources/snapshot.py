@@ -52,22 +52,13 @@ Crash windows (writer side)
    from destroying it by default).
 3. The flip itself: atomic on both tiers (see above) — no window.
 
-Concurrency: the lost-update check (the publisher re-reads the pointer
-immediately before flipping) DETECTS a second writer — plain S3 has no
-compare-and-swap to build a real lock on.  What happens next depends on
-whether the operation commutes:
-
-* **Appends rebase and retry** (bounded by ``DEFAULT_COMMIT_RETRIES``):
-  an append only ADDS files, so the loser re-resolves the new parent,
-  re-carries its file list, re-allocates a version, and re-flips — the
-  immutable data prefix from the first attempt is reused, so a rebase
-  costs two small JSON writes, not a data rewrite.  Both interleaved
-  appends land, linearized.  A rebase that finds the table's SCHEMA
-  changed underneath it refuses (the written files may no longer
-  match).
-* **Everything else (publish/compact/optimize/delete) stays SINGLE
-  WRITER by contract** and raises: a rewrite rebased onto a moved
-  parent would silently drop the concurrent commit's rows.
+Concurrency: every verb commits through :func:`_commit`, whose
+lost-update check (the pointer is re-read immediately before the flip)
+DETECTS a second writer — plain S3 has no compare-and-swap to build a
+real lock on.  What a verb does after losing the race depends on
+whether it commutes with the winner: appends rebase, positional
+deletes rebase onto an append-only chain, everything else refuses.
+The three policies are stated once, in ``_commit``'s docstring.
 
 Scale notes
 -----------
@@ -553,6 +544,124 @@ def _next_version(root: SmartPath, client=None) -> int:
     ptr = _pointer_version(root, client=client)
     ceiling = max([ptr or 0] + versions)
     return ceiling + 1
+
+
+def _commit(
+    root: SmartPath,
+    table_root: str,
+    manifest: Dict[str, object],
+    expect_parent: Optional[int],
+    client=None,
+) -> Optional[SnapshotInfo]:
+    """THE commit: the only place a version manifest is written and the
+    pointer flipped.  The order is the crash-safety argument (module
+    docstring, crash windows 2 and 3) and must not change:
+
+    1. if ``manifest``'s version already has a manifest, a second
+       writer claimed the number while we were writing data — never
+       clobber it (manifests are immutable).  Detection, not
+       prevention: the exists→write pair is not atomic on plain S3, but
+       it turns the silent-overwrite failure mode into a loud one in
+       every race this side of a same-millisecond photo finish;
+    2. write the manifest atomically;
+    3. re-read the pointer: if it moved off ``expect_parent``, flipping
+       now would silently drop the winner's snapshot from the chain;
+    4. flip the pointer atomically — this IS the commit;
+    5. resolve and return the committed version.
+
+    Returns ``None`` when the race is lost at step 1 or 3.  No pointer
+    is written then; a manifest written at step 2 is off-chain debris,
+    exactly like crash window 2.  What the caller does next is its
+    concurrency policy, and there are three:
+
+    * **Carried appends rebase and retry** (``publish_snapshot`` with
+      ``operation="append"``, bounded by ``DEFAULT_COMMIT_RETRIES``):
+      an append only ADDS files, so the loser re-resolves the new head,
+      re-carries its file list, re-allocates a version and commits
+      again, reusing the immutable data prefix of its first attempt —
+      a rebase costs two small JSON writes, not a data rewrite.  Both
+      appends land, linearized.  A rebase that finds the written files
+      no longer match the table's schema or partition layout refuses.
+    * **Positional deletes rebase onto an append-only chain** (same
+      bound, via :func:`_rebase_append_only_head`): the sidecar's
+      (file, position) pairs still point at exactly the rows they were
+      computed over after any number of pure appends, so the delete
+      re-commits onto the new head; any concurrent rewrite refuses.
+    * **Everything else refuses** — publish, compact, optimize, the
+      copy-on-write delete and merge, the positional merge and restore
+      are SINGLE WRITER by contract: a rewrite rebased onto a moved
+      parent would silently drop the concurrent commit's rows, a
+      positional merge could leave two live copies of a key appended
+      concurrently, and a restore was planned against the head it
+      replaces.
+    """
+    version = int(manifest["version"])
+    manifest_path = str(root / _manifest_key(version))
+    if io_utils.exists(manifest_path, client=client):
+        return None
+    _write_atomic(
+        manifest_path, json.dumps(manifest, indent=1), client=client
+    )
+    if _pointer_version(root, client=client) != expect_parent:
+        return None
+    _write_atomic(
+        _pointer_path(root),
+        json.dumps({"version": version, "manifest": _manifest_key(version)}),
+        client=client,
+    )
+    return resolve_snapshot(table_root, version, client=client)
+
+
+def _race_error(
+    verb: str, version: int, table_root: str, rebasing: bool
+) -> RuntimeError:
+    """The error a verb raises once it stops retrying a lost
+    :func:`_commit` race: a ``rebasing`` verb after its rebase budget,
+    any other verb at once."""
+    if rebasing:
+        why = (
+            f"still racing after {DEFAULT_COMMIT_RETRIES} rebase "
+            "retries — sustained concurrent writes"
+        )
+    else:
+        why = (
+            "concurrent writer detected; this table requires a single "
+            "writer for non-append operations"
+        )
+    return RuntimeError(
+        f"{verb}: lost the commit of v{version} on {table_root!r} — "
+        f"{why}.  The prepared manifest {_manifest_key(version)!r}, if "
+        "written, was NOT published; it and any prefix this commit "
+        "wrote are debris (vacuum with drop_unpublished=True sweeps "
+        "them).  Re-run against the current snapshot."
+    )
+
+
+def _carried_metadata(info: SnapshotInfo) -> Dict[str, object]:
+    """The manifest fields a metadata-level commit (positional delete
+    or merge, restore) copies from ``info`` verbatim: the schema
+    (``columns``, the ``schemas`` registry and ``schema_id``), the
+    ``partition_transforms`` layout, pending positional
+    ``delete_files``, and the ``_PROPAGATED_PROPS`` properties."""
+    out: Dict[str, object] = {
+        "properties": {
+            k: info.properties[k]
+            for k in _PROPAGATED_PROPS
+            if k in info.properties
+        },
+    }
+    if info.columns is not None:
+        out["columns"] = dict(info.columns)
+    if info.schemas is not None:
+        out["schemas"] = {k: dict(v) for k, v in info.schemas.items()}
+        out["schema_id"] = info.schema_id
+    if info.partition_transforms:
+        out["partition_transforms"] = {
+            k: list(v) for k, v in info.partition_transforms.items()
+        }
+    if info.delete_files:
+        out["delete_files"] = [dict(d) for d in info.delete_files]
+    return out
 
 
 def _local_parquet_files(local_dir: str) -> List[str]:
@@ -1480,15 +1589,11 @@ def publish_snapshot(
     """
     root = SmartPath.parse(table_root)
     carry = _carry_parent or _carry_files is not None
-    # append commits COMMUTE (each only adds files), so a lost race is
-    # rebased and retried instead of raised: re-resolve the new parent,
-    # re-carry its files, re-allocate a version, and re-flip — the data
-    # prefix written on the first attempt is immutable and reused (its
-    # name keeps the first attempt's allocation number; nothing parses
-    # prefix names).  Every other operation keeps the loud refusal: a
-    # rewrite (compact/optimize/delete) rebased onto a parent that
-    # changed underneath it would silently drop the concurrent commit's
-    # rows from the survivors.
+    # a carried append rebases after a lost race (see _commit): each
+    # retry re-runs this loop from the new parent and reuses the data
+    # prefix written on the first attempt (its name keeps that
+    # attempt's allocation number; nothing parses prefix names).
+    # Every other operation refuses.
     retryable = _carry_parent and operation == "append"
     attempts_left = DEFAULT_COMMIT_RETRIES if retryable else 0
     written: Optional[Dict[str, object]] = None
@@ -1846,74 +1951,15 @@ def publish_snapshot(
             manifest["schema_id"] = schema_id
         if eff_transforms:
             manifest["partition_transforms"] = eff_transforms
-        # manifests are immutable: if OUR allocated version already has
-        # one, a second writer claimed it while we were writing data —
-        # rebase (appends) or refuse rather than clobber their
-        # (possibly already-published) manifest.  Detection, not
-        # prevention: the exists→write pair is not atomic on plain S3,
-        # but it converts the silent-overwrite failure mode into a loud
-        # one in every race this side of a same-millisecond photo
-        # finish.
-        manifest_path = str(root / _manifest_key(version))
-        if io_utils.exists(manifest_path, client=client):
-            if attempts_left > 0:
-                attempts_left -= 1
-                continue
-            if retryable:
-                raise RuntimeError(
-                    f"append_snapshot: manifest for v{version} already "
-                    f"exists after {DEFAULT_COMMIT_RETRIES} rebase "
-                    "retries — sustained concurrent writes on "
-                    f"{table_root!r}; re-run the append (our data "
-                    "prefix and any off-chain manifests are debris; "
-                    "vacuum with drop_unpublished=True sweeps them)."
-                )
-            raise RuntimeError(
-                f"publish_snapshot: manifest for v{version} already "
-                "exists — concurrent writer detected; this table "
-                "requires a single writer for non-append operations.  "
-                "Our data prefix is an orphan (vacuum will sweep it)."
+        info = _commit(root, table_root, manifest, begin_version, client)
+        if info is not None:
+            return info
+        if attempts_left <= 0:
+            raise _race_error(
+                "append_snapshot" if retryable else "publish_snapshot",
+                version, table_root, rebasing=retryable,
             )
-        _write_atomic(
-            manifest_path, json.dumps(manifest, indent=1), client=client
-        )
-
-        # lost-update check: if someone else flipped the pointer while
-        # we wrote, flipping now would silently discard their snapshot
-        # from the chain — rebase (appends; our just-written manifest
-        # becomes off-chain debris exactly like crash window 2) or
-        # refuse (everything else)
-        current = _pointer_version(root, client=client)
-        if current != begin_version:
-            if attempts_left > 0:
-                attempts_left -= 1
-                continue
-            if retryable:
-                raise RuntimeError(
-                    f"append_snapshot: pointer moved {begin_version} "
-                    f"-> {current} after {DEFAULT_COMMIT_RETRIES} "
-                    "rebase retries — sustained concurrent writes on "
-                    f"{table_root!r}; re-run the append.  The prepared "
-                    f"manifest {_manifest_key(version)!r} was NOT "
-                    "published (off-chain debris; vacuum with "
-                    "drop_unpublished=True to discard)."
-                )
-            raise RuntimeError(
-                f"publish_snapshot: pointer moved {begin_version} -> "
-                f"{current} during publish of v{version} — concurrent "
-                "writer detected; this table requires a single writer "
-                "for non-append operations. The prepared manifest "
-                f"{_manifest_key(version)!r} was NOT published (vacuum "
-                "with drop_unpublished=True to discard, or re-publish)."
-            )
-        _write_atomic(
-            _pointer_path(root),
-            json.dumps(
-                {"version": version, "manifest": _manifest_key(version)}
-            ),
-            client=client,
-        )
-        return resolve_snapshot(table_root, version, client=client)
+        attempts_left -= 1
 
 
 def append_snapshot(
@@ -3197,46 +3243,6 @@ def _collected_prune_literal(spark: SparkSession, v, dtype):
 _DELETE_DIR = "_deletes"
 
 
-def _commit_manifest(
-    root: SmartPath,
-    table_root: str,
-    manifest: Dict[str, object],
-    expect_parent: Optional[int],
-    verb: str,
-    client=None,
-) -> SnapshotInfo:
-    """Commit tail shared by the non-rebasing single-commit verbs
-    (restore, positional delete): manifest-exists refusal -> atomic
-    manifest write -> pointer-moved refusal -> pointer flip.
-    publish_snapshot keeps its OWN copy of this sequence, intertwined
-    with the append-rebase retry state — a protocol change here must
-    land there too (and vice versa)."""
-    version = int(manifest["version"])
-    manifest_path = str(root / _manifest_key(version))
-    if io_utils.exists(manifest_path, client=client):
-        raise RuntimeError(
-            f"{verb}: manifest for v{version} already exists - "
-            "concurrent writer detected; this table requires a single "
-            "writer for non-append operations."
-        )
-    _write_atomic(manifest_path, json.dumps(manifest, indent=1),
-                  client=client)
-    moved = _pointer_version(root, client=client)
-    if moved != expect_parent:
-        raise RuntimeError(
-            f"{verb}: pointer moved {expect_parent} -> {moved} during "
-            "the commit - concurrent writer detected; the prepared "
-            f"manifest {_manifest_key(version)!r} was NOT published "
-            "(vacuum with drop_unpublished=True to discard, or re-run)."
-        )
-    _write_atomic(
-        _pointer_path(root),
-        json.dumps({"version": version, "manifest": _manifest_key(version)}),
-        client=client,
-    )
-    return resolve_snapshot(table_root, version, client=client)
-
-
 def _write_delete_sidecar(
     positions: DataFrame,
     root: SmartPath,
@@ -3357,106 +3363,113 @@ def _rebase_append_only_head(
     return head
 
 
-def _commit_positional_delete(
+def _commit_positional(
     table_root: str,
     parent: SnapshotInfo,
-    positions: DataFrame,
-    n_deleted: int,
+    positions: Optional[DataFrame],
+    n_positions: int,
     compression: str,
     client=None,
+    batch: Optional[DataFrame] = None,
+    stats_columns: Optional[Sequence[str]] = None,
 ) -> SnapshotInfo:
-    """Commit a positional delete: parent file entries VERBATIM, new
-    sidecar shards, row_count down by exactly ``n_deleted`` (the
-    positions were computed over a delete-aware scan, so they are
-    disjoint from every pending sidecar).
+    """Commit a merge-on-read change in ONE version: every parent file
+    entry VERBATIM, ``batch`` (if any) as new data files, and the
+    ``n_positions`` (file, position) pairs in ``positions`` (if any) as
+    a delete sidecar in the same prefix — physical writes are O(batch)
+    + O(positions), never O(table).  The positions were computed over a
+    delete-aware scan, so they are disjoint from every pending sidecar
+    and row_count moves by exactly ``rows(batch) - n_positions``.
 
-    **Commutes with concurrent appends** (publish_snapshot's rebase
-    discipline, specialized): the sidecar references only files that
-    existed at planning time, and an append carries every parent entry
-    verbatim, so a lost race against a pure append REBASES onto the
-    new head and retries instead of refusing — the busy-ingest table
-    no longer has to quiesce its stream to forget rows.  Semantics are
-    write-serializable, matching Iceberg's positional tier: the delete
-    applies to the rows that existed when it was PLANNED; a row with a
-    matching key appended concurrently is not scanned and survives.
-    Any concurrent REWRITE still refuses (it can move the very rows
-    the positions point at).  The sidecar prefix is written once and
-    reused across attempts (its name keeps the first allocation's
-    number; nothing parses prefix names)."""
+    A positional delete is a merge with no batch, and that alone
+    decides the lost-race policy (see :func:`_commit`):
+
+    * no batch (``apply_deletions_snapshot(positional=True)``):
+      **commutes with concurrent appends** — the sidecar references
+      only files that existed at planning time, and an append carries
+      every parent entry verbatim — so a race lost to pure appends
+      REBASES onto the new head and retries instead of refusing; the
+      busy-ingest table need not quiesce its stream to forget rows.
+      Semantics are write-serializable, matching Iceberg's positional
+      tier: the delete applies to the rows that existed when it was
+      PLANNED; a row with a matching key appended concurrently is not
+      scanned and survives.  Any concurrent REWRITE refuses (it can
+      move the very rows the positions point at).
+    * a batch (``merge_snapshot(positional=True)``): refuses — a
+      concurrent append could insert one of the batch's keys after the
+      match scan, leaving two live copies.
+
+    The batch was aligned to the table's current schema by the caller,
+    so its files are tagged with the current generation; the sidecar is
+    schema-independent (path/pos only).  The prefix is written once and
+    reused across rebase attempts (its name keeps the first
+    allocation's number; nothing parses prefix names)."""
     root = SmartPath.parse(table_root)
     version = _next_version(root, client=client)
     token = uuid.uuid4().hex[:8]
     rel_prefix = f"{DATA_DIR}/v{version:08d}-{token}"
-    sidecars = _write_delete_sidecar(
-        positions, root, rel_prefix, compression, n_deleted,
-        client=client,
-    )
+    written: Dict[str, object] = {"files": [], "row_count": 0}
+    if batch is not None:
+        columns = parent.columns
+        transforms = None
+        if parent.partition_transforms:
+            # inherited layout, same stance as publish's carried commits
+            # (no strict bucket-type re-check: the table already has it)
+            transforms = _validate_transforms(
+                dict(parent.partition_transforms),
+                columns or {},
+                strict_bucket_types=False,
+            )
+        eff_stats = [
+            c
+            for c in (stats_columns or ())
+            if columns is None or _stats_eligible_simple(columns.get(c))
+        ]
+        written = _write_data_prefix(
+            batch, root, rel_prefix, compression,
+            stats_columns=eff_stats, client=client, transforms=transforms,
+        )
+        for entry in written["files"]:
+            entry.pop("schema", None)
+            if parent.schemas is not None and parent.schema_id != "0":
+                entry["schema"] = parent.schema_id
+    sidecars: List[Dict[str, object]] = []
+    if positions is not None:
+        sidecars = _write_delete_sidecar(
+            positions, root, rel_prefix, compression, n_positions,
+            client=client,
+        )
+    if batch is None:
+        verb, operation = "apply_deletions_snapshot", "delete"
+    else:
+        verb, operation = "merge_snapshot", "merge"
     head = parent
     attempts_left = DEFAULT_COMMIT_RETRIES
-    verb = "apply_deletions_snapshot"
     while True:
-        props = {
-            k: head.properties[k]
-            for k in _PROPAGATED_PROPS
-            if k in head.properties
-        }
         manifest = {
             "version": version,
             "spec": 2,
             "data_prefix": rel_prefix,
             "prefixes": sorted(set(head.prefixes) | {rel_prefix}),
-            "files": [dict(f) for f in head.files],
-            "row_count": head.row_count - n_deleted,
+            "files": [dict(f) for f in head.files] + written["files"],
+            "row_count": (
+                head.row_count - n_positions + written["row_count"]
+            ),
             "parent": head.version,
-            "operation": "delete",
+            "operation": operation,
             "committed_at": time.time(),
             "format": "parquet",
-            "properties": props,
-            "delete_files": [
-                *(dict(d) for d in head.delete_files or []),
-                *sidecars,
-            ],
+            **_carried_metadata(head),
         }
-        if head.columns is not None:
-            manifest["columns"] = dict(head.columns)
-        if head.schemas is not None:
-            manifest["schemas"] = {
-                k: dict(v) for k, v in head.schemas.items()
-            }
-            manifest["schema_id"] = head.schema_id
-        if head.partition_transforms:
-            manifest["partition_transforms"] = {
-                k: list(v) for k, v in head.partition_transforms.items()
-            }
-        manifest_path = str(root / _manifest_key(version))
-        raced = io_utils.exists(manifest_path, client=client)
-        if not raced:
-            _write_atomic(
-                manifest_path, json.dumps(manifest, indent=1),
-                client=client,
-            )
-            moved = _pointer_version(root, client=client)
-            if moved == head.version:
-                _write_atomic(
-                    _pointer_path(root),
-                    json.dumps(
-                        {
-                            "version": version,
-                            "manifest": _manifest_key(version),
-                        }
-                    ),
-                    client=client,
-                )
-                return resolve_snapshot(table_root, version, client=client)
-            raced = True
-        if attempts_left <= 0:
-            raise RuntimeError(
-                f"{verb}: commit still racing after "
-                f"{DEFAULT_COMMIT_RETRIES} append-rebase retries — "
-                f"sustained concurrent writes on {table_root!r}; re-run "
-                "the positional delete (the sidecar prefix and any "
-                "off-chain manifests are debris; vacuum with "
-                "drop_unpublished=True sweeps them)."
+        delete_files = [*manifest.pop("delete_files", []), *sidecars]
+        if delete_files:
+            manifest["delete_files"] = delete_files
+        info = _commit(root, table_root, manifest, head.version, client)
+        if info is not None:
+            return info
+        if batch is not None or attempts_left <= 0:
+            raise _race_error(
+                verb, version, table_root, rebasing=batch is None
             )
         attempts_left -= 1
         # the rebase validates append-only ancestry back to the
@@ -3727,7 +3740,7 @@ def apply_deletions_snapshot(
                 "file-path normalization drifted; refusing to write a "
                 "sidecar reads would silently ignore"
             )
-        return _commit_positional_delete(
+        return _commit_positional(
             table_root, info, positions, n_deleted, compression,
             client=client,
         )
@@ -3765,103 +3778,6 @@ def apply_deletions_snapshot(
         client=client,
         _carry_files=untouched,
         _expect_parent=info.version,
-    )
-
-
-def _commit_positional_merge(
-    table_root: str,
-    parent: SnapshotInfo,
-    batch: DataFrame,
-    positions: Optional[DataFrame],
-    n_matched: int,
-    compression: str,
-    stats_columns: Optional[Sequence[str]],
-    client=None,
-) -> SnapshotInfo:
-    """Commit a merge-on-read upsert in ONE version: every parent file
-    entry VERBATIM, the batch as new data files, the matched rows'
-    positions as a delete sidecar in the same prefix — physical writes
-    are O(batch) + O(matched rows), never O(table).  The batch was
-    aligned to the table's current schema by the caller, so its files
-    are tagged with the current generation; the sidecar is
-    schema-independent (path/pos only).  Commit tail is the
-    single-commit `_commit_manifest` (a concurrent append could
-    insert the same key after our match scan — two live copies — so
-    unlike the pure positional delete this verb does NOT rebase)."""
-    root = SmartPath.parse(table_root)
-    version = _next_version(root, client=client)
-    token = uuid.uuid4().hex[:8]
-    rel_prefix = f"{DATA_DIR}/v{version:08d}-{token}"
-    columns = (
-        dict(parent.columns) if parent.columns is not None else None
-    )
-    transforms = None
-    if parent.partition_transforms:
-        # inherited layout, same stance as publish's carried commits
-        # (no strict bucket-type re-check: the table already has it)
-        transforms = _validate_transforms(
-            dict(parent.partition_transforms),
-            columns or {},
-            strict_bucket_types=False,
-        )
-    eff_stats = [
-        c
-        for c in (stats_columns or ())
-        if columns is None or _stats_eligible_simple(columns.get(c))
-    ]
-    written = _write_data_prefix(
-        batch, root, rel_prefix, compression,
-        stats_columns=eff_stats, client=client, transforms=transforms,
-    )
-    sidecars: List[Dict[str, object]] = []
-    if positions is not None and n_matched > 0:
-        sidecars = _write_delete_sidecar(
-            positions, root, rel_prefix, compression, n_matched,
-            client=client,
-        )
-    for entry in written["files"]:
-        entry.pop("schema", None)
-    if parent.schemas is not None and parent.schema_id != "0":
-        for entry in written["files"]:
-            entry["schema"] = parent.schema_id
-    props = {
-        k: parent.properties[k]
-        for k in _PROPAGATED_PROPS
-        if k in parent.properties
-    }
-    delete_files = [
-        *(dict(d) for d in parent.delete_files or []),
-        *sidecars,
-    ]
-    manifest = {
-        "version": version,
-        "spec": 2,
-        "data_prefix": rel_prefix,
-        "prefixes": sorted(set(parent.prefixes) | {rel_prefix}),
-        "files": [dict(f) for f in parent.files] + written["files"],
-        "row_count": parent.row_count - n_matched + written["row_count"],
-        "parent": parent.version,
-        "operation": "merge",
-        "committed_at": time.time(),
-        "format": "parquet",
-        "properties": props,
-    }
-    if delete_files:
-        manifest["delete_files"] = delete_files
-    if columns is not None:
-        manifest["columns"] = columns
-    if parent.schemas is not None:
-        manifest["schemas"] = {
-            k: dict(v) for k, v in parent.schemas.items()
-        }
-        manifest["schema_id"] = parent.schema_id
-    if parent.partition_transforms:
-        manifest["partition_transforms"] = {
-            k: list(v) for k, v in parent.partition_transforms.items()
-        }
-    return _commit_manifest(
-        root, table_root, manifest, parent.version, "merge_snapshot",
-        client=client,
     )
 
 
@@ -4119,9 +4035,9 @@ def merge_snapshot(
                     )
             else:
                 positions = None
-        return _commit_positional_merge(
-            table_root, info, batch, positions, n_matched,
-            compression, stats_columns, client=client,
+        return _commit_positional(
+            table_root, info, positions, n_matched, compression,
+            client=client, batch=batch, stats_columns=stats_columns,
         )
     if touched:
         scan_info = SnapshotInfo(**{**info.__dict__, "files": touched})
@@ -4206,6 +4122,8 @@ def restore_snapshot(
     # spec-1 targets to the spec-2 root-relative convention) — no
     # second manifest GET.  data_prefix was built as str(root / rel)
     # at resolve time; strip the root back off for the manifest field.
+    # Pending positional deletes of the target stay pending — their
+    # sidecar prefixes are in target.prefixes.
     rel_prefix = target.data_prefix[len(str(root)):].lstrip("/")
     manifest = {
         "version": new_version,
@@ -4220,29 +4138,15 @@ def restore_snapshot(
         "committed_at": time.time(),
         # module-wide invariant: every publish writes format=parquet
         "format": "parquet",
+        **_carried_metadata(target),
         "properties": props,
     }
-    if target.columns is not None:
-        manifest["columns"] = dict(target.columns)
-    if target.schemas is not None:
-        manifest["schemas"] = {
-            k: dict(v) for k, v in target.schemas.items()
-        }
-        manifest["schema_id"] = target.schema_id
-    if target.partition_transforms:
-        manifest["partition_transforms"] = {
-            k: list(v) for k, v in target.partition_transforms.items()
-        }
-    if target.delete_files:
-        # restoring to a state with pending positional deletes keeps
-        # them pending — their sidecar prefixes are in target.prefixes
-        manifest["delete_files"] = [
-            dict(d) for d in target.delete_files
-        ]
-    return _commit_manifest(
-        root, table_root, manifest, current.version,
-        "restore_snapshot", client=client,
-    )
+    info = _commit(root, table_root, manifest, current.version, client)
+    if info is None:
+        raise _race_error(
+            "restore_snapshot", new_version, table_root, rebasing=False
+        )
+    return info
 
 
 __all__ = [

@@ -6,33 +6,30 @@ import os
 
 import pytest
 
-from smashed_spark.plans.queries_more import (
-    _bind_io_zdocs_path,
-    _claim_io_zdocs_dir,
-)
-from smashed_spark.plans.queries_scale import _bind_media_gate_path
+from smashed_spark.plans.registry import _bind_gate_dir, _claim_gate_dir
 
 
 def test_env_override_beats_pid_keying(monkeypatch, tmp_path):
     target = str(tmp_path / "pinned")
-    monkeypatch.setenv("SMASHED_IO_ZDOCS_DIR", target)
-    assert _bind_io_zdocs_path() == target
-    monkeypatch.delenv("SMASHED_IO_ZDOCS_DIR")
-    assert str(os.getpid()) in _bind_io_zdocs_path()
-
-    monkeypatch.setenv("SMASHED_MEDIA_GATE_DIR", target)
-    assert _bind_media_gate_path() == target
-    monkeypatch.delenv("SMASHED_MEDIA_GATE_DIR")
-    assert str(os.getpid()) in _bind_media_gate_path()
+    for env_var, stem in (
+        ("SMASHED_IO_ZDOCS_DIR", "smashed_io_zdocs"),
+        ("SMASHED_SNAPSHOT_DIR", "smashed_snap_gate"),
+        ("SMASHED_BPE_DIR", "smashed_bpe_gate"),
+        ("SMASHED_MEDIA_GATE_DIR", "smashed_media_gate"),
+    ):
+        monkeypatch.setenv(env_var, target)
+        assert _bind_gate_dir(env_var, stem) == target
+        monkeypatch.delenv(env_var)
+        assert str(os.getpid()) in _bind_gate_dir(env_var, stem)
 
 
 def test_claim_creates_private_dir(tmp_path):
     path = str(tmp_path / "fresh")
-    _claim_io_zdocs_dir(path)
+    _claim_gate_dir(path, "SMASHED_IO_ZDOCS_DIR")
     assert os.path.isdir(path)
     assert os.stat(path).st_mode & 0o777 == 0o700
     # idempotent on our own dir
-    _claim_io_zdocs_dir(path)
+    _claim_gate_dir(path, "SMASHED_IO_ZDOCS_DIR")
 
 
 def test_claim_refuses_symlink(tmp_path):
@@ -41,9 +38,7 @@ def test_claim_refuses_symlink(tmp_path):
     link = tmp_path / "link"
     link.symlink_to(real)
     with pytest.raises(RuntimeError, match="symlink"):
-        _claim_io_zdocs_dir(str(link))
+        _claim_gate_dir(str(link), "SMASHED_IO_ZDOCS_DIR")
     # the env-var name surfaces in the remediation message
     with pytest.raises(RuntimeError, match="SMASHED_MEDIA_GATE_DIR"):
-        _claim_io_zdocs_dir(
-            str(link), env_var="SMASHED_MEDIA_GATE_DIR"
-        )
+        _claim_gate_dir(str(link), "SMASHED_MEDIA_GATE_DIR")

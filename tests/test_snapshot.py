@@ -105,13 +105,70 @@ def test_reader_scans_manifest_file_list_not_prefix(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _crash_seed(spark, root):
+    """v1 publish + v2 append: enough history for every commit verb
+    (restore needs an older version to roll back to)."""
+    from pyspark.sql import functions as F
+
+    publish_snapshot(_df(spark, 10, "a"), root)
+    snap.append_snapshot(
+        _df(spark, 5, "b").withColumn("doc_id", F.col("doc_id") + 100),
+        root,
+    )
+
+
+def _rows_replaced(rows, new_rows):
+    ids = {r[0] for r in new_rows}
+    return sorted([r for r in rows if r[0] not in ids] + new_rows)
+
+
+# every commit verb crosses the same two crash windows.  Each case is
+# (run the verb, the rows it leaves given the rows before it, whether
+# it writes a data prefix): publish writes new data, the positional
+# delete a sidecar prefix, the positional merge batch files plus a
+# sidecar, and restore only metadata
+_CRASH_VERBS = {
+    "publish": (
+        lambda spark, root: publish_snapshot(_df(spark, 20, "c"), root),
+        lambda spark, before: _rows(_df(spark, 20, "c")),
+        True,
+    ),
+    "positional_delete": (
+        lambda spark, root: apply_deletions_snapshot(
+            spark, root, keys=[3], key_field="doc_id", positional=True
+        ),
+        lambda spark, before: [r for r in before if r[0] != 3],
+        True,
+    ),
+    "positional_merge": (
+        lambda spark, root: snap.merge_snapshot(
+            spark, root, _df(spark, 2, "m"), "doc_id", positional=True
+        ),
+        lambda spark, before: _rows_replaced(
+            before, _rows(_df(spark, 2, "m"))
+        ),
+        True,
+    ),
+    "restore": (
+        lambda spark, root: snap.restore_snapshot(root, version=1),
+        lambda spark, before: _rows(_df(spark, 10, "a")),
+        False,
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", list(_CRASH_VERBS))
 def test_crash_before_manifest_is_invisible_and_vacuumable(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, verb
 ):
     """Window 1: data prefix written, manifest never lands.  The old
     snapshot stays current; retry succeeds; vacuum sweeps the orphan."""
+    run, expect, writes_data = _CRASH_VERBS[verb]
     root = _root(tmp_path)
-    publish_snapshot(_df(spark, 10, "a"), root)
+    _crash_seed(spark, root)
+    before = _rows(read_snapshot(spark, root))
+    data_dir = os.path.join(root, snap.DATA_DIR)
+    dirs_before = set(os.listdir(data_dir))
 
     real = snap._write_atomic
 
@@ -122,40 +179,48 @@ def test_crash_before_manifest_is_invisible_and_vacuumable(
 
     monkeypatch.setattr(snap, "_write_atomic", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        publish_snapshot(_df(spark, 20, "b"), root)
+        run(spark, root)
     monkeypatch.undo()
 
     # reader: unaffected
-    assert resolve_snapshot(root).version == 1
-    assert _rows(read_snapshot(spark, root)) == _rows(_df(spark, 10, "a"))
+    assert resolve_snapshot(root).version == 2
+    assert _rows(read_snapshot(spark, root)) == before
+    assert list_snapshots(root) == [1, 2]
     # orphan prefix exists but is unreferenced
-    data_dirs = os.listdir(os.path.join(root, snap.DATA_DIR))
-    assert len(data_dirs) == 2
-    # retry publishes cleanly (fresh token => no collision)
-    info = publish_snapshot(_df(spark, 20, "b"), root)
-    assert info.version == 2
+    orphans = set(os.listdir(data_dir)) - dirs_before
+    assert len(orphans) == (1 if writes_data else 0)
+    # retry commits cleanly (fresh token => no collision)
+    info = run(spark, root)
+    assert info.version == 3
+    after = _rows(read_snapshot(spark, root))
+    assert after == expect(spark, before)
     # default vacuum must NOT sweep the orphan prefix — from the
     # outside it is indistinguishable from a publish in flight
     report = vacuum_snapshots(root, keep_last=5)
     assert report["dropped_orphan_prefixes"] == []
     assert report["dropped_versions"] == []
     report = vacuum_snapshots(root, keep_last=5, drop_unpublished=True)
-    assert len(report["dropped_orphan_prefixes"]) == 1
+    assert report["dropped_orphan_prefixes"] == sorted(
+        f"{snap.DATA_DIR}/{d}" for d in orphans
+    )
     assert report["dropped_versions"] == []
     # idempotent: a second sweep finds nothing and does not raise
     report = vacuum_snapshots(root, keep_last=5, drop_unpublished=True)
     assert report["dropped_orphan_prefixes"] == []
-    assert _rows(read_snapshot(spark, root)) == _rows(_df(spark, 20, "b"))
+    assert _rows(read_snapshot(spark, root)) == after
 
 
+@pytest.mark.parametrize("verb", list(_CRASH_VERBS))
 def test_crash_before_pointer_skips_version_and_gated_vacuum(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, verb
 ):
     """Window 2: manifest written, pointer never flips.  Readers stay
-    on the old version; the next publish allocates PAST the orphan
+    on the old version; the next commit allocates PAST the orphan
     number; vacuum removes the orphan only with drop_unpublished."""
+    run, expect, _ = _CRASH_VERBS[verb]
     root = _root(tmp_path)
-    publish_snapshot(_df(spark, 10, "a"), root)
+    _crash_seed(spark, root)
+    before = _rows(read_snapshot(spark, root))
 
     real = snap._write_atomic
 
@@ -166,23 +231,27 @@ def test_crash_before_pointer_skips_version_and_gated_vacuum(
 
     monkeypatch.setattr(snap, "_write_atomic", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        publish_snapshot(_df(spark, 20, "b"), root)
+        run(spark, root)
     monkeypatch.undo()
 
-    assert resolve_snapshot(root).version == 1
-    assert list_snapshots(root) == [1, 2]  # orphan manifest visible to lister
+    assert resolve_snapshot(root).version == 2
+    assert _rows(read_snapshot(spark, root)) == before
+    # orphan manifest visible to lister
+    assert list_snapshots(root) == [1, 2, 3]
     # allocation must not reuse the orphan's number
-    info = publish_snapshot(_df(spark, 30, "c"), root)
-    assert info.version == 3
-    assert _rows(read_snapshot(spark, root)) == _rows(_df(spark, 30, "c"))
+    info = run(spark, root)
+    assert info.version == 4
+    assert info.parent == 2
+    assert _rows(read_snapshot(spark, root)) == expect(spark, before)
     # default vacuum leaves the (possibly in-flight) orphan alone
     report = vacuum_snapshots(root, keep_last=5)
     assert report["dropped_versions"] == []
-    assert 2 in list_snapshots(root)
+    assert 3 in list_snapshots(root)
     # explicit opt-in sweeps it
     report = vacuum_snapshots(root, keep_last=5, drop_unpublished=True)
-    assert report["dropped_versions"] == [2]
-    assert list_snapshots(root) == [1, 3]
+    assert report["dropped_versions"] == [3]
+    assert list_snapshots(root) == [1, 2, 4]
+    assert _rows(read_snapshot(spark, root)) == expect(spark, before)
 
 
 def test_reader_between_manifest_and_pointer_sees_old_version(

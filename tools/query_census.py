@@ -1,4 +1,4 @@
-"""Per-action census of ANY gate query (generalizes ingest_census.py).
+"""Per-action census of ANY gate query, e.g. streaming_ingest_fuzzy.
 
 Monkeypatches the job-producing DataFrame entry points (count /
 collect / localCheckpoint / write.parquet / DataFrameWriter.save /
