@@ -637,12 +637,15 @@ def _race_error(
     )
 
 
-def _carried_metadata(info: SnapshotInfo) -> Dict[str, object]:
+def _carried_metadata(
+    info: SnapshotInfo, sidecars: Sequence[Dict[str, object]] = ()
+) -> Dict[str, object]:
     """The manifest fields a metadata-level commit (positional delete
     or merge, restore) copies from ``info`` verbatim: the schema
     (``columns``, the ``schemas`` registry and ``schema_id``), the
     ``partition_transforms`` layout, pending positional
-    ``delete_files``, and the ``_PROPAGATED_PROPS`` properties."""
+    ``delete_files`` followed by the commit's new ``sidecars``, and
+    the ``_PROPAGATED_PROPS`` properties."""
     out: Dict[str, object] = {
         "properties": {
             k: info.properties[k]
@@ -659,8 +662,10 @@ def _carried_metadata(info: SnapshotInfo) -> Dict[str, object]:
         out["partition_transforms"] = {
             k: list(v) for k, v in info.partition_transforms.items()
         }
-    if info.delete_files:
-        out["delete_files"] = [dict(d) for d in info.delete_files]
+    delete_files = [dict(d) for d in info.delete_files or ()]
+    delete_files.extend(sidecars)
+    if delete_files:
+        out["delete_files"] = delete_files
     return out
 
 
@@ -3434,7 +3439,7 @@ def _commit_positional(
             if parent.schemas is not None and parent.schema_id != "0":
                 entry["schema"] = parent.schema_id
     sidecars: List[Dict[str, object]] = []
-    if positions is not None:
+    if positions is not None and n_positions > 0:
         sidecars = _write_delete_sidecar(
             positions, root, rel_prefix, compression, n_positions,
             client=client,
@@ -3459,11 +3464,8 @@ def _commit_positional(
             "operation": operation,
             "committed_at": time.time(),
             "format": "parquet",
-            **_carried_metadata(head),
+            **_carried_metadata(head, sidecars),
         }
-        delete_files = [*manifest.pop("delete_files", []), *sidecars]
-        if delete_files:
-            manifest["delete_files"] = delete_files
         info = _commit(root, table_root, manifest, head.version, client)
         if info is not None:
             return info

@@ -398,6 +398,33 @@ def test_positional_merge_pure_insert_and_refusals(spark, tmp_path):
     assert {f["path"] for f in v1.files} <= {
         f["path"] for f in info.files
     }
+    # without key stats every file is scanned: a batch key that matches
+    # nothing still writes no sidecar and leaves no delete debt, so the
+    # copy-on-write merge stays open afterwards
+    bare = str(tmp_path / "bare")
+    publish_snapshot(_scattered(spark, 50), bare)
+    info = merge_snapshot(
+        spark, bare,
+        _df(spark, 3, "ins").withColumn("doc_id",
+                                        F.col("doc_id") + 1000),
+        "doc_id", positional=True,
+    )
+    assert info.row_count == 53
+    assert not info.delete_files
+    assert merge_snapshot(
+        spark, bare, _df(spark, 1, "cow"), "doc_id"
+    ).row_count == 53
+    # the commit itself writes no sidecar for an empty position set
+    head = resolve_snapshot(bare)
+    no_positions = spark.createDataFrame([], "path string, pos bigint")
+    info = snap._commit_positional(
+        bare, head, no_positions, 0, "zstd",
+        batch=_df(spark, 2, "more").withColumn(
+            "doc_id", F.col("doc_id") + 2000
+        ),
+    )
+    assert info.row_count == 55
+    assert not info.delete_files
     # the shared refusals hold on the positional tier too
     with pytest.raises(ValueError, match="duplicate batch keys"):
         merge_snapshot(
