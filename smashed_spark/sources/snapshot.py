@@ -156,7 +156,7 @@ import tempfile
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence, Union
+from typing import Dict, List, NamedTuple, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1783,23 +1783,19 @@ def publish_snapshot(
                     # against — legacy behavior (no registry)
                     schemas = None
             if carry and parent_info.delete_files:
-                if _carry_files is not None:
-                    # a partial rewrite under pending positional
-                    # deletes would need per-file delete accounting to
-                    # keep row_count exact — the protocol refuses the
-                    # combination instead (compact applies + clears)
-                    raise RuntimeError(
-                        f"publish_snapshot: {operation} with "
-                        "_carry_files on a table with pending "
-                        "positional delete_files — run compact_snapshot"
-                        " (or a full optimize) to apply them first"
-                    )
                 # appends carry pending deletes verbatim: dropping
                 # them would RESURRECT the deleted rows
                 carried_deletes = [
                     dict(d) for d in parent_info.delete_files
                 ]
             if _carry_files is not None:
+                # checked on the parent as re-read here, whatever the
+                # calling verb saw when it planned
+                _refuse_pending_deletes(
+                    parent_info, f"publish_snapshot({operation})",
+                    "run compact_snapshot (or a full optimize) to apply "
+                    "them first",
+                )
                 parent_paths = {f["path"] for f in parent_info.files}
                 alien = [
                     f["path"] for f in _carry_files
@@ -3094,14 +3090,12 @@ def optimize_snapshot(
         # compact_snapshot) so maintenance never degrades later deletes
         stats_columns = _inherited_stats_columns(pre)
     carry_entries: Optional[List[Dict[str, object]]] = None
-    if incremental and pre.delete_files:
-        raise RuntimeError(
-            "optimize_snapshot(incremental=True): the table has "
-            "pending positional delete_files — carried entries would "
-            "need per-file delete accounting; run a FULL optimize or "
-            "compact_snapshot (both apply and clear the sidecars)"
-        )
     if incremental:
+        _refuse_pending_deletes(
+            pre, "optimize_snapshot(incremental=True)", "run a FULL "
+            "optimize or compact_snapshot (both apply and clear the "
+            "sidecars)",
+        )
         props = pre.properties
         if bounds is None:
             persisted = props.get("zorder_bounds")
@@ -3483,6 +3477,132 @@ def _commit_positional(
         version = _next_version(root, client=client)
 
 
+# ---------------------------------------------------------------------------
+# the keyed-rewrite plan: a forget-list delete is a merge with no
+# inserts, so both verbs run these same steps — refuse over pending
+# sidecars, probe the key set, scope the files, pick the join side,
+# then match positions (merge-on-read) or rewrite (copy-on-write)
+# ---------------------------------------------------------------------------
+
+
+def _refuse_pending_deletes(info: SnapshotInfo, verb: str, hint: str):
+    """A partial rewrite carries untouched entries verbatim, but their
+    pending positional ``delete_files`` would then need per-file
+    delete accounting — refuse, naming the verb's way out."""
+    if info.delete_files:
+        raise RuntimeError(
+            f"{verb}: the table has pending positional delete_files — "
+            "a partial rewrite under them would need per-file delete "
+            f"accounting; {hint}"
+        )
+
+
+class _KeyProbe(NamedTuple):
+    df: Optional[DataFrame]  # the key column; None for a literal list
+    head: Optional[list]  # every key, when the whole set is on the driver
+    n: Optional[int]  # exact key count, when known
+    prune: list  # envelope predicates on the key column
+
+
+def _probe_keys(
+    spark: SparkSession,
+    keys: Union[DataFrame, list],
+    key_field: str,
+    cap: int,
+    null_error: str,
+) -> _KeyProbe:
+    """Validate a key set and turn it into file-prune predicates.
+
+    A key frame runs a capped ``limit(cap+1).collect()`` head first.
+    When the head comes back complete it serves everything at once:
+    the NULL refusal, literal ``in`` pruning, and the exact key count.
+    An over-cap frame instead spends one Spark NULL scan and one
+    min/max agg (range pruning — two scalars, never a big collect).
+    A literal list is already on the driver and costs no job; over the
+    cap it prunes by its own min/max too, since ``in`` planning costs
+    O(keys) to normalize."""
+    if not isinstance(keys, DataFrame):
+        if any(k is None for k in keys):
+            raise ValueError(null_error)
+        if len(keys) <= cap:
+            prune = [(key_field, "in", keys)]
+        else:
+            lo, hi = min(keys), max(keys)
+            prune = [(key_field, ">=", lo), (key_field, "<=", hi)]
+        return _KeyProbe(None, keys, len(keys), prune)
+    kt = keys.schema[key_field].dataType
+    head = [r[0] for r in keys.limit(cap + 1).collect()]
+    if len(head) <= cap:
+        if any(k is None for k in head):
+            raise ValueError(null_error)
+        lits = [_collected_prune_literal(spark, k, kt) for k in head]
+        return _KeyProbe(keys, head, len(head), [(key_field, "in", lits)])
+    if keys.filter(F.col(key_field).isNull()).limit(1).count() > 0:
+        raise ValueError(null_error)
+    lo, hi = keys.agg(F.min(key_field), F.max(key_field)).collect()[0]
+    if lo is None:  # emptied between the jobs: a nondeterministic frame
+        return _KeyProbe(keys, [], 0, [(key_field, "in", [])])
+    return _KeyProbe(keys, None, None, [
+        (key_field, ">=", _collected_prune_literal(spark, lo, kt)),
+        (key_field, "<=", _collected_prune_literal(spark, hi, kt)),
+    ])
+
+
+def _scope_files(info: SnapshotInfo, prune: list):
+    """Split the snapshot's files by the manifest's envelope stats into
+    ``(touched, untouched)``: the files a prune predicate CAN match,
+    and the ones carried verbatim."""
+    # spec-1 manifests lack per-entry row counts, so untouched entries
+    # cannot be carried (the descendant's row_count would be a guess)
+    if all(f.get("rows") is not None for f in info.files):
+        try:
+            plan = plan_snapshot_scan(info, prune)
+            return plan["kept"], plan["skipped"]
+        except TypeError:
+            # a literal the pruner refuses to compare (e.g. a naive
+            # datetime key against instant envelope stats): the verb's
+            # SEMANTICS never depended on pruning — degrade to the full
+            # rewrite instead of failing a call that would have worked
+            # before stats existed
+            pass
+    return list(info.files), []
+
+
+def _join_side(key_df: DataFrame, n_keys: Optional[int], threshold: int):
+    """The key side of the join: broadcast at ``threshold`` rows or
+    fewer, plain (shuffled) above.  When the exact key count is already
+    known on the driver (a literal list, or a head probe that came back
+    complete) the choice costs no job; otherwise a bounded
+    ``limit(threshold+1).count()`` probe decides (as sources/retention.py
+    does)."""
+    if n_keys is None:
+        n_keys = key_df.limit(threshold + 1).count()
+    return F.broadcast(key_df) if n_keys <= threshold else key_df
+
+
+def _match_positions(matched: DataFrame, touched: list, verb: str):
+    """Pin the (file, row-position) pairs of ``matched`` — a
+    ``keep_positions=True`` scan of ``touched`` joined to the keys —
+    and return ``(positions, n)``.  One aggregate over the checkpoint
+    serves both the row count and the tag-normalization guard: every
+    tagged path must be a manifest path, or the READ side's anti-join
+    would silently miss (resurrected rows) — fail here, loudly."""
+    positions = matched.select(
+        F.col(_FILE_COL).alias("path"),
+        F.col(_POS_COL).cast("bigint").alias("pos"),
+    ).localCheckpoint(eager=True)
+    per_path = positions.groupBy("path").count().collect()
+    known = {f["path"] for f in touched}
+    alien = [r["path"] for r in per_path if r["path"] not in known]
+    if alien:
+        raise RuntimeError(
+            f"{verb}: positional tags do not match manifest paths (e.g. "
+            f"{alien[:3]}) — the file-path normalization drifted; "
+            "refusing to write a sidecar reads would silently ignore"
+        )
+    return positions, sum(r["count"] for r in per_path)
+
+
 def apply_deletions_snapshot(
     spark: SparkSession,
     table_root: str,
@@ -3522,9 +3642,9 @@ def apply_deletions_snapshot(
     (correct, just not scoped; BENCH_SCALE ``snapshot_unclustered_
     delete`` measures it).  ``snapshot_table_stats``'s
     ``envelope_overlap_avg`` is the health check: ~1 scopes, anything
-    >> 1 does not.  When
-    pruning proves NO file can match, the current :class:`SnapshotInfo`
-    is returned unchanged (no empty-delete version is committed).
+    >> 1 does not.  When pruning proves NO file can match, or the
+    forget DataFrame is empty, the current :class:`SnapshotInfo` is
+    returned unchanged (no empty-delete version is committed).
 
     ``scope_where`` (``[(column, op, value), ...]``, same grammar as
     ``read_snapshot(where=)``) restricts the delete to rows ALSO
@@ -3533,11 +3653,9 @@ def apply_deletions_snapshot(
     matches, and the scope predicates join the file-prune plan so an
     out-of-scope file isn't even read.
 
-    Join strategy mirrors retention.py: a bounded
-    ``limit(threshold+1).count()`` probe decides broadcast vs plain
-    LEFT ANTI join.  NULL forget keys raise — NULL never equals
-    anything in a join, so a NULL "deletion" would silently delete
-    nothing.
+    The forget keys join broadcast or plain by :func:`_join_side`'s
+    rule.  NULL forget keys raise — NULL never equals anything in a
+    join, so a NULL "deletion" would silently delete nothing.
 
     ``stats_columns=None`` (default) INHERITS the parent's envelope-
     stats column set for the rewritten files, so the NEXT delete still
@@ -3559,194 +3677,76 @@ def apply_deletions_snapshot(
     pending — compact first.  Appends carry sidecars verbatim, and a
     write-time path check makes a tag-normalization drift fail loudly
     instead of silently resurrecting rows."""
+    verb = "apply_deletions_snapshot"
     info = resolve_snapshot(table_root, client=client)
-    if info.delete_files and not positional:
-        raise RuntimeError(
-            "apply_deletions_snapshot: the table has pending "
-            "positional delete_files — a partial rewrite under them "
-            "would need per-file delete accounting; run "
-            "compact_snapshot to apply them first, or pass "
-            "positional=True to stack another positional delete"
+    if not positional:
+        _refuse_pending_deletes(
+            info, verb, "run compact_snapshot to apply them first, or "
+            "pass positional=True to stack another positional delete",
         )
     if stats_columns is None:
         stats_columns = _inherited_stats_columns(info)
     if info.columns is not None and key_field not in info.columns:
         raise ValueError(
-            f"apply_deletions_snapshot: key_field {key_field!r} not in "
-            f"snapshot columns {sorted(info.columns)}"
+            f"{verb}: key_field {key_field!r} not in snapshot columns "
+            f"{sorted(info.columns)}"
         )
-
-    literal_keys: Optional[list] = None
     if isinstance(keys, DataFrame):
         if key_field not in keys.columns:
             raise ValueError(
-                f"apply_deletions_snapshot: key_field {key_field!r} not "
-                f"in keys columns {keys.columns}"
+                f"{verb}: key_field {key_field!r} not in keys columns "
+                f"{keys.columns}"
             )
-        key_df = keys.select(key_field)
+        keys = keys.select(key_field)
     else:
-        literal_keys = list(keys)
-        if not literal_keys:
+        keys = list(keys)
+        if not keys:
             raise ValueError(
-                "apply_deletions_snapshot: empty forget list — refusing "
-                "a no-op publish (pass a non-empty key set)"
+                f"{verb}: empty forget list — refusing a no-op publish "
+                "(pass a non-empty key set)"
             )
-        if any(k is None for k in literal_keys):
-            raise ValueError(
-                "apply_deletions_snapshot: NULL forget key — NULL never "
-                "joins, so it would silently delete nothing"
-            )
-        key_df = None  # built lazily only if any file is touched
-    def _prune_literal(v, dtype):
-        return _collected_prune_literal(spark, v, dtype)
-
-    if key_df is not None:
-        # literal in-pruning wants the keys on the driver; cap it so a
-        # huge forget DataFrame degrades to range pruning, not OOM.
-        # r16: the head probe runs FIRST — when it comes back complete
-        # (<= cap) it also serves the NULL refusal below for free; the
-        # dedicated NULL-scan job runs only for over-cap forget sets.
-        head = key_df.limit(prune_collect_cap + 1).collect()
-        if len(head) <= prune_collect_cap:
-            if any(r[0] is None for r in head):
-                raise ValueError(
-                    "apply_deletions_snapshot: NULL forget key — NULL "
-                    "never joins, so it would silently delete nothing"
-                )
-            kt = key_df.schema[key_field].dataType
-            literal_keys = [_prune_literal(r[0], kt) for r in head]
-        elif (
-            key_df.filter(F.col(key_field).isNull()).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "apply_deletions_snapshot: NULL forget key — NULL never "
-                "joins, so it would silently delete nothing"
-            )
-
-    # ----- file scoping via the manifest's envelope stats -----
-    prune: list = list(scope_where or [])
-    can_scope = True
-    if literal_keys is not None and len(literal_keys) <= prune_collect_cap:
-        prune.append((key_field, "in", literal_keys))
-    elif literal_keys is not None:
-        # a literal list over the cap degrades to range pruning the
-        # same way an oversized key DataFrame does — in-list planning
-        # is memoized per predicate but still O(keys) to normalize,
-        # and the bisect per file wants a bounded sorted list
-        prune.append((key_field, ">=", min(literal_keys)))
-        prune.append((key_field, "<=", max(literal_keys)))
-    else:
-        bounds = key_df.agg(
-            F.min(key_field).alias("lo"), F.max(key_field).alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            raise ValueError(
-                "apply_deletions_snapshot: empty forget list — refusing "
-                "a no-op publish (pass a non-empty key set)"
-            )
-        kt = key_df.schema[key_field].dataType
-        prune.append((key_field, ">=", _prune_literal(bounds["lo"], kt)))
-        prune.append((key_field, "<=", _prune_literal(bounds["hi"], kt)))
-    # spec-1 manifests lack per-entry row counts, so untouched entries
-    # cannot be carried (the descendant's row_count would be a guess) —
-    # fall back to the full rewrite for those legacy tables
-    if any(f.get("rows") is None for f in info.files):
-        can_scope = False
-    if can_scope:
-        try:
-            plan = plan_snapshot_scan(info, prune)
-            touched, untouched = plan["kept"], plan["skipped"]
-        except TypeError:
-            # a literal the pruner refuses to compare (e.g. a naive
-            # datetime forget key against instant envelope stats):
-            # the delete's SEMANTICS never depended on pruning — fall
-            # back to the full anti-join rewrite instead of failing a
-            # delete that would have worked before stats existed
-            touched, untouched = list(info.files), []
-    else:
-        touched, untouched = list(info.files), []
-    if not touched:
-        # envelopes prove no file holds a forget-key row: nothing to
-        # rewrite, and an empty delete version would be noise
+    probe = _probe_keys(
+        spark, keys, key_field, prune_collect_cap,
+        f"{verb}: NULL forget key — NULL never joins, so it would "
+        "silently delete nothing",
+    )
+    touched, untouched = _scope_files(
+        info, list(scope_where or []) + probe.prune
+    )
+    if not touched or probe.n == 0:
+        # an empty key frame, or envelopes that prove no file holds a
+        # forget-key row: nothing to rewrite, and an empty delete
+        # version would be noise
         return info
 
-    scan_info = SnapshotInfo(**{**info.__dict__, "files": touched})
-    df = _scan_files(spark, table_root, scan_info, client,
-                     allow_driver_download,
-                     keep_positions=positional)
+    df = _scan_files(
+        spark, table_root,
+        SnapshotInfo(**{**info.__dict__, "files": touched}), client,
+        allow_driver_download, keep_positions=positional,
+    )
     if key_field not in df.columns:
         raise ValueError(
-            f"apply_deletions_snapshot: key_field {key_field!r} not in "
-            f"snapshot columns {df.columns}"
+            f"{verb}: key_field {key_field!r} not in snapshot columns "
+            f"{df.columns}"
         )
+    key_df, n_keys = probe.df, probe.n
     if key_df is None:
         key_df = spark.createDataFrame(
-            [(k,) for k in literal_keys], schema=df.select(key_field).schema
+            [(k,) for k in probe.head], schema=df.select(key_field).schema
         )
     if scope_where:
         # the marker join below must not fan out an out-of-scope
-        # surviving row once per duplicate forget key
+        # surviving row once per duplicate forget key.  Dedup only
+        # shrinks, so a known size over the threshold is probed again.
         key_df = key_df.distinct()
-    # r16: when the forget set's exact size is already known on the
-    # driver (literal list, or a head probe that came back complete),
-    # the broadcast decision needs no extra count job.  A known size
-    # under the threshold stays valid through the scope_where
-    # distinct() above (dedup only shrinks); a known size OVER the
-    # threshold after a distinct() must still be probed, since the
-    # dedup could have brought it back under.
-    if literal_keys is not None and (
-        not scope_where or len(literal_keys) <= broadcast_threshold_rows
-    ):
-        probed = len(literal_keys)
-    else:
-        probed = key_df.limit(broadcast_threshold_rows + 1).count()
-    anti = (
-        F.broadcast(key_df) if probed <= broadcast_threshold_rows else key_df
-    )
-    if positional:
-        if scope_where:
-            marker = anti.withColumn("__forget__", F.lit(True))
-            matched = (
-                df.join(marker, on=key_field, how="left")
-                .where(
-                    F.coalesce(F.col("__forget__"), F.lit(False))
-                    & F.coalesce(
-                        _where_to_column(scope_where), F.lit(False)
-                    )
-                )
-            )
-        else:
-            matched = df.join(anti, on=key_field, how="left_semi")
-        positions = matched.select(
-            F.col(_FILE_COL).alias("path"),
-            F.col(_POS_COL).cast("bigint").alias("pos"),
-        ).localCheckpoint(eager=True)
-        # r16: one aggregate over the checkpointed positions serves
-        # both the empty-delete short-circuit (row count) and the
-        # tag-normalization guard (distinct paths) — previously two
-        # separate jobs over the same cached partitions
-        per_path = positions.groupBy("path").count().collect()
-        n_deleted = sum(r["count"] for r in per_path)
-        if n_deleted == 0:
-            return info
-        # tag-normalization guard: every tagged path must be a
-        # manifest path, or the READ side's anti-join would silently
-        # miss (resurrected rows) — fail HERE, loudly, instead
-        known = {f["path"] for f in touched}
-        tagged = [r["path"] for r in per_path]
-        alien = [p for p in tagged if p not in known]
-        if alien:
-            raise RuntimeError(
-                "apply_deletions_snapshot: positional tags do not "
-                f"match manifest paths (e.g. {alien[:3]}) — the "
-                "file-path normalization drifted; refusing to write a "
-                "sidecar reads would silently ignore"
-            )
-        return _commit_positional(
-            table_root, info, positions, n_deleted, compression,
-            client=client,
-        )
-    if scope_where:
+        if n_keys is not None and n_keys > broadcast_threshold_rows:
+            n_keys = None
+    side = _join_side(key_df, n_keys, broadcast_threshold_rows)
+
+    def keyed(how: str) -> DataFrame:
+        # "left_semi": the rows the delete forgets; "left_anti": the rest
+        if not scope_where:
+            return df.join(side, on=key_field, how=how)
         # scoped delete: a row dies only when its key matches AND it is
         # PROVABLY inside the scope — LEFT ANTI can't express the
         # conjunction, so mark key matches with a left join and filter.
@@ -3755,24 +3755,28 @@ def apply_deletions_snapshot(
         # row predating an evolved column) would make the whole
         # predicate NULL and WHERE would DROP the row — deleting
         # out-of-scope data, the exact blast radius scope_where bounds
-        marker = anti.withColumn("__forget__", F.lit(True))
-        survivors = (
+        dies = F.coalesce(F.col("__forget__"), F.lit(False)) & F.coalesce(
+            _where_to_column(scope_where), F.lit(False)
+        )
+        marker = side.withColumn("__forget__", F.lit(True))
+        return (
             df.join(marker, on=key_field, how="left")
-            .where(
-                ~(
-                    F.coalesce(F.col("__forget__"), F.lit(False))
-                    & F.coalesce(
-                        _where_to_column(scope_where), F.lit(False)
-                    )
-                )
-            )
-            .drop("__forget__")
+            .where(dies if how == "left_semi" else ~dies)
             .select(*df.columns)
         )
-    else:
-        survivors = df.join(anti, on=key_field, how="left_anti")
+
+    if positional:
+        positions, n_deleted = _match_positions(
+            keyed("left_semi"), touched, verb
+        )
+        if n_deleted == 0:
+            return info
+        return _commit_positional(
+            table_root, info, positions, n_deleted, compression,
+            client=client,
+        )
     return publish_snapshot(
-        survivors,
+        keyed("left_anti"),
         table_root,
         operation="delete",
         compression=compression,
@@ -3854,26 +3858,24 @@ def merge_snapshot(
     so counts stay exact) and interleave freely with positional
     deletes.  Result values are identical to the copy-on-write merge
     — only the physical strategy differs."""
+    verb = "merge_snapshot"
     info = resolve_snapshot(table_root, client=client)
-    if info.delete_files and not positional:
-        raise RuntimeError(
-            "merge_snapshot: the table has pending positional "
-            "delete_files — a partial rewrite under them would need "
-            "per-file delete accounting; run compact_snapshot to "
-            "apply them first, or pass positional=True to stack a "
-            "merge-on-read upsert"
+    if not positional:
+        _refuse_pending_deletes(
+            info, verb, "run compact_snapshot to apply them first, or "
+            "pass positional=True to stack a merge-on-read upsert",
         )
     if stats_columns is None:
         stats_columns = _inherited_stats_columns(info)
     if info.columns is not None and key_field not in info.columns:
         raise ValueError(
-            f"merge_snapshot: key_field {key_field!r} not in snapshot "
-            f"columns {sorted(info.columns)}"
+            f"{verb}: key_field {key_field!r} not in snapshot columns "
+            f"{sorted(info.columns)}"
         )
     if key_field not in batch.columns:
         raise ValueError(
-            f"merge_snapshot: key_field {key_field!r} not in batch "
-            f"columns {batch.columns}"
+            f"{verb}: key_field {key_field!r} not in batch columns "
+            f"{batch.columns}"
         )
     if info.columns is not None:
         from .evolve import align_to_schema
@@ -3894,165 +3896,62 @@ def merge_snapshot(
     # localCheckpoint, not persist: eviction would re-evaluate.
     batch = batch.localCheckpoint(eager=True)
 
-    # ----- key validation + file scoping, one collect when bounded --
-    # the capped head serves FOUR purposes for an under-cap batch:
-    # empty refusal, NULL/dup key validation (driver-side, free — no
-    # extra Spark jobs), the in-list prune literals, and the exact
-    # row count the broadcast decision needs
-    key_df = batch.select(key_field)
-    kt = key_df.schema[key_field].dataType
-    prune: list = []
-    head = key_df.limit(prune_collect_cap + 1).collect()
-    if not head:
+    probe = _probe_keys(
+        spark, batch.select(key_field), key_field, prune_collect_cap,
+        f"{verb}: NULL batch key — NULL never joins, so the row would "
+        "neither update nor match reads; fix the batch",
+    )
+    if probe.n == 0:
         raise ValueError(
-            "merge_snapshot: empty batch — refusing a no-op publish "
-            "(a spurious 'merge' version would also break "
-            "read_snapshot_changes for every consumer reading across it)"
+            f"{verb}: empty batch — refusing a no-op publish (a spurious "
+            "'merge' version would also break read_snapshot_changes for "
+            "every consumer reading across it)"
         )
-    batch_rows_capped = len(head)  # exact when <= the collect cap
-    if batch_rows_capped <= prune_collect_cap:
-        keys_head = [r[0] for r in head]
-        if any(k is None for k in keys_head):
-            raise ValueError(
-                "merge_snapshot: NULL batch key — NULL never joins, so "
-                "the row would neither update nor match reads; fix the "
-                "batch"
-            )
+    if probe.head is None:
+        # over-cap batch: one bounded Spark job
+        dup = bool(
+            batch.groupBy(key_field).count()
+            .filter(F.col("count") > 1).limit(1).collect()
+        )
+    else:
         try:
-            distinct_heads = len(set(keys_head))
+            dup = len(set(probe.head)) != len(probe.head)
         except TypeError:
             # unhashable collected form (binary keys -> bytearray):
             # one bounded Spark job instead
-            distinct_heads = key_df.distinct().count()
-        if distinct_heads != len(keys_head):
-            raise ValueError(
-                "merge_snapshot: duplicate batch keys — which copy "
-                "wins is ambiguous; dedupe the batch upstream where "
-                "the ordering rule lives (e.g. keep the newest crawl)"
-            )
-    else:
-        # over-cap batch: validate with bounded Spark jobs instead
-        if (
-            batch.filter(F.col(key_field).isNull()).limit(1).count()
-            > 0
-        ):
-            raise ValueError(
-                "merge_snapshot: NULL batch key — NULL never joins, so "
-                "the row would neither update nor match reads; fix the "
-                "batch"
-            )
-        dup = (
-            batch.groupBy(key_field)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
+            dup = probe.df.distinct().count() != len(probe.head)
+    if dup:
+        raise ValueError(
+            f"{verb}: duplicate batch keys — which copy wins is "
+            "ambiguous; dedupe the batch upstream where the ordering "
+            "rule lives (e.g. keep the newest crawl)"
         )
-        if dup:
-            raise ValueError(
-                f"merge_snapshot: duplicate batch key {dup[0][0]!r} — "
-                "which copy wins is ambiguous; dedupe the batch "
-                "upstream where the ordering rule lives (e.g. keep "
-                "the newest crawl)"
-            )
-    if batch_rows_capped <= prune_collect_cap:
-        prune.append(
-            (
-                key_field,
-                "in",
-                [_collected_prune_literal(spark, r[0], kt) for r in head],
-            )
-        )
-    else:
-        bounds = key_df.agg(
-            F.min(key_field).alias("lo"), F.max(key_field).alias("hi")
-        ).collect()[0]
-        prune.append(
-            (key_field, ">=",
-             _collected_prune_literal(spark, bounds["lo"], kt))
-        )
-        prune.append(
-            (key_field, "<=",
-             _collected_prune_literal(spark, bounds["hi"], kt))
-        )
-    can_scope = not any(f.get("rows") is None for f in info.files)
-    if can_scope:
-        try:
-            plan = plan_snapshot_scan(info, prune)
-            touched, untouched = plan["kept"], plan["skipped"]
-        except TypeError:
-            # same stance as apply_deletions_snapshot: a literal the
-            # pruner refuses to compare degrades to the full rewrite,
-            # never a crash — the merge's semantics are the join's
-            touched, untouched = list(info.files), []
-    else:
-        touched, untouched = list(info.files), []
 
+    touched, untouched = _scope_files(info, probe.prune)
+    # with nothing touched, no file's key range overlaps the batch: a
+    # pure insert, every parent file carried verbatim (still a merge
+    # commit — the batch lands)
+    positions, n_matched, out = None, 0, batch
     if touched:
-        # the capped head already counted the batch exactly when it
-        # fit the collect cap — only an over-cap batch needs a probe
-        probed = (
-            batch_rows_capped
-            if batch_rows_capped <= prune_collect_cap
-            else key_df.limit(broadcast_threshold_rows + 1).count()
+        side = _join_side(probe.df, probe.n, broadcast_threshold_rows)
+        existing = _scan_files(
+            spark, table_root,
+            SnapshotInfo(**{**info.__dict__, "files": touched}), client,
+            allow_driver_download, keep_positions=positional,
         )
-        anti = (
-            F.broadcast(key_df)
-            if probed <= broadcast_threshold_rows
-            else key_df
-        )
+        if positional:
+            positions, n_matched = _match_positions(
+                existing.join(side, on=key_field, how="left_semi"),
+                touched, verb,
+            )
+        else:
+            survivors = existing.join(side, on=key_field, how="left_anti")
+            out = survivors.unionByName(batch)
     if positional:
-        positions: Optional[DataFrame] = None
-        n_matched = 0
-        if touched:
-            scan_info = SnapshotInfo(
-                **{**info.__dict__, "files": touched}
-            )
-            existing = _scan_files(
-                spark, table_root, scan_info, client,
-                allow_driver_download, keep_positions=True,
-            )
-            matched = existing.join(anti, on=key_field, how="left_semi")
-            positions = matched.select(
-                F.col(_FILE_COL).alias("path"),
-                F.col(_POS_COL).cast("bigint").alias("pos"),
-            ).localCheckpoint(eager=True)
-            n_matched = positions.count()
-            if n_matched:
-                # same tag-normalization guard as the positional
-                # delete: an alien tag would write a sidecar reads
-                # silently ignore (duplicate keys resurrect)
-                known = {f["path"] for f in touched}
-                tagged = [
-                    r[0]
-                    for r in positions.select("path").distinct().collect()
-                ]
-                alien = [p for p in tagged if p not in known]
-                if alien:
-                    raise RuntimeError(
-                        "merge_snapshot: positional tags do not match "
-                        f"manifest paths (e.g. {alien[:3]}) — the "
-                        "file-path normalization drifted; refusing to "
-                        "write a sidecar reads would silently ignore"
-                    )
-            else:
-                positions = None
         return _commit_positional(
             table_root, info, positions, n_matched, compression,
             client=client, batch=batch, stats_columns=stats_columns,
         )
-    if touched:
-        scan_info = SnapshotInfo(**{**info.__dict__, "files": touched})
-        existing = _scan_files(
-            spark, table_root, scan_info, client, allow_driver_download
-        )
-        survivors = existing.join(anti, on=key_field, how="left_anti")
-        out = survivors.unionByName(batch)
-    else:
-        # no file's key range overlaps the batch: pure insert, every
-        # parent file carried verbatim (still a merge commit — the
-        # batch lands)
-        out = batch
     return publish_snapshot(
         out,
         table_root,

@@ -8,10 +8,6 @@ append/vacuum/restore interplay, and the moto s3 tier.
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
-
 import smashed_spark.sources.snapshot as snap
 from smashed_spark.sources.snapshot import (
     append_snapshot,
@@ -139,6 +135,14 @@ def test_partial_rewrites_refuse_under_pending_deletes(spark, tmp_path):
         optimize_snapshot(
             spark, root, cluster_by=["doc_id"], bits=8,
             incremental=True,
+        )
+    # publish itself refuses a partial carry, whatever the verb checked
+    with pytest.raises(
+        RuntimeError, match=r"publish_snapshot\(delete\).*pending positional"
+    ):
+        publish_snapshot(
+            _df(spark, 2, "p"), root, operation="delete",
+            _carry_files=[], _expect_parent=resolve_snapshot(root).version,
         )
     # a FULL optimize applies and clears, like compact
     info = optimize_snapshot(
@@ -436,6 +440,40 @@ def test_positional_merge_pure_insert_and_refusals(spark, tmp_path):
         merge_snapshot(
             spark, root, _df(spark, 0, "e"), "doc_id", positional=True
         )
+
+
+@pytest.mark.parametrize("verb", ["delete", "merge"])
+def test_positional_alien_tags_refuse(spark, tmp_path, monkeypatch, verb):
+    # a drift in the scan's file-path tags must fail the positional
+    # writer loudly: a sidecar naming no manifest path would be ignored
+    # by every read, silently resurrecting the matched rows
+    from pyspark.sql import functions as F
+
+    root = _root(tmp_path)
+    publish_snapshot(_scattered(spark, 100), root,
+                     stats_columns=["doc_id"])
+    real = snap._scan_files
+
+    def drifted(*args, **kwargs):
+        df = real(*args, **kwargs)
+        if snap._FILE_COL in df.columns:
+            df = df.withColumn(
+                snap._FILE_COL, F.concat(F.lit("drift/"), snap._FILE_COL)
+            )
+        return df
+
+    monkeypatch.setattr(snap, "_scan_files", drifted)
+    with pytest.raises(RuntimeError, match="positional tags do not match"):
+        if verb == "delete":
+            apply_deletions_snapshot(
+                spark, root, [5, 17], "doc_id", positional=True
+            )
+        else:
+            merge_snapshot(spark, root, _df(spark, 3, "new"), "doc_id",
+                           positional=True)
+    monkeypatch.undo()
+    assert snap.list_snapshots(root) == [1]
+    assert resolve_snapshot(root).row_count == 100
 
 
 def test_sidecar_sharding_and_recommend_compact(spark, tmp_path,

@@ -573,6 +573,22 @@ def test_delete_noop_when_envelopes_prove_absent(spark, tmp_path):
     assert list_snapshots(root) == [1]
 
 
+@pytest.mark.parametrize("stats", [["doc_id"], []], ids=["stats", "bare"])
+def test_delete_empty_key_frame_commits_nothing(spark, tmp_path, stats):
+    """An empty forget DataFrame is a no-op whether or not envelope
+    stats could prune: without them every file would be 'touched', and
+    the rewrite must still not commit an unchanged 'delete' version."""
+    root = _root(tmp_path)
+    publish_snapshot(_df(spark, 10, "a"), root, stats_columns=stats)
+    before = resolve_snapshot(root)
+    empty = spark.createDataFrame([], "doc_id bigint")
+    info = apply_deletions_snapshot(
+        spark, root, keys=empty, key_field="doc_id"
+    )
+    assert info.version == before.version
+    assert list_snapshots(root) == [1]
+
+
 def test_delete_range_prune_path_for_big_key_df(spark, tmp_path):
     """Keys above prune_collect_cap degrade to min/max range pruning —
     still file-scoped when the key range misses a file's envelope."""

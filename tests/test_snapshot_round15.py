@@ -10,10 +10,6 @@ import json
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
-
 import smashed_spark.sources.snapshot as snap
 from smashed_spark.sources.snapshot import (
     append_snapshot,
@@ -477,6 +473,19 @@ def test_merge_updates_inserts_and_carries(spark, tmp_path):
     assert len(carried) + len(rewritten) == len(info.files)
     assert len(carried) < v1_files  # at least one file was rewritten
 
+    # over the collect cap (cap=0) the batch keys prune by their
+    # min/max range instead of literals — still file-scoped
+    info = merge_snapshot(
+        spark, root, _merge_df(spark, [30, 31], "cap0"), "doc_id",
+        prune_collect_cap=0,
+    )
+    assert info.row_count == 102
+    got = {r.doc_id: r.text for r in read_snapshot(spark, root).collect()}
+    assert got[30] == "cap0_30" and got[31] == "cap0_31"
+    assert got[5] == "new_5" and got[3] == "a_3" and len(got) == 102
+    still = [f for f in info.files if "v00000001" in f["path"]]
+    assert still and len(still) < len(carried)
+
 
 def test_merge_pure_insert_carries_everything(spark, tmp_path):
     from smashed_spark.sources.snapshot import merge_snapshot
@@ -498,7 +507,10 @@ def test_merge_pure_insert_carries_everything(spark, tmp_path):
     assert all("doc_id" in (f.get("stats") or {}) for f in new)
 
 
-def test_merge_refusals(spark, tmp_path):
+@pytest.mark.parametrize(
+    "cap", [snap.DEFAULT_PRUNE_COLLECT_KEYS, 0], ids=["head", "over_cap"]
+)
+def test_merge_refusals(spark, tmp_path, cap):
     from pyspark.sql import functions as F
 
     from smashed_spark.sources.snapshot import merge_snapshot
@@ -506,15 +518,18 @@ def test_merge_refusals(spark, tmp_path):
     root = _root(tmp_path)
     publish_snapshot(_df(spark, 10, "a"), root)
 
+    # NULL and duplicate keys refuse on both routes: driver-side over a
+    # complete head, Spark-side jobs over the cap (cap=0)
     with pytest.raises(ValueError, match="duplicate batch key"):
         merge_snapshot(
-            spark, root, _merge_df(spark, [1, 1, 2], "d"), "doc_id"
+            spark, root, _merge_df(spark, [1, 1, 2], "d"), "doc_id",
+            prune_collect_cap=cap,
         )
     nulls = spark.createDataFrame(
         [(None, "x")], "doc_id bigint, text string"
     )
     with pytest.raises(ValueError, match="NULL batch key"):
-        merge_snapshot(spark, root, nulls, "doc_id")
+        merge_snapshot(spark, root, nulls, "doc_id", prune_collect_cap=cap)
     with pytest.raises(ValueError, match="key_field"):
         merge_snapshot(spark, root, _merge_df(spark, [1], "x"), "nope")
     # extra batch column: schema must match the table's exactly
