@@ -156,7 +156,7 @@ import tempfile
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Dict, List, NamedTuple, Optional, Sequence, Union
+from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -572,28 +572,35 @@ def _commit(
     Returns ``None`` when the race is lost at step 1 or 3.  No pointer
     is written then; a manifest written at step 2 is off-chain debris,
     exactly like crash window 2.  What the caller does next is its
-    concurrency policy, and there are three:
+    concurrency policy, stated by ``_Plan.on_race`` (restore, which
+    commits no plan, refuses); there are three:
 
-    * **Carried appends rebase and retry** (``publish_snapshot`` with
-      ``operation="append"``, bounded by ``DEFAULT_COMMIT_RETRIES``):
-      an append only ADDS files, so the loser re-resolves the new head,
-      re-carries its file list, re-allocates a version and commits
-      again, reusing the immutable data prefix of its first attempt —
-      a rebase costs two small JSON writes, not a data rewrite.  Both
-      appends land, linearized.  A rebase that finds the written files
-      no longer match the table's schema or partition layout refuses.
-    * **Positional deletes rebase onto an append-only chain** (same
-      bound, via :func:`_rebase_append_only_head`): the sidecar's
-      (file, position) pairs still point at exactly the rows they were
+    * ``"rebase"`` — **appends rebase and retry** (``append_snapshot``
+      and ``append_files_snapshot``, bounded by
+      ``DEFAULT_COMMIT_RETRIES``): an append only ADDS files, so the
+      loser re-resolves the new head, re-carries its file list,
+      re-allocates a version and commits again, reusing the immutable
+      data prefix of its first attempt — a rebase costs two small
+      JSON writes, not a data rewrite.  Both appends land,
+      linearized.  A rebase that finds the written files no longer
+      match the table's schema or partition layout refuses.
+    * ``"append_only"`` — **positional deletes rebase onto an
+      append-only chain** (same bound, via
+      :func:`_rebase_append_only_head`): the sidecar's (file,
+      position) pairs still point at exactly the rows they were
       computed over after any number of pure appends, so the delete
       re-commits onto the new head; any concurrent rewrite refuses.
-    * **Everything else refuses** — publish, compact, optimize, the
-      copy-on-write delete and merge, the positional merge and restore
-      are SINGLE WRITER by contract: a rewrite rebased onto a moved
-      parent would silently drop the concurrent commit's rows, a
-      positional merge could leave two live copies of a key appended
-      concurrently, and a restore was planned against the head it
-      replaces.
+      Semantics are write-serializable, matching Iceberg's positional
+      tier: the delete applies to the rows that existed when it was
+      PLANNED; a row with a matching key appended concurrently is not
+      scanned and survives.
+    * ``"refuse"`` — **everything else refuses**: publish, compact,
+      optimize, the copy-on-write delete and merge, the positional
+      merge and restore are SINGLE WRITER by contract: a rewrite
+      rebased onto a moved parent would silently drop the concurrent
+      commit's rows, a positional merge could leave two live copies
+      of a key appended concurrently, and a restore was planned
+      against the head it replaces.
     """
     version = int(manifest["version"])
     manifest_path = str(root / _manifest_key(version))
@@ -635,38 +642,6 @@ def _race_error(
         "wrote are debris (vacuum with drop_unpublished=True sweeps "
         "them).  Re-run against the current snapshot."
     )
-
-
-def _carried_metadata(
-    info: SnapshotInfo, sidecars: Sequence[Dict[str, object]] = ()
-) -> Dict[str, object]:
-    """The manifest fields a metadata-level commit (positional delete
-    or merge, restore) copies from ``info`` verbatim: the schema
-    (``columns``, the ``schemas`` registry and ``schema_id``), the
-    ``partition_transforms`` layout, pending positional
-    ``delete_files`` followed by the commit's new ``sidecars``, and
-    the ``_PROPAGATED_PROPS`` properties."""
-    out: Dict[str, object] = {
-        "properties": {
-            k: info.properties[k]
-            for k in _PROPAGATED_PROPS
-            if k in info.properties
-        },
-    }
-    if info.columns is not None:
-        out["columns"] = dict(info.columns)
-    if info.schemas is not None:
-        out["schemas"] = {k: dict(v) for k, v in info.schemas.items()}
-        out["schema_id"] = info.schema_id
-    if info.partition_transforms:
-        out["partition_transforms"] = {
-            k: list(v) for k, v in info.partition_transforms.items()
-        }
-    delete_files = [dict(d) for d in info.delete_files or ()]
-    delete_files.extend(sidecars)
-    if delete_files:
-        out["delete_files"] = delete_files
-    return out
 
 
 def _local_parquet_files(local_dir: str) -> List[str]:
@@ -1271,29 +1246,39 @@ def _stats_eligible_simple(type_str: Optional[str]) -> bool:
     return type_str.split("(", 1)[0] in _STATS_ELIGIBLE_TYPES
 
 
-def _inherited_stats_columns(info: SnapshotInfo) -> List[str]:
-    """The envelope-stats column set a carried commit should keep
-    collecting by default: every column ANY parent file entry carries
-    stats for.  Rewrites (compact/optimize/delete/merge) and appends
-    used to default to ``()``, silently degrading file-scoped deletes
-    over the table's life — a table published with
-    ``stats_columns=['id']`` would lose its envelopes at the first
-    compaction and every later delete would rewrite O(table).
+def _stats_columns(
+    requested: Optional[Sequence[str]],
+    parent: Optional[SnapshotInfo],
+    columns: Optional[Dict[str, str]],
+) -> List[str]:
+    """THE envelope-stats column decision for a commit's new files.
 
-    Columns whose CURRENT table type is no longer stats-eligible are
-    dropped: an ``evolve=True`` widening like int→double leaves the
-    old files' int envelopes behind while the next rewrite would
-    write double — ``_file_column_stats`` refuses float, so blindly
-    inheriting would brick every maintenance call after such an
-    evolve."""
+    An explicit ``requested`` list is used as given: the footer read
+    (:func:`_file_column_stats`) refuses absent and float columns
+    loudly.  ``None`` inherits ``parent``'s set — every column ANY
+    parent file entry carries stats for — and with no parent means
+    none.  Rewrites (compact/optimize/delete/merge) and appends used
+    to default to ``()``, silently degrading file-scoped deletes over
+    the table's life: a table published with ``stats_columns=['id']``
+    would lose its envelopes at the first compaction and every later
+    delete would rewrite O(table).
+
+    The inherited set keeps only columns still stats-eligible under
+    both the parent's schema and the new files' ``columns``: an
+    ``evolve=True`` widening like int→double leaves the old files' int
+    envelopes behind while the next write would be double —
+    ``_file_column_stats`` refuses float, so blindly inheriting would
+    brick every later write after such an evolve."""
+    if requested is not None:
+        return list(requested)
+    if parent is None:
+        return []
     cols: set = set()
-    for f in info.files:
+    for f in parent.files:
         cols.update((f.get("stats") or {}).keys())
-    if info.columns is not None:
-        cols = {
-            c for c in cols
-            if _stats_eligible_simple(info.columns.get(c))
-        }
+    for schema in (parent.columns, columns):
+        if schema is not None:
+            cols = {c for c in cols if _stats_eligible_simple(schema.get(c))}
     return sorted(cols)
 
 
@@ -1534,6 +1519,436 @@ def _evolve_batch(df: DataFrame, parent_cols: Dict[str, str]):
     return aligned, target
 
 
+# ---------------------------------------------------------------------------
+# the write path.  Every committing verb states a _Plan (phase 1), and
+# _commit_plan runs the same phases for all of them: the schema and
+# layout (_resolve_layout), the data write (_write_files), the manifest
+# (_build_manifest) and _commit, then the plan's lost-race policy
+# ---------------------------------------------------------------------------
+
+#: ``_Plan.carry``: every parent entry (appends, positional commits)
+_CARRY_ALL = "all"
+
+
+class _Plan(NamedTuple):
+    """Phase 1: what a commit carries and how it treats a lost race.
+
+    ``carry`` is ``None`` (the commit carries nothing: a publish or a
+    full rewrite), ``_CARRY_ALL`` (every parent entry and the parent's
+    pending delete sidecars) or a list of the parent's own entries (a
+    file-scoped rewrite).  A carried commit keeps the parent's schema
+    (unless ``evolve``), registry and partition layout; an uncarried
+    one defines them fresh.  ``expect`` is the snapshot the verb
+    planned against (``None``: whatever the head is when the commit
+    starts).  ``mark`` is merged into every new file entry
+    (optimize's ``clustered`` tag, which incremental optimize carries
+    by).  ``on_race`` is the lost-race policy — ``"rebase"``,
+    ``"append_only"`` or ``"refuse"``, see :func:`_commit`."""
+
+    verb: str  # the public verb its errors name
+    operation: str  # the manifest's ``operation``
+    carry: Union[None, str, List[Dict[str, object]]] = None
+    expect: Optional[SnapshotInfo] = None
+    mark: Optional[Dict[str, object]] = None
+    evolve: bool = False
+    on_race: str = "refuse"
+
+    @property
+    def derived(self) -> bool:
+        """Whether the commit derives from its parent — every commit
+        but a plain publish, which defines the table fresh."""
+        return self.carry is not None or self.expect is not None
+
+
+class _Layout(NamedTuple):
+    """Phase 2's answer: the table schema, the generation registry
+    (``None`` under a parent predating ``columns``), the generation
+    current writes land under, the partition layout, and the
+    generation the commit's own files are tagged with (older than
+    ``schema_id`` only after a rebase onto an evolved parent)."""
+
+    columns: Optional[Dict[str, str]]
+    schemas: Optional[Dict[str, Dict[str, str]]]
+    schema_id: str
+    transforms: Optional[Dict[str, List]]
+    file_gen: str
+
+
+def _schema_of(df: DataFrame) -> Dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+
+def _plan_parent(
+    plan: _Plan, root: SmartPath, table_root: str, client=None
+) -> Optional[SnapshotInfo]:
+    """The snapshot this attempt commits onto, checked against the
+    pointer before anything is written: the head (nothing, for a
+    table's first publish) when the plan expects no parent, else the
+    planned snapshot while the pointer still names it.  A moved
+    pointer rebases an ``append_only`` plan onto the head, validated
+    back to the PLANNED snapshot its positions were matched over (not
+    merely the previous attempt's parent), and refuses every other
+    planned commit: a rewrite committed over a newer commit would
+    silently drop that commit's rows."""
+    head = _pointer_version(root, client=client)
+    if plan.expect is None:
+        if head is not None:
+            return resolve_snapshot(table_root, head, client=client)
+        if plan.carry is not None:
+            raise FileNotFoundError(
+                f"{plan.verb}: nothing published under {table_root!r} "
+                "yet — the first write is a publish_snapshot"
+            )
+        return None
+    if head == plan.expect.version:
+        return plan.expect
+    if plan.on_race == "append_only":
+        return _rebase_append_only_head(
+            table_root, plan.expect.version, plan.verb, client=client
+        )
+    raise RuntimeError(
+        f"{plan.verb}: the table advanced v{plan.expect.version} -> "
+        f"v{head} after this {plan.operation} was planned — committing "
+        "would silently drop the newer commit's rows.  Re-run the "
+        "operation against the current snapshot."
+    )
+
+
+def _resolve_layout(
+    plan: _Plan,
+    parent: Optional[SnapshotInfo],
+    columns: Optional[Dict[str, str]],
+    df: Optional[DataFrame],
+    written: Optional[Dict[str, object]],
+    transforms: Optional[Dict[str, Sequence]],
+):
+    """Phase 2: the schema, generation registry and partition layout
+    the commit lands under.  Returns ``(df, layout)``, ``df`` evolved
+    when the plan allows it.
+
+    ``columns`` is the schema of the commit's own files (``None`` when
+    it writes none, like a positional delete's sidecar).  A carried
+    commit's files must match the parent's schema exactly: a table
+    mixing file shapes commits fine and then LOSES data at read time
+    (spark.read.parquet samples one file's schema).  ``plan.evolve``
+    widens the table instead (:func:`_evolve_batch`).  Files already
+    ``written`` (pre-written, or a rebase after the write) cannot
+    change: they fit while the parent keeps the schema they were
+    written against, or match a generation its registry still carries
+    (they are tagged with it); anything else refuses.  Parents
+    predating ``columns`` skip the check and keep no registry.
+
+    Carried commits inherit the parent's ``partition_transforms``,
+    skipping the bucket source-type strictness (the table already has
+    the layout; refusing would brick appends to healthy tables); an
+    uncarried commit validates ``transforms`` fresh.  A rebase whose
+    written prefix is laid out under another spec than the new
+    parent's refuses: its recorded partition values would misprune."""
+    if written is not None:
+        columns = written["columns"]
+    if plan.carry is None:
+        layout = _Layout(
+            dict(columns), {"0": dict(columns)}, "0",
+            _validate_transforms(dict(transforms), columns)
+            if transforms is not None else None,
+            "0",
+        )
+    else:
+        parent_cols = parent.columns
+        if columns is None:
+            columns = parent_cols
+        file_gen = None
+        if parent_cols is not None and dict(parent_cols) != columns:
+            if written is None and plan.evolve:
+                df, columns = _evolve_batch(df, dict(parent_cols))
+            elif written is None:
+                extra = sorted(set(columns) - set(parent_cols))
+                missing = sorted(set(parent_cols) - set(columns))
+                changed = sorted(
+                    c for c in set(columns) & set(parent_cols)
+                    if columns[c] != parent_cols[c]
+                )
+                raise ValueError(
+                    f"{plan.verb}: batch schema does not match the "
+                    f"table's (extra={extra}, missing={missing}, "
+                    f"type-changed={changed}) — an append must ship "
+                    "every table column with its exact type; pass "
+                    "evolve=True for add-column / lossless-widen "
+                    "evolution, or republish for anything lossy"
+                )
+            elif written["under"] != parent_cols:
+                file_gen = next(
+                    (
+                        g for g, cols in (parent.schemas or {}).items()
+                        if dict(cols) == columns
+                    ),
+                    None,
+                )
+                if file_gen is None:
+                    raise RuntimeError(
+                        f"{plan.verb}: concurrent commit changed the "
+                        "table schema during the append to "
+                        f"{parent.table_root!r} — rebase refused; re-run "
+                        "the append (our data prefix is an orphan; "
+                        "vacuum will sweep it)"
+                    )
+                columns = dict(parent_cols)
+        schemas, schema_id = None, "0"
+        if parent_cols is not None:
+            schemas = {
+                k: dict(v)
+                for k, v in (parent.schemas or {"0": parent_cols}).items()
+            }
+            if dict(columns) == dict(parent_cols):
+                schema_id = parent.schema_id
+            else:
+                schema_id = str(max(int(k) for k in schemas) + 1)
+                schemas[schema_id] = dict(columns)
+        inherited = parent.partition_transforms
+        layout = _Layout(
+            columns, schemas, schema_id,
+            _validate_transforms(
+                dict(inherited), columns, strict_bucket_types=False
+            ) if inherited else None,
+            schema_id if file_gen is None else file_gen,
+        )
+    if written is not None and layout.transforms != written["transforms"]:
+        raise RuntimeError(
+            f"{plan.verb}: concurrent commit changed the table's "
+            f"partition_transforms during the append to "
+            f"{parent.table_root!r} ({written['transforms']} -> "
+            f"{layout.transforms}) — the written data prefix is laid "
+            "out under the old spec, so its recorded partition values "
+            "would misprune under the new one; rebase refused.  Re-run "
+            "the append (our data prefix is an orphan; vacuum will "
+            "sweep it)."
+        )
+    return df, layout
+
+
+def _write_files(
+    plan: _Plan,
+    parent: Optional[SnapshotInfo],
+    layout: _Layout,
+    root: SmartPath,
+    version: int,
+    df: Optional[DataFrame],
+    positions: Optional[Tuple[DataFrame, int]],
+    compression: str,
+    stats_columns: Optional[Sequence[str]],
+    client=None,
+) -> Dict[str, object]:
+    """Phase 3: write the commit's own files into a fresh prefix —
+    ``df`` as data files with envelope stats on
+    :func:`_stats_columns`'s choice, and ``positions`` (a frame of
+    ``(path, pos)`` rows and its row count) as a positional-delete
+    sidecar.  The random token keeps a retry after a crash clear of
+    the orphan.  Returns the written inventory together with the
+    schema, parent schema and partition spec it was written under,
+    which phase 2 checks a rebase against."""
+    rel_prefix = f"{DATA_DIR}/v{version:08d}-{uuid.uuid4().hex[:8]}"
+    out: Dict[str, object] = {"files": [], "row_count": 0}
+    if df is not None:
+        out = _write_data_prefix(
+            df, root, rel_prefix, compression,
+            stats_columns=_stats_columns(
+                stats_columns, parent if plan.derived else None,
+                layout.columns,
+            ),
+            client=client,
+            transforms=layout.transforms,
+        )
+    sidecars: List[Dict[str, object]] = []
+    if positions is not None and positions[1] > 0:
+        sidecars = _write_delete_sidecar(
+            positions[0], root, rel_prefix, compression, positions[1],
+            client=client,
+        )
+    return {
+        **out,
+        "rel_prefix": rel_prefix,
+        "sidecars": sidecars,
+        "columns": layout.columns if df is not None else None,
+        "under": None if parent is None else parent.columns,
+        "transforms": layout.transforms,
+    }
+
+
+def _pre_written(
+    verb: str,
+    rel_prefix: str,
+    files: Sequence[Dict[str, object]],
+    columns: Dict[str, str],
+) -> Dict[str, object]:
+    """Phase 3's result for files a writer already landed under
+    ``<table_root>/<rel_prefix>`` (the registered sink and batch
+    writer): validated, adopted as written, no Spark write."""
+    prefix = rel_prefix.strip("/")
+    for e in files:
+        if not str(e.get("path", "")).startswith(prefix + "/"):
+            raise ValueError(
+                f"{verb}: entry path {e.get('path')!r} is not under "
+                f"rel_prefix {prefix!r}"
+            )
+        if e.get("rows") is None:
+            raise ValueError(
+                f"{verb}: entry {e.get('path')!r} lacks a 'rows' count"
+            )
+    return {
+        "files": [dict(e) for e in files],
+        "row_count": sum(int(e["rows"]) for e in files),
+        "rel_prefix": prefix,
+        "sidecars": [],
+        "columns": dict(columns),
+        "under": None,
+        "transforms": None,
+    }
+
+
+def _build_manifest(
+    version: int,
+    operation: str,
+    parent: Optional[int],
+    source: Optional[SnapshotInfo],
+    carry: Union[None, str, List[Dict[str, object]]],
+    written: Dict[str, object],
+    layout: _Layout,
+    properties: Dict[str, object],
+    mark: Optional[Dict[str, object]] = None,
+) -> Dict[str, object]:
+    """Phase 4: one commit's manifest — ``carry``'s entries of
+    ``source`` (as in ``_Plan.carry``) verbatim, then the ``written``
+    files tagged with the layout's file generation and ``mark``, under
+    ``layout``'s schema, registry and partition spec.
+
+    Carried entries bring the source's pending delete sidecars
+    (dropping them would RESURRECT the deleted rows); the commit's own
+    sidecars follow, and ``row_count`` nets them out — their positions
+    were matched over a delete-aware scan, so they are disjoint from
+    every pending sidecar.  A prefix is the
+    first-level dir under data/ (vacuum's orphan accounting uses the
+    same split): a subset carry records only its entries' prefixes,
+    so a prefix whose files were all rewritten drops out and vacuum
+    can reclaim it once the old versions age off the chain."""
+    files: List[Dict[str, object]] = []
+    prefixes: List[str] = []
+    rows = 0
+    deletes: List[Dict[str, object]] = []
+    if source is not None and carry is not None:
+        deletes = [dict(d) for d in source.delete_files or ()]
+        if carry == _CARRY_ALL:
+            files = [dict(f) for f in source.files]
+            prefixes, rows = list(source.prefixes), source.row_count
+        else:
+            files = [dict(f) for f in carry]
+            prefixes = ["/".join(f["path"].split("/")[:2]) for f in files]
+            rows = sum(int(f["rows"]) for f in files)
+    for written_entry in written["files"]:
+        entry = {k: v for k, v in written_entry.items() if k != "schema"}
+        if layout.schemas is not None and layout.file_gen != "0":
+            # entries without a "schema" key default to generation "0",
+            # so only non-zero generations spend manifest bytes on it
+            entry["schema"] = layout.file_gen
+        files.append({**entry, **(mark or {})})
+    schemas = layout.schemas
+    if schemas is not None:
+        referenced = {str(f.get("schema", "0")) for f in files}
+        referenced.add(layout.schema_id)
+        missing_gen = referenced - set(schemas)
+        if missing_gen:
+            raise RuntimeError(
+                "publish_snapshot: carried files reference schema "
+                f"generations {sorted(missing_gen)} absent from the "
+                "parent's registry — manifest corruption"
+            )
+        schemas = {k: schemas[k] for k in sorted(referenced, key=int)}
+    sidecars = list(written["sidecars"])
+    manifest: Dict[str, object] = {
+        "version": version,
+        "spec": 2,
+        "data_prefix": written["rel_prefix"],
+        "prefixes": sorted(set(prefixes) | {written["rel_prefix"]}),
+        "files": files,
+        "row_count": (
+            rows + written["row_count"]
+            - sum(int(d["rows"]) for d in sidecars)
+        ),
+        "parent": parent,
+        "operation": operation,
+        "committed_at": time.time(),
+        "format": "parquet",
+        "properties": properties,
+    }
+    if layout.columns is not None:
+        manifest["columns"] = dict(layout.columns)
+    if deletes or sidecars:
+        manifest["delete_files"] = deletes + sidecars
+    if schemas is not None:
+        manifest["schemas"] = schemas
+        manifest["schema_id"] = layout.schema_id
+    if layout.transforms:
+        manifest["partition_transforms"] = layout.transforms
+    return manifest
+
+
+def _commit_plan(
+    plan: _Plan,
+    table_root: str,
+    columns: Optional[Dict[str, str]],
+    df: Optional[DataFrame] = None,
+    compression: str = "zstd",
+    stats_columns: Optional[Sequence[str]] = None,
+    transforms: Optional[Dict[str, Sequence]] = None,
+    properties: Optional[Dict[str, object]] = None,
+    written: Optional[Dict[str, object]] = None,
+    positions: Optional[Tuple[DataFrame, int]] = None,
+    client=None,
+) -> SnapshotInfo:
+    """Commit ``plan`` through the phases, in the crash-safe order
+    (module docstring): the data write (skipped for pre-``written``
+    files) precedes the manifest, the manifest the pointer.  The
+    commit re-states the parent's ``_PROPAGATED_PROPS`` under
+    ``properties``.  A lost race follows ``plan.on_race``, at most
+    ``DEFAULT_COMMIT_RETRIES`` times: a rebase re-runs phases 2 and 4
+    against the new parent and reuses the written prefix — two small
+    JSON writes, not a data rewrite."""
+    root = SmartPath.parse(table_root)
+    attempts_left = 0 if plan.on_race == "refuse" else DEFAULT_COMMIT_RETRIES
+    while True:
+        parent = _plan_parent(plan, root, table_root, client)
+        df, layout = _resolve_layout(
+            plan, parent, columns, df, written, transforms
+        )
+        version = _next_version(root, client=client)
+        if written is None:
+            written = _write_files(
+                plan, parent, layout, root, version, df, positions,
+                compression, stats_columns, client,
+            )
+        props: Dict[str, object] = {}
+        if parent is not None:
+            props = {
+                k: parent.properties[k]
+                for k in _PROPAGATED_PROPS
+                if k in parent.properties
+            }
+        manifest = _build_manifest(
+            version, plan.operation,
+            None if parent is None else parent.version,
+            parent, plan.carry, written, layout,
+            {**props, **(properties or {})}, plan.mark,
+        )
+        info = _commit(root, table_root, manifest, manifest["parent"], client)
+        if info is not None:
+            return info
+        if attempts_left <= 0:
+            raise _race_error(
+                plan.verb, version, table_root,
+                rebasing=plan.on_race != "refuse",
+            )
+        attempts_left -= 1
+
+
 def publish_snapshot(
     df: DataFrame,
     table_root: str,
@@ -1543,34 +1958,19 @@ def publish_snapshot(
     stats_columns: Optional[Sequence[str]] = (),
     partition_transforms: Optional[Dict[str, Sequence]] = None,
     client=None,
-    _carry_parent: bool = False,
-    _carry_files: Optional[List[Dict[str, object]]] = None,
-    _evolve: bool = False,
-    _expect_parent: Optional[int] = None,
-    _mark_files: Optional[Dict[str, object]] = None,
-    _pre_written: Optional[Dict[str, object]] = None,
 ) -> SnapshotInfo:
     """Publish ``df`` as the table's next snapshot (see module docstring
     for the protocol and its crash windows).  Returns the committed
     :class:`SnapshotInfo`.
-
-    ``_carry_files`` (internal, used by the file-scoped delete): carry
-    exactly these parent file entries verbatim instead of all of them
-    — the entries MUST come from the current snapshot's manifest.  An
-    empty list is a valid value (rewrite touched every file); ``None``
-    means "carry nothing" (plain publish) unless ``_carry_parent``.
 
     ``stats_columns`` opts chosen columns into per-file envelope stats
     (min/max/nulls from the just-written footers) that
     ``read_snapshot(where=...)`` uses for file skipping.  Opt-in, not
     automatic: at 800k files × many columns the manifest is the cost,
     and the caller knows which columns queries actually filter on.
-    ``None`` on a CARRIED commit (append/delete/merge/compact) inherits
-    the parent's envelope-stats column set — computed from the parent
-    manifest the carry protocol already resolved, zero extra GETs on
-    the hot ingest path — filtered to columns still stats-eligible
-    under the (possibly evolved) new schema; on a plain publish,
-    ``None`` means ``()``.
+    ``None`` means ``()`` here; the verbs that derive a commit from
+    the parent (append, delete, merge, compact, optimize) inherit the
+    parent's envelope-stats column set instead (:func:`_stats_columns`).
 
     ``partition_transforms`` (``{name: ("days"|"hours", src)`` or
     ``("bucket", src, n)}``) lays the data prefix out in Iceberg-style
@@ -1579,11 +1979,10 @@ def publish_snapshot(
     explicit files, so it never enters the schema), each file entry
     records its partition values, and ``read_snapshot(where=...)``
     prunes on them — directory-level skipping on top of (and without
-    needing) envelope stats.  Commits that carry parent files (append,
-    file-scoped delete) INHERIT the table's transforms; passing a
-    different spec there refuses.  A plain publish defines the
-    table's layout fresh.  Time granules are UTC BY PROTOCOL: the
-    write side has refused non-UTC sessions since the feature
+    needing) envelope stats.  A publish defines the table's layout
+    fresh; commits that carry parent files (append, file-scoped
+    delete and merge) INHERIT it.  Time granules are UTC BY PROTOCOL:
+    the write side has refused non-UTC sessions since the feature
     shipped, so every directory this code ever formatted is UTC and
     the pruner needs no per-table timezone record.
 
@@ -1592,375 +1991,17 @@ def publish_snapshot(
     pointer (atomic flip).  A failure anywhere leaves the previous
     snapshot fully readable and the debris invisible + vacuumable.
     """
-    root = SmartPath.parse(table_root)
-    carry = _carry_parent or _carry_files is not None
-    # a carried append rebases after a lost race (see _commit): each
-    # retry re-runs this loop from the new parent and reuses the data
-    # prefix written on the first attempt (its name keeps that
-    # attempt's allocation number; nothing parses prefix names).
-    # Every other operation refuses.
-    retryable = _carry_parent and operation == "append"
-    attempts_left = DEFAULT_COMMIT_RETRIES if retryable else 0
-    written: Optional[Dict[str, object]] = None
-    # the transform spec the data prefix was actually LAID OUT under —
-    # a rebase re-derives eff_transforms from the NEW parent, and if a
-    # concurrent republish redefined a transform (same directory name,
-    # different source/kind) the already-written partition values would
-    # be recorded under the wrong spec (silent mispruning) — refuse
-    written_transforms: Optional[Dict[str, List]] = None
-    rel_prefix: Optional[str] = None
-    # when _evolve rewrote `columns` on the first attempt, this holds
-    # the parent schema it evolved FROM — a rebase onto a parent with
-    # that same schema is safe (the concurrent commit did not change
-    # it); anything else refuses
-    evolved_from: Optional[Dict[str, str]] = None
-    if _pre_written is not None:
-        # files already on disk under <table_root>/<rel_prefix>
-        # (append_files_snapshot / the registered sink and writer):
-        # adopt them as this commit's write and skip the Spark write
-        # below.  SparkSession-free by construction — `df` is unused.
-        pre_ok = (_carry_parent and operation == "append") or (
-            not _carry_parent
-            and _carry_files is None
-            and operation == "publish"
-        )
-        if not pre_ok or _evolve or partition_transforms is not None:
-            raise ValueError(
-                "publish_snapshot: _pre_written is only valid for a "
-                "carried append or a plain publish, without evolution "
-                "or partition_transforms (pre-written files are not "
-                "laid out under a transform spec)"
-            )
-        columns = dict(_pre_written["columns"])
-        rel_prefix = str(_pre_written["rel_prefix"])
-        written = {
-            "files": [dict(e) for e in _pre_written["files"]],
-            "row_count": sum(
-                int(e["rows"]) for e in _pre_written["files"]
-            ),
-        }
-        written_transforms = None
-    else:
-        columns = {
-            f.name: f.dataType.simpleString() for f in df.schema.fields
-        }
-    while True:
-        begin_version = _pointer_version(root, client=client)
-        # rewrite operations (delete/compact/optimize) plan against a
-        # resolved snapshot BEFORE calling here; if another commit
-        # landed in between, publishing would silently drop its rows
-        # from the rewritten table — refuse while nothing has been
-        # written yet
-        if _expect_parent is not None and begin_version != _expect_parent:
-            raise RuntimeError(
-                f"publish_snapshot: the table advanced v{_expect_parent} "
-                f"-> v{begin_version} after this {operation} was planned "
-                "— committing would silently drop the newer commit's "
-                "rows.  Re-run the operation against the current "
-                "snapshot."
-            )
-        carried_files: List[Dict[str, object]] = []
-        carried_prefixes: List[str] = []
-        carried_rows = 0
-        carried_props: Dict[str, object] = {}
-        carried_deletes: List[Dict[str, object]] = []
-        if carry and begin_version is None:
-            raise FileNotFoundError(
-                f"append_snapshot: nothing published under {table_root!r} "
-                "yet — the first write is a publish_snapshot"
-            )
-        schemas: Optional[Dict[str, Dict[str, str]]] = {"0": dict(columns)}
-        schema_id = "0"
-        # set only by a rebase onto an evolved parent: the generation
-        # to tag OUR files with (older than the table's current)
-        file_gen: Optional[str] = None
-        if begin_version is not None:
-            parent_info = resolve_snapshot(
-                table_root, begin_version, client=client
-            )
-            # the streaming sink's exactly-once watermark must survive
-            # rewrites (compact/optimize/delete) AND vacuum, so every
-            # descendant manifest re-states it unless the caller
-            # advances it explicitly (streaming/snapshot_sink.py)
-            for k in _PROPAGATED_PROPS:
-                if k in parent_info.properties:
-                    carried_props[k] = parent_info.properties[k]
-            if carry:
-                # a commit mixing files of a different shape would land
-                # fine and then LOSE data at read time
-                # (spark.read.parquet samples one file's schema;
-                # missing columns silently disappear or null out) —
-                # refuse loudly unless the caller opted into evolution.
-                # Parent manifests predating "columns" skip the check.
-                parent_cols = parent_info.columns
-                if parent_cols is not None and dict(parent_cols) != columns:
-                    if written is not None:
-                        rebase_gen = next(
-                            (
-                                g
-                                for g, cols in (
-                                    parent_info.schemas or {}
-                                ).items()
-                                if dict(cols) == columns
-                            ),
-                            None,
-                        )
-                        if (
-                            evolved_from is not None
-                            and dict(parent_cols) == evolved_from
-                        ):
-                            # rebase after OUR evolve: the concurrent
-                            # commit kept the schema we evolved from,
-                            # so the already-written files still fit —
-                            # proceed to mint the generation against
-                            # the new parent's registry
-                            pass
-                        elif rebase_gen is not None:
-                            # the concurrent commit EVOLVED the table,
-                            # but our written files match a generation
-                            # its registry still carries — tag them
-                            # with that generation and adopt the new
-                            # parent's (current) schema for the table
-                            file_gen = rebase_gen
-                            columns = dict(parent_cols)
-                        else:
-                            # the concurrent commit changed the table
-                            # schema AFTER our data landed — our files
-                            # no longer match
-                            raise RuntimeError(
-                                "append_snapshot: concurrent commit "
-                                "changed the table schema during the "
-                                f"append to {table_root!r} — rebase "
-                                "refused; re-run the append (our data "
-                                "prefix is an orphan; vacuum will "
-                                "sweep it)"
-                            )
-                    elif _evolve:
-                        evolved_from = dict(parent_cols)
-                        df, columns = _evolve_batch(df, dict(parent_cols))
-                    else:
-                        extra = sorted(set(columns) - set(parent_cols))
-                        missing = sorted(set(parent_cols) - set(columns))
-                        changed = sorted(
-                            c for c in set(columns) & set(parent_cols)
-                            if columns[c] != parent_cols[c]
-                        )
-                        raise ValueError(
-                            "append_snapshot: batch schema does not "
-                            "match the table's (extra="
-                            f"{extra}, missing={missing}, "
-                            f"type-changed={changed}) — an append must "
-                            "ship every table column with its exact "
-                            "type; pass evolve=True for add-column / "
-                            "lossless-widen evolution, or republish "
-                            "for anything lossy"
-                        )
-                # schema registry: carried files keep the generation
-                # they were written under; this commit's new files land
-                # under the (possibly just-evolved) current generation
-                if parent_cols is not None:
-                    parent_schemas = parent_info.schemas or {
-                        "0": dict(parent_cols)
-                    }
-                    if dict(columns) == dict(parent_cols):
-                        schema_id = parent_info.schema_id
-                        schemas = {
-                            k: dict(v) for k, v in parent_schemas.items()
-                        }
-                    else:
-                        schema_id = str(
-                            max(int(k) for k in parent_schemas) + 1
-                        )
-                        schemas = {
-                            **{
-                                k: dict(v)
-                                for k, v in parent_schemas.items()
-                            },
-                            schema_id: dict(columns),
-                        }
-                else:
-                    # spec-1 parent: no recorded schema to evolve
-                    # against — legacy behavior (no registry)
-                    schemas = None
-            if carry and parent_info.delete_files:
-                # appends carry pending deletes verbatim: dropping
-                # them would RESURRECT the deleted rows
-                carried_deletes = [
-                    dict(d) for d in parent_info.delete_files
-                ]
-            if _carry_files is not None:
-                # checked on the parent as re-read here, whatever the
-                # calling verb saw when it planned
-                _refuse_pending_deletes(
-                    parent_info, f"publish_snapshot({operation})",
-                    "run compact_snapshot (or a full optimize) to apply "
-                    "them first",
-                )
-                parent_paths = {f["path"] for f in parent_info.files}
-                alien = [
-                    f["path"] for f in _carry_files
-                    if f["path"] not in parent_paths
-                ]
-                if alien:
-                    raise ValueError(
-                        "publish_snapshot: _carry_files entries not in "
-                        f"the current snapshot's manifest: {alien[:3]} "
-                        "— carried entries must be verbatim parent "
-                        "entries"
-                    )
-                no_rows = [
-                    f["path"] for f in _carry_files if f.get("rows") is None
-                ]
-                if no_rows:
-                    raise ValueError(
-                        "publish_snapshot: _carry_files entries without "
-                        f"a 'rows' count (spec-1 manifest?): "
-                        f"{no_rows[:3]} — the descendant manifest's "
-                        "row_count would be wrong"
-                    )
-                carried_files = [dict(f) for f in _carry_files]
-                # a prefix is the first-level dir under data/ (vacuum's
-                # orphan accounting uses the same split); prefixes whose
-                # files were ALL rewritten drop out so vacuum can
-                # reclaim them once the old versions age off the chain
-                carried_prefixes = sorted(
-                    {
-                        "/".join(f["path"].split("/")[:2])
-                        for f in carried_files
-                    }
-                )
-                carried_rows = sum(int(f["rows"]) for f in carried_files)
-            elif _carry_parent:
-                carried_files = [dict(f) for f in parent_info.files]
-                carried_prefixes = list(parent_info.prefixes)
-                carried_rows = parent_info.row_count
-        # partition-transform layout: carried commits inherit the
-        # table's (a different spec would mix layouts in one table —
-        # refuse); a plain publish defines it fresh
-        if carry and begin_version is not None:
-            inherited = parent_info.partition_transforms
-            if partition_transforms is not None:
-                given = _validate_transforms(
-                    dict(partition_transforms), columns
-                )
-                if given != (inherited or {}):
-                    raise ValueError(
-                        "publish_snapshot: partition_transforms "
-                        f"{given} differ from the table's "
-                        f"{inherited} — carried commits inherit the "
-                        "layout; republish to change it"
-                    )
-            eff_transforms = (
-                # inherited specs skip the bucket source-type
-                # restriction: the table already has the layout, and
-                # refusing would brick appends to healthy tables
-                _validate_transforms(
-                    dict(inherited), columns, strict_bucket_types=False
-                )
-                if inherited
-                else None
-            )
-        elif partition_transforms is not None:
-            eff_transforms = _validate_transforms(
-                dict(partition_transforms), columns
-            )
-        else:
-            eff_transforms = None
-        if written is not None and eff_transforms != written_transforms:
-            raise RuntimeError(
-                "append_snapshot: concurrent commit changed the "
-                f"table's partition_transforms during the append to "
-                f"{table_root!r} ({written_transforms} -> "
-                f"{eff_transforms}) — the written data prefix is laid "
-                "out under the old spec, so its recorded partition "
-                "values would misprune under the new one; rebase "
-                "refused.  Re-run the append (our data prefix is an "
-                "orphan; vacuum will sweep it)."
-            )
-        version = _next_version(root, client=client)
-        if written is None:
-            eff_stats = stats_columns
-            if eff_stats is None:
-                # inherit on carried commits, from the parent manifest
-                # this loop already resolved (no extra GETs); filtered
-                # to columns still eligible under the new schema so an
-                # evolve widening past eligibility can't brick the write
-                eff_stats = ()
-                if carry and begin_version is not None:
-                    eff_stats = [
-                        c
-                        for c in _inherited_stats_columns(parent_info)
-                        if _stats_eligible_simple(columns.get(c))
-                    ]
-            token = uuid.uuid4().hex[:8]
-            rel_prefix = f"{DATA_DIR}/v{version:08d}-{token}"
-            written = _write_data_prefix(
-                df, root, rel_prefix, compression,
-                stats_columns=eff_stats, client=client,
-                transforms=eff_transforms,
-            )
-            written_transforms = eff_transforms
-        # (re)tag our files: a rebase may re-resolve a different parent
-        # registry, so the tag is recomputed each attempt.  A rebase
-        # onto an evolved parent tags with the OLDER generation the
-        # files were actually written under (file_gen), not the
-        # table's current one
-        own_gen = file_gen if file_gen is not None else schema_id
-        for entry in written["files"]:
-            entry.pop("schema", None)
-        if schemas is not None and own_gen != "0":
-            # entries without a "schema" key default to generation "0",
-            # so only non-zero generations spend manifest bytes on it
-            for entry in written["files"]:
-                entry["schema"] = own_gen
-        if _mark_files:
-            # operation-specific entry metadata (e.g. optimize's
-            # "clustered" tag, which incremental optimize carries by)
-            for entry in written["files"]:
-                entry.update(_mark_files)
-        all_files = carried_files + written["files"]
-        if schemas is not None:
-            referenced = {str(f.get("schema", "0")) for f in all_files}
-            referenced.add(schema_id)
-            missing_gen = referenced - set(schemas)
-            if missing_gen:
-                raise RuntimeError(
-                    "publish_snapshot: carried files reference schema "
-                    f"generations {sorted(missing_gen)} absent from the "
-                    "parent's registry — manifest corruption"
-                )
-            schemas = {k: schemas[k] for k in sorted(referenced, key=int)}
-
-        manifest = {
-            "version": version,
-            "spec": 2,
-            "columns": columns,
-            "data_prefix": rel_prefix,
-            "prefixes": sorted(set(carried_prefixes) | {rel_prefix}),
-            "files": all_files,
-            "row_count": carried_rows + written["row_count"],
-            "parent": begin_version,
-            "operation": operation,
-            "committed_at": time.time(),
-            "format": "parquet",
-            "properties": {**carried_props, **(properties or {})},
-        }
-        if carried_deletes:
-            manifest["delete_files"] = carried_deletes
-        if schemas is not None:
-            manifest["schemas"] = schemas
-            manifest["schema_id"] = schema_id
-        if eff_transforms:
-            manifest["partition_transforms"] = eff_transforms
-        info = _commit(root, table_root, manifest, begin_version, client)
-        if info is not None:
-            return info
-        if attempts_left <= 0:
-            raise _race_error(
-                "append_snapshot" if retryable else "publish_snapshot",
-                version, table_root, rebasing=retryable,
-            )
-        attempts_left -= 1
+    return _commit_plan(
+        _Plan("publish_snapshot", operation),
+        table_root,
+        _schema_of(df),
+        df,
+        compression=compression,
+        stats_columns=stats_columns,
+        transforms=partition_transforms,
+        properties=properties,
+        client=client,
+    )
 
 
 def append_snapshot(
@@ -1976,10 +2017,10 @@ def append_snapshot(
     the daily-ingest operation.  Only the new rows' prefix is written;
     the manifest carries the parent's file entries (and their stats)
     verbatim, so an append costs O(new data) however large the table.
-    Same crash windows and single-writer detection as
-    :func:`publish_snapshot`; the first write to an empty table must be
-    a publish (raises FileNotFoundError otherwise, so a typo'd root
-    can't silently start a new table).
+    Same crash windows as :func:`publish_snapshot`; a lost pointer
+    race rebases (see :func:`_commit`).  The first write to an empty
+    table must be a publish (raises FileNotFoundError otherwise, so a
+    typo'd root can't silently start a new table).
 
     ``evolve=True`` admits a batch whose schema differs by ADDING
     columns or LOSSLESSLY widening types (see :func:`_evolve_batch`):
@@ -1995,40 +2036,24 @@ def append_snapshot(
     envelope-less files that all later file-scoped deletes/merges
     must conservatively rewrite (``snapshot_table_stats``'s
     ``envelope_overlap_avg`` counts such files as always-touched).
-    The inheritance happens inside :func:`publish_snapshot` against
-    the parent manifest the carry protocol already resolves — NO
-    extra manifest GET on the hot ingest path.  Pass ``()`` to skip
-    stats explicitly; columns whose evolved type is no longer
-    stats-eligible (e.g. widened to double) drop out of the
+    The inheritance reads the parent manifest the commit already
+    resolves — NO extra manifest GET on the hot ingest path.  Pass
+    ``()`` to skip stats explicitly; columns whose evolved type is no
+    longer stats-eligible (e.g. widened to double) drop out of the
     inherited set."""
-    return publish_snapshot(
-        df,
+    return _commit_plan(
+        _Plan(
+            "append_snapshot", "append", carry=_CARRY_ALL, evolve=evolve,
+            on_race="rebase",
+        ),
         table_root,
-        operation="append",
+        _schema_of(df),
+        df,
         compression=compression,
-        properties=properties,
         stats_columns=stats_columns,
+        properties=properties,
         client=client,
-        _carry_parent=True,
-        _evolve=evolve,
     )
-
-
-def _validate_pre_written_entries(
-    verb: str, rel_prefix: str, files: Sequence[Dict[str, object]]
-) -> str:
-    prefix = rel_prefix.strip("/")
-    for e in files:
-        if not str(e.get("path", "")).startswith(prefix + "/"):
-            raise ValueError(
-                f"{verb}: entry path {e.get('path')!r} is not under "
-                f"rel_prefix {prefix!r}"
-            )
-        if e.get("rows") is None:
-            raise ValueError(
-                f"{verb}: entry {e.get('path')!r} lacks a 'rows' count"
-            )
-    return prefix
 
 
 def publish_files_snapshot(
@@ -2047,20 +2072,14 @@ def publish_files_snapshot(
     version stays readable on the chain until vacuumed, and pending
     positional deletes do not carry (the new state supersedes them).
     """
-    _validate_pre_written_entries(
-        "publish_files_snapshot", rel_prefix, files
-    )
-    return publish_snapshot(
-        None,
+    verb = "publish_files_snapshot"
+    return _commit_plan(
+        _Plan(verb, "publish"),
         table_root,
-        operation="publish",
+        dict(columns),
         properties=properties,
+        written=_pre_written(verb, rel_prefix, files, columns),
         client=client,
-        _pre_written={
-            "rel_prefix": rel_prefix.strip("/"),
-            "files": [dict(e) for e in files],
-            "columns": dict(columns),
-        },
     )
 
 
@@ -2091,10 +2110,11 @@ def append_files_snapshot(
     ``partition_transforms`` refuse: the pre-written files are not
     laid out under the table's transform directories, so their
     recorded partition values would misprune."""
+    verb = "append_files_snapshot"
     head = resolve_snapshot(table_root, client=client)
     if head.partition_transforms:
         raise ValueError(
-            "append_files_snapshot: the table has partition_transforms "
+            f"{verb}: the table has partition_transforms "
             f"({sorted(head.partition_transforms)}) and pre-written "
             "files are not laid out under its transform directories — "
             "append through append_snapshot, which lays the prefix out "
@@ -2107,27 +2127,19 @@ def append_files_snapshot(
         dict(g) == dict(columns) for g in generations.values()
     ):
         raise ValueError(
-            "append_files_snapshot: the written schema does not match "
+            f"{verb}: the written schema does not match "
             "the table's current schema or any generation its registry "
             f"carries (written={sorted(columns)}, current="
             f"{sorted(head.columns or {})}) — evolution is not "
             "supported on this path; use append_snapshot(evolve=True)"
         )
-    prefix = _validate_pre_written_entries(
-        "append_files_snapshot", rel_prefix, files
-    )
-    return publish_snapshot(
-        None,
+    return _commit_plan(
+        _Plan(verb, "append", carry=_CARRY_ALL, on_race="rebase"),
         table_root,
-        operation="append",
+        dict(columns),
         properties=properties,
+        written=_pre_written(verb, rel_prefix, files, columns),
         client=client,
-        _carry_parent=True,
-        _pre_written={
-            "rel_prefix": prefix,
-            "files": [dict(e) for e in files],
-            "columns": dict(columns),
-        },
     )
 
 
@@ -3009,11 +3021,9 @@ def compact_snapshot(
     routine maintenance; pass ``()`` to drop stats explicitly."""
     with packed_scan_conf(spark, target_file_bytes):
         info = resolve_snapshot(table_root, client=client)
-        if stats_columns is None:
-            stats_columns = _inherited_stats_columns(info)
-        # read the PLANNED version explicitly so the rewrite and its
-        # _expect_parent guard agree even if the table advances between
-        # these two lines (the guard then catches it at publish)
+        # read the PLANNED version explicitly so the rewrite and the
+        # plan's expected parent agree even if the table advances
+        # between these two lines (the commit then refuses)
         df = read_snapshot(
             spark,
             table_root,
@@ -3026,15 +3036,15 @@ def compact_snapshot(
         # a transformed table keeps its directory layout through
         # compaction (the bin-packed scan lists files in path order,
         # so each task covers contiguous partition dirs)
-        return publish_snapshot(
-            df,
+        return _commit_plan(
+            _Plan("compact_snapshot", "compact", expect=info),
             table_root,
-            operation="compact",
+            _schema_of(df),
+            df,
             compression=compression,
             stats_columns=stats_columns,
-            partition_transforms=info.partition_transforms,
+            transforms=info.partition_transforms,
             client=client,
-            _expect_parent=info.version,
         )
 
 
@@ -3085,10 +3095,6 @@ def optimize_snapshot(
 
     pre = resolve_snapshot(table_root, client=client)
     cluster_by = list(cluster_by)
-    if stats_columns is None:
-        # inherit the parent's envelope-stats set (same default as
-        # compact_snapshot) so maintenance never degrades later deletes
-        stats_columns = _inherited_stats_columns(pre)
     carry_entries: Optional[List[Dict[str, object]]] = None
     if incremental:
         _refuse_pending_deletes(
@@ -3177,22 +3183,23 @@ def optimize_snapshot(
     drop_cols = part_keys + ([] if keep_zorder_column else [ZORDER_FIELD])
     if drop_cols:
         out = out.drop(*drop_cols)
-    return publish_snapshot(
-        out,
+    return _commit_plan(
+        _Plan(
+            "optimize_snapshot", "optimize", carry=carry_entries,
+            expect=pre, mark={"clustered": True},
+        ),
         table_root,
-        operation="optimize",
+        _schema_of(out),
+        out,
         compression=compression,
         stats_columns=stats_columns,
-        partition_transforms=pre.partition_transforms,
+        transforms=pre.partition_transforms,
         properties={
             "zorder_bounds": {c: list(bounds[c]) for c in cluster_by},
             "zorder_bits": int(bits),
             "cluster_by": cluster_by,
         },
         client=client,
-        _carry_files=carry_entries,
-        _expect_parent=pre.version,
-        _mark_files={"clustered": True},
     )
 
 
@@ -3360,121 +3367,6 @@ def _rebase_append_only_head(
                 "refused."
             )
     return head
-
-
-def _commit_positional(
-    table_root: str,
-    parent: SnapshotInfo,
-    positions: Optional[DataFrame],
-    n_positions: int,
-    compression: str,
-    client=None,
-    batch: Optional[DataFrame] = None,
-    stats_columns: Optional[Sequence[str]] = None,
-) -> SnapshotInfo:
-    """Commit a merge-on-read change in ONE version: every parent file
-    entry VERBATIM, ``batch`` (if any) as new data files, and the
-    ``n_positions`` (file, position) pairs in ``positions`` (if any) as
-    a delete sidecar in the same prefix — physical writes are O(batch)
-    + O(positions), never O(table).  The positions were computed over a
-    delete-aware scan, so they are disjoint from every pending sidecar
-    and row_count moves by exactly ``rows(batch) - n_positions``.
-
-    A positional delete is a merge with no batch, and that alone
-    decides the lost-race policy (see :func:`_commit`):
-
-    * no batch (``apply_deletions_snapshot(positional=True)``):
-      **commutes with concurrent appends** — the sidecar references
-      only files that existed at planning time, and an append carries
-      every parent entry verbatim — so a race lost to pure appends
-      REBASES onto the new head and retries instead of refusing; the
-      busy-ingest table need not quiesce its stream to forget rows.
-      Semantics are write-serializable, matching Iceberg's positional
-      tier: the delete applies to the rows that existed when it was
-      PLANNED; a row with a matching key appended concurrently is not
-      scanned and survives.  Any concurrent REWRITE refuses (it can
-      move the very rows the positions point at).
-    * a batch (``merge_snapshot(positional=True)``): refuses — a
-      concurrent append could insert one of the batch's keys after the
-      match scan, leaving two live copies.
-
-    The batch was aligned to the table's current schema by the caller,
-    so its files are tagged with the current generation; the sidecar is
-    schema-independent (path/pos only).  The prefix is written once and
-    reused across rebase attempts (its name keeps the first
-    allocation's number; nothing parses prefix names)."""
-    root = SmartPath.parse(table_root)
-    version = _next_version(root, client=client)
-    token = uuid.uuid4().hex[:8]
-    rel_prefix = f"{DATA_DIR}/v{version:08d}-{token}"
-    written: Dict[str, object] = {"files": [], "row_count": 0}
-    if batch is not None:
-        columns = parent.columns
-        transforms = None
-        if parent.partition_transforms:
-            # inherited layout, same stance as publish's carried commits
-            # (no strict bucket-type re-check: the table already has it)
-            transforms = _validate_transforms(
-                dict(parent.partition_transforms),
-                columns or {},
-                strict_bucket_types=False,
-            )
-        eff_stats = [
-            c
-            for c in (stats_columns or ())
-            if columns is None or _stats_eligible_simple(columns.get(c))
-        ]
-        written = _write_data_prefix(
-            batch, root, rel_prefix, compression,
-            stats_columns=eff_stats, client=client, transforms=transforms,
-        )
-        for entry in written["files"]:
-            entry.pop("schema", None)
-            if parent.schemas is not None and parent.schema_id != "0":
-                entry["schema"] = parent.schema_id
-    sidecars: List[Dict[str, object]] = []
-    if positions is not None and n_positions > 0:
-        sidecars = _write_delete_sidecar(
-            positions, root, rel_prefix, compression, n_positions,
-            client=client,
-        )
-    if batch is None:
-        verb, operation = "apply_deletions_snapshot", "delete"
-    else:
-        verb, operation = "merge_snapshot", "merge"
-    head = parent
-    attempts_left = DEFAULT_COMMIT_RETRIES
-    while True:
-        manifest = {
-            "version": version,
-            "spec": 2,
-            "data_prefix": rel_prefix,
-            "prefixes": sorted(set(head.prefixes) | {rel_prefix}),
-            "files": [dict(f) for f in head.files] + written["files"],
-            "row_count": (
-                head.row_count - n_positions + written["row_count"]
-            ),
-            "parent": head.version,
-            "operation": operation,
-            "committed_at": time.time(),
-            "format": "parquet",
-            **_carried_metadata(head, sidecars),
-        }
-        info = _commit(root, table_root, manifest, head.version, client)
-        if info is not None:
-            return info
-        if batch is not None or attempts_left <= 0:
-            raise _race_error(
-                verb, version, table_root, rebasing=batch is None
-            )
-        attempts_left -= 1
-        # the rebase validates append-only ancestry back to the
-        # PLANNED parent — the snapshot the positions were computed
-        # over — not merely the previous attempt's head
-        head = _rebase_append_only_head(
-            table_root, parent.version, verb, client=client
-        )
-        version = _next_version(root, client=client)
 
 
 # ---------------------------------------------------------------------------
@@ -3684,8 +3576,6 @@ def apply_deletions_snapshot(
             info, verb, "run compact_snapshot to apply them first, or "
             "pass positional=True to stack another positional delete",
         )
-    if stats_columns is None:
-        stats_columns = _inherited_stats_columns(info)
     if info.columns is not None and key_field not in info.columns:
         raise ValueError(
             f"{verb}: key_field {key_field!r} not in snapshot columns "
@@ -3766,24 +3656,29 @@ def apply_deletions_snapshot(
         )
 
     if positional:
-        positions, n_deleted = _match_positions(
-            keyed("left_semi"), touched, verb
-        )
-        if n_deleted == 0:
+        positions = _match_positions(keyed("left_semi"), touched, verb)
+        if positions[1] == 0:
             return info
-        return _commit_positional(
-            table_root, info, positions, n_deleted, compression,
+        return _commit_plan(
+            _Plan(
+                verb, "delete", carry=_CARRY_ALL, expect=info,
+                on_race="append_only",
+            ),
+            table_root,
+            None,
+            compression=compression,
+            positions=positions,
             client=client,
         )
-    return publish_snapshot(
-        keyed("left_anti"),
+    out = keyed("left_anti")
+    return _commit_plan(
+        _Plan(verb, "delete", carry=untouched, expect=info),
         table_root,
-        operation="delete",
+        _schema_of(out),
+        out,
         compression=compression,
         stats_columns=stats_columns,
         client=client,
-        _carry_files=untouched,
-        _expect_parent=info.version,
     )
 
 
@@ -3830,10 +3725,11 @@ def merge_snapshot(
       upstream where the ordering rule lives);
     * an EMPTY batch (a no-op 'merge' version would still break
       ``read_snapshot_changes`` for every consumer reading across it);
-    * a concurrent commit between planning and publish (the
-      ``_expect_parent`` guard: a merge rebased onto a parent that
-      changed underneath would silently drop the concurrent commit's
-      rows from the survivors — appends rebase, rewrites refuse).
+    * a concurrent commit between planning and publish (the plan's
+      expected parent, ``_Plan.expect``: a merge rebased onto a parent
+      that changed underneath would silently drop the concurrent
+      commit's rows from the survivors — appends rebase, rewrites
+      refuse).
 
     ``stats_columns=None`` (default) inherits the parent's envelope-
     stats column set, so later merges/deletes keep pruning.
@@ -3865,8 +3761,6 @@ def merge_snapshot(
             info, verb, "run compact_snapshot to apply them first, or "
             "pass positional=True to stack a merge-on-read upsert",
         )
-    if stats_columns is None:
-        stats_columns = _inherited_stats_columns(info)
     if info.columns is not None and key_field not in info.columns:
         raise ValueError(
             f"{verb}: key_field {key_field!r} not in snapshot columns "
@@ -3931,7 +3825,7 @@ def merge_snapshot(
     # with nothing touched, no file's key range overlaps the batch: a
     # pure insert, every parent file carried verbatim (still a merge
     # commit — the batch lands)
-    positions, n_matched, out = None, 0, batch
+    positions, out = None, batch
     if touched:
         side = _join_side(probe.df, probe.n, broadcast_threshold_rows)
         existing = _scan_files(
@@ -3940,27 +3834,27 @@ def merge_snapshot(
             allow_driver_download, keep_positions=positional,
         )
         if positional:
-            positions, n_matched = _match_positions(
+            positions = _match_positions(
                 existing.join(side, on=key_field, how="left_semi"),
                 touched, verb,
             )
         else:
             survivors = existing.join(side, on=key_field, how="left_anti")
             out = survivors.unionByName(batch)
-    if positional:
-        return _commit_positional(
-            table_root, info, positions, n_matched, compression,
-            client=client, batch=batch, stats_columns=stats_columns,
-        )
-    return publish_snapshot(
-        out,
+    # the positional tier appends the whole batch and sidecars the
+    # matched rows; copy-on-write rewrites the touched files
+    return _commit_plan(
+        _Plan(
+            verb, "merge", carry=_CARRY_ALL if positional else untouched,
+            expect=info,
+        ),
         table_root,
-        operation="merge",
+        _schema_of(out),
+        out,
         compression=compression,
         stats_columns=stats_columns,
+        positions=positions,
         client=client,
-        _carry_files=untouched,
-        _expect_parent=info.version,
     )
 
 
@@ -4025,23 +3919,19 @@ def restore_snapshot(
     # at resolve time; strip the root back off for the manifest field.
     # Pending positional deletes of the target stay pending — their
     # sidecar prefixes are in target.prefixes.
-    rel_prefix = target.data_prefix[len(str(root)):].lstrip("/")
-    manifest = {
-        "version": new_version,
-        "spec": 2,
-        "data_prefix": rel_prefix,
-        "prefixes": [str(p) for p in target.prefixes],
-        "files": [dict(f) for f in target.files],
-        "row_count": target.row_count,
-        "parent": current.version,
-        "operation": "restore",
-        "restored_from": target.version,
-        "committed_at": time.time(),
-        # module-wide invariant: every publish writes format=parquet
-        "format": "parquet",
-        **_carried_metadata(target),
-        "properties": props,
+    nothing_written = {
+        "rel_prefix": target.data_prefix[len(str(root)):].lstrip("/"),
+        "files": [], "row_count": 0, "sidecars": [],
     }
+    layout = _Layout(
+        target.columns, target.schemas, target.schema_id,
+        target.partition_transforms, target.schema_id,
+    )
+    manifest = _build_manifest(
+        new_version, "restore", current.version, target, _CARRY_ALL,
+        nothing_written, layout, props,
+    )
+    manifest["restored_from"] = target.version
     info = _commit(root, table_root, manifest, current.version, client)
     if info is None:
         raise _race_error(

@@ -666,8 +666,7 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
         import uuid
 
         from ..sources.snapshot import (
-            _inherited_stats_columns,
-            _stats_eligible_simple,
+            _stats_columns,
             append_files_snapshot,
             resolve_snapshot,
         )
@@ -704,12 +703,7 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
             return
         if not staged:
             return
-        eff_stats = [
-            c
-            for c in _inherited_stats_columns(head)
-            if c in self._columns
-            and _stats_eligible_simple(self._columns.get(c))
-        ]
+        eff_stats = _stats_columns(None, head, self._columns)
         rel_prefix = (
             f"data/stream-{batchId:08d}-{uuid.uuid4().hex[:8]}"
         )
@@ -769,17 +763,15 @@ class _SnapshotBatchWriter(DataSourceArrowWriter):
         import uuid
 
         from ..sources.snapshot import (
-            _inherited_stats_columns,
-            _stats_eligible_simple,
+            _stats_columns,
             append_files_snapshot,
             publish_files_snapshot,
             resolve_snapshot,
         )
 
         staged = [m for m in messages if m is not None]
-        if self._stats_option is not None:
-            eff_stats = self._stats_option
-        elif not self._overwrite:
+        head = None
+        if self._stats_option is None and not self._overwrite:
             try:
                 head = resolve_snapshot(self._root)
             except FileNotFoundError:
@@ -790,14 +782,7 @@ class _SnapshotBatchWriter(DataSourceArrowWriter):
                     "needs an existing table; use mode('overwrite') "
                     "(or publish_snapshot) for the first write"
                 )
-            eff_stats = [
-                c
-                for c in _inherited_stats_columns(head)
-                if c in self._columns
-                and _stats_eligible_simple(self._columns.get(c))
-            ]
-        else:
-            eff_stats = []
+        eff_stats = _stats_columns(self._stats_option, head, self._columns)
         if not staged and not self._overwrite:
             return  # appending nothing is a no-op
         verb = "overwrite" if self._overwrite else "append"

@@ -96,7 +96,7 @@ def snapshot_batch_writer(
     ``skipped=True``.
 
     ``stats_columns=None`` (default) inherits the table's envelope-
-    stats column set on every append (publish_snapshot computes it
+    stats column set on every append (append_snapshot computes it
     from the parent manifest the carry already resolves — no extra
     GETs): a stream that skipped stats would otherwise add
     envelope-less files that every later keyed delete/merge must

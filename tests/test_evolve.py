@@ -1,10 +1,6 @@
 """sources/evolve.py — schema evolution across corpus snapshots."""
 
 import pytest
-
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

@@ -136,14 +136,6 @@ def test_partial_rewrites_refuse_under_pending_deletes(spark, tmp_path):
             spark, root, cluster_by=["doc_id"], bits=8,
             incremental=True,
         )
-    # publish itself refuses a partial carry, whatever the verb checked
-    with pytest.raises(
-        RuntimeError, match=r"publish_snapshot\(delete\).*pending positional"
-    ):
-        publish_snapshot(
-            _df(spark, 2, "p"), root, operation="delete",
-            _carry_files=[], _expect_parent=resolve_snapshot(root).version,
-        )
     # a FULL optimize applies and clears, like compact
     info = optimize_snapshot(
         spark, root, cluster_by=["doc_id"], bits=8, num_files=4
@@ -418,14 +410,16 @@ def test_positional_merge_pure_insert_and_refusals(spark, tmp_path):
     assert merge_snapshot(
         spark, bare, _df(spark, 1, "cow"), "doc_id"
     ).row_count == 53
-    # the commit itself writes no sidecar for an empty position set
+    # the write phase itself writes no sidecar for an empty position set
     head = resolve_snapshot(bare)
     no_positions = spark.createDataFrame([], "path string, pos bigint")
-    info = snap._commit_positional(
-        bare, head, no_positions, 0, "zstd",
-        batch=_df(spark, 2, "more").withColumn(
-            "doc_id", F.col("doc_id") + 2000
-        ),
+    more = _df(spark, 2, "more").withColumn(
+        "doc_id", F.col("doc_id") + 2000
+    )
+    info = snap._commit_plan(
+        snap._Plan("merge_snapshot", "merge", carry=snap._CARRY_ALL,
+                   expect=head),
+        bare, snap._schema_of(more), more, positions=(no_positions, 0),
     )
     assert info.row_count == 55
     assert not info.delete_files
@@ -440,6 +434,31 @@ def test_positional_merge_pure_insert_and_refusals(spark, tmp_path):
         merge_snapshot(
             spark, root, _df(spark, 0, "e"), "doc_id", positional=True
         )
+
+
+@pytest.mark.parametrize("positional", [False, True])
+@pytest.mark.parametrize("column", ["score", "absent"])
+def test_merge_refuses_unservable_stats_columns(
+    spark, tmp_path, positional, column
+):
+    # an explicitly requested stats column the footers cannot serve (a
+    # double, or no such column) refuses on both merge tiers instead of
+    # committing new files that silently lack its envelopes
+    from pyspark.sql import functions as F
+
+    root = _root(tmp_path)
+    publish_snapshot(
+        _df(spark, 20).withColumn("score", F.col("doc_id") * 0.5),
+        root, stats_columns=["doc_id"],
+    )
+    with pytest.raises(ValueError, match="stats_columns"):
+        merge_snapshot(
+            spark, root,
+            _df(spark, 2, "m").withColumn("score", F.lit(1.0)),
+            "doc_id", stats_columns=["doc_id", column],
+            positional=positional,
+        )
+    assert resolve_snapshot(root).version == 1
 
 
 @pytest.mark.parametrize("verb", ["delete", "merge"])

