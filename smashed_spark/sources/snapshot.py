@@ -58,7 +58,10 @@ DETECTS a second writer — plain S3 has no compare-and-swap to build a
 real lock on.  What a verb does after losing the race depends on
 whether it commutes with the winner: appends rebase, positional
 deletes rebase onto an append-only chain, everything else refuses.
-The three policies are stated once, in ``_commit``'s docstring.
+The three policies are stated once, in ``_commit``'s docstring.  A
+streaming micro-batch's exactly-once watermark is checked against the
+parent of every attempt (:func:`_watermark_gate`), so a rebase skips a
+batch another delivery committed meanwhile.
 
 Scale notes
 -----------
@@ -1251,11 +1254,15 @@ def _stats_columns(
     parent: Optional[SnapshotInfo],
     columns: Optional[Dict[str, str]],
 ) -> List[str]:
-    """THE envelope-stats column decision for a commit's new files.
+    """THE envelope-stats column decision for a commit's new files,
+    made before any of them is written.
 
-    An explicit ``requested`` list is used as given: the footer read
-    (:func:`_file_column_stats`) refuses absent and float columns
-    loudly.  ``None`` inherits ``parent``'s set — every column ANY
+    An explicit ``requested`` list is used as given, after refusing a
+    column absent from the new files' ``columns`` or not stats-eligible
+    there (a float, say) — refused here, the write would leave a whole
+    orphan prefix behind before the footer read
+    (:func:`_file_column_stats`) refused it.  ``None`` inherits
+    ``parent``'s set — every column ANY
     parent file entry carries stats for — and with no parent means
     none.  Rewrites (compact/optimize/delete/merge) and appends used
     to default to ``()``, silently degrading file-scoped deletes over
@@ -1270,6 +1277,18 @@ def _stats_columns(
     ``_file_column_stats`` refuses float, so blindly inheriting would
     brick every later write after such an evolve."""
     if requested is not None:
+        for c in requested if columns is not None else ():
+            if c not in columns:
+                raise ValueError(
+                    f"stats_columns: {c!r} not in schema {sorted(columns)}"
+                )
+            if not _stats_eligible_simple(columns[c]):
+                raise ValueError(
+                    f"stats_columns: {c!r} has type {columns[c]} — only "
+                    "int/bool/string/date/timestamp columns carry "
+                    "envelope stats (float is refused: parquet min/max "
+                    "is NaN-blind, see module docstring)"
+                )
         return list(requested)
     if parent is None:
         return []
@@ -1543,7 +1562,9 @@ class _Plan(NamedTuple):
     starts).  ``mark`` is merged into every new file entry
     (optimize's ``clustered`` tag, which incremental optimize carries
     by).  ``on_race`` is the lost-race policy — ``"rebase"``,
-    ``"append_only"`` or ``"refuse"``, see :func:`_commit`."""
+    ``"append_only"`` or ``"refuse"``, see :func:`_commit`.
+    ``stream`` makes the commit a streaming micro-batch, gated by
+    :func:`_watermark_gate` and stamped with its watermark."""
 
     verb: str  # the public verb its errors name
     operation: str  # the manifest's ``operation``
@@ -1552,6 +1573,7 @@ class _Plan(NamedTuple):
     mark: Optional[Dict[str, object]] = None
     evolve: bool = False
     on_race: str = "refuse"
+    stream: Optional["_Watermark"] = None
 
     @property
     def derived(self) -> bool:
@@ -1560,18 +1582,66 @@ class _Plan(NamedTuple):
         return self.carry is not None or self.expect is not None
 
 
+class _Watermark(NamedTuple):
+    """A streaming commit's exactly-once key, Delta's ``txn``: the
+    checkpoint's app id and the micro-batch id, stamped into the
+    manifest as ``stream_app_id``/``stream_batch_id`` and re-stated by
+    every later commit (``_PROPAGATED_PROPS``).  ``takeover`` is the
+    operator's assertion that the checkpoint that last wrote the table
+    is dead, so this one's restarted ids may commit over it."""
+
+    app_id: str
+    batch_id: int
+    takeover: bool = False
+
+
+def _watermark_gate(
+    verb: str, where: str, props: Dict[str, object], mark: _Watermark
+) -> str:
+    """THE exactly-once rule of the streaming writers, applied to the
+    ``props`` of the snapshot a micro-batch lands on (``{}`` for an
+    empty table).  Batch ids are per-checkpoint, so another app's
+    watermark refuses — comparing ids across checkpoints would replay
+    or drop data — unless ``mark.takeover``: returns ``"takeover"``.
+    The same app's batch at or below the watermark is already in the
+    table: ``"replay"``, skip the commit.  Anything else:
+    ``"commit"``.  ``where`` names what recorded ``props``."""
+    app = props.get("stream_app_id")
+    if app is not None and str(app) != mark.app_id:
+        if not mark.takeover:
+            raise RuntimeError(
+                f"{verb}: {where} was last written by stream app "
+                f"{str(app)!r}, not {mark.app_id!r} — batch ids are "
+                "per-checkpoint, so honoring this batch could replay or "
+                "drop data.  If the old checkpoint is decommissioned, "
+                "take the table over (takeover=True; on the registered "
+                "sink .option('takeover', 'true'))."
+            )
+        return "takeover"
+    last = props.get("stream_batch_id")
+    if app is not None and last is not None and mark.batch_id <= int(last):
+        return "replay"
+    return "commit"
+
+
 class _Layout(NamedTuple):
     """Phase 2's answer: the table schema, the generation registry
     (``None`` under a parent predating ``columns``), the generation
     current writes land under, the partition layout, and the
     generation the commit's own files are tagged with (older than
-    ``schema_id`` only after a rebase onto an evolved parent)."""
+    ``schema_id`` after a rebase onto an evolved parent, or for
+    adopted files written under an older generation)."""
 
     columns: Optional[Dict[str, str]]
     schemas: Optional[Dict[str, Dict[str, str]]]
     schema_id: str
     transforms: Optional[Dict[str, List]]
     file_gen: str
+
+    @property
+    def file_columns(self) -> Optional[Dict[str, str]]:
+        """The schema of the commit's own files: their generation's."""
+        return (self.schemas or {}).get(self.file_gen, self.columns)
 
 
 def _schema_of(df: DataFrame) -> Dict[str, str]:
@@ -1580,7 +1650,7 @@ def _schema_of(df: DataFrame) -> Dict[str, str]:
 
 def _plan_parent(
     plan: _Plan, root: SmartPath, table_root: str, client=None
-) -> Optional[SnapshotInfo]:
+) -> Tuple[Optional[SnapshotInfo], bool]:
     """The snapshot this attempt commits onto, checked against the
     pointer before anything is written: the head (nothing, for a
     table's first publish) when the plan expects no parent, else the
@@ -1589,29 +1659,41 @@ def _plan_parent(
     back to the PLANNED snapshot its positions were matched over (not
     merely the previous attempt's parent), and refuses every other
     planned commit: a rewrite committed over a newer commit would
-    silently drop that commit's rows."""
+    silently drop that commit's rows.
+
+    Returns ``(parent, replayed)``.  A ``stream`` plan passes
+    :func:`_watermark_gate` against that parent on every attempt —
+    another delivery of the same batch may commit while this one
+    writes, and a rebase must then skip, not commit it twice;
+    ``replayed`` says to skip."""
     head = _pointer_version(root, client=client)
-    if plan.expect is None:
-        if head is not None:
-            return resolve_snapshot(table_root, head, client=client)
-        if plan.carry is not None:
-            raise FileNotFoundError(
-                f"{plan.verb}: nothing published under {table_root!r} "
-                "yet — the first write is a publish_snapshot"
-            )
-        return None
-    if head == plan.expect.version:
-        return plan.expect
-    if plan.on_race == "append_only":
-        return _rebase_append_only_head(
-            table_root, plan.expect.version, plan.verb, client=client
+    if plan.expect is not None:
+        if head == plan.expect.version:
+            return plan.expect, False
+        if plan.on_race == "append_only":
+            return _rebase_append_only_head(
+                table_root, plan.expect.version, plan.verb, client=client
+            ), False
+        raise RuntimeError(
+            f"{plan.verb}: the table advanced v{plan.expect.version} -> "
+            f"v{head} after this {plan.operation} was planned — "
+            "committing would silently drop the newer commit's rows.  "
+            "Re-run the operation against the current snapshot."
         )
-    raise RuntimeError(
-        f"{plan.verb}: the table advanced v{plan.expect.version} -> "
-        f"v{head} after this {plan.operation} was planned — committing "
-        "would silently drop the newer commit's rows.  Re-run the "
-        "operation against the current snapshot."
-    )
+    parent = None
+    if head is not None:
+        parent = resolve_snapshot(table_root, head, client=client)
+    elif plan.carry is not None:
+        raise FileNotFoundError(
+            f"{plan.verb}: nothing published under {table_root!r} yet — "
+            "the first write is a publish_snapshot (on the registered "
+            "writer, mode('overwrite'))"
+        )
+    replayed = plan.stream is not None and _watermark_gate(
+        plan.verb, f"table {table_root!r}",
+        {} if parent is None else parent.properties, plan.stream,
+    ) == "replay"
+    return parent, replayed
 
 
 def _resolve_layout(
@@ -1632,18 +1714,22 @@ def _resolve_layout(
     mixing file shapes commits fine and then LOSES data at read time
     (spark.read.parquet samples one file's schema).  ``plan.evolve``
     widens the table instead (:func:`_evolve_batch`).  Files already
-    ``written`` (pre-written, or a rebase after the write) cannot
-    change: they fit while the parent keeps the schema they were
-    written against, or match a generation its registry still carries
-    (they are tagged with it); anything else refuses.  Parents
-    predating ``columns`` skip the check and keep no registry.
+    ``written`` (a rebase after the write) cannot change: they fit
+    while the parent keeps the schema they were written against, or
+    match a generation its registry still carries (they are tagged
+    with it); anything else refuses.  ADOPTED files — pre-written or
+    staged by a writer, with no ``df`` — fit only by the second rule.
+    Parents predating ``columns`` skip the check and keep no registry.
 
     Carried commits inherit the parent's ``partition_transforms``,
     skipping the bucket source-type strictness (the table already has
     the layout; refusing would brick appends to healthy tables); an
-    uncarried commit validates ``transforms`` fresh.  A rebase whose
-    written prefix is laid out under another spec than the new
-    parent's refuses: its recorded partition values would misprune."""
+    uncarried commit validates ``transforms`` fresh.  Adopted files
+    are laid out under no spec, so a table with one refuses them; a
+    rebase whose written prefix is laid out under another spec than
+    the new parent's refuses: its recorded partition values would
+    misprune."""
+    adopted = df is None and columns is not None
     if written is not None:
         columns = written["columns"]
     if plan.carry is None:
@@ -1659,9 +1745,10 @@ def _resolve_layout(
             columns = parent_cols
         file_gen = None
         if parent_cols is not None and dict(parent_cols) != columns:
-            if written is None and plan.evolve:
+            fixed = adopted or written is not None
+            if not fixed and plan.evolve:
                 df, columns = _evolve_batch(df, dict(parent_cols))
-            elif written is None:
+            elif not fixed:
                 extra = sorted(set(columns) - set(parent_cols))
                 missing = sorted(set(parent_cols) - set(columns))
                 changed = sorted(
@@ -1676,7 +1763,7 @@ def _resolve_layout(
                     "evolve=True for add-column / lossless-widen "
                     "evolution, or republish for anything lossy"
                 )
-            elif written["under"] != parent_cols:
+            elif adopted or written["under"] != parent_cols:
                 file_gen = next(
                     (
                         g for g, cols in (parent.schemas or {}).items()
@@ -1684,6 +1771,15 @@ def _resolve_layout(
                     ),
                     None,
                 )
+                if file_gen is None and adopted:
+                    raise ValueError(
+                        f"{plan.verb}: the written schema does not match "
+                        "the table's current schema or any generation "
+                        f"its registry carries (written={sorted(columns)}"
+                        f", current={sorted(parent_cols)}) — evolution "
+                        "is not supported on this path; use "
+                        "append_snapshot(evolve=True)"
+                    )
                 if file_gen is None:
                     raise RuntimeError(
                         f"{plan.verb}: concurrent commit changed the "
@@ -1712,6 +1808,14 @@ def _resolve_layout(
             ) if inherited else None,
             schema_id if file_gen is None else file_gen,
         )
+    if adopted and layout.transforms:
+        raise ValueError(
+            f"{plan.verb}: the table has partition_transforms "
+            f"({sorted(layout.transforms)}) and pre-written files are not "
+            "laid out under its transform directories — append through "
+            "append_snapshot, which lays the prefix out under the "
+            "table's spec"
+        )
     if written is not None and layout.transforms != written["transforms"]:
         raise RuntimeError(
             f"{plan.verb}: concurrent commit changed the table's "
@@ -1733,31 +1837,48 @@ def _write_files(
     root: SmartPath,
     version: int,
     df: Optional[DataFrame],
+    staged: Optional[Tuple[str, Sequence[str]]],
     positions: Optional[Tuple[DataFrame, int]],
     compression: str,
     stats_columns: Optional[Sequence[str]],
     client=None,
 ) -> Dict[str, object]:
-    """Phase 3: write the commit's own files into a fresh prefix —
-    ``df`` as data files with envelope stats on
-    :func:`_stats_columns`'s choice, and ``positions`` (a frame of
+    """Phase 3: land the commit's own files in a fresh prefix — ``df``
+    written as data files, or ``staged`` (a prefix stem and local
+    parquet files a writer staged on the table's filesystem) renamed
+    in, both with envelope stats on :func:`_stats_columns`'s choice,
+    which refuses before anything lands; and ``positions`` (a frame of
     ``(path, pos)`` rows and its row count) as a positional-delete
     sidecar.  The random token keeps a retry after a crash clear of
-    the orphan.  Returns the written inventory together with the
-    schema, parent schema and partition spec it was written under,
-    which phase 2 checks a rebase against."""
-    rel_prefix = f"{DATA_DIR}/v{version:08d}-{uuid.uuid4().hex[:8]}"
+    the orphan.  Returns the landed inventory together with the
+    schema, parent schema and partition spec it landed under, which
+    phase 2 checks a rebase against."""
+    stem = f"v{version:08d}" if staged is None else staged[0]
+    rel_prefix = f"{DATA_DIR}/{stem}-{uuid.uuid4().hex[:8]}"
     out: Dict[str, object] = {"files": [], "row_count": 0}
+    own = df is not None or staged is not None
+    if own:
+        stats = _stats_columns(
+            stats_columns, parent if plan.derived else None,
+            layout.file_columns,
+        )
     if df is not None:
         out = _write_data_prefix(
-            df, root, rel_prefix, compression,
-            stats_columns=_stats_columns(
-                stats_columns, parent if plan.derived else None,
-                layout.columns,
-            ),
-            client=client,
-            transforms=layout.transforms,
+            df, root, rel_prefix, compression, stats_columns=stats,
+            client=client, transforms=layout.transforms,
         )
+    elif staged is not None:
+        # same-filesystem renames, metadata-only; the footer reads are
+        # _build_inventory's driver loop
+        dest = str(root / rel_prefix)
+        os.makedirs(dest)
+        for i, path in enumerate(staged[1]):
+            os.replace(path, os.path.join(dest, f"part-{i:05d}.parquet"))
+        inventory = _build_inventory(dest, rel_prefix, stats)
+        out = {
+            "files": inventory,
+            "row_count": sum(e["rows"] for e in inventory),
+        }
     sidecars: List[Dict[str, object]] = []
     if positions is not None and positions[1] > 0:
         sidecars = _write_delete_sidecar(
@@ -1768,7 +1889,7 @@ def _write_files(
         **out,
         "rel_prefix": rel_prefix,
         "sidecars": sidecars,
-        "columns": layout.columns if df is not None else None,
+        "columns": layout.file_columns if own else None,
         "under": None if parent is None else parent.columns,
         "transforms": layout.transforms,
     }
@@ -1780,9 +1901,10 @@ def _pre_written(
     files: Sequence[Dict[str, object]],
     columns: Dict[str, str],
 ) -> Dict[str, object]:
-    """Phase 3's result for files a writer already landed under
-    ``<table_root>/<rel_prefix>`` (the registered sink and batch
-    writer): validated, adopted as written, no Spark write."""
+    """Phase 3's result for files a caller already landed under
+    ``<table_root>/<rel_prefix>`` (``publish_files_snapshot``,
+    ``append_files_snapshot``): validated, adopted as written, no
+    write."""
     prefix = rel_prefix.strip("/")
     for e in files:
         if not str(e.get("path", "")).startswith(prefix + "/"):
@@ -1800,7 +1922,6 @@ def _pre_written(
         "rel_prefix": prefix,
         "sidecars": [],
         "columns": dict(columns),
-        "under": None,
         "transforms": None,
     }
 
@@ -1902,28 +2023,39 @@ def _commit_plan(
     properties: Optional[Dict[str, object]] = None,
     written: Optional[Dict[str, object]] = None,
     positions: Optional[Tuple[DataFrame, int]] = None,
+    staged: Optional[Tuple[str, Sequence[str]]] = None,
     client=None,
-) -> SnapshotInfo:
+) -> Optional[SnapshotInfo]:
     """Commit ``plan`` through the phases, in the crash-safe order
     (module docstring): the data write (skipped for pre-``written``
     files) precedes the manifest, the manifest the pointer.  The
     commit re-states the parent's ``_PROPAGATED_PROPS`` under
-    ``properties``.  A lost race follows ``plan.on_race``, at most
-    ``DEFAULT_COMMIT_RETRIES`` times: a rebase re-runs phases 2 and 4
-    against the new parent and reuses the written prefix — two small
-    JSON writes, not a data rewrite."""
+    ``properties`` and a ``stream`` plan's watermark.  A lost race
+    follows ``plan.on_race``, at most ``DEFAULT_COMMIT_RETRIES``
+    times: a rebase re-runs phases 1, 2 and 4 against the new parent
+    and reuses the written prefix — two small JSON writes, not a data
+    rewrite.  Returns ``None``, committing nothing, when phase 1 finds
+    a ``stream`` plan's batch already committed."""
     root = SmartPath.parse(table_root)
     attempts_left = 0 if plan.on_race == "refuse" else DEFAULT_COMMIT_RETRIES
+    if plan.stream is not None:
+        properties = {
+            **(properties or {}),
+            "stream_app_id": plan.stream.app_id,
+            "stream_batch_id": plan.stream.batch_id,
+        }
     while True:
-        parent = _plan_parent(plan, root, table_root, client)
+        parent, replayed = _plan_parent(plan, root, table_root, client)
+        if replayed:
+            return None
         df, layout = _resolve_layout(
             plan, parent, columns, df, written, transforms
         )
         version = _next_version(root, client=client)
         if written is None:
             written = _write_files(
-                plan, parent, layout, root, version, df, positions,
-                compression, stats_columns, client,
+                plan, parent, layout, root, version, df, staged,
+                positions, compression, stats_columns, client,
             )
         props: Dict[str, object] = {}
         if parent is not None:
@@ -2065,8 +2197,7 @@ def publish_files_snapshot(
     client=None,
 ) -> SnapshotInfo:
     """Publish PRE-WRITTEN parquet files as the table's next snapshot
-    — the SparkSession-free :func:`publish_snapshot` (the registered
-    batch writer's ``mode("overwrite")`` path).  Same entry shape and
+    — the SparkSession-free :func:`publish_snapshot`.  Same entry shape and
     stances as :func:`append_files_snapshot`, but this REPLACES the
     table state (or creates the table) instead of appending; the old
     version stays readable on the chain until vacuumed, and pending
@@ -2093,46 +2224,18 @@ def append_files_snapshot(
 ) -> SnapshotInfo:
     """Append PRE-WRITTEN parquet files to the current snapshot — the
     SparkSession-free append for writers that already landed their
-    data (the registered streaming sink's ``commit`` hook runs in a
-    sessionless worker process and is the motivating caller).
+    data under the table root.
 
     ``files`` are manifest entries for files ALREADY on disk under
     ``<table_root>/<rel_prefix>``, in :func:`_inventory_entry`'s shape
     (root-relative ``path``, ``bytes``, ``rows``, optional ``stats``);
     ``columns`` is the written schema as ``{name: simpleString}``.
-    Same commit protocol as :func:`append_snapshot` — parent entries
-    carried verbatim, watermark properties propagated, optimistic
-    append rebase on a lost pointer race — with the same stances:
-    the first write to an empty table must be a publish, and the
-    batch schema must exactly match the table's current schema or a
-    generation its registry still carries (files then land tagged
-    with that older generation); evolution is refused.  Tables with
-    ``partition_transforms`` refuse: the pre-written files are not
-    laid out under the table's transform directories, so their
-    recorded partition values would misprune."""
+    Same commit as :func:`append_snapshot` (a lost race rebases); the
+    first write to an empty table must be a publish, the schema must
+    match the table's current one or a generation its registry still
+    carries (evolution is refused), and tables with
+    ``partition_transforms`` refuse (:func:`_resolve_layout`)."""
     verb = "append_files_snapshot"
-    head = resolve_snapshot(table_root, client=client)
-    if head.partition_transforms:
-        raise ValueError(
-            f"{verb}: the table has partition_transforms "
-            f"({sorted(head.partition_transforms)}) and pre-written "
-            "files are not laid out under its transform directories — "
-            "append through append_snapshot, which lays the prefix out "
-            "under the table's spec"
-        )
-    generations = head.schemas or (
-        {"0": dict(head.columns)} if head.columns is not None else {}
-    )
-    if generations and not any(
-        dict(g) == dict(columns) for g in generations.values()
-    ):
-        raise ValueError(
-            f"{verb}: the written schema does not match "
-            "the table's current schema or any generation its registry "
-            f"carries (written={sorted(columns)}, current="
-            f"{sorted(head.columns or {})}) — evolution is not "
-            "supported on this path; use append_snapshot(evolve=True)"
-        )
     return _commit_plan(
         _Plan(verb, "append", carry=_CARRY_ALL, on_race="rebase"),
         table_root,
@@ -2218,28 +2321,41 @@ def read_snapshot(
     info = resolve_snapshot(
         table_root, version, client=client, as_of=as_of
     )
-    if not info.files:
-        # zero-file snapshot (empty publish, delete-everything): the
-        # recorded schema is the only source of truth left
+    return _read_entries(
+        spark, table_root, info, info.files, where, client,
+        allow_driver_download,
+    )
+
+
+def _read_entries(
+    spark: SparkSession,
+    table_root: str,
+    info: SnapshotInfo,
+    files: List[Dict[str, object]],
+    where: Optional[Sequence],
+    client=None,
+    allow_driver_download: bool = False,
+) -> DataFrame:
+    """Scan ``files`` (entries of ``info``) under the ``where``
+    contract: envelope-pruned first, then filtered.  With no file left
+    the schema still comes from a real file, scanned under an
+    always-false predicate (footer-only work); a zero-file snapshot
+    (empty publish, delete-everything) has only its recorded schema."""
+    if files and where is not None:
+        files = plan_snapshot_scan(
+            SnapshotInfo(**{**info.__dict__, "files": files}), where
+        )["kept"]
+    if files:
+        sub = SnapshotInfo(**{**info.__dict__, "files": files})
+        df = _scan_files(spark, table_root, sub, client, allow_driver_download)
+    elif not info.files:
         df = _empty_typed(spark, info, table_root)
-        return df.where(_where_to_column(where)) if where is not None else df
-    if where is not None:
-        plan = plan_snapshot_scan(info, where)
-        if not plan["kept"]:
-            # schema still comes from a real file: scan one under an
-            # always-false predicate (footer-only work)
-            one = SnapshotInfo(**{**info.__dict__, "files": [info.files[0]]})
-            base = _scan_files(
-                spark, table_root, one, client, allow_driver_download
-            ).where(F.lit(False))
-            return base.where(_where_to_column(where))
-        info = SnapshotInfo(
-            **{**info.__dict__, "files": plan["kept"]}
-        )
-    df = _scan_files(spark, table_root, info, client, allow_driver_download)
-    if where is not None:
-        df = df.where(_where_to_column(where))
-    return df
+    else:
+        one = SnapshotInfo(**{**info.__dict__, "files": [info.files[0]]})
+        df = _scan_files(
+            spark, table_root, one, client, allow_driver_download
+        ).where(F.lit(False))
+    return df if where is None else df.where(_where_to_column(where))
 
 
 #: internal column names the position-aware scan threads through a
@@ -2573,6 +2689,61 @@ def resolve_tag(table_root: str, tag: str, client=None) -> SnapshotInfo:
     return resolve_snapshot(table_root, int(doc["version"]), client=client)
 
 
+def _append_steps(
+    table_root: str,
+    head: SnapshotInfo,
+    since_version: int,
+    verb: str,
+    client=None,
+) -> List[SnapshotInfo]:
+    """THE append-chain walk: the snapshots from ``since_version`` to
+    ``head``, both included and oldest first, when every commit after
+    ``since_version`` is an append — appends never touch parent files,
+    so each step's increment is exactly the files it added.  A rewrite
+    on the chain raises ValueError (file-level increments are invalid
+    across it); so does a ``since_version`` the chain never reaches.
+    A step vacuumed away raises FileNotFoundError (from the resolve).
+    One manifest GET per step walked; the walk stops at the first
+    rewrite."""
+    chain = [head]
+    while chain[-1].version > since_version and chain[-1].parent is not None:
+        step = chain[-1]
+        if step.operation != "append":
+            raise ValueError(
+                f"{verb}: the chain from v{since_version} to "
+                f"v{head.version} contains non-append operations "
+                f"(v{step.version}={step.operation!r}) — file-level "
+                "increments are invalid across a rewrite"
+            )
+        chain.append(resolve_snapshot(table_root, step.parent, client=client))
+    if chain[-1].version != since_version:
+        raise ValueError(
+            f"{verb}: v{since_version} is not an ancestor of "
+            f"v{head.version} (the chain bottoms out at "
+            f"v{chain[-1].version})"
+        )
+    return chain[::-1]
+
+
+def _read_added(
+    spark: SparkSession,
+    table_root: str,
+    since: SnapshotInfo,
+    target: SnapshotInfo,
+    where: Optional[Sequence],
+    client=None,
+    allow_driver_download: bool = False,
+) -> DataFrame:
+    """Scan the files ``target`` adds over ``since``, its ancestor on
+    an append chain (:func:`_append_steps`)."""
+    since_paths = {f["path"] for f in since.files}
+    added = [f for f in target.files if f["path"] not in since_paths]
+    return _read_entries(
+        spark, table_root, target, added, where, client,
+        allow_driver_download,
+    )
+
+
 def read_snapshot_changes(
     spark: SparkSession,
     table_root: str,
@@ -2589,64 +2760,18 @@ def read_snapshot_changes(
     contract as :func:`read_snapshot`, over just the added files.
 
     Valid ONLY when every step on the chain between the two versions is
-    an append: a rewrite (compact/optimize/delete/publish) invalidates
-    file-level increments, and this raises with the offending operation
-    instead of silently replaying the whole table as "changes".  The
-    added rows are exactly the set-difference of the two manifests'
-    file lists — appends never touch parent files, so the difference is
-    each step's own new prefix."""
+    an append (:func:`_append_steps`): a rewrite invalidates file-level
+    increments, and this raises with the offending operation instead
+    of silently replaying the whole table as "changes"."""
     target = resolve_snapshot(table_root, version, client=client)
-    if target.version == since_version:
-        added: List[Dict[str, object]] = []
-    else:
-        cursor = target
-        steps: List[SnapshotInfo] = []
-        while cursor.version != since_version:
-            steps.append(cursor)
-            if cursor.parent is None:
-                raise ValueError(
-                    f"read_snapshot_changes: v{since_version} is not an "
-                    f"ancestor of v{target.version} (chain bottoms out at "
-                    f"v{cursor.version})"
-                )
-            cursor = resolve_snapshot(
-                table_root, cursor.parent, client=client
-            )
-        bad = [s for s in steps if s.operation != "append"]
-        if bad:
-            ops = ", ".join(f"v{s.version}={s.operation!r}" for s in bad)
-            raise ValueError(
-                "read_snapshot_changes: the chain from "
-                f"v{since_version} to v{target.version} contains "
-                f"non-append operations ({ops}) — file-level increments "
-                "are invalid across a rewrite; re-read the full snapshot"
-            )
-        since_paths = {
-            f["path"] for f in cursor.files  # cursor == since snapshot
-        }
-        added = [f for f in target.files if f["path"] not in since_paths]
-    if added and where is not None:
-        added = plan_snapshot_scan(
-            SnapshotInfo(**{**target.__dict__, "files": added}), where
-        )["kept"]
-    if not added:
-        if not target.files:
-            out = _empty_typed(spark, target, table_root)
-        else:
-            one = SnapshotInfo(
-                **{**target.__dict__, "files": [target.files[0]]}
-            )
-            out = _scan_files(
-                spark, table_root, one, client, allow_driver_download
-            ).where(F.lit(False))
-    else:
-        sub = SnapshotInfo(**{**target.__dict__, "files": added})
-        out = _scan_files(
-            spark, table_root, sub, client, allow_driver_download
-        )
-    if where is not None:
-        out = out.where(_where_to_column(where))
-    return out
+    chain = _append_steps(
+        table_root, target, since_version, "read_snapshot_changes",
+        client=client,
+    )
+    return _read_added(
+        spark, table_root, chain[0], target, where, client,
+        allow_driver_download,
+    )
 
 
 def snapshot_table_stats(
@@ -3326,46 +3451,38 @@ def _rebase_append_only_head(
 ) -> SnapshotInfo:
     """Re-resolve the head after a lost commit race and validate that
     rebasing onto it is SAFE for a positional delete: every commit
-    between the planned parent and the head must be a pure append.
-    Appends only add files (parent entries carried verbatim), so the
-    sidecar's (file, position) pairs still point at exactly the rows
-    they were computed over; any rewrite (compact/optimize/delete/
-    merge/restore/publish) can move or drop those rows and refuses.
-    Returns the validated head snapshot, with a belt-and-braces check
-    that the planned parent's file paths all survive in it."""
+    between the planned parent and the head must be a pure append
+    (:func:`_append_steps`).  Appends only add files (parent entries
+    carried verbatim), so the sidecar's (file, position) pairs still
+    point at exactly the rows they were computed over; any rewrite
+    (compact/optimize/delete/merge/restore/publish) can move or drop
+    those rows and refuses.  Returns the validated head snapshot, with
+    a belt-and-braces check that the planned parent's file paths all
+    survive in it."""
     head = resolve_snapshot(table_root, client=client)
-    cursor = head
-    planned_files: Optional[set] = None
-    while cursor.version != planned_version:
-        if cursor.operation != "append":
-            raise RuntimeError(
-                f"{verb}: a concurrent {cursor.operation!r} commit "
-                f"(v{cursor.version}) landed after this positional "
-                "delete was planned — a rewrite can move or drop the "
-                "rows the sidecar's (file, position) pairs point at, "
-                "so the rebase is refused.  Re-run against the current "
-                "snapshot (the written sidecar prefix is an orphan; "
-                "vacuum will sweep it)."
-            )
-        if cursor.parent is None:
-            raise RuntimeError(
-                f"{verb}: planned parent v{planned_version} is no "
-                f"longer on the chain (it bottoms out at "
-                f"v{cursor.version}) — cannot rebase; re-run against "
-                "the current snapshot."
-            )
-        cursor = resolve_snapshot(table_root, cursor.parent, client=client)
-        planned_files = {f["path"] for f in cursor.files}
-    if planned_files is not None:
-        head_paths = {f["path"] for f in head.files}
-        lost = planned_files - head_paths
-        if lost:
-            raise RuntimeError(
-                f"{verb}: append-only chain v{planned_version} -> "
-                f"v{head.version} dropped file entries (e.g. "
-                f"{sorted(lost)[:3]}) — manifest corruption; rebase "
-                "refused."
-            )
+    try:
+        planned = _append_steps(
+            table_root, head, planned_version, verb, client=client
+        )[0]
+    except (ValueError, FileNotFoundError) as e:
+        raise RuntimeError(
+            f"{e}.  A concurrent commit landed after this positional "
+            f"delete was planned on v{planned_version}, and a rewrite "
+            "can move or drop the rows the sidecar's (file, position) "
+            "pairs point at, so the rebase is refused.  Re-run against "
+            "the current snapshot (the written sidecar prefix is an "
+            "orphan; vacuum will sweep it)."
+        ) from e
+    lost = {f["path"] for f in planned.files} - {
+        f["path"] for f in head.files
+    }
+    if lost:
+        raise RuntimeError(
+            f"{verb}: append-only chain v{planned_version} -> "
+            f"v{head.version} dropped file entries (e.g. "
+            f"{sorted(lost)[:3]}) — manifest corruption; rebase "
+            "refused."
+        )
     return head
 
 

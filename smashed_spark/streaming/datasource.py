@@ -5,14 +5,14 @@ governed snapshot tables — ``spark.readStream.format(
 Python DataSource API (``pyspark.sql.datasource``).
 
 Beyond-reference surface (the reference — ``src/smashed/mappers`` —
-has no table or streaming notion).  This is the third consumption
-tier for the snapshot protocol of ``sources/snapshot.py``:
+has no table or streaming notion).  Consumers of the snapshot protocol
+of ``sources/snapshot.py`` come in two shapes:
 
-* ``read_snapshot`` / ``read_snapshot_changes`` — JVM parquet scans,
-  the fast path for heavy batch analytics;
-* ``read_snapshot_stream`` (streaming/snapshot_source.py) — a driver
-  loop with its OWN checkpoint, at-least-once, all data movement
-  JVM-side; use it when throughput dominates;
+* the driver-side drain of ``sources/change_feed.py`` —
+  ``snapshot_change_feed`` polls it once, ``read_snapshot_stream``
+  (streaming/snapshot_source.py) loops it — with its OWN offset,
+  at-least-once, every scan a JVM parquet read; use it when
+  throughput dominates;
 * THIS module — the idiomatic ``readStream`` shape: Spark's own
   offset log owns progress (``checkpointLocation``), replay after a
   crash re-plans the exact same version range from the immutable
@@ -32,8 +32,8 @@ Delivery contract (stream)
 * ``partitions(start, end)`` is DETERMINISTIC: manifests are
   immutable, so a crash between offset-log write and sink commit
   replays byte-identical batches — with an idempotent/transactional
-  sink this is exactly-once, one step stronger than the driver
-  loop's at-least-once callback.
+  sink this is exactly-once, one step stronger than the drain's
+  at-least-once callback.
 * A REWRITE on the chain (compact/optimize/delete/merge/restore —
   anything but append) invalidates file-level increments:
   ``onRewrite="raise"`` (default) fails the query loudly;
@@ -49,13 +49,11 @@ Delivery contract (stream)
 Delivery contract (sink)
 ------------------------
 ``df.writeStream.format("smashed_snapshot").option("path", root)``
-appends each micro-batch as ONE snapshot version under the
-``stream_app_id``/``stream_batch_id`` exactly-once watermark — the
-contract of the foreachBatch tier (streaming/snapshot_sink.py),
-mirrored verbatim: replays skip, a foreign app's table refuses
-unless ``takeover``.  See ``_SnapshotStreamWriter`` for the
-two-phase (stage → rename-into-prefix → manifest commit) shape and
-its append-only / importability caveats.
+appends each micro-batch as ONE snapshot version through the snapshot
+commit path, so replays skip and a foreign app's table refuses unless
+``takeover`` by the one watermark gate the foreachBatch tier uses
+(streaming/snapshot_sink.py).  ``_StagingWriter`` has the two-phase
+(stage → commit) shape both registered writers share.
 
 Why the read side is self-contained
 -----------------------------------
@@ -66,8 +64,9 @@ Those processes import this class from a cloudpickle payload and may
 not have the repo on ``sys.path``, and there is no SparkSession in
 any of them.  Everything reachable from the hooks therefore uses
 only stdlib + pyarrow + numpy: a light read-only mirror of the
-manifest spec lives here (``_light_resolve``), pinned against
-``sources/snapshot.py``'s reader by a parity unit test
+manifest spec lives here (``_light_resolve``, and ``_chain_versions``
+for the append-chain walk of ``snapshot._append_steps``), pinned
+against ``sources/snapshot.py``'s reader by a parity unit test
 (tests/test_snapshot_datasource.py), and ``register_snapshot_source``
 registers the module for pickle-by-value so even a bare worker can
 deserialize it.
@@ -592,68 +591,22 @@ def _discard_staged(messages) -> None:
                 pass
 
 
-def _rename_into_prefix(root, rel_prefix, staged, eff_stats):
-    """Driver-side half: same-filesystem rename of the staged files
-    into one fresh data prefix, then footer reads for manifest
-    entries (the ``_build_inventory`` driver-loop stance).  Imports
-    the protocol module, so the package must be importable on the
-    driver node."""
-    from ..sources.snapshot import _inventory_entry
-
-    dest = os.path.join(root, rel_prefix)
-    os.makedirs(dest)
-    entries = []
-    for i, m in enumerate(staged):
-        name = f"part-{i:05d}.parquet"
-        os.replace(m.staged_path, os.path.join(dest, name))
-        entries.append(
-            _inventory_entry(
-                os.path.join(dest, name), rel_prefix, name, eff_stats
-            )
-        )
-    return entries
-
-
-class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
-    """Exactly-once append sink: each micro-batch commits as ONE
-    snapshot version stamped with the ``stream_app_id``/
-    ``stream_batch_id`` watermark — the same contract as the
-    foreachBatch tier (streaming/snapshot_sink.py), whose replay and
-    foreign-app rules this mirrors (skip ``batchId <= watermark``,
-    refuse another app's table unless ``takeover``).
-
-    Two-phase shape: ``write`` tasks stream their Arrow batches into
-    UNIQUE files under ``<root>/_staging/`` (underscore: invisible to
-    the data-file inventory walk) and stats stay off the hot path;
-    ``commit`` renames the batch's staged files into one fresh
-    ``data/`` prefix — same-filesystem renames, metadata-only — reads
-    their footers for manifest entries (inheriting the table's
-    envelope-stats column set, the ``_build_inventory`` driver-loop
-    stance), and lands them via ``append_files_snapshot``.  A crash
-    before commit leaves only ``_staging`` debris; ``abort`` sweeps
-    what its messages name and a replay re-stages cleanly.
-
-    Unlike the READ side this is not self-contained: ``commit``/
-    ``abort`` run on the driver node and import the protocol module
-    (``smashed_spark.sources.snapshot``), so the package must be
-    importable there — true whenever it is installed or the app runs
-    from the repo.  ``write`` itself stays stdlib + pyarrow.
-
-    Append-only: the table must already have a published snapshot
-    (the ``append_snapshot`` stance — a typo'd root can't silently
-    start a new table; publish first, or use ``snapshot_batch_writer``
-    which creates on the first batch), and the written schema must
-    match the table's current schema or a registered generation."""
+class _StagingWriter:
+    """The two-phase shape both registered writers share: ``write``
+    tasks stream their Arrow batches into UNIQUE files under
+    ``<root>/_staging/`` (:func:`_stage_arrow`; stats stay off the hot
+    path), and the driver-side commit hands them to the snapshot
+    commit, whose data phase renames them (same filesystem,
+    metadata-only) into one fresh ``data/`` prefix and footer-reads
+    them for manifest entries.  Staged files the commit did not take —
+    a skipped replay, a refusal — are discarded; a crash before the
+    commit leaves only ``_staging`` debris, which ``abort`` sweeps.
+    ``commit``/``abort`` run on the driver node and import the protocol
+    module, so the package must be importable there; ``write`` stays
+    stdlib + pyarrow."""
 
     def __init__(self, schema: StructType, options: Dict[str, str]):
         self._root = _refuse_remote(options["path"])
-        self._app_id = str(
-            options.get("appid", "smashed_snapshot_sink")
-        )
-        self._takeover = options.get("takeover", "false").lower() in (
-            "true",
-            "1",
-        )
         self._compression = options.get("compression", "zstd")
         self._columns = {
             f.name: f.dataType.simpleString() for f in schema.fields
@@ -662,80 +615,69 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
     def write(self, iterator):
         return _stage_arrow(self._root, self._compression, iterator)
 
-    def commit(self, messages, batchId: int) -> None:
-        import uuid
+    def _commit_staged(self, plan, stem: str, messages, stats_columns=None):
+        from ..sources.snapshot import _commit_plan
 
-        from ..sources.snapshot import (
-            _stats_columns,
-            append_files_snapshot,
-            resolve_snapshot,
-        )
-
-        staged = [m for m in messages if m is not None]
+        paths = [m.staged_path for m in messages if m is not None]
         try:
-            head = resolve_snapshot(self._root)
-        except FileNotFoundError:
-            _discard_staged(staged)
-            raise FileNotFoundError(
-                "smashed_snapshot sink: nothing published under "
-                f"{self._root!r} yet — the first write to a table is "
-                "a publish_snapshot (or snapshot_batch_writer, which "
-                "creates on its first batch)"
+            _commit_plan(
+                plan, self._root, self._columns,
+                stats_columns=stats_columns, staged=(stem, paths),
             )
-        app = head.properties.get("stream_app_id")
-        app = None if app is None else str(app)
-        last = head.properties.get("stream_batch_id")
-        last = None if last is None else int(last)
-        if app is not None and app != self._app_id and not self._takeover:
-            _discard_staged(staged)
-            raise RuntimeError(
-                f"smashed_snapshot sink: table {self._root!r} was "
-                f"last written by stream app {app!r}, not "
-                f"{self._app_id!r} — batch ids are per-checkpoint, so "
-                "honoring this batch could replay or drop data.  Pass "
-                ".option('takeover', 'true') if the old checkpoint is "
-                "decommissioned."
-            )
-        if app == self._app_id and last is not None and batchId <= last:
-            # replayed batch after a crash between sink commit and
-            # offset-log write: already in the table — drop the dupes
-            _discard_staged(staged)
-            return
-        if not staged:
-            return
-        eff_stats = _stats_columns(None, head, self._columns)
-        rel_prefix = (
-            f"data/stream-{batchId:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        entries = _rename_into_prefix(
-            self._root, rel_prefix, staged, eff_stats
-        )
-        append_files_snapshot(
-            self._root,
-            rel_prefix,
-            entries,
-            self._columns,
-            properties={
-                "stream_app_id": self._app_id,
-                "stream_batch_id": int(batchId),
-            },
-        )
+        finally:
+            _discard_staged(messages)
 
-    def abort(self, messages, batchId: int) -> None:
+    def abort(self, messages, batchId: Optional[int] = None) -> None:
         _discard_staged(messages)
 
 
-class _SnapshotBatchWriter(DataSourceArrowWriter):
+class _SnapshotStreamWriter(_StagingWriter, DataSourceStreamArrowWriter):
+    """Exactly-once append sink: each micro-batch commits as ONE
+    append into a fresh ``data/stream-<batch>-*`` prefix, stamped with
+    the ``stream_app_id``/``stream_batch_id`` watermark, and the
+    commit's watermark gate decides replay and foreign-app exactly as
+    for the foreachBatch tier.  Append-only: the table must already
+    have a published snapshot (publish first, or use
+    ``snapshot_batch_writer``, which creates on the first batch), and
+    the written schema must match the table's current schema or a
+    registered generation."""
+
+    def __init__(self, schema: StructType, options: Dict[str, str]):
+        super().__init__(schema, options)
+        self._app_id = str(options.get("appid", "smashed_snapshot_sink"))
+        self._takeover = options.get("takeover", "false").lower() in (
+            "true",
+            "1",
+        )
+
+    def commit(self, messages, batchId: int) -> None:
+        from ..sources import snapshot as snap
+
+        if not any(m is not None for m in messages):
+            return
+        mark = snap._Watermark(self._app_id, int(batchId), self._takeover)
+        self._commit_staged(
+            snap._Plan(
+                "smashed_snapshot sink", "append", carry=snap._CARRY_ALL,
+                on_race="rebase", stream=mark,
+            ),
+            f"stream-{batchId:08d}",
+            messages,
+        )
+
+
+class _SnapshotBatchWriter(_StagingWriter, DataSourceArrowWriter):
     """``df.write.format("smashed_snapshot")`` — the batch half of
     the same two-phase shape: ``mode("append")`` lands the staged
     files as one append commit (table must exist; envelope-stats
-    columns inherited, or pass ``statsColumns``);
-    ``mode("overwrite")`` publishes them as the table's next full
-    state (creating the table if absent) — the old version stays on
-    the chain for time travel until vacuumed.  For heavy batch
-    writes prefer ``publish_snapshot``/``append_snapshot`` (JVM
-    parquet write + executor-side stats); this path exists so a
-    registered-format user never has to leave the format."""
+    columns inherited, or pass ``statsColumns``, refused before the
+    rename when the files cannot serve them); ``mode("overwrite")``
+    publishes them as the table's next full state (creating the table
+    if absent) — the old version stays on the chain for time travel
+    until vacuumed.  For heavy batch writes prefer
+    ``publish_snapshot``/``append_snapshot`` (JVM parquet write +
+    executor-side stats); this path exists so a registered-format user
+    never has to leave the format."""
 
     def __init__(
         self,
@@ -743,64 +685,31 @@ class _SnapshotBatchWriter(DataSourceArrowWriter):
         options: Dict[str, str],
         overwrite: bool,
     ):
-        self._root = _refuse_remote(options["path"])
+        super().__init__(schema, options)
         self._overwrite = overwrite
-        self._compression = options.get("compression", "zstd")
         sc = options.get("statscolumns")
         self._stats_option = (
             [c.strip() for c in sc.split(",") if c.strip()]
             if sc is not None
             else None
         )
-        self._columns = {
-            f.name: f.dataType.simpleString() for f in schema.fields
-        }
-
-    def write(self, iterator):
-        return _stage_arrow(self._root, self._compression, iterator)
 
     def commit(self, messages) -> None:
-        import uuid
+        from ..sources import snapshot as snap
 
-        from ..sources.snapshot import (
-            _stats_columns,
-            append_files_snapshot,
-            publish_files_snapshot,
-            resolve_snapshot,
-        )
-
-        staged = [m for m in messages if m is not None]
-        head = None
-        if self._stats_option is None and not self._overwrite:
-            try:
-                head = resolve_snapshot(self._root)
-            except FileNotFoundError:
-                _discard_staged(staged)
-                raise FileNotFoundError(
-                    "smashed_snapshot writer: nothing published "
-                    f"under {self._root!r} yet — mode('append') "
-                    "needs an existing table; use mode('overwrite') "
-                    "(or publish_snapshot) for the first write"
-                )
-        eff_stats = _stats_columns(self._stats_option, head, self._columns)
-        if not staged and not self._overwrite:
-            return  # appending nothing is a no-op
-        verb = "overwrite" if self._overwrite else "append"
-        rel_prefix = f"data/{verb}-{uuid.uuid4().hex[:8]}"
-        entries = _rename_into_prefix(
-            self._root, rel_prefix, staged, eff_stats
-        )
+        verb = "smashed_snapshot writer"
         if self._overwrite:
-            publish_files_snapshot(
-                self._root, rel_prefix, entries, self._columns
+            plan = snap._Plan(verb, "publish")
+        elif any(m is not None for m in messages):
+            plan = snap._Plan(
+                verb, "append", carry=snap._CARRY_ALL, on_race="rebase"
             )
         else:
-            append_files_snapshot(
-                self._root, rel_prefix, entries, self._columns
-            )
-
-    def abort(self, messages) -> None:
-        _discard_staged(messages)
+            return  # appending nothing is a no-op
+        self._commit_staged(
+            plan, "overwrite" if self._overwrite else "append", messages,
+            self._stats_option,
+        )
 
 
 # --------------------------------------------------------------------

@@ -4,27 +4,30 @@ continuously-ingesting 100 TB corpus.
 
 Beyond-reference surface (the reference — ``src/smashed/mappers/*`` —
 has no streaming at all).  Composes Structured Streaming's
-``foreachBatch`` with :func:`~smashed_spark.sources.snapshot
-.append_snapshot`: each micro-batch commits as one snapshot version,
-so readers always see whole batches (the pointer flip is the commit)
-and time travel / incremental ``read_snapshot_changes`` work out of
-the box.
+``foreachBatch`` with the snapshot append commit: each micro-batch
+commits as one snapshot version, so readers always see whole batches
+(the pointer flip is the commit) and time travel / incremental
+``read_snapshot_changes`` work out of the box.
 
 Exactly-once argument
 ---------------------
 Structured Streaming guarantees at-least-once delivery of each
 ``batch_id`` to a ``foreachBatch`` body (a crash between the body and
-the checkpoint commit replays the id).  The sink makes the table-side
-effect idempotent:
+the checkpoint commit replays the id).  The table-side effect is made
+idempotent by ONE watermark gate, ``snapshot._watermark_gate``, which
+every streaming writer reaches — the bodies here and the registered
+sink of ``streaming/datasource.py``:
 
 * Every committed batch stamps ``stream_app_id``/``stream_batch_id``
-  into its manifest's properties, and EVERY snapshot publish — the
-  sink's appends, but also compact/optimize/delete rewrites —
-  re-states those keys from its parent (``snapshot._PROPAGATED_PROPS``),
-  so the watermark survives any maintenance commit and any vacuum.
-* On entry the body reads the current snapshot's watermark (one
-  pointer GET + one manifest GET, no chain walk) and SKIPS any
-  ``batch_id`` at or below it — a replayed batch is a no-op.
+  into its manifest's properties, and EVERY snapshot commit — the
+  appends, but also compact/optimize/delete rewrites — re-states those
+  keys from its parent (``snapshot._PROPAGATED_PROPS``), so the
+  watermark survives any maintenance commit and any vacuum.
+* The gate runs INSIDE the commit, against the parent each attempt
+  lands on (Delta checks its ``txn`` id the same way): a ``batch_id``
+  at or below the parent's watermark commits nothing.  A second
+  delivery of the same batch that commits while this one writes makes
+  this one's rebase skip, not commit the batch twice.
 * A crash BEFORE the pointer flip leaves only unreferenced debris
   (snapshot crash window 1/2); the replay appends a fresh prefix.
   A crash AFTER the flip but before the checkpoint commit is the
@@ -33,7 +36,7 @@ effect idempotent:
 ``app_id`` is the checkpoint's identity (Delta's ``txnAppId``
 pattern): batch ids restart at 0 for a NEW checkpoint, so comparing
 them across checkpoints would silently drop data.  A mismatch between
-the table's recorded app and the sink's raises; ``takeover=True`` is
+the table's recorded app and the writer's raises; ``takeover=True`` is
 the operator's explicit assertion that the old checkpoint is dead and
 the new one's ids start fresh.
 """
@@ -44,9 +47,15 @@ from typing import Callable, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 
+from ..sources.io_utils import SmartPath
 from ..sources.snapshot import (
-    append_snapshot,
-    publish_snapshot,
+    _CARRY_ALL,
+    _commit_plan,
+    _Plan,
+    _pointer_version,
+    _schema_of,
+    _watermark_gate,
+    _Watermark,
     resolve_snapshot,
 )
 
@@ -96,78 +105,45 @@ def snapshot_batch_writer(
     ``skipped=True``.
 
     ``stats_columns=None`` (default) inherits the table's envelope-
-    stats column set on every append (append_snapshot computes it
-    from the parent manifest the carry already resolves — no extra
-    GETs): a stream that skipped stats would otherwise add
+    stats column set on every append (computed from the parent
+    manifest the commit already resolves — no extra GETs): a stream
+    that skipped stats would otherwise add
     envelope-less files that every later keyed delete/merge must
     conservatively rewrite.  The FIRST batch (the publish) has no
     parent to inherit from — pass an explicit list to seed stats on
     a fresh table."""
 
+    verb = "snapshot_batch_writer"
+    root = SmartPath.parse(table_root)
+
     def _body(batch: DataFrame, batch_id: int) -> None:
-        # ONE resolve serves the watermark read AND the emptiness
-        # probe (publish/append resolve the parent once more
-        # internally — that one is inherent to the carry protocol).
-        # At the module's own 800k-file scale a manifest GET is tens
-        # of MB, so the hot ingest path must not repeat it.
-        try:
-            current = resolve_snapshot(table_root, client=client)
-            empty = False
-            props_now = current.properties
-        except FileNotFoundError:
-            empty = True
-            props_now = {}
-        app = props_now.get("stream_app_id")
-        app = None if app is None else str(app)
-        last = props_now.get("stream_batch_id")
-        last = None if last is None else int(last)
-        if app is not None and app != app_id and not takeover:
-            raise RuntimeError(
-                f"snapshot_batch_writer: table {table_root!r} was last "
-                f"written by stream app {app!r}, not {app_id!r} — batch "
-                "ids are per-checkpoint, so honoring this batch could "
-                "replay or drop data.  If the old checkpoint is "
-                "decommissioned, pass takeover=True to start fresh."
-            )
-        same_app = app == app_id
-        if same_app and last is not None and batch_id <= last:
-            if on_commit is not None:
-                on_commit(
-                    {
-                        "batch_id": batch_id,
-                        "version": None,
-                        "rows": None,
-                        "skipped": True,
-                    }
-                )
-            return
-        props = {"stream_app_id": app_id, "stream_batch_id": batch_id}
-        if empty:
-            info = publish_snapshot(
-                batch,
-                table_root,
-                operation="publish",
-                compression=compression,
-                properties=props,
-                stats_columns=stats_columns,
-                client=client,
-            )
+        # the watermark gate runs inside the commit, against the parent
+        # each attempt lands on, so the head manifest is read once per
+        # batch; the pointer alone picks publish (empty table) or append
+        mark = _Watermark(app_id, int(batch_id), takeover)
+        if _pointer_version(root, client=client) is None:
+            plan = _Plan(verb, "publish", stream=mark)
         else:
-            info = append_snapshot(
-                batch,
-                table_root,
-                compression=compression,
-                properties=props,
-                stats_columns=stats_columns,
-                client=client,
+            plan = _Plan(
+                verb, "append", carry=_CARRY_ALL, on_race="rebase",
+                stream=mark,
             )
+        info = _commit_plan(
+            plan,
+            table_root,
+            _schema_of(batch),
+            batch,
+            compression=compression,
+            stats_columns=stats_columns,
+            client=client,
+        )
         if on_commit is not None:
             on_commit(
                 {
                     "batch_id": batch_id,
-                    "version": info.version,
-                    "rows": info.row_count,
-                    "skipped": False,
+                    "version": None if info is None else info.version,
+                    "rows": None if info is None else info.row_count,
+                    "skipped": info is None,
                 }
             )
 
@@ -247,6 +223,7 @@ def dedup_snapshot_batch_writer(
             "evaluation per batch and deliver nothing"
         )
 
+    verb = "dedup_snapshot_batch_writer"
     append_batch = snapshot_batch_writer(
         table_root,
         app_id,
@@ -257,74 +234,55 @@ def dedup_snapshot_batch_writer(
         on_commit=on_commit,
     )
 
+    def _per_batch_index_dirs():
+        return [
+            d
+            for sub in ("digests", "bands", "semantic")
+            for d in _glob.glob(_os.path.join(state_dir, sub, "batch=*"))
+            if not d.endswith("batch=-1")
+        ]
+
     def _body(batch: DataFrame, batch_id: int) -> None:
-        # the app-identity check must run BEFORE any dedup/index work:
-        # snapshot_batch_writer re-checks it at commit time, but by
-        # then a foreign checkpoint's batch would already have
-        # overwritten same-numbered index dirs.  Identity lives in TWO
-        # places, and both are checked: the table's watermark (who
-        # last committed) and a marker in state_dir itself (who last
-        # extended the index) — the marker is what catches a reused
-        # state_dir under a FRESH or recreated table, where the
-        # watermark app is None but batch=N dirs from a dead
-        # checkpoint still sit in state_dir waiting to collide with
-        # the new checkpoint's restarted ids.  A same-app crash-window
-        # redelivery (index extended, table commit lost) matches the
-        # marker and proceeds — recompute+overwrite of the same
-        # (app, batch) data is the documented idempotence.
+        # the identity check runs BEFORE any index work (the commit's
+        # gate comes too late: a foreign batch would already have
+        # overwritten same-numbered index dirs), through the one gate
+        # for both owners: the table's watermark app and the state_dir
+        # marker — the marker catches a reused state_dir under a FRESH
+        # table, whose watermark app is None.  A same-app redelivery
+        # matches both and recomputes + overwrites idempotently.
+        mark = _Watermark(app_id, int(batch_id), takeover)
         app, _last = stream_commit_watermark(table_root, client=client)
         marker_path = _os.path.join(state_dir, "_STATE_APP")
         state_app = None
         if _os.path.isfile(marker_path):
             with open(marker_path, "r", encoding="utf-8") as fh:
                 state_app = fh.read().strip() or None
-        foreign = [
-            (src, a)
-            for src, a in (("table", app), ("state_dir", state_app))
-            if a is not None and a != app_id
-        ]
-        def _per_batch_index_dirs():
-            return [
-                d
-                for sub in ("digests", "bands", "semantic")
-                for d in _glob.glob(
-                    _os.path.join(state_dir, sub, "batch=*")
-                )
-                if not d.endswith("batch=-1")
-            ]
-
-        if not foreign and state_app is None and app is None:
+        if state_app is None and app is None and _per_batch_index_dirs():
             # a PRE-MARKER state_dir (legacy checkpoint, no _STATE_APP)
             # under a fresh/recreated table: nobody can vouch for the
             # batch=N dirs in it, so they are treated exactly like a
             # foreign checkpoint's — anonymous extensions would collide
             # with this checkpoint's restarted ids just the same
-            if _per_batch_index_dirs():
-                foreign = [("state_dir", "<unmarked legacy checkpoint>")]
-        if foreign:
-            if not takeover:
-                src, a = foreign[0]
-                raise RuntimeError(
-                    f"dedup_snapshot_batch_writer: {src} records stream "
-                    f"app {a!r}, not {app_id!r} (table={table_root!r}, "
-                    f"state_dir={state_dir!r}) — batch ids are "
-                    "per-checkpoint; pass takeover=True only after "
-                    "decommissioning the old checkpoint"
-                )
-            stale = _per_batch_index_dirs()
-            if stale:
-                raise RuntimeError(
-                    "dedup_snapshot_batch_writer: takeover with "
-                    f"{len(stale)} per-batch index dirs still under "
-                    f"{state_dir!r} — the new checkpoint's restarted "
-                    "batch ids would hide and then overwrite the dead "
-                    "checkpoint's same-numbered index extensions, "
-                    "re-admitting its duplicates.  Run "
-                    "compact_ingest_state(state_dir, "
-                    "include_latest=True) first (folds them into the "
-                    "collision-free batch=-1 partition, history "
-                    "preserved)."
-                )
+            state_app = "<unmarked legacy checkpoint>"
+        verdicts = [
+            _watermark_gate(verb, where, {"stream_app_id": owner}, mark)
+            for where, owner in (
+                (f"table {table_root!r}", app),
+                (f"state_dir {state_dir!r}", state_app),
+            )
+        ]
+        stale = _per_batch_index_dirs() if "takeover" in verdicts else []
+        if stale:
+            raise RuntimeError(
+                f"{verb}: takeover with {len(stale)} per-batch index "
+                f"dirs still under {state_dir!r} — the new checkpoint's "
+                "restarted batch ids would hide and then overwrite the "
+                "dead checkpoint's same-numbered index extensions, "
+                "re-admitting its duplicates.  Run "
+                "compact_ingest_state(state_dir, include_latest=True) "
+                "first (folds them into the collision-free batch=-1 "
+                "partition, history preserved)."
+            )
         if state_app != app_id:
             _os.makedirs(state_dir, exist_ok=True)
             with open(marker_path, "w", encoding="utf-8") as fh:

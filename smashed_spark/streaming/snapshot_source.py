@@ -4,112 +4,59 @@ the ingest→table→stream story whose write half is
 
 Beyond-reference surface (the reference — ``src/smashed/mappers`` —
 has no table or streaming notion); the protocol underneath is
-sources/snapshot.py, and the per-batch diff machinery is
-``read_snapshot_changes`` — the same engine ``snapshot_change_feed``
-drives for one-shot polls.  This module is what Delta/Iceberg users
-reach for as ``spark.readStream.table(...)``: checkpointed offsets,
-bounded micro-batches, an ``availableNow``-style drain, and a
-documented rewrite policy.
+sources/snapshot.py.  This is what Delta/Iceberg users reach for as
+``spark.readStream.table(...)``: checkpointed offsets, bounded
+micro-batches, an ``availableNow``-style drain, and a documented
+rewrite policy.
 
-Driver loop vs the registered source
-------------------------------------
-Two consumption shapes exist, by design.  ``streaming/datasource.py``
-registers a real ``spark.readStream.format("smashed_snapshot")``
-source via PySpark 4's Python DataSource API — Spark's own offset
-log, any sink, deterministic replay — but its rows flow through
-Python workers as Arrow batches.  THIS module is the mirror image of
-the sink's ``foreachBatch``: a driver loop that resolves offsets
-(snapshot versions), hands each bounded increment to a user body,
-and checkpoints progress, with every scan staying JVM-side in
-``read_snapshot_changes`` — the throughput shape for heavy
-backfills, at the cost of owning its own checkpoint and an
-at-least-once (not exactly-once) callback contract.
+``read_snapshot_stream`` loops the ONE at-least-once drain of
+``sources/change_feed.py`` — the poll ``snapshot_change_feed`` runs
+once, unbounded — so offsets, bootstrap, the append-chain walk, the
+rewrite policy (``on_rewrite``: ValueError for a rewrite on the
+chain, FileNotFoundError for a checkpoint vacuumed off it, or a
+``"full_resync"`` catch-up batch) and the process-then-advance order
+are that module's, with every scan JVM-side: the throughput shape for
+heavy backfills.  ``streaming/datasource.py`` registers the other
+shape, a ``spark.readStream.format("smashed_snapshot")`` source whose
+progress lives in Spark's own offset log.  What the loop adds:
 
-Delivery contract
------------------
-* OFFSETS are snapshot versions.  The checkpoint (``offset.json``
-  under ``checkpoint_dir``, local or s3) records the last version
-  whose rows ``process`` has fully consumed; it is written atomically
-  and only AFTER ``process`` returns — at-least-once, same as the
-  sink's ``foreachBatch`` bodies.  Make ``process`` idempotent (key
-  side effects on the batch's ``upto`` version, the way
-  ``snapshot_batch_writer`` keys on batch id).
-* Each micro-batch covers at most ``max_versions_per_batch`` append
-  commits — a consumer resuming into a deep backlog drains it in
-  bounded pieces with a checkpoint after each, instead of one
-  unbounded catch-up read.
+* the offset is ``offset.json`` under ``checkpoint_dir`` (local or
+  s3); make ``process`` idempotent on the batch's ``upto`` version;
+* each micro-batch covers at most ``max_versions_per_batch`` append
+  commits, with a checkpoint after each — a consumer resuming into a
+  deep backlog drains it in bounded pieces;
 * ``available_now=True`` pins the head version at entry and drains up
   to it, then returns (the ``Trigger.AvailableNow`` shape); appends
   landing mid-drain are the NEXT call's backlog.  ``False`` keeps
   polling (``poll_interval_s`` between empty polls) until ``stop()``
   returns True or ``max_polls`` is exhausted.
-* A REWRITE on the chain (compact/optimize/delete/merge/restore —
-  anything but append) invalidates file-level increments.
-  ``on_rewrite="raise"`` (default) surfaces it loudly;
-  ``"full_resync"`` delivers the ENTIRE current snapshot as one
-  catch-up batch and advances — the recovery for row-idempotent
-  consumers (index rebuilds, upsert sinks).  The same fallback covers
-  a checkpoint vacuumed off the chain.  ``restore_snapshot`` commits
-  an explicit ``"restore"`` step, so a consumer resuming across a
-  restore sees this policy, never silence — pinned by
-  tests/test_snapshot_source.py.
+
+``restore_snapshot`` commits an explicit ``"restore"`` step, so a
+consumer resuming across a restore sees the rewrite policy, never
+silence — pinned by tests/test_snapshot_source.py.
 """
 
 from __future__ import annotations
 
-import json
 import time
 from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.change_feed import _check_policy, _drain, _read_offset
 from ..sources.io_utils import SmartPath
-from ..sources.snapshot import (
-    SnapshotInfo,
-    _read_json,
-    _write_atomic,
-    read_snapshot,
-    read_snapshot_changes,
-    resolve_snapshot,
-)
 
 __all__ = ["read_snapshot_stream", "read_stream_offset"]
+
+
+def _offset_path(checkpoint_dir: str) -> str:
+    return str(SmartPath.parse(checkpoint_dir) / "offset.json")
 
 
 def read_stream_offset(checkpoint_dir: str, client=None) -> Optional[int]:
     """The last fully-consumed snapshot version the checkpoint
     records, or None before the first committed batch."""
-    path = str(SmartPath.parse(checkpoint_dir) / "offset.json")
-    doc = _read_json(path, client=client)
-    return None if doc is None else int(doc["version"])
-
-
-def _append_chain(
-    table_root: str,
-    head: SnapshotInfo,
-    since_version: int,
-    client=None,
-) -> Optional[List[int]]:
-    """The ordered version list (exclusive ``since_version`` → head),
-    or None when the chain contains a non-append step / the offset is
-    no longer an ancestor (both mean file-level increments are
-    invalid and the rewrite policy decides)."""
-    versions: List[int] = []
-    cursor = head
-    while cursor.version != since_version:
-        if cursor.operation != "append":
-            return None
-        versions.append(cursor.version)
-        if cursor.parent is None:
-            return None
-        try:
-            cursor = resolve_snapshot(
-                table_root, cursor.parent, client=client
-            )
-        except FileNotFoundError:
-            # ancestor manifest vacuumed away mid-walk
-            return None
-    return list(reversed(versions))
+    return _read_offset(_offset_path(checkpoint_dir), client=client)
 
 
 def read_snapshot_stream(
@@ -129,8 +76,9 @@ def read_snapshot_stream(
     allow_driver_download: bool = False,
 ) -> dict:
     """Stream a governed snapshot table into ``process(df, since,
-    upto)`` with checkpointed progress — module docstring has the full
-    delivery contract.  Returns a status dict ``{"batches": [...],
+    upto)`` with checkpointed progress — this module's and
+    ``sources/change_feed.py``'s docstrings have the delivery
+    contract.  Returns a status dict ``{"batches": [...],
     "version": <last committed offset>, "polls": N}`` where each batch
     record is ``{"status": "bootstrap"|"changes"|"full_resync",
     "since": ..., "upto": ...}``.
@@ -140,17 +88,8 @@ def read_snapshot_stream(
     the current version without delivering existing rows.
     ``where=`` applies the envelope file-skipping + re-filter contract
     to every delivered batch."""
-    if initial not in ("full", "latest"):
-        raise ValueError(
-            f"read_snapshot_stream: initial={initial!r} — pass 'full' "
-            "(deliver existing data first) or 'latest' (start at the "
-            "current version)"
-        )
-    if on_rewrite not in ("raise", "full_resync"):
-        raise ValueError(
-            f"read_snapshot_stream: on_rewrite={on_rewrite!r} — pass "
-            "'raise' or 'full_resync'"
-        )
+    verb = "read_snapshot_stream"
+    _check_policy(verb, initial, on_rewrite)
     if max_versions_per_batch < 1:
         raise ValueError(
             "read_snapshot_stream: max_versions_per_batch must be >= 1"
@@ -162,92 +101,20 @@ def read_snapshot_stream(
             "or max_polls=<int> (or run available_now=True per poll "
             "from your own scheduler)"
         )
-    offset_path = str(SmartPath.parse(checkpoint_dir) / "offset.json")
     batches: List[dict] = []
     polls = 0
-
-    def _commit(version: int) -> None:
-        _write_atomic(
-            offset_path, json.dumps({"version": int(version)}),
-            client=client,
-        )
-
-    def _deliver(df: DataFrame, since, upto: int, status: str) -> None:
-        process(df, since, upto)
-        _commit(upto)
-        batches.append({"status": status, "since": since, "upto": upto})
-
-    def _full_read(head: SnapshotInfo) -> DataFrame:
-        return read_snapshot(
-            spark,
-            table_root,
-            version=head.version,
-            where=where,
-            client=client,
-            allow_driver_download=allow_driver_download,
-        )
-
-    def _drain_once() -> bool:
-        """One poll: deliver everything between the checkpoint and the
-        CURRENT head in bounded batches.  Returns True when any batch
-        was delivered."""
-        head = resolve_snapshot(table_root, client=client)
-        cursor = read_stream_offset(checkpoint_dir, client=client)
-        if cursor is None:
-            if initial == "latest":
-                _commit(head.version)
-                return False
-            _deliver(_full_read(head), None, head.version, "bootstrap")
-            return True
-        if cursor == head.version:
-            return False
-        chain = _append_chain(table_root, head, cursor, client=client)
-        if chain is None:
-            if on_rewrite == "raise":
-                raise ValueError(
-                    "read_snapshot_stream: the chain from "
-                    f"v{cursor} to v{head.version} contains a rewrite "
-                    "(compact/optimize/delete/merge/restore) or the "
-                    "checkpointed version was vacuumed off it — "
-                    "file-level increments are invalid; pass "
-                    "on_rewrite='full_resync' if the consumer is "
-                    "row-idempotent, or rebuild it from a full read"
-                )
-            _deliver(_full_read(head), cursor, head.version,
-                     "full_resync")
-            return True
-        delivered = False
-        for i in range(0, len(chain), max_versions_per_batch):
-            upto = chain[
-                min(i + max_versions_per_batch, len(chain)) - 1
-            ]
-            df = read_snapshot_changes(
-                spark,
-                table_root,
-                since_version=cursor,
-                version=upto,
-                where=where,
-                client=client,
-                allow_driver_download=allow_driver_download,
-            )
-            _deliver(df, cursor, upto, "changes")
-            cursor = upto
-            delivered = True
-        return delivered
-
-    if available_now:
-        _drain_once()
-        polls = 1
-    else:
-        while True:
-            if stop is not None and stop():
-                break
-            delivered = _drain_once()
-            polls += 1
-            if max_polls is not None and polls >= max_polls:
-                break
-            if not delivered:
-                time.sleep(poll_interval_s)
+    while available_now or stop is None or not stop():
+        delivered = _drain(
+            spark, table_root, _offset_path(checkpoint_dir), process, verb,
+            initial, on_rewrite, where, max_versions_per_batch, client,
+            allow_driver_download,
+        )["batches"]
+        batches.extend(delivered)
+        polls += 1
+        if available_now or (max_polls is not None and polls >= max_polls):
+            break
+        if not delivered:
+            time.sleep(poll_interval_s)
     return {
         "batches": batches,
         "version": read_stream_offset(checkpoint_dir, client=client),

@@ -5,10 +5,6 @@ at-least-once replay, rewrite handling, vacuumed-cursor resync.
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
-
 from smashed_spark.sources.change_feed import (
     read_feed_cursor,
     snapshot_change_feed,

@@ -311,7 +311,9 @@ def test_positional_delete_rewrite_race_refuses(
         return out
 
     monkeypatch.setattr(snap, "_next_version", race)
-    with pytest.raises(RuntimeError, match="concurrent 'compact'"):
+    with pytest.raises(
+        RuntimeError, match=r"non-append operations \(v\d+='compact'\)"
+    ):
         apply_deletions_snapshot(spark, root, [1], "doc_id",
                                  positional=True)
     monkeypatch.undo()
@@ -458,6 +460,35 @@ def test_merge_refuses_unservable_stats_columns(
             "doc_id", stats_columns=["doc_id", column],
             positional=positional,
         )
+    assert resolve_snapshot(root).version == 1
+
+
+@pytest.mark.parametrize("column", ["score", "absent"])
+@pytest.mark.parametrize("verb", ["publish", "merge", "positional_merge"])
+def test_refused_stats_columns_leave_no_prefix(spark, tmp_path, verb, column):
+    # a requested stats column the new files cannot serve is refused
+    # before the data write: no orphan prefix lands under data/
+    import os
+
+    from pyspark.sql import functions as F
+
+    root = _root(tmp_path)
+    publish_snapshot(
+        _df(spark, 20).withColumn("score", F.col("doc_id") * 0.5),
+        root, stats_columns=["doc_id"],
+    )
+    before = sorted(os.listdir(os.path.join(root, "data")))
+    batch = _df(spark, 2, "m").withColumn("score", F.lit(1.0))
+    with pytest.raises(ValueError, match="stats_columns"):
+        if verb == "publish":
+            publish_snapshot(batch, root, stats_columns=["doc_id", column])
+        else:
+            merge_snapshot(
+                spark, root, batch, "doc_id",
+                stats_columns=["doc_id", column],
+                positional=verb == "positional_merge",
+            )
+    assert sorted(os.listdir(os.path.join(root, "data"))) == before
     assert resolve_snapshot(root).version == 1
 
 

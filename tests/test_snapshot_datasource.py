@@ -10,9 +10,6 @@ import os
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -627,6 +624,28 @@ def test_batch_write_creates_on_overwrite_refuses_on_append(
     assert info.version == 1 and info.row_count == 5
     assert all("doc_id" in f["stats"] for f in info.files)
     # no staging debris after a clean commit
+    staging = os.path.join(root, "_staging")
+    assert not os.path.exists(staging) or not os.listdir(staging)
+
+
+def test_batch_write_refused_stats_columns_leave_no_prefix(
+    registered, tmp_path
+):
+    # statsColumns naming a column the staged files cannot serve is
+    # refused before the rename into data/; the staged files go too
+    spark = registered
+    root = _root(tmp_path)
+    publish_snapshot(
+        _df(spark, 20).withColumn("score", F.col("doc_id") * 0.5), root
+    )
+    before = sorted(os.listdir(os.path.join(root, "data")))
+    batch = _df(spark, 5, base=20).withColumn("score", F.lit(1.0))
+    with pytest.raises(Exception, match="stats_columns"):
+        batch.write.format("smashed_snapshot").mode("append").option(
+            "statsColumns", "doc_id,score"
+        ).save(root)
+    assert sorted(os.listdir(os.path.join(root, "data"))) == before
+    assert resolve_snapshot(root).version == 1
     staging = os.path.join(root, "_staging")
     assert not os.path.exists(staging) or not os.listdir(staging)
 

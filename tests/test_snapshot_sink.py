@@ -8,9 +8,6 @@ import os
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
 
 import smashed_spark.sources.snapshot as snap
 from smashed_spark.sources.snapshot import (
@@ -175,6 +172,97 @@ def test_restart_with_new_checkpoint_same_app_resumes(spark, tmp_path):
     assert [c["skipped"] for c in commits] == [True, True, False]
     assert _ids(read_snapshot(spark, root)) == list(range(30))
     assert os.path.isfile(os.path.join(root, snap.POINTER_NAME))
+
+
+# ---------------------------------------------------------------------------
+# the one watermark gate, reached by both streaming writer tiers: the
+# foreachBatch body and the registered sink's commit hook
+# ---------------------------------------------------------------------------
+
+TIERS = ["foreach_batch", "registered_sink"]
+
+
+def _delivery(tier, root, commits):
+    """A (df, batch_id) delivery through one writer tier as app1 —
+    for the registered sink, its write and commit hooks in the order
+    Spark drives them."""
+    if tier == "foreach_batch":
+        return snapshot_batch_writer(root, "app1", on_commit=commits.append)
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from smashed_spark.streaming.datasource import _SnapshotStreamWriter
+
+    sink = _SnapshotStreamWriter(
+        StructType.fromDDL("doc_id bigint, text string"),
+        {"path": root, "appid": "app1"},
+    )
+
+    def deliver(df, batch_id):
+        batches = pa.Table.from_pandas(
+            df.toPandas(), preserve_index=False
+        ).to_batches()
+        sink.commit([sink.write(iter(batches))], batch_id)
+
+    return deliver
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_delivery_racing_its_own_replay_commits_once(
+    spark, tmp_path, monkeypatch, tier
+):
+    """A second delivery of the same (app, batch) commits while this
+    one writes its files: this delivery loses the commit race, and its
+    rebase must skip — the gate checks the parent every attempt lands
+    on — instead of committing the batch a second time."""
+    root = str(tmp_path / "table")
+    snap.publish_snapshot(_df(spark, 0, 10), root)
+    commits = []
+    deliver = _delivery(tier, root, commits)
+    real = snap._write_files
+    raced = []
+
+    def racing(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:
+            raced.append(True)
+            _delivery(tier, root, [])(_df(spark, 10, 20), 1)
+        return out
+
+    monkeypatch.setattr(snap, "_write_files", racing)
+    deliver(_df(spark, 10, 20), 1)
+    monkeypatch.undo()
+    assert raced
+    assert resolve_snapshot(root).version == 2
+    assert stream_commit_watermark(root) == ("app1", 1)
+    assert _ids(read_snapshot(spark, root)) == list(range(20))
+    if tier == "foreach_batch":
+        assert [c["skipped"] for c in commits] == [True]
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_one_head_manifest_read_per_micro_batch(
+    spark, tmp_path, monkeypatch, tier
+):
+    """The gate reads the watermark off the parent the commit resolves
+    anyway: a committed micro-batch reads the head manifest once."""
+    root = str(tmp_path / "table")
+    snap.publish_snapshot(_df(spark, 0, 10), root)
+    deliver = _delivery(tier, root, [])
+    deliver(_df(spark, 10, 20), 0)
+    head = snap._manifest_key(resolve_snapshot(root).version)
+    real = snap._read_json
+    reads = []
+
+    def spy(path, client=None):
+        reads.append(path)
+        return real(path, client=client)
+
+    monkeypatch.setattr(snap, "_read_json", spy)
+    deliver(_df(spark, 20, 30), 1)
+    monkeypatch.undo()
+    assert resolve_snapshot(root).version == 3
+    assert sum(p.endswith(head) for p in reads) == 1
 
 
 # ---------------------------------------------------------------------------

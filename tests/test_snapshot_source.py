@@ -7,10 +7,6 @@ roundtrip.
 
 import pytest
 
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
-
 from smashed_spark.sources.snapshot import (
     append_snapshot,
     apply_deletions_snapshot,
