@@ -19,43 +19,30 @@ rollups.  Spark-first design:
   memory by construction, see below); every coarser granularity
   re-aggregates the next-finer ROLLUP (KB–MB of data), never the raw
   events (:func:`rollup_cascade`);
-* incremental maintenance mirrors streaming/ingest.py's proven state
-  layout: each micro-batch writes its own partial rollup to a
-  ``batch=N`` parquet partition (idempotent overwrite-by-batch-id, so
-  a retried batch is a pure replay), reads merge the per-batch
-  partials by re-aggregation (rollup rows, not raw history), and
-  small-files compaction folds old partials into ``batch=-1`` with a
-  staging-directory swap.
+* incremental maintenance keeps the ingest indexes' state layout
+  (streaming/ingest.py): each micro-batch writes its own partial
+  rollup to a ``batch=N`` parquet partition (idempotent
+  overwrite-by-batch-id, so a retried batch is a pure replay), reads
+  merge the per-batch partials by re-aggregation (rollup rows, not
+  raw history), and small-files compaction folds old partials into
+  ``batch=-1``.
 
-Crash-safety is STRICTER here than in the ingest dedup indexes and the
-design differs deliberately: ingest's compaction tolerates rows
-duplicated across ``batch=-1`` and a leftover folded partition because
-every consumer is duplicate-indifferent (LEFT ANTI joins, max-cosine).
-Rollup SUMS are not — the same crash window would double-count.  So
-the compacted partition carries a ``_folded.json`` MANIFEST inside the
-``batch=-1`` directory listing exactly which batch ids its rows
-absorbed, published atomically with the data by the same directory
-rename; readers drop any ``batch=N`` partition the manifest lists.
-Every crash window then reads exactly-once:
-
-* crash after staging write — staging is outside the root, invisible;
-* crash between removing the old ``batch=-1`` and renaming staging
-  into place — the root has no ``batch=-1``; the next read or
-  compaction finds the COMPLETE staging dir (Spark's ``_SUCCESS``
-  marker) and finishes the rename first (:func:`_recover_staging`);
-* crash after the rename, before the folded partitions are removed —
-  the new manifest already lists them, so reads exclude them; the next
-  compaction deletes them without re-merging (manifest hit).
-
-Like ingest, compaction must not interleave with an in-flight batch
-write (run it between batches); the newest real batch always stays
-un-compacted so a crashed-then-retried batch can overwrite its own
-partition without its rows ALSO living in ``batch=-1``.
+The state protocol is the one every on-disk store shares
+(sources/batch_state.py): compaction stages the merge outside the
+root, swaps it in only once Spark's ``_SUCCESS`` marker is there, and
+publishes a ``_folded.json`` manifest of the absorbed batch ids in the
+same rename; reads drop the listed partitions.  That is what keeps
+rollup SUMS exact — a partial read both inside ``batch=-1`` and as its
+own partition would be counted twice — in every crash window the
+module docstring there walks through.  Compaction must not interleave
+with an in-flight batch write (run it between batches); the newest
+real batch always stays un-compacted so a crashed-then-retried batch
+can overwrite its own partition without its rows ALSO living in
+``batch=-1``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence, Tuple
@@ -63,6 +50,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.batch_state import fold_batches, read_batches
 from .hashing import portable_hash60
 
 _HASH_SPACE = 1 << 60
@@ -370,45 +358,27 @@ def rollup_estimates(
 
 
 # ---------------------------------------------------------------------------
-# incremental state (streaming/ingest.py layout + exactly-once manifest)
+# incremental state (the staged-swap protocol of sources/batch_state.py)
 # ---------------------------------------------------------------------------
-
-_MANIFEST = "_folded.json"
-_STAGING = "__compact_rollup__"
 
 
 def _root(state_dir: str) -> str:
     return os.path.join(state_dir, "rollup")
 
 
-def _read_manifest(root: str) -> List[int]:
-    path = os.path.join(root, "batch=-1", _MANIFEST)
-    if not os.path.isfile(path):
-        return []
-    with open(path) as f:
-        return [int(x) for x in json.load(f)]
-
-
-def _staging_complete(staging: str) -> bool:
-    return os.path.isfile(os.path.join(staging, "_SUCCESS"))
-
-
-def _recover_staging(state_dir: str) -> None:
-    """Finish a compaction that crashed between removing the old
-    ``batch=-1`` and renaming the staged replacement into place: the
-    staging dir is COMPLETE (Spark's ``_SUCCESS``) and is the only
-    copy of previously-compacted rows, so the rename must happen
-    before any read.  A staging dir alongside a live ``batch=-1`` is
-    a pre-swap crash leftover instead — stale, safe to ignore (the
-    next compaction overwrites it)."""
-    root = _root(state_dir)
-    staging = os.path.join(state_dir, _STAGING)
-    if (
-        not os.path.isdir(os.path.join(root, "batch=-1"))
-        and os.path.isdir(staging)
-        and _staging_complete(staging)
-    ):
-        os.replace(staging, os.path.join(root, "batch=-1"))
+def _schema(spec: RollupSpec, key_types: Optional[Dict[str, str]]) -> str:
+    """DDL of a rollup row; ``key_types`` per key column, default
+    ``string``."""
+    kt = key_types or {}
+    aggs = [
+        f"`{c}` " + (
+            "array<bigint>" if c.startswith("kmv_")
+            else "bigint" if c.startswith("n_") else "double"
+        )
+        for c in spec.agg_columns
+    ]
+    keys = [f"`{k}` {kt.get(k, 'string')}" for k in spec.keys]
+    return ", ".join(["bucket timestamp", *keys, *aggs])
 
 
 def rollup_ingest_batch(
@@ -433,9 +403,7 @@ def rollup_ingest_batch(
     thread through foreachBatch bodies and retry wrappers."""
     if batch_id < 0:
         raise ValueError("batch_id must be >= 0 (-1 is reserved)")
-    g = _check_granularity(granularity)
-    part = rollup_events(batch, spec, g)
-    part.write.mode("overwrite").parquet(
+    rollup_events(batch, spec, granularity).write.mode("overwrite").parquet(
         os.path.join(_root(state_dir), f"batch={batch_id}")
     )
 
@@ -448,116 +416,43 @@ def read_rollup(
 ) -> DataFrame:
     """The merged rollup as a DataFrame — empty (typed) before the
     first batch commits.  Reads the compacted ``batch=-1`` partition
-    plus every per-batch partial the manifest does NOT list as already
-    folded (see the module docstring for why sums need the manifest
-    where dedup indexes tolerate the duplicate window), then merges by
-    one re-aggregation over rollup-sized rows.  ``key_types`` gives
-    the DDL type per key column for the empty-state frame (default
-    ``string``); once a batch exists the parquet schema wins."""
-    from pyspark.errors import AnalysisException
-
-    _recover_staging(state_dir)
-    root = _root(state_dir)
-    kt = key_types or {}
-    schema = ", ".join(
-        ["bucket timestamp"]
-        + [f"`{k}` {kt.get(k, 'string')}" for k in spec.keys]
-        + ["n_events bigint"]
-        + [
-            s
-            for v in spec.values
-            for s in (
-                f"`sum_{v}` double",
-                f"`min_{v}` double",
-                f"`max_{v}` double",
-                f"`n_{v}` bigint",
-            )
-        ]
-        + [f"`kmv_{d}` array<bigint>" for d in spec.distinct]
+    plus every per-batch partial the compaction manifest does NOT list
+    as already folded (the shared state read,
+    :func:`~smashed_spark.sources.batch_state.read_batches`), then
+    merges by one re-aggregation over rollup-sized rows.
+    ``key_types`` gives the DDL type per key column for the
+    empty-state frame (default ``string``); once a batch exists the
+    parquet schema wins."""
+    df = read_batches(
+        spark, _root(state_dir), _schema(spec, key_types), infer=True
     )
-    try:
-        df = spark.read.parquet(root)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", lambda: None)() or str(e)
-        if (
-            "PATH_NOT_FOUND" in str(cond)
-            or "UNABLE_TO_INFER_SCHEMA" in str(cond)
-        ):
-            return spark.createDataFrame([], schema)
-        raise
-    folded = _read_manifest(root)
-    if folded and "batch" in df.columns:
-        df = df.where(
-            (F.col("batch") == -1) | ~F.col("batch").isin(folded)
-        )
-    names = ["bucket", *spec.keys, *spec.agg_columns]
-    return rollup_merge([df.select(*names)], spec)
+    return rollup_merge([df.drop("batch")], spec)
 
 
 def compact_rollup_state(
     spark: SparkSession,
     state_dir: str,
     spec: RollupSpec = RollupSpec(),
-    partitions: int = 1,
+    partitions: Optional[int] = None,
 ) -> None:
-    """Fold old per-batch partials into one ``batch=-1`` partition.
-    Same staging-swap skeleton as ingest's compaction (write staged
-    merge OUTSIDE the root -> remove old ``batch=-1`` -> rename), with
-    the two additions exactly-once arithmetic needs: the recovery pass
-    for the remove->rename crash window, and the ``_folded.json``
-    manifest written INSIDE the staged directory so the data and the
-    list of batch ids it absorbed publish in the same atomic rename.
-    The newest real batch stays out (it may be an uncommitted attempt
-    that will be retried via overwrite — folding it would leave its
-    rows in ``batch=-1`` AND in the rewritten partition).  Run between
-    batches, never concurrently with a batch write."""
-    import shutil
-
-    _recover_staging(state_dir)
-    root = _root(state_dir)
-    if not os.path.isdir(root):
-        return
-    real = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(root)
-        if d.startswith("batch=") and d != "batch=-1"
+    """Fold old per-batch partials into one ``batch=-1`` partition
+    through the staged-swap protocol every on-disk store shares
+    (:func:`~smashed_spark.sources.batch_state.fold_batches`): the
+    merge is :func:`rollup_merge`, and the ``_folded.json`` manifest
+    published with it keeps a partial from being summed twice in any
+    crash window.  The newest real batch stays out (it may be an
+    uncommitted attempt that will be retried via overwrite).
+    ``partitions=None`` sizes the output at ceil(folded bytes /
+    128 MB) files — one file below that.  Run between batches, never
+    concurrently with a batch write."""
+    fold_batches(
+        spark,
+        _root(state_dir),
+        _schema(spec, None),
+        lambda df: rollup_merge([df.drop("batch")], spec),
+        infer=True,
+        partitions=partitions,
     )
-    folded_before = set(_read_manifest(root))
-    # a partition the manifest already lists is a post-rename crash
-    # leftover: its rows are IN batch=-1, so delete, never re-merge
-    leftovers = [n for n in real if n in folded_before]
-    to_fold = [n for n in real[:-1] if n not in folded_before]
-    for n in leftovers:
-        shutil.rmtree(os.path.join(root, f"batch={n}"), ignore_errors=True)
-    if not to_fold:
-        return
-    frames = [
-        spark.read.parquet(os.path.join(root, f"batch={n}"))
-        for n in to_fold
-    ]
-    if os.path.isdir(os.path.join(root, "batch=-1")):
-        names = ["bucket", *spec.keys, *spec.agg_columns]
-        frames.append(
-            spark.read.parquet(os.path.join(root, "batch=-1")).select(
-                *names
-            )
-        )
-    merged = rollup_merge(frames, spec)
-    staging = os.path.join(state_dir, _STAGING)
-    shutil.rmtree(staging, ignore_errors=True)
-    merged.repartition(partitions).write.mode("overwrite").parquet(staging)
-    # manifest rides INSIDE the staged dir: the leading underscore
-    # keeps parquet readers from touching it, and the rename below
-    # publishes data + manifest as one atomic unit.  Prune ids whose
-    # partitions this run re-confirmed gone, keep the ones being
-    # folded now plus any leftover deletions that could still crash.
-    manifest = sorted(set(to_fold) | set(leftovers))
-    with open(os.path.join(staging, _MANIFEST), "w") as f:
-        json.dump(manifest, f)
-    shutil.rmtree(os.path.join(root, "batch=-1"), ignore_errors=True)
-    os.replace(staging, os.path.join(root, "batch=-1"))
-    for n in to_fold:
-        shutil.rmtree(os.path.join(root, f"batch={n}"), ignore_errors=True)
 
 
 def streaming_rollup(
@@ -590,11 +485,8 @@ def streaming_rollup(
     self-terminates (backfill / test mode); ``False`` runs
     continuously with the default trigger — the streaming/ingest.py
     contract."""
-    if not stream.isStreaming:
-        raise ValueError(
-            "streaming_rollup needs a streaming DataFrame; for batch "
-            "data call rollup_ingest_batch directly"
-        )
+    from ..streaming.runner import start_foreach_batch
+
     if compact_every < 0:
         raise ValueError("compact_every must be >= 0")
 
@@ -606,11 +498,12 @@ def streaming_rollup(
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_rollup_state(batch.sparkSession, state_dir, spec)
 
-    writer = (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(_body)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        stream,
+        _body,
+        checkpoint_dir,
+        query_name,
+        available_now,
+        "streaming_rollup",
+        "for batch data call rollup_ingest_batch directly",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

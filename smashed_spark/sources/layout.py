@@ -22,9 +22,8 @@ three layout levers this module owns:
   target-sized files with ZERO exchanges: Spark's file-source scan
   already bin-packs splits up to ``spark.sql.files.maxPartitionBytes``,
   so setting that conf to the target size makes the *scan* do the
-  bin-packing and the write is narrow.  The swap reuses the
-  staging-``_SUCCESS``-``os.replace`` crash-safety pattern proven in
-  streaming/ingest.py.
+  bin-packing and the write is narrow.  The in-place replacement is
+  the staged swap every on-disk store shares (sources/batch_state.py).
 
 Honest measurement, not vibes: :func:`scan_stats` reads parquet
 footers *distributed* (the file list is a DataFrame; ``mapInPandas``
@@ -56,12 +55,13 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 from contextlib import contextmanager
 from typing import Dict, Mapping, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .batch_state import recover_swap, swap_in
 
 Bound = Union[int, float]
 
@@ -609,43 +609,16 @@ def _swap_staging_path(path: str, suffix: str) -> str:
     return os.path.join(parent, f".{name}.{suffix}")
 
 
-def _recover_swap(path: str, suffix: str) -> bool:
-    """Finish a staged swap that crashed between removing the original
-    directory and renaming staging into place — the ONE crash window
-    the staging-``_SUCCESS``-``os.replace`` protocol has.  Shared by
-    compaction here and the retention rewrites (sources/retention.py)
-    so a protocol fix lands once.  No-op unless the original is
-    MISSING and a COMPLETE (``_SUCCESS``-bearing) staging sibling
-    exists; returns True when a swap was finished."""
-    staging = _swap_staging_path(path, suffix)
-    if (
-        not os.path.exists(path)
-        and os.path.isdir(staging)
-        and os.path.isfile(os.path.join(staging, "_SUCCESS"))
-    ):
-        os.replace(staging, path)
-        return True
-    return False
-
-
-def _swap_in(path: str, suffix: str) -> None:
-    """The commit step of the protocol: staging (which must already
-    hold ``_SUCCESS``) replaces ``path``.  Callers verify staging
-    completeness BEFORE this; the rmtree→replace window is what
-    :func:`_recover_swap` repairs."""
-    staging = _swap_staging_path(path, suffix)
-    shutil.rmtree(path)
-    os.replace(staging, path)
+def recover_compaction_swap(path: str) -> bool:
+    """Finish a compaction swap that crashed mid-commit — safe at
+    every pipeline entry (see
+    :func:`~smashed_spark.sources.batch_state.recover_swap`)."""
+    local = _local_path(path)
+    return recover_swap(local, _staging_path(local))
 
 
 def _staging_path(path: str) -> str:
     return _swap_staging_path(path, COMPACT_STAGING_SUFFIX)
-
-
-def recover_compaction_swap(path: str) -> bool:
-    """Finish a compaction swap that crashed mid-commit — safe at
-    every pipeline entry (see :func:`_recover_swap`)."""
-    return _recover_swap(_local_path(path), COMPACT_STAGING_SUFFIX)
 
 
 def _local_path(path: str, caller: str = "compact_dataset") -> str:
@@ -734,10 +707,11 @@ def compact_dataset(
     previous value, or unset if it was unset — a leaked conf is the
     scale_probe lesson).
 
-    Crash safety: the rewrite lands in a hidden staging sibling; only
-    after Spark's ``_SUCCESS`` marker exists is the original removed
-    and staging renamed in (``os.replace``).  The single crash window
-    (between remove and rename) is repaired by
+    Crash safety: the rewrite lands in a hidden staging sibling and
+    replaces the original through the shared staged swap
+    (:func:`~smashed_spark.sources.batch_state.swap_in`), which
+    refuses a staging write without Spark's ``_SUCCESS`` marker.  The
+    single crash window (between remove and rename) is repaired by
     :func:`recover_compaction_swap`, which also runs at entry here.
 
     Note for Z-ordered inputs: merging files widens their min/max
@@ -761,24 +735,16 @@ def compact_dataset(
         raise ValueError(f"compact_dataset: no parquet files under {path!r}")
     total_bytes = sum(os.path.getsize(f) for f in files_before)
 
-    staging = _staging_path(local)
-    shutil.rmtree(staging, ignore_errors=True)
+    def write(staging: str) -> None:
+        with packed_scan_conf(spark, target_file_bytes):
+            df = spark.read.parquet(local)
+            if sort_within:
+                df = df.sortWithinPartitions(*sort_within)
+            df.write.mode("overwrite").option(
+                "compression", compression
+            ).parquet(staging)
 
-    with packed_scan_conf(spark, target_file_bytes):
-        df = spark.read.parquet(local)
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
-        (
-            df.write.mode("overwrite")
-            .option("compression", compression)
-            .parquet(staging)
-        )
-    if not os.path.isfile(os.path.join(staging, "_SUCCESS")):
-        raise RuntimeError(
-            "compact_dataset: staging write finished without _SUCCESS; "
-            "refusing to swap"
-        )
-    _swap_in(local, COMPACT_STAGING_SUFFIX)
+    swap_in(local, _staging_path(local), write)
     files_after = _parquet_files_under(local)
     return {
         "path": path,

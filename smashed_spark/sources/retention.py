@@ -9,9 +9,8 @@ two deletion shapes a 100 TB corpus operator actually runs —
   the list is list-sized (the corpus side never exchanges), plain
   shuffled anti-join above a bounded threshold probe (the ingest
   auto-probe pattern: the sizing job is a ``limit(cap+1).count()``,
-  never an unbounded count) — then a staging-``_SUCCESS``-
-  ``os.replace`` swap (the crash-safety pattern proven in
-  streaming/ingest.py and sources/layout.py).  Row accounting comes
+  never an unbounded count) — then the staged swap every on-disk store
+  shares (sources/batch_state.py).  Row accounting comes
   from parquet FOOTERS (before/after), not extra count scans.
 * **retention windows** (:func:`drop_partitions_older_than`) —
   "drop data older than N days".  When the dataset is partitioned by
@@ -51,13 +50,8 @@ from typing import Dict, Mapping, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .layout import (
-    _local_path,
-    _parquet_files_under,
-    _recover_swap,
-    _swap_in,
-    _swap_staging_path,
-)
+from .batch_state import recover_swap, swap_in
+from .layout import _local_path, _parquet_files_under, _swap_staging_path
 
 RETENTION_STAGING_SUFFIX = "__retention_staging__"
 
@@ -74,14 +68,13 @@ def _staging_path(path: str) -> str:
 def recover_retention_swap(path: str) -> bool:
     """Finish a deletion swap that crashed between removing the
     original and renaming staging in — the shared staged-swap repair
-    (layout.py ``_recover_swap``), same contract as
-    ``recover_compaction_swap``.  ``path`` may be the dataset root OR
-    a scoped partition directory; :func:`apply_deletions` runs it on
-    the root and on every scoped target at entry."""
-    return _recover_swap(
-        _local_path(path, caller="apply_deletions"),
-        RETENTION_STAGING_SUFFIX,
-    )
+    (:func:`~smashed_spark.sources.batch_state.recover_swap`), same
+    contract as ``recover_compaction_swap``.  ``path`` may be the
+    dataset root OR a scoped partition directory;
+    :func:`apply_deletions` runs it on the root and on every scoped
+    target at entry."""
+    local = _local_path(path, caller="apply_deletions")
+    return recover_swap(local, _staging_path(local))
 
 
 def _footer_row_count(local: str) -> int:
@@ -202,7 +195,7 @@ def apply_deletions(
         # directory missing with a complete staging sibling — repair
         # before the existence check, or the re-run raises forever
         for d in scope_dirs:
-            _recover_swap(d, RETENTION_STAGING_SUFFIX)
+            recover_retention_swap(d)
         missing = [d for d in scope_dirs if not os.path.isdir(d)]
         if missing:
             raise ValueError(
@@ -231,6 +224,9 @@ def apply_deletions(
             else None
         ),
     }
+    # partition columns BELOW the scoped level must be re-written as
+    # directories; when unscoped, all of them
+    inner_parts = part_cols[1:] if scope_dirs is not None else part_cols
     rows_before = 0
     rows_after = 0
     for tdir in targets:
@@ -242,25 +238,16 @@ def apply_deletions(
                 f"{df.columns}"
             )
         survivors = df.join(anti_rhs, on=key_field, how="left_anti")
-        staging = _staging_path(tdir)
-        shutil.rmtree(staging, ignore_errors=True)
-        writer = survivors.write.mode("overwrite").option(
-            "compression", compression
-        )
-        # partition columns BELOW the scoped level must be re-written
-        # as directories; when unscoped, all of them
-        inner_parts = (
-            part_cols[1:] if scope_dirs is not None else part_cols
-        )
-        if inner_parts:
-            writer = writer.partitionBy(*inner_parts)
-        writer.parquet(staging)
-        if not os.path.isfile(os.path.join(staging, "_SUCCESS")):
-            raise RuntimeError(
-                "apply_deletions: staging write finished without "
-                "_SUCCESS; refusing to swap"
+
+        def write(staging: str) -> None:
+            writer = survivors.write.mode("overwrite").option(
+                "compression", compression
             )
-        _swap_in(tdir, RETENTION_STAGING_SUFFIX)
+            if inner_parts:
+                writer = writer.partitionBy(*inner_parts)
+            writer.parquet(staging)
+
+        swap_in(tdir, _staging_path(tdir), write)
         rows_after += _footer_row_count(tdir)
 
     report["rows_before"] = rows_before

@@ -541,12 +541,13 @@ def resolve_snapshot(
 
 
 def _next_version(root: SmartPath, client=None) -> int:
-    """1 + max(published pointer, any manifest on disk) — an orphan
-    manifest from a crashed publish (window 2) must not be reused."""
-    versions = list_snapshots(str(root), client=client)
-    ptr = _pointer_version(root, client=client)
-    ceiling = max([ptr or 0] + versions)
-    return ceiling + 1
+    """1 + the newest manifest on disk — an orphan manifest from a
+    crashed publish (window 2) must not be reused.  Callers take the
+    max with 1 + the head they planned against, from their own
+    pointer read rather than a second GET (a listing that lags still
+    cannot reuse the head's number); a pointer that moved since is
+    caught by :func:`_commit`'s re-read."""
+    return max([0] + list_snapshots(str(root), client=client)) + 1
 
 
 def _commit(
@@ -2051,7 +2052,8 @@ def _commit_plan(
         df, layout = _resolve_layout(
             plan, parent, columns, df, written, transforms
         )
-        version = _next_version(root, client=client)
+        head = 0 if parent is None else parent.version
+        version = max(_next_version(root, client=client), head + 1)
         if written is None:
             written = _write_files(
                 plan, parent, layout, root, version, df, staged,
@@ -4029,7 +4031,9 @@ def restore_snapshot(
         props.pop(k, None)
         if k in current.properties:
             props[k] = current.properties[k]
-    new_version = _next_version(root, client=client)
+    new_version = max(
+        _next_version(root, client=client), current.version + 1
+    )
     # everything comes from the RESOLVED target info (which normalizes
     # spec-1 targets to the spec-2 root-relative convention) — no
     # second manifest GET.  data_prefix was built as str(root / rel)

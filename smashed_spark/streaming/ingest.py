@@ -59,37 +59,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.batch_state import dir_bytes, fold_batches, read_batches
+
 _DIGEST_SCHEMA = "digest string"
 _BAND_SCHEMA = "band int, key string"
 _SEMANTIC_SCHEMA = "cell int, vector array<double>"
-
-
-def _recover_compaction_swap(root: str) -> None:
-    """Finish a compaction that crashed between removing the old
-    ``batch=-1`` partition and renaming its staged replacement into
-    place (r11 hardening — that window, however small the two
-    syscalls make it, is the ONE compaction crash state the original
-    ordering didn't resolve: after the SECOND compaction,
-    ``batch=-1`` is the only copy of batches folded by EARLIER
-    compactions, and the fully-written staging dir holding the merge
-    is invisible to partition discovery).  Recovery is unambiguous:
-    ``batch=-1`` absent + staging COMPLETE (Spark's ``_SUCCESS``
-    marker) can only mean the swap was interrupted, so the rename is
-    completed before any read.  A staging dir alongside a live
-    ``batch=-1`` is a pre-swap crash leftover instead — stale, and
-    overwritten by the next compaction.  Local-filesystem paths only,
-    like compaction itself (the ``os.path`` probes are no-ops on
-    object-store URLs)."""
-    name = os.path.basename(root.rstrip("/"))
-    staging = os.path.join(
-        os.path.dirname(root.rstrip("/")), f"__compact_{name}__"
-    )
-    if (
-        not os.path.isdir(os.path.join(root, "batch=-1"))
-        and os.path.isdir(staging)
-        and os.path.isfile(os.path.join(staging, "_SUCCESS"))
-    ):
-        os.replace(staging, os.path.join(root, "batch=-1"))
 
 
 def _read_state(
@@ -97,16 +71,17 @@ def _read_state(
     path: str,
     schema: str,
     exclude_batch: "int | None" = None,
-    full_distinct: bool = False,
     no_distinct: bool = False,
 ) -> DataFrame:
     """The running index as a DataFrame — empty (typed) before the
-    first batch commits.  ``exclude_batch`` drops the ``batch=N``
-    partition from the read (the directory names become a ``batch``
-    partition column under Spark's partition discovery): a RETRIED
-    micro-batch must not see its own prior attempt's index
-    contributions, or every one of its docs would look like history
-    and the re-run would emit zero survivors.
+    first batch commits; the shared state read
+    (:func:`~smashed_spark.sources.batch_state.read_batches`) finishes
+    an interrupted compaction swap and drops the partitions the
+    compaction manifest lists as folded.  ``exclude_batch`` drops the
+    ``batch=N`` partition from the read: a RETRIED micro-batch must
+    not see its own prior attempt's index contributions, or every one
+    of its docs would look like history and the re-run would emit zero
+    survivors.
 
     Deduplication is scoped to where duplicates can actually exist —
     the per-batch read must NOT shuffle the whole history index.  The
@@ -114,56 +89,28 @@ def _read_state(
     (compaction writes it from a full distinct), so it is unioned
     AS-IS, with a ``.distinct()`` over only the un-compacted tail
     partitions: O(tail) aggregation work per micro-batch instead of an
-    O(history-index) exchange forever.  A crashed compaction can leave
-    rows duplicated ACROSS ``batch=-1`` and a leftover tail partition;
-    those cross-partition duplicates are harmless downstream — the
-    exact path is a LEFT ANTI join (duplicate-indifferent) and the
-    fuzzy indicator is duplicate-tolerant
-    (:func:`~smashed_spark.functions.dedup.dedup_incremental_fuzzy`
-    aggregates hits per band slot) — and the next compaction clears
-    them: ``full_distinct=True`` (compaction's read) keeps the global
-    distinct, which is correct there because its output IS the next
-    duplicate-free ``batch=-1``.
-
-    Only a genuinely-absent/empty index path maps to the empty frame;
-    any OTHER read failure (auth, listing timeout, corrupt footer)
-    propagates — silently treating a broken index as "no history"
-    would wave every duplicate through."""
-    from pyspark.errors import AnalysisException
-
-    _recover_compaction_swap(path)
-    try:
-        # r17: explicit read schema — the index schemas are module
-        # constants and every writer in this module lands rows under a
-        # ``batch=N`` partition dir (``cell=M`` additionally for the
-        # semantic index, whose partition column rides the declared
-        # schema), so footer-based schema inference is ~100 ms of
-        # driver time per read for information already known.  Missing
-        # paths still raise PATH_NOT_FOUND at listing (the empty-frame
-        # mapping below is unchanged).
-        df = spark.read.schema(schema + ", batch int").parquet(path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", lambda: None)() or str(e)
-        if (
-            "PATH_NOT_FOUND" in str(cond)
-            or "UNABLE_TO_INFER_SCHEMA" in str(cond)
-        ):
-            return spark.createDataFrame([], schema)
-        raise
-    if exclude_batch is not None and "batch" in df.columns:
+    O(history-index) exchange forever.  Rows duplicated ACROSS
+    ``batch=-1`` and a tail partition (a state whose compaction
+    crashed before the manifest existed) stay harmless: the exact
+    path is a LEFT ANTI join and the fuzzy indicator is
+    duplicate-tolerant.  ``no_distinct`` skips even the tail distinct,
+    for an index whose consumers are duplicate-tolerant at every tier
+    (the semantic index: max cosine is idempotent)."""
+    # explicit read schema: every writer in this module lands rows
+    # under a ``batch=N`` partition dir (``cell=M`` additionally for
+    # the semantic index, whose partition column rides the declared
+    # schema), so footer inference would be ~100 ms of driver time per
+    # read for information already known
+    df = read_batches(spark, path, schema)
+    if "batch" not in df.columns:
+        # the empty state: a distinct over it would still cost a job
+        return df
+    if exclude_batch is not None:
         df = df.filter(F.col("batch") != F.lit(exclude_batch))
-    names = [c.strip().split()[0] for c in schema.split(",")]
     if no_distinct:
-        # for indexes whose consumers are duplicate-tolerant at every
-        # tier (the semantic index: max cosine is idempotent) — even
-        # the tail distinct is unnecessary work
-        return df.select(*names)
-    if full_distinct or "batch" not in df.columns:
-        return df.select(*names).distinct()
-    compacted = df.filter(F.col("batch") == -1).select(*names)
-    tail = (
-        df.filter(F.col("batch") != -1).select(*names).distinct()
-    )
+        return df.drop("batch")
+    compacted = df.filter(F.col("batch") == -1).drop("batch")
+    tail = df.filter(F.col("batch") != -1).drop("batch").distinct()
     return compacted.unionByName(tail)
 
 
@@ -271,7 +218,7 @@ def ingest_dedup_batch(
             # join against an empty frame is free) — but an unlistable
             # REMOTE path must not be mistaken for empty
             return "://" not in state_dir
-        return _dir_bytes(root) <= _PLAIN_INDEX_MAX_BYTES
+        return dir_bytes(root) <= _PLAIN_INDEX_MAX_BYTES
     small_exact = _small_index("digests")
     small_fuzzy = _small_index("bands")
     # ONE bounded sizing job on the RAW batch resolves probe-vs-plain
@@ -443,26 +390,6 @@ def ingest_dedup_batch(
     return stats
 
 
-def _dir_bytes(*roots: str) -> int:
-    """Total size of the regular files under the given directories —
-    the driver-side sizing probe behind the compaction's adaptive
-    output width.  Local-filesystem listing like compaction itself."""
-    total = 0
-    for root in roots:
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, name))
-                except OSError:
-                    pass
-    return total
-
-
-# target on-disk bytes per compacted index file: the playbook's
-# 128 MB - 1 GB healthy-output-file band, low end because index rows
-# compress poorly (high-entropy digests)
-_COMPACT_TARGET_BYTES = 128 * 1024 * 1024
-
 # index size (on-disk bytes) below which the per-batch dedup joins run
 # in PLAIN mode instead of broadcast-probe mode: well under Spark's
 # 10 MB autoBroadcastJoinThreshold (digest/band parquet compresses
@@ -484,36 +411,20 @@ def compact_ingest_state(
     ingestion loop needs (thousands of micro-batches otherwise leave
     thousands of KB-sized parquet files per index).
 
-    Crash-safe by construction — write-to-sibling-then-swap (r9; the
-    earlier design localCheckpointed the full merged index to avoid
-    overwriting its own input, a ~180 GB block-manager materialization
-    at the 10^9-doc design point that a staging directory makes
-    unnecessary).  The ordering plus the r11 recovery pass carry the
-    safety; every crash window leaves a usable index:
-
-    1. the merged, distinct index is written to a SIBLING staging dir
-       (outside the index root, so partition discovery never sees it;
-       a stale one from a prior crash is removed first) — a crash
-       here leaves only that harmless staging dir;
-    2. the old ``batch=-1`` is removed — a crash in the tiny window
-       before step 3's rename is the one state the ordering alone
-       does NOT resolve: from the second compaction on, ``batch=-1``
-       is the only copy of batches folded by EARLIER compactions, so
-       "re-derive from the surviving partitions" cannot reconstruct
-       it.  The COMPLETE staging dir can: ``_recover_compaction_swap``
-       (called on every state read and at compaction entry) finishes
-       the rename whenever ``batch=-1`` is absent and staging carries
-       Spark's ``_SUCCESS`` marker — an unambiguous signature of this
-       window (r11; the original r9 analysis claimed the surviving
-       partitions sufficed, which is only true for the FIRST
-       compaction);
-    3. the staging dir is renamed to ``batch=-1`` — a crash here
-       leaves rows duplicated across ``batch=-1`` and the folded
-       partitions, which the dedup operators tolerate by design and
-       the next compaction clears (rollup state, whose sums would
-       double-count, adds a manifest for this window instead —
-       functions/rollup.py);
-    4. the folded per-batch partitions are removed.
+    Each index folds through the staged-swap state protocol every
+    on-disk store shares
+    (:func:`~smashed_spark.sources.batch_state.fold_batches`; its
+    module docstring walks the crash windows): the merged, distinct
+    index is written to a sibling staging dir ``__compact_<index>__``
+    together with a ``_folded.json`` manifest of the batch ids it
+    absorbs, swapped in only if the write left ``_SUCCESS``, and the
+    folded partitions are removed after.  Reads drop the partitions
+    the manifest lists, so every crash window reads each index row
+    once; an interrupted swap is finished by the next read or
+    compaction.  The distinct here is the one place a global distinct
+    is right: its output is the next duplicate-free ``batch=-1``.
+    ``partitions=None`` sizes the output at ceil(folded bytes /
+    128 MB) files (at least one).
 
     ``batch=-1`` is never a real micro-batch id, so the
     retried-batch exclusion (``exclude_batch``) keeps working after
@@ -533,91 +444,25 @@ def compact_ingest_state(
     takeover path): the replay-exclusion reason to keep it applies
     only while its checkpoint can still redeliver that id, and a NEW
     checkpoint restarting ids at 0 instead needs the old partitions
-    gone so its numbering cannot collide with theirs.
-
-    Directory listing/rename/removal uses local-filesystem paths (the
-    sandbox's storage); on object storage swap the ``os``/``shutil``
-    calls for the Hadoop FileSystem API or your store's SDK — the
-    stage/remove/rename/remove ORDERING is what carries the safety,
-    not the API.  (Object-store "rename" is a copy+delete; the crash
-    windows above still all resolve.)
+    gone so its numbering cannot collide with theirs.  The manifest is
+    emptied once the folded partitions are removed, so the new
+    checkpoint's reused ids are read and folded like any other.
     """
-    import shutil
-
-    tables = [("digests", _DIGEST_SCHEMA)]
+    tables = [("digests", _DIGEST_SCHEMA), ("semantic", _SEMANTIC_SCHEMA)]
     if fuzzy:
         tables.append(("bands", _BAND_SCHEMA))
-    if os.path.isdir(os.path.join(state_dir, "semantic")):
-        tables.append(("semantic", _SEMANTIC_SCHEMA))
     for name, schema in tables:
-        root = os.path.join(state_dir, name)
-        # finish a swap a prior compaction crashed in the middle of
-        # BEFORE listing: the staged merge may be the only copy of
-        # earlier-folded rows
-        _recover_compaction_swap(root)
-        real = sorted(
-            (
-                int(d.split("=", 1)[1])
-                for d in os.listdir(root)
-                if d.startswith("batch=") and d != "batch=-1"
-            )
-        ) if os.path.isdir(root) else []
-        # the newest batch stays out of the compaction: it may be an
-        # uncommitted attempt, and its rows must remain excludable by
-        # batch id for the replay to recompute the same verdicts —
-        # unless the caller asserts its checkpoint is dead
-        old = real if include_latest else real[:-1]
-        if not old:
-            continue
-        keep_latest = None if include_latest else real[-1]
-        # the ONE place a global distinct is right: this read's output
-        # becomes the next duplicate-free batch=-1, so it must also
-        # clear cross-partition duplicates a prior crashed compaction
-        # left behind
-        merged = _read_state(
-            spark, root, schema, exclude_batch=keep_latest,
-            full_distinct=True,
-        )
-        # (1) stage OUTSIDE the index root: the write never touches
-        # its own input, so no checkpoint/materialization is needed,
-        # and partition discovery on the root never sees the staging
-        # dir.  A stale staging dir from a prior crash is overwritten.
-        staging = os.path.join(state_dir, f"__compact_{name}__")
-        # r16 adaptive output width (partitions=None, the default):
-        # size the compacted partition from the bytes actually being
-        # folded — ceil(folded bytes / 128 MB target) — instead of a
-        # constant.  The old fixed 32 wrote 32 KB-sized files from a
-        # test-scale fold (per-file open cost on every subsequent
-        # index read) AND would under-partition a 100 TB-design-point
-        # index (~180 GB of band keys -> 5.6 GB files).  The byte
-        # census walks the per-batch dirs being folded plus the old
-        # batch=-1 — the merged output is never larger than its
-        # inputs, so this never under-sizes below one target file.
-        n_parts = partitions
-        if n_parts is None:
-            folded_bytes = _dir_bytes(
-                os.path.join(root, "batch=-1"),
-                *(os.path.join(root, f"batch={n}") for n in old),
-            )
-            n_parts = max(
-                1, -(-folded_bytes // _COMPACT_TARGET_BYTES)
-            )
-        writer = merged.repartition(n_parts).write.mode("overwrite")
-        if name == "semantic":
-            # keep the cell partitioning through compaction — it is
+        fold_batches(
+            spark,
+            os.path.join(state_dir, name),
+            schema,
+            lambda df: df.drop("batch").distinct(),
+            include_latest=include_latest,
+            partitions=partitions,
+            # the semantic index keeps its cell partitioning: it is
             # what makes per-batch touched-cell reads prune
-            writer = writer.partitionBy("cell")
-        writer.parquet(staging)
-        # (2) + (3): swap the derived partition into place
-        shutil.rmtree(
-            os.path.join(root, "batch=-1"), ignore_errors=True
+            partition_by="cell" if name == "semantic" else None,
         )
-        os.replace(staging, os.path.join(root, "batch=-1"))
-        # (4) remove the folded sources
-        for n in old:
-            shutil.rmtree(
-                os.path.join(root, f"batch={n}"), ignore_errors=True
-            )
 
 
 def streaming_ingest_dedup(

@@ -1,10 +1,6 @@
 """Multimodal binary plumbing + structured streaming."""
 
 import pytest
-
-# r17: slow integration tier — deselected by the default (fast) run;
-# full tier: python -m pytest tests/ -q -m ''
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from smashed_spark.operators.multimodal import (
@@ -801,16 +797,20 @@ def test_read_state_tail_only_distinct_plan(spark, tmp_path):
     # semantics unchanged: all three digests, no duplicates
     assert sorted(r.digest for r in df.collect()) == ["d0", "d1", "d2"]
 
-    # compaction's read (full_distinct=True) keeps the global distinct:
-    # its output becomes the next duplicate-free batch=-1
-    full = _read_state(
-        spark, root, _DIGEST_SCHEMA, exclude_batch=9, full_distinct=True
+    # compaction's merge keeps the global distinct: its output is the
+    # next duplicate-free batch=-1, so a row in both batch=-1 and a
+    # folded tail partition is written once
+    from smashed_spark.streaming.ingest import compact_ingest_state
+
+    spark.createDataFrame([("d0",)], "digest: string").write.mode(
+        "append"
+    ).parquet(os.path.join(root, "batch=7"))
+    spark.createDataFrame([("d3",)], "digest: string").write.parquet(
+        os.path.join(root, "batch=8")
     )
-    fplan = full._sc._jvm.PythonSQLUtils.explainString(
-        full._jdf.queryExecution(), "formatted"
-    ).split("===== Subqueries")[0]
-    # one relation, distinct over ALL of it: aggregate, no Union split
-    assert "HashAggregate (" in fplan and "Union" not in fplan, fplan
+    compact_ingest_state(spark, str(tmp_path), fuzzy=False)
+    folded = spark.read.parquet(os.path.join(root, "batch=-1")).collect()
+    assert sorted(r.digest for r in folded) == ["d0", "d1", "d2"]
 
 
 def test_fuzzy_index_duplicate_rows_are_tolerated(spark):
@@ -1398,9 +1398,12 @@ def test_compaction_swap_recovery_restores_earlier_folds(spark, tmp_path):
         os.path.join(state, "__compact_digests__", "part-torn.parquet"), "w"
     ) as f:
         f.write("torn write")
-    from smashed_spark.streaming.ingest import _recover_compaction_swap
+    from smashed_spark.sources.batch_state import recover_swap
 
-    _recover_compaction_swap(os.path.join(state, "digests"))
+    assert not recover_swap(
+        os.path.join(state, "digests", "batch=-1"),
+        os.path.join(state, "__compact_digests__"),
+    )
     assert not os.path.isdir(os.path.join(state, "digests", "batch=-1"))
     shutil.rmtree(os.path.join(state, "__compact_digests__"))
     shutil.move(

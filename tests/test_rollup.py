@@ -280,7 +280,9 @@ def test_incremental_roundtrip(spark, tmp_path):
     assert_matches()
 
 
-def test_compaction_crash_windows(spark, tmp_path):
+def test_compaction_crash_windows(spark, tmp_path, monkeypatch):
+    import os
+
     state = str(tmp_path / "state")
     rows = _rows()
     for i, b in enumerate([rows[0:100], rows[100:160], rows[160:200]]):
@@ -291,27 +293,41 @@ def test_compaction_crash_windows(spark, tmp_path):
         rollup_events(spark.createDataFrame(rows, SCHEMA), SPEC, "hour")
     )
     root = tmp_path / "state" / "rollup"
-    # preserve a to-be-folded partition so we can resurrect it
-    saved = tmp_path / "saved_batch0"
-    shutil.copytree(root / "batch=0", saved)
-    compact_rollup_state(spark, state, SPEC)
+
+    class _Crash(Exception):
+        pass
+
+    real_rmtree = shutil.rmtree
+
+    def crash_before_removing_folded(path, *args, **kwargs):
+        if os.path.basename(str(path)) == "batch=0":
+            raise _Crash
+        return real_rmtree(path, *args, **kwargs)
+
+    # the compaction dies right after its swap, before it removes the
+    # partitions it folded (0 and 1)
+    monkeypatch.setattr(shutil, "rmtree", crash_before_removing_folded)
+    with pytest.raises(_Crash):
+        compact_rollup_state(spark, state, SPEC)
+    monkeypatch.undo()
 
     def totals():
         got = _collect(read_rollup(spark, state, SPEC))
         return sum(v[0] for v in got.values()), got
 
     n_full = sum(v[0] for v in full.values())
-    # CRASH WINDOW A (rename done, folded partition not yet deleted):
-    # batch=0's rows are in batch=-1 AND in the resurrected partition
+    # CRASH WINDOW A (rename done, folded partitions not yet deleted):
+    # batch 0's and 1's rows are in batch=-1 AND in their partitions
     # — without the manifest this double-counts; with it, reads drop
-    # the listed partition
-    shutil.copytree(saved, root / "batch=0")
+    # the listed partitions
+    assert (root / "batch=-1").is_dir() and (root / "batch=0").is_dir()
     n, got = totals()
     assert n == n_full
     assert got == {k: full[k] for k in full} or set(got) == set(full)
-    # the next compaction deletes the leftover without re-merging
+    # the next compaction deletes the leftovers without re-merging
     compact_rollup_state(spark, state, SPEC)
     assert not (root / "batch=0").exists()
+    assert not (root / "batch=1").exists()
     assert totals()[0] == n_full
     # CRASH WINDOW B (old batch=-1 removed, staged dir not yet
     # renamed): simulate by moving batch=-1 back to the staging name;

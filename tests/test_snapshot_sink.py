@@ -245,7 +245,10 @@ def test_one_head_manifest_read_per_micro_batch(
     spark, tmp_path, monkeypatch, tier
 ):
     """The gate reads the watermark off the parent the commit resolves
-    anyway: a committed micro-batch reads the head manifest once."""
+    anyway: a committed micro-batch reads the head manifest once.  The
+    version is allocated from the head phase 1 read, so the pointer is
+    read once fewer than the writer probe + phase 1 + the commit's
+    re-read + the version allocation."""
     root = str(tmp_path / "table")
     snap.publish_snapshot(_df(spark, 0, 10), root)
     deliver = _delivery(tier, root, [])
@@ -263,6 +266,8 @@ def test_one_head_manifest_read_per_micro_batch(
     monkeypatch.undo()
     assert resolve_snapshot(root).version == 3
     assert sum(p.endswith(head) for p in reads) == 1
+    pointer_reads = sum(p.endswith(snap.POINTER_NAME) for p in reads)
+    assert pointer_reads == {"foreach_batch": 3, "registered_sink": 2}[tier]
 
 
 # ---------------------------------------------------------------------------
@@ -430,6 +435,50 @@ def test_dedup_writer_takeover_requires_compacted_state(spark, tmp_path):
     assert stream_commit_watermark(table) == ("new-ckpt", 0)
     got = {r.doc_id for r in read_snapshot(spark, table).collect()}
     assert 50 in got and 51 not in got  # compacted history still drops
+
+
+def test_takeover_reuses_folded_batch_ids(spark, tmp_path):
+    """After a fold with include_latest=True the new checkpoint's ids
+    restart at 0, reusing ids the fold absorbed.  The emptied manifest
+    keeps them visible: batch 1 drops a repost of new batch 0, and the
+    next compaction folds new batch 0 instead of deleting it as a
+    leftover."""
+    from smashed_spark.streaming.ingest import (
+        _DIGEST_SCHEMA,
+        _read_state,
+        compact_ingest_state,
+    )
+    from smashed_spark.streaming.snapshot_sink import (
+        dedup_snapshot_batch_writer,
+    )
+
+    table = str(tmp_path / "table")
+    state = str(tmp_path / "state")
+    old = dedup_snapshot_batch_writer(table, state, app_id="dead-ckpt")
+    old(_day(spark, [(0, _BASE)]), 0)
+    old(_day(spark, [(1, _FRESH)]), 1)
+    compact_ingest_state(spark, state, include_latest=True)
+
+    new = dedup_snapshot_batch_writer(
+        table, state, app_id="new-ckpt", takeover=True
+    )
+    new_text = " ".join(f"n{i}" for i in range(25))
+    new(_day(spark, [(50, new_text)]), 0)
+    new(_day(spark, [(51, new_text), (52, "cc dd")]), 1)  # 51 = repost
+    got = {r.doc_id for r in read_snapshot(spark, table).collect()}
+    assert got == {0, 1, 50, 52}
+
+    digests = os.path.join(state, "digests")
+    new_batch0 = {
+        r.digest
+        for r in spark.read.parquet(
+            os.path.join(digests, "batch=0")
+        ).collect()
+    }
+    compact_ingest_state(spark, state)
+    assert sorted(os.listdir(digests)) == ["batch=-1", "batch=1"]
+    index = _read_state(spark, digests, _DIGEST_SCHEMA).collect()
+    assert new_batch0 <= {r.digest for r in index}
 
 
 # ---------------------------------------------------------------------------
