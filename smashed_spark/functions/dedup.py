@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.mapper import SparkMapper
+from ..core.sizing import fits
 from .hashing import (
     band_keys,
     cosine_similarity,
@@ -1017,21 +1018,10 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
     # frames only — never file-backed production inputs)
     BROADCAST_LIMIT_ROWS = 200_000
 
-    def _fits_broadcast(self, df: DataFrame) -> bool:
-        from .similarity import plan_size_bytes
-
-        size = plan_size_bytes(df)
-        if size is not None:
-            return size <= self.BROADCAST_LIMIT_BYTES
-        # bounded probe: limit pushes into the scan, reading at most
-        # LIMIT+1 rows regardless of frame size (vs a full-scan count)
-        cap = self.BROADCAST_LIMIT_ROWS
-        return df.limit(cap + 1).count() <= cap
-
     def apply(self, df: DataFrame) -> DataFrame:
         strategy = self.strategy
         if strategy is None:
-            if self._fits_broadcast(df):
+            if fits(df, self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES):
                 strategy = "broadcast"
             elif self.exact:
                 strategy = "pairwise"
@@ -1708,43 +1698,13 @@ def normalize_for_dedup(col: Column) -> Column:
     return F.trim(x)
 
 
-def _resolve_probe_mode(
-    batch: DataFrame,
-    broadcast_probe: "bool | str",
-    max_probe_rows: int,
-    rows_per_doc: int = 1,
-) -> bool:
-    """``"auto"`` -> probe mode iff the batch is small enough that its
-    broadcast key set stays bounded (``max_probe_rows`` keys, counting
-    ``rows_per_doc`` keys per batch row).  The decision reads at most
-    ``cap + 1`` batch rows — ``limit`` pushes into the batch's plan,
-    so the sizing job is O(cap) however large the batch, the same
-    bounded-probe idiom as SemanticDecontaminateMapper.  Row count
-    upper-bounds the DISTINCT key count, so the check never
-    under-estimates the broadcast.
-    """
-    if isinstance(broadcast_probe, str) and broadcast_probe != "auto":
-        # a typo'd "Auto"/"false"/"none" must not silently coerce
-        # truthy — that forces the unbounded broadcast the auto tier
-        # exists to prevent
-        raise ValueError(
-            f"broadcast_probe must be True, False, or 'auto'; got "
-            f"{broadcast_probe!r}"
-        )
-    if broadcast_probe != "auto":
-        return bool(broadcast_probe)
-    cap = max(1, max_probe_rows // max(1, rows_per_doc))
-    return batch.limit(cap + 1).count() <= cap
-
-
 def dedup_incremental(
     new_df: DataFrame,
     seen_digests: DataFrame,
     text_field: str = "text",
     order_by: str = "doc_id",
     digest_field: str = "digest",
-    broadcast_probe: "bool | str" = False,
-    max_probe_rows: int = 2_000_000,
+    broadcast_probe: bool = False,
     bloom=None,
 ) -> DataFrame:
     """Append-only ingestion dedup: drop rows of ``new_df`` whose text
@@ -1759,26 +1719,26 @@ def dedup_incremental(
     is ~32 bytes/doc while the corpus is ~100 KB/doc.
 
     ``broadcast_probe=True`` is the bounded-batch-vs-unbounded-history
-    shape (the streaming-ingest default): a shuffled anti-join would
-    EXCHANGE the full index every batch (~32 GB at 10^9 docs, forever),
-    because an anti-join can only broadcast its right side and the
-    index outgrows that early.  Instead the batch's distinct digests
-    (bounded by the trigger) are broadcast INTO an inner probe of the
-    index — the index crosses the plan as a SCAN ONLY, zero exchange,
-    zero sort — and the batch anti-joins against the (batch-sized) hit
-    set, also broadcast.  Same verdicts, duplicate-indifferent on both
-    sides; costs one extra evaluation of the batch's digest projection
-    (micro-batches are bounded; the history side is what must not pay
-    per-batch costs).  Pinned by the ingest plan-spy test.
+    shape (what the streaming ingest picks for a big index): a shuffled
+    anti-join would EXCHANGE the full index every batch (~32 GB at 10^9
+    docs, forever), because an anti-join can only broadcast its right
+    side and the index outgrows that early.  Instead the batch's
+    distinct digests (bounded by the trigger) are broadcast INTO an
+    inner probe of the index — the index crosses the plan as a SCAN
+    ONLY, zero exchange, zero sort — and the batch anti-joins against
+    the (batch-sized) hit set, also broadcast.  Same verdicts,
+    duplicate-indifferent on both sides; costs one extra evaluation of
+    the batch's digest projection (micro-batches are bounded; the
+    history side is what must not pay per-batch costs).  Pinned by the
+    ingest plan-spy test.
 
-    ``broadcast_probe="auto"`` (the ingest default): probe mode while
-    the batch stays under ``max_probe_rows`` rows (row count
-    upper-bounds the distinct digest set; sized by a bounded
-    ``limit(cap+1).count()`` job that reads O(cap) rows however large
-    the batch), plain anti-join above it — an unbounded backfill
-    "batch" must not be broadcast into executor memory, and for that
-    regime the plain join's batch+index exchange is the correct
-    price.
+    ``broadcast_probe`` is ``True`` or ``False`` (anything else
+    raises, so a typo'd string cannot coerce truthy).  The caller
+    picks: the streaming ingest routes by the index's size and one
+    bounded batch count (``streaming/ingest.py``), because an
+    unbounded backfill "batch" must not be broadcast into executor
+    memory — for that regime the plain join's batch+index exchange is
+    the correct price.
 
     ``bloom=`` (a :class:`~smashed_spark.functions.bloom.
     BloomFilterSketch` fit over the INDEX's digest column) removes
@@ -1808,6 +1768,12 @@ def dedup_incremental(
     tiebreak over all (non-map) columns, so first-wins is a pure
     function of the data either way.
     """
+    if broadcast_probe not in (True, False):
+        # a typo'd "auto"/"false"/"none" must not silently coerce
+        # truthy and force an unbounded broadcast
+        raise ValueError(
+            f"broadcast_probe must be True or False; got {broadcast_probe!r}"
+        )
     digest = F.md5(F.col(text_field))
     keyed = new_df.withColumn(digest_field, digest)
     # no .distinct() on the index side: LEFT ANTI is semantically
@@ -1815,7 +1781,7 @@ def dedup_incremental(
     # point a distinct here is a ~32 GB full-index exchange per batch
     # for nothing (the streaming-ingest path reads this index every
     # micro-batch)
-    if _resolve_probe_mode(new_df, broadcast_probe, max_probe_rows):
+    if broadcast_probe:
         probe = keyed.select(digest_field).distinct()
         if bloom is not None:
             # probe-mode bloom: filter the SLIM distinct-digest probe
@@ -1996,8 +1962,7 @@ def dedup_incremental_fuzzy(
     rows_per_band: int = 4,
     hash_fn: str = "md5",
     verify_threshold: Optional[float] = None,
-    broadcast_probe: "bool | str" = False,
-    max_probe_rows: int = 2_000_000,
+    broadcast_probe: bool = False,
 ) -> DataFrame:
     """Append-only ingestion NEAR-dedup: drop rows of ``new_df`` whose
     MinHash band keys collide with the running ``seen_bands`` index
@@ -2061,26 +2026,32 @@ def dedup_incremental_fuzzy(
     sample_mix gate chain.)  Nothing touches the historical corpus.
 
     ``broadcast_probe=True`` is the bounded-batch-vs-unbounded-history
-    shape (the streaming-ingest default): once the band index outgrows
-    the auto-broadcast limit, the indicator LEFT join would EXCHANGE
-    the full index every batch (~144 GB of band keys at 10^9 docs,
-    forever).  Instead the batch's distinct ``(band, key)`` set
-    (bounded by the trigger) is broadcast INTO an inner probe of the
-    index — the index crosses the plan as a SCAN ONLY — and the
-    indicator joins against the (batch-sized, distinct) hit-key set,
-    also broadcast, which keeps the indicator join itself a broadcast
-    join on the batch side.  Same verdicts; costs one extra evaluation
-    of the slim band projection (three upstream evaluations total).
-    ``"auto"`` (the ingest default) picks probe mode while the batch
-    stays under ``max_probe_rows / bands`` rows (each doc contributes
-    ``bands`` probe keys; sized by a bounded ``limit().count()`` job)
-    and falls back to the plain indicator join above it — an
-    unbounded backfill batch must not be broadcast.
+    shape (what the streaming ingest picks for a big index): once the
+    band index outgrows the auto-broadcast limit, the indicator LEFT
+    join would EXCHANGE the full index every batch (~144 GB of band keys
+    at 10^9 docs, forever).  Instead the batch's distinct
+    ``(band, key)`` set (bounded by the trigger) is broadcast INTO an
+    inner probe of the index — the index crosses the plan as a SCAN
+    ONLY — and the indicator joins against the (batch-sized, distinct)
+    hit-key set, also broadcast, which keeps the indicator join itself
+    a broadcast join on the batch side.  Same verdicts; costs one extra
+    evaluation of the slim band projection (three upstream evaluations
+    total).
+
+    ``broadcast_probe`` takes only ``True`` or ``False``; the streaming
+    ingest routes it (each doc contributes ``bands`` probe keys, so an
+    unbounded backfill batch runs the plain indicator join instead).
 
     Survivors keep their ``signature_field`` column so
     ``with_minhash_bands(survivors)`` extends the index without
     re-shingling.
     """
+    if broadcast_probe not in (True, False):
+        # a typo'd "auto"/"false"/"none" must not silently coerce
+        # truthy and force an unbounded broadcast
+        raise ValueError(
+            f"broadcast_probe must be True or False; got {broadcast_probe!r}"
+        )
     if signature_field not in new_df.columns:
         keyed = MinHashMapper(
             words_field,
@@ -2140,9 +2111,7 @@ def dedup_incremental_fuzzy(
     # (a dup fans the left join out, but __dochit__ (max), __min__
     # (min) and __later__ (max of a per-row predicate) are idempotent
     # under row duplication, and __nb__ was counted before the join).
-    if _resolve_probe_mode(
-        new_df, broadcast_probe, max_probe_rows, rows_per_doc=bands
-    ):
+    if broadcast_probe:
         probe = doc_bands.select("band", "key").distinct()
         index = F.broadcast(
             seen_bands.select("band", "key")

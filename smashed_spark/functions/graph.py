@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.mapper import SparkMapper
+from ..core.sizing import fits
 
 
 def connected_components(
@@ -102,12 +103,10 @@ def connected_components(
     bidir = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     bidir = bidir.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
 
-    if small_graph_edges > 0:
-        # bounded probe on the checkpointed blocks: limit() reads at
-        # most small_graph_edges+1 rows, no full count of a huge list
-        n_rows = bidir.limit(small_graph_edges + 1).count()
-        if n_rows <= small_graph_edges:
-            return _components_driver_side(sess, bidir)
+    # bounded probe on the checkpointed blocks: reads at most
+    # small_graph_edges+1 rows, no full count of a huge list
+    if small_graph_edges > 0 and fits(bidir, small_graph_edges):
+        return _components_driver_side(sess, bidir)
 
     labels = (
         bidir.select(F.col("u").alias("node"))

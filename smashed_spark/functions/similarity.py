@@ -26,27 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..core.mapper import SparkMapper
+from ..core.sizing import fits
 from .hashing import cosine_similarity, vector_norm
-
-
-_UNKNOWN_SIZE = (1 << 63) - 1  # Catalyst's defaultSizeInBytes sentinel
-
-
-def plan_size_bytes(df: DataFrame) -> Optional[int]:
-    """Catalyst's size estimate for a DataFrame (optimized-plan stats,
-    e.g. parquet file bytes for a scan) — available at plan time, so
-    strategy selection triggers **no Spark job**, unlike ``df.count()``
-    (a full scan at 100 TB).  Returns ``None`` when the estimate is
-    unknown: either the exact Long.MaxValue sentinel (RDD-backed /
-    ``createDataFrame`` leaves) or anything within two orders of
-    magnitude of it — operators above an unknown leaf multiply the
-    sentinel by selectivity/column ratios, producing huge
-    derived-from-sentinel values that are still not real estimates.
-    File-backed sources always report a real (and sane) size."""
-    size = int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    return None if size >= _UNKNOWN_SIZE // 100 else size
 
 
 class CosineTopK(SparkMapper):
@@ -95,20 +76,10 @@ class CosineTopK(SparkMapper):
     # RDD-backed frames only — never file-backed production inputs)
     BROADCAST_LIMIT_ROWS = 200_000
 
-    def _fits_broadcast(self, df: DataFrame) -> bool:
-        size = plan_size_bytes(df)
-        if size is not None:
-            return size <= self.BROADCAST_LIMIT_BYTES
-        # unknown estimate: BOUNDED row probe — limit pushes into the
-        # scan, so at most LIMIT+1 rows are read however large the
-        # frame is (a bare count() here would be a full scan)
-        cap = self.BROADCAST_LIMIT_ROWS
-        return df.limit(cap + 1).count() <= cap
-
     def apply(self, df: DataFrame) -> DataFrame:
         strategy = self.strategy
         if strategy is None:
-            if self._fits_broadcast(df):
+            if fits(df, self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES):
                 strategy = "broadcast"
             elif self.force_exact:
                 strategy = "exact_join"

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.mapper import SparkMapper
+from ..core.sizing import fits
 
 # Minimal high-frequency stopword markers per language.  An n-gram /
 # stopword-count heuristic (the classic "stopword profiling" approach
@@ -455,7 +456,7 @@ class DecontaminateMapper(SparkMapper):
     always report one) and switches to ``strategy="join"`` — a plain
     shuffled equi-join on the shingle key, linear in both sides.  An
     UNKNOWN estimate (local frames; sentinel-derived values) triggers
-    one bounded ``limit(cap+1).count()`` probe job per ``apply``.
+    one bounded row count (core/sizing.py) per ``apply``.
     ``strategy=`` pins either path explicitly and skips any probe.
     """
 
@@ -516,22 +517,13 @@ class DecontaminateMapper(SparkMapper):
     def _resolve_strategy(self) -> str:
         if self.strategy is not None:
             return self.strategy
-        from .similarity import plan_size_bytes
-
-        size = plan_size_bytes(self.benchmark)
-        if size is not None:
-            return (
-                "join" if size > self.BROADCAST_LIMIT_BYTES else "broadcast"
-            )
-        # unknown estimate (local frames, or derived-from-sentinel /
-        # product-of-children values the band rejects): a BOUNDED row
-        # probe — limit pushes down, so at most cap+1 rows are read —
-        # decides, instead of assuming eval-suite scale and
-        # broadcasting something that might OOM the executors
-        cap = self.BROADCAST_LIMIT_ROWS
-        if self.benchmark.limit(cap + 1).count() <= cap:
-            return "broadcast"
-        return "join"
+        # plan estimate when known (no job); an unknown one (local
+        # frames, or derived-from-sentinel / product-of-children values
+        # the band rejects) gets one bounded row probe instead of
+        # assuming eval-suite scale and broadcasting something that
+        # might OOM the executors
+        rows, size = self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES
+        return "broadcast" if fits(self.benchmark, rows, size) else "join"
 
     def apply(self, df: DataFrame) -> DataFrame:
         from .hashing import word_shingles
@@ -654,9 +646,8 @@ class SemanticDecontaminateMapper(SparkMapper):
         )
 
         cap = self.max_benchmark_rows
-        # bounded probe: limit pushes into the scan, so at most cap+1
-        # benchmark rows are ever read to decide
-        if self.benchmark.limit(cap + 1).count() > cap:
+        # one bounded probe: at most cap+1 benchmark rows are read
+        if not fits(self.benchmark, cap):
             raise ValueError(
                 f"SemanticDecontaminateMapper: benchmark exceeds "
                 f"max_benchmark_rows={cap}; a data-scale 'benchmark' "

@@ -22,11 +22,11 @@ deterministic file counts.  Deployments with a metastore can
 join exchanges entirely — the helper API stays the same.
 
 Join semantics: ``join_attributes`` broadcasts the sidecar when it is
-small (driver-bounded ``limit`` probe, same idiom as the
-decontamination benchmark cap), else a plain equi-join; duplicate
-sidecar keys raise IN-PLAN via the shared ``_guard_unique_key``
-window (riding the join's own partitioning) — a duplicated attribute
-row would silently multiply corpus rows.
+small (one bounded count against the shared key cap of
+core/sizing.py), else a plain equi-join; duplicate sidecar keys raise
+IN-PLAN via the shared ``_guard_unique_key`` window (riding the
+join's own partitioning) — a duplicated attribute row would silently
+multiply corpus rows.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import sizing
 from .loaders import _guard_unique_key
 
 __all__ = ["write_attributes", "read_attributes", "join_attributes"]
@@ -117,14 +118,13 @@ def join_attributes(
     key_field: str = "doc_id",
     fields: Optional[Sequence[str]] = None,
     how: str = "left",
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """Attach sidecar attributes to the corpus.
 
     ``attributes`` is a DataFrame or a sidecar path.  ``fields``
     prunes the sidecar read to the named attributes (plus the key).
-    The sidecar is ``broadcast()`` when a bounded ``limit`` probe
-    shows at most ``broadcast_rows`` rows — the common case for
+    The sidecar is ``broadcast()`` when one bounded count shows at
+    most ``core.sizing.BROADCAST_KEYS`` rows — the common case for
     filtered sidecars — else a plain equi-join (both sides exchange;
     with a metastore, bucketed tables delete those — module
     docstring).  Duplicate sidecar keys raise in-plan; ``how`` is
@@ -166,9 +166,6 @@ def join_attributes(
     guarded = _guard_unique_key(
         attrs, key_field, probe_cols[0], "join_attributes"
     )
-    small = (
-        attrs.select(key_field).limit(broadcast_rows + 1).count()
-        <= broadcast_rows
-    )
+    small = sizing.fits(attrs.select(key_field), sizing.BROADCAST_KEYS)
     right = F.broadcast(guarded) if small else guarded
     return docs.join(right, on=key_field, how=how)

@@ -157,7 +157,10 @@ def read_batches(
     except AnalysisException as e:
         cond = str(getattr(e, "getCondition", lambda: None)() or e)
         if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
-            return spark.createDataFrame([], schema)
+            # limit(0) plans as an empty LocalRelation (a bare empty
+            # createDataFrame is an opaque LogicalRDD), so the optimizer
+            # drops a first batch's dedup joins against it
+            return spark.createDataFrame([], schema).limit(0)
         raise
     folded = _read_manifest(root)
     if folded:

@@ -218,7 +218,7 @@ def interleave_datasets(
 
     from pyspark.sql.window import Window
 
-    from ..functions.similarity import plan_size_bytes
+    from ..core.sizing import plan_size_bytes
 
     big = [
         i

@@ -7,11 +7,11 @@ two deletion shapes a 100 TB corpus operator actually runs —
   everywhere" (GDPR/right-to-be-forgotten, takedown lists, opted-out
   creators).  One LEFT ANTI join against the key set — broadcast when
   the list is list-sized (the corpus side never exchanges), plain
-  shuffled anti-join above a bounded threshold probe (the ingest
-  auto-probe pattern: the sizing job is a ``limit(cap+1).count()``,
-  never an unbounded count) — then the staged swap every on-disk store
-  shares (sources/batch_state.py).  Row accounting comes
-  from parquet FOOTERS (before/after), not extra count scans.
+  shuffled anti-join above the shared key cap, sized by one bounded
+  count (core/sizing.py: never an unbounded count of the key set) —
+  then the staged swap every on-disk store shares
+  (sources/batch_state.py).  Row accounting comes from parquet
+  FOOTERS (before/after), not extra count scans.
 * **retention windows** (:func:`drop_partitions_older_than`) —
   "drop data older than N days".  When the dataset is partitioned by
   a day-shaped transform (sources/layout.py :func:`~.layout.days`
@@ -50,15 +50,11 @@ from typing import Dict, Mapping, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import sizing
 from .batch_state import recover_swap, swap_in
 from .layout import _local_path, _parquet_files_under, _swap_staging_path
 
 RETENTION_STAGING_SUFFIX = "__retention_staging__"
-
-# forget lists are usually thousands to low millions of keys; above
-# this the broadcast would strain executors and a shuffled anti-join
-# is the honest plan
-DEFAULT_BROADCAST_KEYS = 2_000_000
 
 
 def _staging_path(path: str) -> str:
@@ -111,7 +107,6 @@ def apply_deletions(
     keys: Union[DataFrame, Sequence],
     key_field: str,
     partition_scope: Optional[Mapping[str, Sequence]] = None,
-    broadcast_threshold_rows: int = DEFAULT_BROADCAST_KEYS,
     verify_all_deleted: bool = False,
     compression: str = "zstd",
 ) -> Dict[str, object]:
@@ -120,10 +115,10 @@ def apply_deletions(
 
     ``keys`` is a DataFrame holding ``key_field`` (any extra columns
     are projected away) or a small Python sequence.  Strategy is
-    probed with a bounded job — ``limit(threshold+1).count()`` — and
-    recorded in the report: ``broadcast`` keeps the corpus side
-    exchange-free; ``plain`` is the shuffled anti-join for
-    corpus-sized forget lists.
+    probed with one bounded count against the shared key cap
+    (``core.sizing.BROADCAST_KEYS``) and recorded in the report:
+    ``broadcast`` keeps the corpus side exchange-free; ``plain`` is
+    the shuffled anti-join for corpus-sized forget lists.
 
     ``partition_scope`` (``{partition_col: [values...]}``) is the
     100 TB lever: only matching partition directories are read and
@@ -205,13 +200,13 @@ def apply_deletions(
 
     targets = scope_dirs if scope_dirs is not None else [local]
     # bounded strategy probe (never an unbounded count of the key set)
-    probed = keys_df.limit(broadcast_threshold_rows + 1).count()
+    probed = sizing.capped_count(keys_df, sizing.BROADCAST_KEYS)
     if probed == 0:
         raise ValueError(
             "apply_deletions: empty forget list (the DataFrame has no "
             "rows) — refusing a full rewrite that would delete nothing"
         )
-    use_broadcast = probed <= broadcast_threshold_rows
+    use_broadcast = probed <= sizing.BROADCAST_KEYS
     anti_rhs = F.broadcast(keys_df) if use_broadcast else keys_df
 
     report: Dict[str, object] = {

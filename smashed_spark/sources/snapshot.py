@@ -164,6 +164,7 @@ from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import sizing
 from . import io_utils
 from .io_utils import SmartPath
 from .layout import packed_scan_conf
@@ -176,11 +177,6 @@ POINTER_NAME = "_latest.json"
 _STAGING_DIR_NAME = "_staging"
 DATA_DIR = "data"
 
-# forget lists are usually thousands to low millions of keys; above
-# this the broadcast would strain executors and a shuffled anti-join
-# is the honest plan (same threshold as sources/retention.py)
-DEFAULT_BROADCAST_KEYS = 2_000_000
-
 # forget-key sets at or below this collect to the driver for literal
 # per-file `in` pruning (tightest file scoping); above it the plan
 # degrades to min/max range pruning — two scalars, never a big collect
@@ -188,10 +184,11 @@ DEFAULT_PRUNE_COLLECT_KEYS = 100_000
 
 # positional-delete sidecars broadcast only while their recorded
 # parquet bytes stay under this (their rows carry a path string each,
-# far wider than scalar forget keys — the row cap alone could force a
-# GB-scale hash relation near its limit); above it the anti-join
-# shuffles honestly.  Dictionary encoding makes real sidecars much
-# smaller than raw, so this admits tens of millions of positions.
+# far wider than scalar forget keys — the row cap alone,
+# core.sizing.BROADCAST_KEYS, could force a GB-scale hash relation
+# near its limit); above it the anti-join shuffles honestly.
+# Dictionary encoding makes real sidecars much smaller than raw, so
+# this admits tens of millions of positions.
 DELETE_BROADCAST_BYTES = 64 << 20
 
 # optimistic-append rebases before giving up: append commits commute,
@@ -2288,7 +2285,8 @@ def _empty_typed(
             "no schema to build an empty result from"
         )
     ddl = ", ".join(f"`{c}` {t}" for c, t in info.columns.items())
-    return spark.createDataFrame([], schema=ddl)
+    # limit(0): an empty LocalRelation, so joins against it plan away
+    return spark.createDataFrame([], schema=ddl).limit(0)
 
 
 def read_snapshot(
@@ -2542,7 +2540,7 @@ def _scan_files(
         anti = (
             F.broadcast(dels)
             if (
-                pending_rows <= DEFAULT_BROADCAST_KEYS
+                pending_rows <= sizing.BROADCAST_KEYS
                 and pending_bytes <= DELETE_BROADCAST_BYTES
             )
             else dels
@@ -3579,18 +3577,6 @@ def _scope_files(info: SnapshotInfo, prune: list):
     return list(info.files), []
 
 
-def _join_side(key_df: DataFrame, n_keys: Optional[int], threshold: int):
-    """The key side of the join: broadcast at ``threshold`` rows or
-    fewer, plain (shuffled) above.  When the exact key count is already
-    known on the driver (a literal list, or a head probe that came back
-    complete) the choice costs no job; otherwise a bounded
-    ``limit(threshold+1).count()`` probe decides (as sources/retention.py
-    does)."""
-    if n_keys is None:
-        n_keys = key_df.limit(threshold + 1).count()
-    return F.broadcast(key_df) if n_keys <= threshold else key_df
-
-
 def _match_positions(matched: DataFrame, touched: list, verb: str):
     """Pin the (file, row-position) pairs of ``matched`` — a
     ``keep_positions=True`` scan of ``touched`` joined to the keys —
@@ -3620,7 +3606,6 @@ def apply_deletions_snapshot(
     keys: Union[DataFrame, Sequence],
     key_field: str,
     scope_where: Optional[Sequence] = None,
-    broadcast_threshold_rows: int = DEFAULT_BROADCAST_KEYS,
     prune_collect_cap: int = DEFAULT_PRUNE_COLLECT_KEYS,
     compression: str = "zstd",
     stats_columns: Optional[Sequence[str]] = None,
@@ -3664,9 +3649,11 @@ def apply_deletions_snapshot(
     matches, and the scope predicates join the file-prune plan so an
     out-of-scope file isn't even read.
 
-    The forget keys join broadcast or plain by :func:`_join_side`'s
-    rule.  NULL forget keys raise — NULL never equals anything in a
-    join, so a NULL "deletion" would silently delete nothing.
+    The forget keys join broadcast at ``core.sizing.BROADCAST_KEYS``
+    keys or fewer (a known count costs no job; otherwise one bounded
+    count decides), plain above.  NULL forget keys raise — NULL never
+    equals anything in a join, so a NULL "deletion" would silently
+    delete nothing.
 
     ``stats_columns=None`` (default) INHERITS the parent's envelope-
     stats column set for the rewritten files, so the NEXT delete still
@@ -3743,14 +3730,16 @@ def apply_deletions_snapshot(
         key_df = spark.createDataFrame(
             [(k,) for k in probe.head], schema=df.select(key_field).schema
         )
+    cap = sizing.BROADCAST_KEYS
     if scope_where:
         # the marker join below must not fan out an out-of-scope
         # surviving row once per duplicate forget key.  Dedup only
-        # shrinks, so a known size over the threshold is probed again.
+        # shrinks, so a known size over the cap is probed again.
         key_df = key_df.distinct()
-        if n_keys is not None and n_keys > broadcast_threshold_rows:
+        if n_keys is not None and n_keys > cap:
             n_keys = None
-    side = _join_side(key_df, n_keys, broadcast_threshold_rows)
+    small = sizing.fits(key_df, cap) if n_keys is None else n_keys <= cap
+    side = F.broadcast(key_df) if small else key_df
 
     def keyed(how: str) -> DataFrame:
         # "left_semi": the rows the delete forgets; "left_anti": the rest
@@ -3806,7 +3795,6 @@ def merge_snapshot(
     table_root: str,
     batch: DataFrame,
     key_field: str,
-    broadcast_threshold_rows: int = DEFAULT_BROADCAST_KEYS,
     prune_collect_cap: int = DEFAULT_PRUNE_COLLECT_KEYS,
     compression: str = "zstd",
     stats_columns: Optional[Sequence[str]] = None,
@@ -3946,7 +3934,11 @@ def merge_snapshot(
     # commit — the batch lands)
     positions, out = None, batch
     if touched:
-        side = _join_side(probe.df, probe.n, broadcast_threshold_rows)
+        # a complete head probe knows the key count (no job);
+        # otherwise one bounded count decides
+        n, cap = probe.n, sizing.BROADCAST_KEYS
+        small = sizing.fits(probe.df, cap) if n is None else n <= cap
+        side = F.broadcast(probe.df) if small else probe.df
         existing = _scan_files(
             spark, table_root,
             SnapshotInfo(**{**info.__dict__, "files": touched}), client,

@@ -29,13 +29,14 @@ only the un-compacted tail is distinct'd per batch).
 Each micro-batch N (1) reads the full compact index EXCLUDING its own
 ``batch=N`` partition (~180 GB of slim keys at 100 TB of history vs
 a rescan of the corpus itself — the whole point; the index is SCANNED
-once per batch and never exchanged: ONE bounded sizing job on the
+once per batch and never exchanged: ONE bounded sizing count on the
 raw batch routes BOTH dedup operators between ``broadcast_probe``
 mode — the bounded batch's key set broadcast into an index probe
 instead of shuffling the index into a join — and, for a batch above
-``max_probe_rows`` where the probe itself would be an unbounded
-broadcast, the plain anti/indicator join: an oversized backfill pays
-one batch+index exchange instead of OOMing the executors),
+the shared key cap (``core.sizing.BROADCAST_KEYS``) where the probe
+itself would be an unbounded broadcast, the plain anti/indicator
+join: an oversized backfill pays one batch+index exchange instead of
+OOMing the executors),
 (2) scrubs the batch against it with the batch operators,
 (3) OVERWRITES its own ``batch=N`` subdirectories.  Together these
 make a retried batch a pure replay: the overwrite rewrites the same
@@ -59,6 +60,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import sizing
 from ..sources.batch_state import dir_bytes, fold_batches, read_batches
 
 _DIGEST_SCHEMA = "digest string"
@@ -132,7 +134,6 @@ def ingest_dedup_batch(
     semantic_threshold: float = 0.8,
     vector_field: str = "embedding",
     return_stats: bool = False,
-    max_probe_rows: int = 2_000_000,
     digest_bloom=None,
     survivors_sink=None,
 ) -> "Optional[dict]":
@@ -221,28 +222,24 @@ def ingest_dedup_batch(
         return dir_bytes(root) <= _PLAIN_INDEX_MAX_BYTES
     small_exact = _small_index("digests")
     small_fuzzy = _small_index("bands")
-    # ONE bounded sizing job on the RAW batch resolves probe-vs-plain
-    # for BOTH operators: passing "auto" through would make the fuzzy
-    # operator's own sizing count run on the UNMATERIALIZED exact-dedup
-    # output — re-evaluating the anti-join (a second scan of the digest
-    # index) just to count rows.  The raw-batch count upper-bounds the
-    # fuzzy stage's input (survivors <= batch rows), so the routing is
-    # conservative in the safe direction: an oversized batch exchanges
-    # instead of broadcasting.  limit() keeps the job O(cap) however
-    # large the batch.  Skipped entirely when every index in play is
-    # small (the batch size only matters for probe-mode eligibility).
+    # ONE bounded sizing count on the RAW batch resolves probe-vs-plain
+    # for BOTH operators: sizing inside the fuzzy operator would count
+    # the UNMATERIALIZED exact-dedup output — re-evaluating the
+    # anti-join (a second scan of the digest index) just to count
+    # rows.  The raw-batch count upper-bounds the fuzzy stage's input
+    # (survivors <= batch rows), so the routing is conservative in the
+    # safe direction: an oversized batch exchanges instead of
+    # broadcasting.  Each doc contributes ``bands`` band keys, so the
+    # fuzzy cap is the key cap over ``bands``.  Skipped entirely when
+    # every index in play is small (the batch size only matters for
+    # probe-mode eligibility).
     if small_exact and (small_fuzzy or not fuzzy):
         probe_exact = probe_fuzzy = False
     else:
-        cap_fuzzy = max(1, max_probe_rows // max(1, bands))
-        sizing_cap = max(max_probe_rows, cap_fuzzy)
-        batch_rows_capped = batch.limit(sizing_cap + 1).count()
-        probe_exact = (
-            batch_rows_capped <= max_probe_rows and not small_exact
-        )
-        probe_fuzzy = (
-            batch_rows_capped <= cap_fuzzy and not small_fuzzy
-        )
+        cap = sizing.BROADCAST_KEYS
+        n = sizing.capped_count(batch, cap)
+        probe_exact = n <= cap and not small_exact
+        probe_fuzzy = n <= max(1, cap // max(1, bands)) and not small_fuzzy
     digest_index = _read_state(
         spark,
         os.path.join(state_dir, "digests"),
@@ -257,7 +254,7 @@ def ingest_dedup_batch(
         # bounded batch vs unbounded history: broadcast the batch's
         # digest set into an index PROBE so the history index is
         # scanned, never exchanged — the per-batch cost that must not
-        # grow with history.  Above max_probe_rows (an unbounded
+        # grow with history.  Above the key cap (an unbounded
         # backfill "batch") the probe would itself be an unbounded
         # broadcast, so the plain anti-join runs instead (resolved by
         # the single raw-batch sizing job above)

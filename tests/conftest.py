@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -26,3 +27,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns ``(result, jobs)``:
+    the Spark jobs it ran, counted through ``statusTracker()`` under a
+    job group the fixture owns (library code never sets one)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            ):
+                sc.setLocalProperty(key, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

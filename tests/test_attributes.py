@@ -4,6 +4,7 @@ storage + re-join without recompute."""
 import pytest
 from pyspark.sql import functions as F
 
+from smashed_spark.core import sizing
 from smashed_spark.sources.attributes import (
     join_attributes,
     read_attributes,
@@ -92,7 +93,7 @@ def test_duplicate_sidecar_key_raises_in_plan(spark, tmp_path):
         out.collect()
 
 
-def test_small_sidecar_broadcasts(spark, tmp_path):
+def test_small_sidecar_broadcasts(spark, tmp_path, monkeypatch):
     docs = _docs(spark)
     path = str(tmp_path / "attrs")
     write_attributes(docs, path, attribute_fields=["score"])
@@ -105,9 +106,9 @@ def test_small_sidecar_broadcasts(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        big = join_attributes(
-            docs.select("doc_id", "text"), path, broadcast_rows=1
-        )
+        with monkeypatch.context() as m:
+            m.setattr(sizing, "BROADCAST_KEYS", 1)
+            big = join_attributes(docs.select("doc_id", "text"), path)
         tree2 = _explain(big).split("\n\n")[0]
         assert "BroadcastHashJoin" not in tree2, tree2
         small2 = join_attributes(docs.select("doc_id", "text"), path)

@@ -157,3 +157,27 @@ def test_ingest_read_excludes_listed_leftovers(spark, tmp_path):
     assert sorted(os.listdir(root)) == ["batch=-1", "batch=1"]
     read = _read_state(spark, root, _DIGEST_SCHEMA).collect()
     assert "leftover-only" not in {r.digest for r in read}
+
+
+def _has_join(df) -> bool:
+    return "Join" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_empty_state_plans_as_known_empty_relation(spark, tmp_path):
+    """An absent state reads as an empty relation Catalyst can SEE is
+    empty, so the optimizer drops a first batch's anti-join against it
+    (an opaque empty RDD would still run the join's shuffles)."""
+    batch = _docs(spark, [(1, "a"), (2, "b")]).withColumn(
+        "digest", F.md5("text")
+    )
+    empty = read_batches(spark, str(tmp_path / "absent"), _DIGEST_SCHEMA)
+    assert empty.dtypes == [("digest", "string")]
+    joined = batch.join(empty, "digest", "left_anti")
+    assert not _has_join(joined)
+    assert sorted(r.doc_id for r in joined.collect()) == [1, 2]
+    # a real (non-empty) state keeps its join
+    _ingest(spark, str(tmp_path / "state"), str(tmp_path / "out"), 0)
+    state = _read_state(
+        spark, str(tmp_path / "state" / "digests"), _DIGEST_SCHEMA
+    )
+    assert _has_join(batch.join(state, "digest", "left_anti"))

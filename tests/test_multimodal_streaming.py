@@ -1065,74 +1065,26 @@ def test_ingest_broadcast_probe_never_exchanges_index(spark, tmp_path):
     assert 10 not in got  # history drop survives the mode change
 
 
-def test_auto_probe_mode_routes_by_batch_size(spark, tmp_path):
-    """r9 late: ``broadcast_probe="auto"`` (now the ingest default)
-    must pick the probe plan for bounded batches and FALL BACK to the
-    plain join above ``max_probe_rows`` — an unbounded backfill batch
-    broadcast into executor memory is the OOM the auto tier exists to
-    prevent.  Probe mode is observable as the extra inner hits-join
-    (2 joins) vs plain mode's single anti/indicator join; verdicts
-    must not change with the route."""
+def test_broadcast_probe_rejects_auto(spark):
+    """``broadcast_probe`` takes only True or False: the removed
+    ``"auto"`` mode, or any other string, raises instead of coercing
+    truthy into an unbounded broadcast (ingest_dedup_batch routes the
+    flag itself)."""
     from smashed_spark.functions.dedup import (
         dedup_incremental,
         dedup_incremental_fuzzy,
-        with_digests,
-        with_minhash_bands,
     )
-
-    def _tree(df):
-        return (
-            df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            .split("===== Subqueries")[0]
-            .split("\n\n")[0]
-        )
-
-    hist = spark.createDataFrame(
-        [(0, " ".join(f"w{i}" for i in range(25)))],
-        "doc_id: bigint, text: string",
-    ).withColumn("words", F.split("text", " "))
-    with_digests(hist).write.parquet(str(tmp_path / "digests"))
-    with_minhash_bands(hist).write.parquet(str(tmp_path / "bands"))
-    dig_idx = spark.read.parquet(str(tmp_path / "digests"))
-    band_idx = spark.read.parquet(str(tmp_path / "bands"))
 
     batch = spark.createDataFrame(
-        [
-            (10, " ".join(f"w{i}" for i in range(25))),
-            (11, " ".join(f"v{i}" for i in range(25))),
-            (12, " ".join(f"v{i}" for i in range(25))),
-        ],
-        "doc_id: bigint, text: string",
+        [(1, "a b c")], "doc_id: bigint, text: string"
     ).withColumn("words", F.split("text", " "))
-
-    # small batch under the cap -> probe plan (hits-join + anti-join)
-    small = dedup_incremental(
-        batch, dig_idx, broadcast_probe="auto", max_probe_rows=100
-    )
-    assert _tree(small).count("Join") == 2, _tree(small)
-    # batch over the cap -> plain single anti-join, same verdicts
-    big = dedup_incremental(
-        batch, dig_idx, broadcast_probe="auto", max_probe_rows=2
-    )
-    assert _tree(big).count("Join") == 1, _tree(big)
-    assert sorted(r.doc_id for r in small.collect()) == [11]
-    assert sorted(r.doc_id for r in big.collect()) == [11]
-
-    # fuzzy: cap counts bands keys per doc (3 docs x 4 bands = 12)
-    fsmall = dedup_incremental_fuzzy(
-        batch, band_idx, broadcast_probe="auto", max_probe_rows=100
-    )
-    fbig = dedup_incremental_fuzzy(
-        batch, band_idx, broadcast_probe="auto", max_probe_rows=8
-    )
-    # +1 everywhere vs the exact path: the survivors join-back
-    assert _tree(fsmall).count("Join") == 3, _tree(fsmall)
-    assert _tree(fbig).count("Join") == 2, _tree(fbig)
-    assert sorted(r.doc_id for r in fsmall.collect()) == sorted(
-        r.doc_id for r in fbig.collect()
-    )
+    digests = spark.createDataFrame([], "digest string")
+    bands = spark.createDataFrame([], "band int, key string")
+    for bad in ("auto", "False", None):
+        with pytest.raises(ValueError, match="broadcast_probe"):
+            dedup_incremental(batch, digests, broadcast_probe=bad)
+        with pytest.raises(ValueError, match="broadcast_probe"):
+            dedup_incremental_fuzzy(batch, bands, broadcast_probe=bad)
 
 
 def test_ingest_dedup_batch_stats(spark, tmp_path):
@@ -1565,14 +1517,33 @@ def test_ingest_semantic_family(spark, tmp_path):
 
 
 def test_ingest_plain_mode_small_index_parity(spark, tmp_path, monkeypatch):
-    """r17 routing refinement: while the on-disk index stays under
-    ``_PLAIN_INDEX_MAX_BYTES``, ingest_dedup_batch skips broadcast-probe
-    mode (the plain join auto-broadcasts a small index, so the probe's
-    extra batch evaluations buy nothing) AND skips the batch-sizing
-    count.  Verdicts must be identical in both routings, batch by
+    """ingest_dedup_batch is the one probe-vs-plain router.  While the
+    on-disk index stays under ``_PLAIN_INDEX_MAX_BYTES`` it skips
+    broadcast-probe mode (the plain join auto-broadcasts a small index,
+    so the probe's extra batch evaluations buy nothing) AND the
+    batch-sizing count; a bigger index probes, unless the raw batch is
+    over the shared key cap (over ``cap / bands`` for the fuzzy
+    operator).  The ``broadcast_probe`` each operator receives is
+    spied; verdicts must be identical in every routing, batch by
     batch — reposts against history included."""
+    import smashed_spark.functions.dedup as dedup_mod
     import smashed_spark.streaming.ingest as ingest_mod
+    from smashed_spark.core import sizing
     from smashed_spark.streaming.ingest import ingest_dedup_batch
+
+    routes = []
+
+    def spy(name):
+        real = getattr(dedup_mod, name)
+
+        def wrapped(*args, **kwargs):
+            routes.append((name, kwargs["broadcast_probe"]))
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(dedup_mod, name, wrapped)
+
+    spy("dedup_incremental")
+    spy("dedup_incremental_fuzzy")
 
     rows = [
         (i, " ".join(f"w{i}_{j}" for j in range(20))) for i in range(30)
@@ -1583,24 +1554,43 @@ def test_ingest_plain_mode_small_index_parity(spark, tmp_path, monkeypatch):
         rows[:5] + rows[20:], "doc_id: bigint, text: string"
     )
 
-    def run(root: str) -> "list[tuple]":
+    def run(root: str):
+        """(survivors, per-batch (exact, fuzzy) probe flags)"""
         state, out = root + "/state", root + "/out"
+        routes.clear()
         ingest_dedup_batch(b0, state, out, batch_id=0)
         ingest_dedup_batch(b1, state, out, batch_id=1)
-        return sorted(
+        flags = [r[1] for r in routes]
+        assert [r[0] for r in routes] == [
+            "dedup_incremental", "dedup_incremental_fuzzy"
+        ] * 2, routes
+        survivors = sorted(
             (r.batch, r.doc_id)
             for r in spark.read.parquet(out)
             .selectExpr("CAST(batch AS BIGINT) batch", "doc_id")
             .collect()
         )
+        return survivors, [tuple(flags[:2]), tuple(flags[2:])]
 
     # default routing: tiny test index -> plain mode
     assert ingest_mod._PLAIN_INDEX_MAX_BYTES > 0
-    plain = run(str(tmp_path / "plain"))
-    # force the old always-probe routing and replay identically
+    plain, route = run(str(tmp_path / "plain"))
+    assert route == [(False, False), (False, False)]
+    # every index counts as big: batch 1 probes its committed index
+    # (batch 0's index is absent, so it stays plain)
     monkeypatch.setattr(ingest_mod, "_PLAIN_INDEX_MAX_BYTES", 0)
-    probed = run(str(tmp_path / "probe"))
-    assert plain == probed
+    probed, route = run(str(tmp_path / "probe"))
+    assert route == [(False, False), (True, True)]
+    # the 15-row batch 1 over the shared key cap: plain again
+    monkeypatch.setattr(sizing, "BROADCAST_KEYS", 10)
+    capped, route = run(str(tmp_path / "capped"))
+    assert route == [(False, False), (False, False)]
+    # under the cap but over cap / bands (20 / 4 = 5): only the exact
+    # operator probes
+    monkeypatch.setattr(sizing, "BROADCAST_KEYS", 20)
+    split, route = run(str(tmp_path / "split"))
+    assert route == [(False, False), (True, False)]
+    assert plain == probed == capped == split
     # the repost dedup actually happened (5 history dups dropped)
     assert [d for b, d in plain if b == 1] == sorted(
         r[0] for r in rows[20:]

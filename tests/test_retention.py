@@ -6,6 +6,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from smashed_spark.core import sizing
 from smashed_spark.sources.retention import (
     apply_deletions,
     drop_partitions_older_than,
@@ -41,17 +42,18 @@ def test_apply_deletions_broadcast_tier(spark, tmp_path):
     assert back.filter("doc_id = 7").first()["text"] == "text 7"
 
 
-def test_apply_deletions_plain_tier_equal_result(spark, tmp_path):
-    """Tiny threshold forces the shuffled anti-join; survivors must be
-    identical to the broadcast tier's."""
+def test_apply_deletions_plain_tier_equal_result(
+    spark, tmp_path, monkeypatch
+):
+    """A tiny shared key cap forces the shuffled anti-join; survivors
+    must be identical to the broadcast tier's."""
     p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
     _corpus(spark).repartition(4).write.parquet(p1)
     _corpus(spark).repartition(4).write.parquet(p2)
     forget = [3, 5, 7, 999]
     r1 = apply_deletions(spark, p1, forget, "doc_id")
-    r2 = apply_deletions(
-        spark, p2, forget, "doc_id", broadcast_threshold_rows=2
-    )
+    monkeypatch.setattr(sizing, "BROADCAST_KEYS", 2)
+    r2 = apply_deletions(spark, p2, forget, "doc_id")
     assert r1["strategy"] == "broadcast" and r2["strategy"] == "plain"
     assert r1["rows_deleted"] == r2["rows_deleted"] == 4
     a = spark.read.parquet(p1)

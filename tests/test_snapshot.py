@@ -2468,6 +2468,12 @@ def test_zero_file_snapshot_reads_empty_typed(spark, tmp_path):
     got = read_snapshot(spark, root)
     assert got.count() == 0
     assert dict(got.dtypes) == {"doc_id": "bigint", "text": "string"}
+    # Catalyst sees the zero-file read is empty and drops a join on it
+    anti = _df(spark, 3).join(got, "doc_id", "left_anti")
+    assert "Join" not in (
+        anti._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert anti.count() == 3
     # where= over zero files must not IndexError either
     got = read_snapshot(spark, root, where=[("doc_id", ">=", 3)])
     assert got.count() == 0

@@ -744,21 +744,19 @@ auto-broadcast.  Three changes, each pinned by a plan-spy test:
    of bucketing the index on its join key, without requiring a
    metastore table: per-batch cost is one index SCAN (parquet,
    column-pruned to the key columns) + O(batch) work, instead of an
-   O(index) exchange.  Late r9: probe-vs-plain routing became
-   automatic — probe mode while the batch is under ``max_probe_rows``
-   (default 2M keys), plain join above it, so an unbounded backfill
-   "batch" pays one batch+index exchange instead of OOMing the
-   broadcast.  Route + verdict parity test-pinned.  The sizing job's
-   O(cap) claim holds only when it counts a MATERIALIZED frame:
-   ``ingest_dedup_batch`` therefore runs ONE ``limit(cap+1).count()``
-   on the RAW batch and passes resolved booleans to both operators —
-   the round's code review caught the first draft passing "auto"
-   through, whose fuzzy-stage sizing count re-evaluated the
-   unmaterialized exact-dedup output (a second scan of the digest
-   index per micro-batch).  Direct callers of the operators with
-   ``broadcast_probe="auto"`` should likewise pass a source-scanned
-   or cached frame; unrecognized strings now raise instead of
-   coercing truthy into an unbounded broadcast.  Why not `bucketBy`: Spark bucketed writes
+   O(index) exchange.  Probe-vs-plain routing is automatic in
+   ``ingest_dedup_batch`` alone: plain while the on-disk index is small
+   (the plain join auto-broadcasts it), else probe mode while the raw
+   batch is under the shared key cap (``core.sizing.BROADCAST_KEYS``,
+   2M keys; ``cap / bands`` rows for the fuzzy operator), plain join
+   above it, so an unbounded backfill "batch" pays one batch+index
+   exchange instead of OOMing the broadcast.  ONE bounded count on
+   the RAW batch sizes both operators: a count inside the fuzzy stage
+   would re-evaluate the unmaterialized exact-dedup output (a second
+   scan of the digest index per micro-batch).  The operators take
+   ``broadcast_probe`` as True or False only; any other value raises
+   instead of coercing truthy into an unbounded broadcast.  Why not
+   `bucketBy`: Spark bucketed writes
    require `saveAsTable` (a metastore), while the ingest state is
    deliberately path-based parquet (portable, overwrite-by-batch-id
    retry semantics); a deployment with a metastore can still register
@@ -948,7 +946,7 @@ All in BENCH_SCALE.json, same constant-density blowup discipline.
   as designed — ONE global aggregate with per-COLUMN output means
   the exchange is KB-sized at every scale; the slope is the parquet
   scan plus the KMV second job.
-* join_attributes: 0.43 / 0.47 / 0.89 s with broadcast_rows=100k so
+* join_attributes: 0.43 / 0.47 / 0.89 s with the key cap at 100k so
   the flip lands inside the sweep.  The probe now records TWO facts
   per scale: the OPERATOR tier (its limit-probe decision:
   broadcast/broadcast/plain as sidecar rows go 5k/50k/500k — the

@@ -1421,12 +1421,12 @@ def main() -> None:
         )
 
     # r11 (judge ask #6): sidecar re-join — broadcast tier under the
-    # probe cap, plain equi-join above it; broadcast_rows=100k makes
+    # probe cap, plain equi-join above it; a 100k shared key cap makes
     # the flip land INSIDE this sweep (5k -> 50k -> 500k sidecar rows)
     attrs_selected = not only or "join_attributes" in only
-    # ONE constant shared by the operator call and the tier
-    # derivation below — two literals would let them drift and record
-    # a flip point the operator never has
+    # ONE constant patched into the shared cap for the operator call
+    # and read by the tier derivation below — two literals would let
+    # them drift and record a flip point the operator never has
     ATTR_BROADCAST_ROWS = 100_000
 
     def run_join_attrs(doc_dir: str, reps: int = 2):
@@ -1434,6 +1434,7 @@ def main() -> None:
 
         from pyspark.sql import functions as F
 
+        from smashed_spark.core import sizing
         from smashed_spark.sources.attributes import (
             join_attributes,
             write_attributes,
@@ -1455,11 +1456,12 @@ def main() -> None:
             for _ in range(reps):
                 isolate()
                 t0 = time.perf_counter()
-                out = join_attributes(
-                    docs,
-                    f"{root}/attrs",
-                    broadcast_rows=ATTR_BROADCAST_ROWS,
-                )
+                default_cap = sizing.BROADCAST_KEYS
+                sizing.BROADCAST_KEYS = ATTR_BROADCAST_ROWS
+                try:
+                    out = join_attributes(docs, f"{root}/attrs")
+                finally:
+                    sizing.BROADCAST_KEYS = default_cap
                 out.write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
                 best = dt if best < 0 else min(best, dt)
@@ -1469,7 +1471,7 @@ def main() -> None:
                 out._jdf.queryExecution(), "formatted"
             )
             # two distinct facts: what the OPERATOR decided (its
-            # limit-probe vs broadcast_rows — the tier under test) and
+            # bounded probe vs the patched cap — the tier under test) and
             # what the PLAN does (above the cap the operator stops
             # hinting, but Catalyst's own autoBroadcastJoinThreshold
             # may still broadcast a small-bytes sidecar — desirable,
@@ -1504,7 +1506,7 @@ def main() -> None:
             "tier_10x": tier10,
             "note": (
                 "slim (doc_id, score) sidecar re-joined to the full "
-                "corpus; broadcast_rows=100k so the limit-probe tier "
+                "corpus; key cap patched to 100k so the bounded-probe tier "
                 "flip (broadcast under, plain equi-join over) happens "
                 "between 10x (50k sidecar rows) and 100x (500k)"
             ),
