@@ -40,9 +40,14 @@ from ..core.mapper import SparkMapper
 from ..core.sizing import fits
 from .hashing import (
     band_keys,
-    cosine_similarity,
+    broadcast_matrix,
+    cosine_block,
+    guarded_cosine,
     minhash_signature,
     simhash,
+    unit_rows,
+    vector_dot,
+    vector_norm,
     word_shingles,
 )
 
@@ -638,52 +643,44 @@ class NGramJaccardPairsMapper(SparkMapper):
     Scale: shuffles on shingles; ``max_shingle_freq`` (default **1024**)
     drops hub shingles (appearing in more than N docs) to bound the join
     fan-out — standard practice, loses only pairs whose *every* common
-    shingle is a hub.  The default ``join`` method is a codegen'd
-    sort-merge self-join over hashed shingle keys — streaming, no
-    per-group memory bound, and measurably faster than the
-    ``grouplist`` alternative (whose nested higher-order pair expansion
-    runs in the expression interpreter, and which additionally requires
-    every shingle's doc list to fit in memory, so it refuses to run
-    uncapped).  Trade-off: the self-join derives the inverted index on
-    both sides (Spark's ReuseExchange collapses the duplicate shuffle
-    when neither side converts to a broadcast); ``grouplist`` scans
-    once, so prefer it when the corpus scan itself dominates and hub
-    caps are tight.
+    shingle is a hub.
 
-    ``method="prefix"`` is the realistic-corpus scale path: PPJoin-
-    style prefix filtering (see :meth:`_pairs_prefix`) — same exact
-    output (property-tested), but candidates come only from each doc's
-    RAREST ``|x| - ceil(t|x|) + 1`` shingles, so the sum(freq^2) join
-    fan-out of frequent shingles disappears.  On a 20k-doc Zipfian
-    corpus it runs 2.4x faster than ``join`` (9.7 s vs 23.6 s) and
-    without the memory blowup; on uniform tiny-vocab data (no rare
-    shingles to exploit) plain ``join`` is faster.  At true 100 TB
-    scale prefer :class:`MinHashLSHPairsMapper` and use this as the
-    verifier on candidates.
+    Two exact plans, picked per input by a BOUNDED sample probe (one
+    small job over ``AUTO_PROBE_DOCS`` docs at plan time):
 
-    ``method="auto"`` (the default) picks between them from a BOUNDED
-    sample probe (one small job over ``AUTO_PROBE_DOCS`` docs, the
-    same bounded-probe pattern as
-    :class:`EmbeddingNearDupPairsMapper`): the self-join's candidate
-    fan-out is ``sum(f^2)`` over shingle doc-frequencies, so the probe
-    measures the *fan-out skew ratio* ``D * sum(f^2) / P^2`` (D =
-    distinct shingles, P = postings) — exactly 1.0 when every shingle
-    has the same frequency (prefix filtering has no rare shingles to
-    exploit; ``join``'s fan-out is already minimal for that posting
-    mass) and growing with frequency concentration (hub shingles
-    dominate the fan-out, and rare-prefix filtering removes them from
-    candidate generation).  Measured: Zipfian corpora 30-220, uniform
-    tiny-vocab and the bundled fixture 1.0-1.3 — at BOTH full and
-    sampled scale, which is what makes it a sound sample statistic
-    (the hapax ratio, by contrast, is ~0.9 for uniform random
-    trigrams too, and discriminates nothing).  The choice never
-    changes the OUTPUT — all three methods are exact and
-    property-tested equal — only the plan.
+    * ``join`` (:meth:`_pairs_join`) — a codegen'd sort-merge self-join
+      over hashed shingle keys: streaming, no per-group memory bound.
+    * ``prefix`` (:meth:`_pairs_prefix`) — PPJoin-style prefix
+      filtering: candidates come only from each doc's RAREST
+      ``|x| - ceil(t|x|) + 1`` shingles, so the sum(freq^2) join
+      fan-out of frequent shingles disappears.  On a 20k-doc Zipfian
+      corpus it runs 2.4x faster than ``join`` (9.7 s vs 23.6 s) and
+      without the memory blowup; on uniform tiny-vocab data (no rare
+      shingles to exploit) plain ``join`` is faster.  At true 100 TB
+      scale prefer :class:`MinHashLSHPairsMapper` and use this as the
+      verifier on candidates.
+
+    The probe measures the self-join's *fan-out skew ratio*
+    ``D * sum(f^2) / P^2`` over shingle doc-frequencies (D = distinct
+    shingles, P = postings) — exactly 1.0 when every shingle has the
+    same frequency (prefix filtering has no rare shingles to exploit;
+    ``join``'s fan-out is already minimal for that posting mass) and
+    growing with frequency concentration (hub shingles dominate the
+    fan-out, and rare-prefix filtering removes them from candidate
+    generation).  Measured: Zipfian corpora 30-220, uniform tiny-vocab
+    and the bundled fixture 1.0-1.3 — at BOTH full and sampled scale,
+    which is what makes it a sound sample statistic (the hapax ratio,
+    by contrast, is ~0.9 for uniform random trigrams too, and
+    discriminates nothing).  At or above ``AUTO_SKEW_THRESHOLD`` the
+    probe picks ``prefix``.  The choice never changes the OUTPUT —
+    both plans are exact and property-tested equal — only the plan; a
+    test reaches either one by setting ``AUTO_SKEW_THRESHOLD`` (0 for
+    ``prefix``, ``inf`` for ``join``).
     """
 
-    # sample size for the method="auto" skew probe (docs; `limit`
-    # pushes into the scan, so the probe reads a few partitions
-    # regardless of corpus size)
+    # sample size for the skew probe (docs; `limit` pushes into the
+    # scan, so the probe reads a few partitions regardless of corpus
+    # size)
     AUTO_PROBE_DOCS = 2_000
     # route to "prefix" at or above this fan-out skew ratio; uniform
     # corpora measure ~1.0-1.3, Zipfian 30+, so 3.0 splits the
@@ -697,29 +694,12 @@ class NGramJaccardPairsMapper(SparkMapper):
         shingle_size: int = 3,
         threshold: float = 0.5,
         max_shingle_freq: Optional[int] = 1024,
-        method: str = "auto",
     ) -> None:
-        if method not in ("auto", "grouplist", "join", "prefix"):
-            raise ValueError(f"unknown method {method}")
-        if max_shingle_freq is None and method == "grouplist":
-            # uncapped hub shingles would blow up collect_list: use the
-            # streaming two-sided join, which has no per-group memory
-            # requirement
-            import warnings
-
-            warnings.warn(
-                "NGramJaccardPairsMapper: max_shingle_freq=None is "
-                "incompatible with the grouplist path (unbounded "
-                "per-shingle doc lists); falling back to method='join'",
-                stacklevel=2,
-            )
-            method = "join"
         self.id_field = id_field
         self.words_field = words_field
         self.shingle_size = shingle_size
         self.threshold = threshold
         self.max_shingle_freq = max_shingle_freq
-        self.method = method
         super().__init__(input_fields=[id_field, words_field])
 
     def _inverted(self, df: DataFrame) -> DataFrame:
@@ -750,37 +730,10 @@ class NGramJaccardPairsMapper(SparkMapper):
             )
         return inv
 
-    def _pairs_grouplist(self, inv: DataFrame) -> DataFrame:
-        """Alternative path: group docs per shingle and explode the
-        pair combinations.  One logical shuffle, but the nested
-        higher-order pair expansion is interpreter-bound and each
-        shingle's doc list must fit in memory — hub shingles MUST be
-        capped with ``max_shingle_freq`` (the default ``join`` method
-        streams and has no such requirement)."""
-        groups = inv.groupBy("__s__").agg(
-            F.collect_list(F.struct("__id__", "__n__")).alias("__ds__")
-        )
-        pair_expr = F.expr(
-            """
-            flatten(transform(__ds__, (x, i) ->
-                transform(slice(__ds__, i + 2, size(__ds__)), y -> struct(
-                    least(x.__id__, y.__id__) as id_a,
-                    greatest(x.__id__, y.__id__) as id_b,
-                    if(x.__id__ < y.__id__, x.__n__, y.__n__) as na,
-                    if(x.__id__ < y.__id__, y.__n__, x.__n__) as nb))))
-            """
-        )
-        return (
-            groups.select(F.explode(pair_expr).alias("__p__"))
-            .select("__p__.*")
-            .groupBy("id_a", "id_b", "na", "nb")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-
     def _pairs_prefix(self, inv: DataFrame) -> DataFrame:
         """Prefix-filtered candidates (SSJoin/PPJoin family: Chaudhuri
-        et al. 2006, Xiao et al. 2008) — EXACT, same output as the
-        other methods: for Jaccard >= t, two sets must share an
+        et al. 2006, Xiao et al. 2008) — EXACT, same output as
+        :meth:`_pairs_join`: for Jaccard >= t, two sets must share an
         element within their ``|x| - ceil(t*|x|) + 1`` prefixes under
         one global total order.  Ordering by ascending global
         frequency puts RARE shingles in the prefixes, so frequent
@@ -890,7 +843,7 @@ class NGramJaccardPairsMapper(SparkMapper):
         )
 
     def _choose_method(self, df: DataFrame) -> str:
-        """Resolve ``method="auto"`` with a bounded-sample skew probe:
+        """Pick the plan with a bounded-sample skew probe:
         shingle a ``limit``-ed doc sample, measure the fan-out skew
         ratio ``D * sum(f^2) / P^2`` (== 1.0 for perfectly uniform
         shingle frequencies; see class docstring), and route skewed
@@ -925,35 +878,31 @@ class NGramJaccardPairsMapper(SparkMapper):
         )
 
     def apply(self, df: DataFrame) -> DataFrame:
-        method = self.method
-        if method == "auto":
-            # DOCUMENTED laziness exception (core/mapper.py defers all
-            # execution to the terminal action): resolving "auto" runs
-            # ONE bounded probe job at plan time — there is no way to
-            # pick a physical strategy from data without touching data
-            # (same plan-time tiering as EmbeddingNearDupPairsMapper's
-            # size estimate).  Memoized per INPUT PLAN (semanticHash —
-            # driver-only, no job) so repeated apply()/explain() calls
-            # on the same DataFrame don't re-probe, while reusing one
-            # mapper instance across different corpora re-probes and
-            # picks the right strategy for each; pass an explicit
-            # method for strictly lazy planning.
-            memo = getattr(self, "_auto_choice", None)
-            if memo is None:
-                memo = self._auto_choice = {}
-            plan_key = df.semanticHash()
-            if plan_key not in memo:
-                memo[plan_key] = self._choose_method(df)
-            method = memo[plan_key]
-        # inspectable after apply (plan-choice observability, mirrors
-        # EmbeddingNearDupPairsMapper.strategy)
-        self.resolved_method = method
+        # DOCUMENTED laziness exception (core/mapper.py defers all
+        # execution to the terminal action): the plan choice runs ONE
+        # bounded probe job at plan time — there is no way to pick a
+        # physical plan from data without touching data (same
+        # plan-time tiering as EmbeddingNearDupPairsMapper's size
+        # estimate).  Memoized per INPUT PLAN (semanticHash —
+        # driver-only, no job) so repeated apply()/explain() calls on
+        # the same DataFrame don't re-probe, while reusing one mapper
+        # instance across different corpora re-probes and picks the
+        # right plan for each.
+        memo = getattr(self, "_auto_choice", None)
+        if memo is None:
+            memo = self._auto_choice = {}
+        plan_key = df.semanticHash()
+        if plan_key not in memo:
+            memo[plan_key] = self._choose_method(df)
+        # inspectable after apply (plan-choice observability)
+        self.resolved_method = memo[plan_key]
         inv = self._inverted(df)
-        inter = {
-            "grouplist": self._pairs_grouplist,
-            "join": self._pairs_join,
-            "prefix": self._pairs_prefix,
-        }[method](inv)
+        pairs = (
+            self._pairs_prefix
+            if self.resolved_method == "prefix"
+            else self._pairs_join
+        )
+        inter = pairs(inv)
         jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
         return (
             inter.withColumn("jaccard", F.round(jac, 6))
@@ -965,8 +914,8 @@ class NGramJaccardPairsMapper(SparkMapper):
 class EmbeddingNearDupPairsMapper(SparkMapper):
     """Pairs of embeddings with cosine similarity above a threshold.
 
-    Strategy by corpus size (Catalyst's plan-time size estimate —
-    choosing a path triggers **no Spark job** when the estimate is
+    Tier by corpus size (Catalyst's plan-time size estimate —
+    choosing a tier triggers **no Spark job** when the estimate is
     known, which covers every file-backed source; an unknown estimate
     falls back to one bounded ``limit``-probe job):
 
@@ -981,12 +930,15 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
       signatures dominate: 3 bits × 16 tables measures recall 0.99 on
       the testdata corpus where 3 × 10 measures 0.95 (see
       test_near_dup_lsh_path_above_limit).  A warning is emitted when
-      auto-selection downgrades to approximate semantics.
-    * ``exact=True`` — force the exact all-pairs expression join at any
-      size.  This is O(n²) above the broadcast limit; it exists for
+      the size router downgrades to approximate semantics.
+    * ``exact=True`` — above the broadcast limit, run the exact
+      all-pairs expression join instead.  This is O(n²); it exists for
       verification, not production.
-    * ``strategy`` pins the plan explicitly (``"broadcast"`` |
-      ``"lsh"`` | ``"pairwise"``), bypassing estimate and warning.
+
+    The size check is the only plan selector: a test or a tool reaches
+    the large-corpus tiers by setting the class caps to 0.  Every tier
+    scores a pair with an all-zero vector 0.0, and an empty corpus
+    gives an empty result.
     """
 
     def __init__(
@@ -998,10 +950,7 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
         num_bits: int = 8,
         num_tables: int = 6,
         dims: Optional[int] = None,
-        strategy: Optional[str] = None,
     ) -> None:
-        if strategy not in (None, "broadcast", "lsh", "pairwise"):
-            raise ValueError(f"unknown strategy {strategy}")
         self.id_field = id_field
         self.vector_field = vector_field
         self.threshold = threshold
@@ -1009,7 +958,6 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
         self.num_bits = num_bits
         self.num_tables = num_tables
         self.dims = dims
-        self.strategy = strategy
         super().__init__(input_fields=[id_field, vector_field])
 
     # corpus matrix broadcast cap (plan-time size estimate)
@@ -1019,29 +967,21 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
     BROADCAST_LIMIT_ROWS = 200_000
 
     def apply(self, df: DataFrame) -> DataFrame:
-        strategy = self.strategy
-        if strategy is None:
-            if fits(df, self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES):
-                strategy = "broadcast"
-            elif self.exact:
-                strategy = "pairwise"
-            else:
-                import warnings
-
-                warnings.warn(
-                    "EmbeddingNearDupPairsMapper: corpus exceeds "
-                    f"BROADCAST_LIMIT_BYTES={self.BROADCAST_LIMIT_BYTES}; "
-                    f"switching to approximate LSH pairs (num_tables="
-                    f"{self.num_tables}, num_bits={self.num_bits}) — "
-                    "pairs colliding in no table are missed. Pass "
-                    "exact=True (O(n^2)) or strategy='lsh' to silence.",
-                    stacklevel=2,
-                )
-                strategy = "lsh"
-        if strategy == "broadcast":
+        if fits(df, self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES):
             return self._apply_broadcast_matrix(df)
-        if strategy == "pairwise":
+        if self.exact:
             return self._apply_pairwise_expr(df)
+        import warnings
+
+        warnings.warn(
+            "EmbeddingNearDupPairsMapper: corpus exceeds "
+            f"BROADCAST_LIMIT_BYTES={self.BROADCAST_LIMIT_BYTES}; "
+            f"switching to approximate LSH pairs (num_tables="
+            f"{self.num_tables}, num_bits={self.num_bits}) — "
+            "pairs colliding in no table are missed. Pass "
+            "exact=True for the exact O(n^2) pairs.",
+            stacklevel=2,
+        )
         return self._apply_lsh_buckets(df)
 
     def _apply_lsh_buckets(self, df: DataFrame) -> DataFrame:
@@ -1099,12 +1039,7 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
             StructType,
         )
 
-        rows = df.select(self.id_field, self.vector_field).collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        spark = df.sparkSession
-        b = spark.sparkContext.broadcast((ids, mat, norms))
+        b = broadcast_matrix(df, self.vector_field, self.id_field)
         threshold = self.threshold
         id_field, vector_field = self.id_field, self.vector_field
 
@@ -1126,9 +1061,7 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
                 if len(q_mat) == 0:
                     yield pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
                     continue
-                q_norms = np.sqrt((q_mat * q_mat).sum(axis=1))
-                sims = (q_mat @ c_mat.T) / np.outer(q_norms, c_norms)
-                sims = np.round(sims, 6)
+                sims = cosine_block(q_mat, c_mat, c_norms)
                 # pair constraint id_a < id_b keeps each pair once
                 qi, cj = np.where(
                     (sims >= threshold) & (q_ids[:, None] < c_ids[None, :])
@@ -1143,15 +1076,13 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
 
         from ..core.ship import ensure_shipped
 
-        ensure_shipped(spark)
+        ensure_shipped(df.sparkSession)
         return df.mapInPandas(run, schema=schema)
 
     def _apply_pairwise_expr(self, df: DataFrame) -> DataFrame:
         """Exact all-pairs expression join — O(n²), reached only via
         ``exact=True`` above the broadcast limit (verification use);
         the default large-corpus path is ``_apply_lsh_buckets``."""
-        from .hashing import vector_norm
-
         base = df.select(
             F.col(self.id_field).alias("__id__"),
             F.transform(
@@ -1159,14 +1090,11 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
             ).alias("__v__"),
         ).withColumn("__n__", vector_norm(F.col("__v__")))
         l, r = base.alias("l"), base.alias("r")
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("l.__v__"), F.col("r.__v__"), lambda x, y: x * y
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        sim = guarded_cosine(
+            vector_dot(F.col("l.__v__"), F.col("r.__v__")),
+            F.col("l.__n__"),
+            F.col("r.__n__"),
         )
-        sim = dot / (F.col("l.__n__") * F.col("r.__n__"))
         return (
             l.join(r, F.col("l.__id__") < F.col("r.__id__"))
             .select(
@@ -1258,7 +1186,7 @@ def fuzzy_dedup(
       only, filtered at ``threshold``.  ``verify=False`` clusters the
       raw LSH candidates (recall-oriented, banding-approximate).
     * ``"ngram"`` — exact n-gram Jaccard pairs at ``threshold``
-      (``method="auto"`` routing inside the pair mapper); exact but a
+      (join-or-prefix plan picked inside the pair mapper); exact but a
       heavier join — prefer on modest corpora.
     * ``"simhash"`` — Hamming ball ``<= max_hamming`` on
       ``simhash_bits``-bit fingerprints (exact by pigeonhole banding).
@@ -1575,9 +1503,8 @@ class SemanticNearDupPairsMapper(SparkMapper):
             ).alias("__v__"),
         )
         if self.centroids is not None:
-            mat = np.asarray(self.centroids, dtype=np.float64)
-            centroids = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
+            centroids = unit_rows(
+                np.asarray(self.centroids, dtype=np.float64)
             )
         else:
             k = self.n_centroids
@@ -1617,9 +1544,7 @@ class SemanticNearDupPairsMapper(SparkMapper):
             order = pdf["__id__"].to_numpy().argsort(kind="stable")
             ids = pdf["__id__"].to_numpy()[order]
             mat = np.array(list(pdf["__v__"].iloc[order]), dtype=np.float64)
-            mat /= np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
+            unit_rows(mat, out=mat)
             out_a, out_b, out_s = [], [], []
             # chunked upper-triangle matmul, right operand sliced to
             # columns >= chunk start (only j > i is ever read): halves
@@ -2248,10 +2173,7 @@ def with_semantic_cells(
 
     from .similarity import assign_cells
 
-    mat = np.asarray(centroids, dtype=np.float64)
-    cents = mat / np.maximum(
-        np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-    )
+    cents = unit_rows(np.asarray(centroids, dtype=np.float64))
     base = df.select(
         F.transform(
             F.col(vector_field), lambda x: x.cast("double")
@@ -2336,9 +2258,7 @@ def dedup_incremental_semantic(
             "centroids must be a non-empty rectangular matrix — fit "
             "one with fit_ivf_index and persist it"
         )
-    cents = mat / np.maximum(
-        np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-    )
+    cents = unit_rows(mat)
     null_guard = F.when(
         F.col(order_by).isNull(),
         F.raise_error(
@@ -2403,9 +2323,7 @@ def dedup_incremental_semantic(
         order = bat["__id__"].to_numpy().argsort(kind="stable")
         ids = bat["__id__"].to_numpy()[order]
         bm = np.array(list(bat["__v__"].iloc[order]), dtype=np.float64)
-        bm /= np.maximum(
-            np.linalg.norm(bm, axis=1, keepdims=True), 1e-12
-        )
+        unit_rows(bm, out=bm)
         hp = pdf[~bmask]
         hm = (
             np.array(list(hp["__v__"]), dtype=np.float64)
@@ -2415,9 +2333,7 @@ def dedup_incremental_semantic(
         if len(hm):
             # stored unit-normalized, but re-normalizing is idempotent
             # and guards hand-built indexes
-            hm /= np.maximum(
-                np.linalg.norm(hm, axis=1, keepdims=True), 1e-12
-            )
+            unit_rows(hm, out=hm)
         nb = len(bm)
         keep = np.ones(nb, dtype=bool)
         for s in range(0, nb, chk):

@@ -12,6 +12,16 @@ cryptographic digest: uniform, deterministic, cheap (JVM-side).
 MinHash permutations are affine maps ``(a_k * h + b_k) mod P`` over
 that base hash (standard construction, e.g. Broder 1997; P is the
 Mersenne prime 2^31-1).
+
+The cosine kernel of the similarity operators lives here too, so that
+every tier computes cosine the same way: a guarded Column expression
+(:func:`guarded_cosine`) for the expression-join tiers, and numpy
+blocks (:func:`broadcast_matrix`, :func:`cosine_block`,
+:func:`cosine_rows`) for the broadcast-matrix and rerank tiers.  All
+of them score an all-zero vector 0.0 against everything.  Those exact
+tiers divide the raw dot product by the norm product; the cell and
+quantizer tiers instead work on :func:`unit_rows`.  The two formulas
+can differ in the last bits, so each one has exactly one copy.
 """
 
 from __future__ import annotations
@@ -223,28 +233,6 @@ def simhash_from_hashes(hashes: Column, bits: int) -> Column:
     )
 
 
-def unrolled_dot(a: Column, b: Column, dims: int) -> Column:
-    """Dot product as a flat ``sum(a[i]*b[i])`` expression.
-
-    Higher-order ``F.aggregate`` folds are interpreted (no whole-stage
-    codegen); for a known dimensionality an unrolled sum compiles into
-    generated Java and runs an order of magnitude faster on O(n²) pair
-    joins.  Left-to-right summation — floating-point identical to the
-    sequential fold (and to DuckDB's ``list_dot_product``).
-    """
-    out = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dims + 1):
-        out = out + F.element_at(a, i) * F.element_at(b, i)
-    return out
-
-
-def probe_dims(df, vector_field: str) -> int:
-    """Array length of a vector column (one-row driver probe — schema
-    does not carry array lengths)."""
-    row = df.select(vector_field).limit(1).collect()
-    return len(row[0][0]) if row else 0
-
-
 def vector_norm(v: Column) -> Column:
     """L2 norm of a double array (sequential sum — engine-portable)."""
     return F.sqrt(
@@ -252,23 +240,99 @@ def vector_norm(v: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity between two numeric arrays, computed in double
-    precision with sequential summation (stable across engines)."""
-    da = F.transform(a, lambda x: x.cast("double"))
-    db = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(da, db, lambda x, y: x * y),
+def vector_dot(a: Column, b: Column) -> Column:
+    """Dot product of two double arrays (sequential sum)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    na = F.sqrt(
-        F.aggregate(da, F.lit(0.0), lambda acc, v: acc + v * v)
+
+
+def guarded_cosine(dot: Column, norm_a: Column, norm_b: Column) -> Column:
+    """``dot / (norm_a * norm_b)``, or 0.0 when either norm is 0: an
+    all-zero vector has cosine 0.0 to everything.  Unguarded, 0/0 is
+    NaN (or a DIVIDE_BY_ZERO error under ANSI mode), and Spark sorts
+    NaN above every double.  A NULL norm still gives NULL."""
+    return F.when((norm_a == 0) | (norm_b == 0), F.lit(0.0)).otherwise(
+        dot / (norm_a * norm_b)
     )
-    nb = F.sqrt(
-        F.aggregate(db, F.lit(0.0), lambda acc, v: acc + v * v)
+
+
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """Cosine similarity between two numeric arrays, computed in double
+    precision with sequential summation (stable across engines); 0.0
+    when either vector is all-zero."""
+    da = F.transform(a, lambda x: x.cast("double"))
+    db = F.transform(b, lambda x: x.cast("double"))
+    return guarded_cosine(vector_dot(da, db), vector_norm(da), vector_norm(db))
+
+
+def broadcast_matrix(df, vector_field: str, id_field=None):
+    """Collect ``df``'s vectors to the driver and broadcast ``(ids,
+    mat, norms)``: int64 ids (``None`` without ``id_field``), the
+    float64 matrix and its row norms.  An empty side broadcasts a
+    ``(0, 0)`` matrix."""
+    import numpy as np
+
+    cols = [vector_field] if id_field is None else [id_field, vector_field]
+    rows = df.select(*cols).collect()
+    ids = (
+        None
+        if id_field is None
+        else np.array([r[0] for r in rows], dtype=np.int64)
     )
-    return dot / (na * nb)
+    mat = (
+        np.array([r[-1] for r in rows], dtype=np.float64)
+        if rows
+        else np.zeros((0, 0))
+    )
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    return df.sparkSession.sparkContext.broadcast((ids, mat, norms))
+
+
+def _inf_if_zero(norms):
+    # a zero norm becomes an infinite denominator: 0 / inf = 0.0
+    import numpy as np
+
+    return np.where(norms == 0.0, np.inf, norms)
+
+
+def cosine_block(q_mat, c_mat, c_norms):
+    """Cosine of every row of ``q_mat`` against every row of ``c_mat``
+    (whose row norms are ``c_norms``): one BLAS matmul over the outer
+    product of the norms, rounded to 6 places; 0.0 wherever either
+    vector is all-zero."""
+    import numpy as np
+
+    q_norms = np.sqrt((q_mat * q_mat).sum(axis=1))
+    return np.round(
+        (q_mat @ c_mat.T)
+        / np.outer(_inf_if_zero(q_norms), _inf_if_zero(c_norms)),
+        6,
+    )
+
+
+def cosine_rows(q, c):
+    """Row-wise cosine of ``q[i]`` and ``c[i]``, rounded to 6 places,
+    with :func:`cosine_block`'s zero-norm rule."""
+    import numpy as np
+
+    dots = np.einsum("ij,ij->i", q, c)
+    q_norms = np.sqrt(np.einsum("ij,ij->i", q, q))
+    c_norms = np.sqrt(np.einsum("ij,ij->i", c, c))
+    return np.round(dots / (_inf_if_zero(q_norms) * _inf_if_zero(c_norms)), 6)
+
+
+def unit_rows(mat, out=None):
+    """``mat`` with each row scaled to unit L2 norm; a norm below
+    1e-12 divides by 1e-12, so an all-zero row stays all-zero.  A 1-D
+    ``mat`` is one vector.  ``out=mat`` normalizes in place."""
+    import numpy as np
+
+    axis = None if mat.ndim == 1 else 1
+    norms = np.linalg.norm(mat, axis=axis, keepdims=True)
+    return np.divide(mat, np.maximum(norms, 1e-12), out=out)
 
 
 def contains_map_type(dt) -> bool:

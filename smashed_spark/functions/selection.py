@@ -483,6 +483,7 @@ def with_prototypicality(
     """
     import numpy as np
 
+    from .hashing import unit_rows
     from .similarity import assign_cells_scored
 
     if cell_field in df.columns or score_field in df.columns:
@@ -491,10 +492,7 @@ def with_prototypicality(
             f"{cell_field!r}/{score_field!r} already exists on the "
             "input — pick different names or drop the stale columns"
         )
-    mat = np.asarray(centroids, dtype=np.float64)
-    cents = mat / np.maximum(
-        np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-    )
+    cents = unit_rows(np.asarray(centroids, dtype=np.float64))
     base = df.withColumn(
         "__v__",
         F.transform(F.col(vector_field), lambda x: x.cast("double")),

@@ -27,7 +27,15 @@ from pyspark.sql.window import Window
 
 from ..core.mapper import SparkMapper
 from ..core.sizing import fits
-from .hashing import cosine_similarity, vector_norm
+from .hashing import (
+    broadcast_matrix,
+    cosine_block,
+    cosine_rows,
+    guarded_cosine,
+    unit_rows,
+    vector_dot,
+    vector_norm,
+)
 
 
 class CosineTopK(SparkMapper):
@@ -43,9 +51,12 @@ class CosineTopK(SparkMapper):
     corpus sizes too big to broadcast, so it must be explicitly opted
     into with ``force_exact=True`` — otherwise this raises and points
     at :class:`HyperplaneLSHTopK` / :class:`IVFCosineTopK` (the 100 TB
-    paths, which rerank with this class's math inside buckets).
-    ``strategy`` pins the plan explicitly (``"broadcast"`` |
-    ``"exact_join"``), bypassing the estimate entirely.
+    paths, which rerank with this class's math inside buckets).  The
+    size check is the only plan selector; a test or a tool reaches the
+    cross-join tier by setting the class caps to 0 with
+    ``force_exact=True``.  An all-zero vector has cosine 0.0 to
+    everything on both tiers, and an empty corpus gives an empty
+    result.
     """
 
     def __init__(
@@ -56,17 +67,13 @@ class CosineTopK(SparkMapper):
         queries_filter: Optional[str] = None,
         exclude_self: bool = True,
         force_exact: bool = False,
-        strategy: Optional[str] = None,
     ) -> None:
-        if strategy not in (None, "broadcast", "exact_join"):
-            raise ValueError(f"unknown strategy {strategy}")
         self.id_field = id_field
         self.vector_field = vector_field
         self.k = k
         self.queries_filter = queries_filter
         self.exclude_self = exclude_self
         self.force_exact = force_exact
-        self.strategy = strategy
         super().__init__(input_fields=[id_field, vector_field])
 
     # corpus matrix broadcast cap (Catalyst size estimate; float arrays
@@ -77,22 +84,16 @@ class CosineTopK(SparkMapper):
     BROADCAST_LIMIT_ROWS = 200_000
 
     def apply(self, df: DataFrame) -> DataFrame:
-        strategy = self.strategy
-        if strategy is None:
-            if fits(df, self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES):
-                strategy = "broadcast"
-            elif self.force_exact:
-                strategy = "exact_join"
-            else:
-                raise ValueError(
-                    "corpus exceeds BROADCAST_LIMIT_BYTES="
-                    f"{self.BROADCAST_LIMIT_BYTES}: exact top-k would be "
-                    "an O(Q x N) cross join. Use HyperplaneLSHTopK or "
-                    "IVFCosineTopK (bucketed ANN + exact rerank), or pass "
-                    "force_exact=True to run it anyway."
-                )
-        if strategy == "broadcast":
+        if fits(df, self.BROADCAST_LIMIT_ROWS, self.BROADCAST_LIMIT_BYTES):
             return self._apply_broadcast_matrix(df)
+        if not self.force_exact:
+            raise ValueError(
+                "corpus exceeds BROADCAST_LIMIT_BYTES="
+                f"{self.BROADCAST_LIMIT_BYTES}: exact top-k would be "
+                "an O(Q x N) cross join. Use HyperplaneLSHTopK or "
+                "IVFCosineTopK (bucketed ANN + exact rerank), or pass "
+                "force_exact=True to run it anyway."
+            )
         return self._apply_pairwise_expr(df)
 
     def _apply_broadcast_matrix(self, df: DataFrame) -> DataFrame:
@@ -108,12 +109,7 @@ class CosineTopK(SparkMapper):
             StructType,
         )
 
-        rows = df.select(self.id_field, self.vector_field).collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        spark = df.sparkSession
-        b = spark.sparkContext.broadcast((ids, mat, norms))
+        b = broadcast_matrix(df, self.vector_field, self.id_field)
         k, exclude_self = self.k, self.exclude_self
         id_field, vector_field = self.id_field, self.vector_field
 
@@ -142,19 +138,7 @@ class CosineTopK(SparkMapper):
                     continue
                 q_ids = pdf[id_field].to_numpy(dtype=np.int64)
                 q_mat = np.array(list(pdf[vector_field]), dtype=np.float64)
-                q_norms = np.sqrt((q_mat * q_mat).sum(axis=1))
-                # zero-norm semantics: an all-zero vector has cosine
-                # 0.0 to everything (inf denominator: 0/inf = 0), not
-                # NaN — NaN would poison the ranking sort and leak
-                # into the sim column
-                sims = np.round(
-                    (q_mat @ c_mat.T)
-                    / np.outer(
-                        np.where(q_norms == 0.0, np.inf, q_norms),
-                        np.where(c_norms == 0.0, np.inf, c_norms),
-                    ),
-                    6,
-                )
+                sims = cosine_block(q_mat, c_mat, c_norms)
                 for qi in range(len(q_ids)):
                     s = sims[qi]
                     mask = np.ones(len(c_ids), dtype=bool)
@@ -172,12 +156,10 @@ class CosineTopK(SparkMapper):
 
         from ..core.ship import ensure_shipped
 
-        ensure_shipped(spark)
+        ensure_shipped(df.sparkSession)
         return queries.mapInPandas(run, schema=schema)
 
     def _apply_pairwise_expr(self, df: DataFrame) -> DataFrame:
-        from .hashing import vector_norm
-
         # norms precomputed once per vector (narrow); each of the Q x N
         # pairs then costs a single dot product — arithmetic identical
         # to dot/(norm_q*norm_c)
@@ -201,19 +183,11 @@ class CosineTopK(SparkMapper):
         joined = queries.crossJoin(corpus)
         if self.exclude_self:
             joined = joined.filter(F.col("__qid__") != F.col("__cid__"))
-        dot = F.aggregate(
-            F.zip_with(F.col("__qv__"), F.col("__cv__"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        sim = guarded_cosine(
+            vector_dot(F.col("__qv__"), F.col("__cv__")),
+            F.col("__qn__"),
+            F.col("__cn__"),
         )
-        # zero-norm semantics (parity with the broadcast tier): an
-        # all-zero vector has cosine 0.0 to everything.  Without the
-        # guard 0.0/0.0 is NaN, and Spark sorts NaN ABOVE every double
-        # — zero-norm neighbors would rank first
-        sim = F.when(
-            (F.col("__qn__") != 0) & (F.col("__cn__") != 0),
-            dot / (F.col("__qn__") * F.col("__cn__")),
-        ).otherwise(F.lit(0.0))
         scored = joined.select(
             F.col("__qid__").alias("query_id"),
             F.col("__cid__").alias("neighbor_id"),
@@ -238,7 +212,8 @@ def exact_cosine_scores(
 ) -> DataFrame:
     """Vectorized exact cosine over candidate pairs: one einsum (BLAS)
     per Arrow batch instead of an interpreted per-pair expression fold.
-    Returns ``(id_a, id_b, sim)`` with sim rounded to 6 places."""
+    Returns ``(id_a, id_b, sim)`` with sim rounded to 6 places (0.0
+    for a pair with an all-zero vector)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -266,15 +241,7 @@ def exact_cosine_scores(
                 continue
             q = np.array(list(pdf[va]), dtype=np.float64)
             c = np.array(list(pdf[vb]), dtype=np.float64)
-            dots = np.einsum("ij,ij->i", q, c)
-            sims = np.round(
-                dots
-                / (
-                    np.sqrt(np.einsum("ij,ij->i", q, q))
-                    * np.sqrt(np.einsum("ij,ij->i", c, c))
-                ),
-                6,
-            )
+            sims = cosine_rows(q, c)
             yield pd.DataFrame(
                 {
                     id_a: pdf[id_a].to_numpy(),
@@ -470,8 +437,7 @@ def fit_ivf_centroids(
     centroids as SQL literals."""
     import numpy as np
 
-    norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    unit = mat / norms
+    unit = unit_rows(mat)
     rng = np.random.RandomState(seed)
     k = min(n_centroids, len(unit))
     centroids = unit[rng.choice(len(unit), size=k, replace=False)]
@@ -481,7 +447,7 @@ def fit_ivf_centroids(
             members = unit[cell == c]
             if len(members):
                 m = members.sum(axis=0)
-                centroids[c] = m / max(np.linalg.norm(m), 1e-12)
+                centroids[c] = unit_rows(m)
     return centroids
 
 
@@ -577,7 +543,7 @@ def assign_cells(base: DataFrame, centroids) -> DataFrame:
                 f"centroid dims {cent_t.shape[0]} — the injected "
                 "index was fit on a different embedding space"
             )
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        unit_rows(mat, out=mat)
         return pd.Series(np.argmax(mat @ cent_t, axis=1).astype("int32"))
 
     return base.withColumn("__cell__", assign("__v__"))
@@ -634,7 +600,7 @@ def assign_cells_scored(base: DataFrame, centroids) -> DataFrame:
                 f"centroid dims {cent_t.shape[0]} — the injected "
                 "index was fit on a different embedding space"
             )
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        unit_rows(mat, out=mat)
         sims = mat @ cent_t
         cell = np.argmax(sims, axis=1)
         return pd.DataFrame(
@@ -657,9 +623,7 @@ def ivf_probe_map(centroids, n_probe: int) -> dict:
     from the tiny centroid×centroid similarity matrix."""
     import numpy as np
 
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
+    cn = unit_rows(centroids)
     cell_sims = cn @ cn.T
     return {
         int(c): [int(x) for x in np.argsort(-cell_sims[c])[:n_probe]]
@@ -756,8 +720,6 @@ class IVFCosineTopK(SparkMapper):
         and the centroids — bit-reproducible, which is what lets the
         DuckDB oracle replay the fit and embed the centroids as
         literals."""
-        import numpy as np
-
         try:
             return fit_centroids_sampled(
                 base,
@@ -790,11 +752,9 @@ class IVFCosineTopK(SparkMapper):
         if self.centroids is not None:
             # injected index: normalize to unit vectors (cosine cells)
             # exactly as the fit would have
-            mat = np.asarray(self.centroids, dtype=np.float64)
-            norms = np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
+            centroids = unit_rows(
+                np.asarray(self.centroids, dtype=np.float64)
             )
-            centroids = mat / norms
         else:
             centroids = self._fit_centroids(base)
         assigned = assign_cells(base, centroids)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..core.mapper import SparkMapper
 from ..core.sizing import fits
+from .hashing import broadcast_matrix, cosine_block
 
 # Minimal high-frequency stopword markers per language.  An n-gram /
 # stopword-count heuristic (the classic "stopword profiling" approach
@@ -451,17 +452,18 @@ class DecontaminateMapper(SparkMapper):
 
     When the benchmark side itself is data-scale (a dedup-against-
     another-corpus use, not an eval suite), broadcasting it would OOM
-    the executors: auto-selection reads Catalyst's plan-time size
-    estimate (no job when the estimate is known — file-backed sources
-    always report one) and switches to ``strategy="join"`` — a plain
-    shuffled equi-join on the shingle key, linear in both sides.  An
-    UNKNOWN estimate (local frames; sentinel-derived values) triggers
-    one bounded row count (core/sizing.py) per ``apply``.
-    ``strategy=`` pins either path explicitly and skips any probe.
+    the executors: the size check (core/sizing.py ``fits``) reads
+    Catalyst's plan-time size estimate (no job when the estimate is
+    known — file-backed sources always report one) and above
+    ``BROADCAST_LIMIT_BYTES`` switches to a plain shuffled equi-join
+    on the shingle key, linear in both sides.  An UNKNOWN estimate
+    (local frames; sentinel-derived values) triggers one bounded row
+    count per ``apply``.  The size check is the only plan selector; a
+    test reaches the shuffled join by setting the class caps to 0.
     """
 
     #: benchmark-side plan-size cap for the broadcast path; above it
-    #: auto-selection shuffles instead (same tiering as CosineTopK)
+    #: the size router shuffles instead (same tiering as CosineTopK)
     BROADCAST_LIMIT_BYTES = 512 << 20
     #: row cap for the bounded probe when the plan-time estimate is
     #: unknown (local frames, or join-derived estimates Catalyst can
@@ -483,13 +485,9 @@ class DecontaminateMapper(SparkMapper):
         mode: str = "flag",
         flag_field: str = "contaminated",
         overlap_field: str = "n_overlap",
-        strategy: Optional[str] = None,
     ) -> None:
         if mode not in ("flag", "drop"):
             raise ValueError(f"unknown mode {mode}")
-        if strategy not in (None, "broadcast", "join"):
-            raise ValueError(f"unknown strategy {strategy}")
-        self.strategy = strategy
         self.benchmark = benchmark
         self.id_field = id_field
         self.words_field = words_field
@@ -515,8 +513,6 @@ class DecontaminateMapper(SparkMapper):
         )
 
     def _resolve_strategy(self) -> str:
-        if self.strategy is not None:
-            return self.strategy
         # plan estimate when known (no job); an unknown one (local
         # frames, or derived-from-sentinel / product-of-children values
         # the band rejects) gets one bounded row probe instead of
@@ -585,7 +581,7 @@ class SemanticDecontaminateMapper(SparkMapper):
     ``mapInPandas`` stage computing a per-batch BLAS matmul
     max-similarity — no join, no shuffle, corpus-linear; per-executor
     memory is |benchmark| x dims x 8 bytes.  A benchmark larger than
-    ``max_benchmark_rows`` raises with guidance: decontaminating
+    ``MAX_BENCHMARK_ROWS`` raises with guidance: decontaminating
     against another DATA-SCALE corpus is cross-corpus near-dedup — use
     ``EmbeddingNearDupPairsMapper`` / ``fuzzy_dedup`` machinery
     instead of broadcasting it.
@@ -615,7 +611,6 @@ class SemanticDecontaminateMapper(SparkMapper):
         mode: str = "flag",
         sim_field: str = "max_benchmark_sim",
         flag_field: str = "semantic_contaminated",
-        max_benchmark_rows: Optional[int] = None,
     ) -> None:
         if mode not in ("flag", "drop"):
             raise ValueError(f"unknown mode {mode}")
@@ -626,11 +621,6 @@ class SemanticDecontaminateMapper(SparkMapper):
         self.mode = mode
         self.sim_field = sim_field
         self.flag_field = flag_field
-        self.max_benchmark_rows = (
-            self.MAX_BENCHMARK_ROWS
-            if max_benchmark_rows is None
-            else int(max_benchmark_rows)
-        )
         super().__init__(
             input_fields=[id_field, vector_field],
             output_fields=() if mode == "drop" else (sim_field, flag_field),
@@ -645,25 +635,17 @@ class SemanticDecontaminateMapper(SparkMapper):
             StructType,
         )
 
-        cap = self.max_benchmark_rows
+        cap = self.MAX_BENCHMARK_ROWS
         # one bounded probe: at most cap+1 benchmark rows are read
         if not fits(self.benchmark, cap):
             raise ValueError(
                 f"SemanticDecontaminateMapper: benchmark exceeds "
-                f"max_benchmark_rows={cap}; a data-scale 'benchmark' "
+                f"MAX_BENCHMARK_ROWS={cap}; a data-scale 'benchmark' "
                 "is cross-corpus near-dedup — use "
                 "EmbeddingNearDupPairsMapper / fuzzy_dedup instead of "
-                "broadcasting it, or raise max_benchmark_rows if the "
-                "executor memory budget allows."
+                "broadcasting it."
             )
-        rows = self.benchmark.select(self.vector_field).collect()
-        mat = np.array([r[0] for r in rows], dtype=np.float64)
-        if len(rows):
-            norms = np.sqrt((mat * mat).sum(axis=1))
-        else:
-            norms = np.zeros(0)
-        spark = df.sparkSession
-        b = spark.sparkContext.broadcast((mat, norms))
+        b = broadcast_matrix(self.benchmark, self.vector_field)
         threshold = self.threshold
         vector_field = self.vector_field
         sim_field, flag_field = self.sim_field, self.flag_field
@@ -677,7 +659,7 @@ class SemanticDecontaminateMapper(SparkMapper):
         )
 
         def run(batches):
-            c_mat, c_norms = b.value
+            _, c_mat, c_norms = b.value
             for pdf in batches:
                 n = len(pdf)
                 if n == 0 or len(c_norms) == 0:
@@ -693,17 +675,9 @@ class SemanticDecontaminateMapper(SparkMapper):
                 q_mat = np.array(
                     list(pdf[vector_field]), dtype=np.float64
                 )
-                q_norms = np.sqrt((q_mat * q_mat).sum(axis=1))
-                # zero-norm semantics: an all-zero embedding has
-                # cosine 0.0 to everything (inf denominator: 0/inf =
-                # 0) — without this, NaN sims compare False against
-                # the threshold and the row silently UNFLAGS with
-                # max_benchmark_sim = NaN instead of 0.0
-                sims = (q_mat @ c_mat.T) / np.outer(
-                    np.where(q_norms == 0.0, np.inf, q_norms),
-                    np.where(c_norms == 0.0, np.inf, c_norms),
-                )
-                mx = np.round(sims.max(axis=1), 6)
+                # an all-zero embedding scores 0.0, never NaN (which
+                # would compare False and silently unflag the row)
+                mx = cosine_block(q_mat, c_mat, c_norms).max(axis=1)
                 yield pdf.assign(
                     **{
                         sim_field: mx,
@@ -713,7 +687,7 @@ class SemanticDecontaminateMapper(SparkMapper):
 
         from ..core.ship import ensure_shipped
 
-        ensure_shipped(spark)
+        ensure_shipped(df.sparkSession)
         out = df.mapInPandas(run, schema=schema)
         if self.mode == "drop":
             out = out.filter(F.col(flag_field) == 0).drop(

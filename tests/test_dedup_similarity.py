@@ -104,11 +104,22 @@ def test_cosine_topk(spark):
     assert out[0].sim > 0.99
 
 
+def _over_cap(mapper):
+    """``mapper`` with both broadcast caps at 0, so the size router
+    sends any corpus past its broadcast tier."""
+    mapper.BROADCAST_LIMIT_BYTES = 0
+    mapper.BROADCAST_LIMIT_ROWS = 0
+    return mapper
+
+
 def test_cosine_topk_zero_norm_vectors(spark):
-    """r7 wrong #3: defined zero-norm semantics — an all-zero vector
-    has cosine 0.0 to everything (never NaN), on BOTH the broadcast
-    tier and the exact-join tier; zero-norm neighbors rank last, not
-    first (Spark sorts NaN above every double)."""
+    """Defined zero-norm semantics — an all-zero vector has cosine 0.0
+    to everything (never NaN, never a DIVIDE_BY_ZERO error under ANSI
+    mode) on every tier of CosineTopK and EmbeddingNearDupPairsMapper
+    and in cosine_similarity.  Each tier is reached through the size
+    router by setting the class caps to 0."""
+    from smashed_spark.functions.hashing import cosine_similarity
+
     df = spark.createDataFrame(
         [
             (0, [1.0, 0.0]),
@@ -118,24 +129,79 @@ def test_cosine_topk_zero_norm_vectors(spark):
         ],
         "vec_id: bigint, embedding: array<float>",
     )
-    for strategy in ("broadcast", "exact_join"):
+    tiers = {
+        "broadcast": lambda **kw: CosineTopK(k=3, **kw),
+        "exact_join": lambda **kw: _over_cap(
+            CosineTopK(k=3, force_exact=True, **kw)
+        ),
+    }
+    for tier, make in tiers.items():
+        # zero-norm neighbors rank last, not first (Spark sorts NaN
+        # above every double)
         out = (
-            CosineTopK(k=3, queries_filter="vec_id = 0", strategy=strategy)
+            make(queries_filter="vec_id = 0")
             .map(df)
             .orderBy("rank")
             .collect()
         )
-        assert [r.neighbor_id for r in out] == [1, 3, 2], strategy
+        assert [r.neighbor_id for r in out] == [1, 3, 2], tier
         sims = [r.sim for r in out]
-        assert all(s == s for s in sims), (strategy, sims)  # no NaN
-        assert sims[-1] == 0.0, strategy
+        assert all(s == s for s in sims), (tier, sims)  # no NaN
+        assert sims[-1] == 0.0, tier
         # zero-norm QUERY: every sim is exactly 0.0
-        qz = (
-            CosineTopK(k=3, queries_filter="vec_id = 2", strategy=strategy)
-            .map(df)
-            .collect()
-        )
-        assert [r.sim for r in qz] == [0.0, 0.0, 0.0], strategy
+        qz = make(queries_filter="vec_id = 2").map(df).collect()
+        assert [r.sim for r in qz] == [0.0, 0.0, 0.0], tier
+
+    # near-dup pairs at threshold <= 0: every tier returns the same
+    # pairs, the ones with the all-zero vector at 0.0 (not dropped as
+    # NaN by the threshold filter)
+    near = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.1])],
+        "vec_id: bigint, embedding: array<double>",
+    )
+    cos23 = round(1 / 1.01 ** 0.5, 6)
+    want = {(1, 2): 0.0, (1, 3): 0.0, (2, 3): cos23}
+    # 1 bit x 4 tables: the md5 hyperplanes put all three vectors in
+    # one bucket of table 0, so the LSH tier sees every pair
+    kw = dict(threshold=-1.0, dims=2, num_bits=1, num_tables=4)
+    lsh = _over_cap(EmbeddingNearDupPairsMapper(**kw))
+    with pytest.warns(UserWarning, match="approximate LSH"):
+        lsh_out = lsh.map(near)
+    for tier, out in (
+        ("broadcast", EmbeddingNearDupPairsMapper(**kw).map(near)),
+        (
+            "pairwise",
+            _over_cap(EmbeddingNearDupPairsMapper(exact=True, **kw)).map(near),
+        ),
+        ("lsh", lsh_out),
+    ):
+        got = {(r.id_a, r.id_b): r.sim for r in out.collect()}
+        assert got == want, (tier, got)
+    zero = EmbeddingNearDupPairsMapper(threshold=0.0, dims=2).map(near)
+    assert {(r.id_a, r.id_b) for r in zero.collect()} == set(want)
+
+    sims = near.alias("a").join(near.alias("b"), F.col("a.vec_id") == 1)
+    got = {
+        r.id: r.sim
+        for r in sims.select(
+            F.col("b.vec_id").alias("id"),
+            cosine_similarity("a.embedding", "b.embedding").alias("sim"),
+        ).collect()
+    }
+    assert got == {1: 0.0, 2: 0.0, 3: 0.0}
+    pair = spark.createDataFrame(
+        [([1.0, 0.0], [1.0, 0.1])], "a: array<double>, b: array<double>"
+    )
+    sim = pair.select(F.round(cosine_similarity("a", "b"), 6)).first()[0]
+    assert sim == cos23
+
+
+def test_cosine_operators_empty_corpus(spark):
+    """An empty corpus gives an empty result, not a numpy AxisError in
+    the broadcast tier's driver-side norm computation."""
+    empty = spark.createDataFrame([], "vec_id: bigint, embedding: array<double>")
+    assert CosineTopK(k=2).map(empty).collect() == []
+    assert EmbeddingNearDupPairsMapper(dims=2).map(empty).collect() == []
 
 
 def test_embedding_near_dup(spark):
@@ -195,10 +261,6 @@ def test_cosine_topk_guards_unbroadcastable_corpus(spark):
     forced.BROADCAST_LIMIT_ROWS = 0
     out = forced.map(df).orderBy("rank").collect()
     assert [r.neighbor_id for r in out] == [1, 2]
-    # explicit strategy pins the plan with no estimate at all
-    pinned = CosineTopK(k=2, queries_filter="vec_id = 0", strategy="exact_join")
-    out = pinned.map(df).orderBy("rank").collect()
-    assert [r.neighbor_id for r in out] == [1, 2]
 
 
 def test_ngram_jaccard_shingle_freq_cap(spark):
@@ -216,25 +278,13 @@ def test_ngram_jaccard_shingle_freq_cap(spark):
         "doc_id", threshold=0.01, max_shingle_freq=5
     ).map(df)
     assert capped.count() == 0  # hub dropped -> no candidates at all
-    # uncapped is fine on the default streaming join path (no per-group
-    # memory requirement)...
+    # uncapped is fine: both plans stream (no per-group memory
+    # requirement)
     uncapped = NGramJaccardPairsMapper(
         "doc_id", threshold=0.01, max_shingle_freq=None
     )
-    assert uncapped.method == "auto"  # r5 default: skew-probed
     assert uncapped.map(df).count() == 45
-    # auto never resolves to grouplist (unsafe uncapped)
     assert uncapped.resolved_method in ("join", "prefix")
-    # ...but explicitly requesting grouplist uncapped would
-    # collect_list unboundedly, so it must fall back to join
-    with pytest.warns(UserWarning, match="falling back to method='join'"):
-        forced = NGramJaccardPairsMapper(
-            "doc_id",
-            threshold=0.01,
-            max_shingle_freq=None,
-            method="grouplist",
-        )
-    assert forced.method == "join"
 
 
 def test_lsh_topk_recall(spark, sf_dir):
@@ -807,19 +857,16 @@ def test_ngram_jaccard_prefix_fp_boundary_pair(spark):
         [(0, x_words), (1, y_words)],
         "doc_id: bigint, words: array<string>",
     )
-    out = (
-        NGramJaccardPairsMapper(
-            "doc_id", shingle_size=1, threshold=0.56, method="prefix"
-        )
-        .map(df)
-        .collect()
-    )
+    m = NGramJaccardPairsMapper("doc_id", shingle_size=1, threshold=0.56)
+    m.AUTO_SKEW_THRESHOLD = 0.0  # the probe picks prefix
+    out = m.map(df).collect()
+    assert m.resolved_method == "prefix"
     assert [(r.id_a, r.id_b) for r in out] == [(0, 1)]
     assert out[0].jaccard == pytest.approx(0.56, abs=1e-9)
 
 
 def test_ngram_jaccard_auto_method_routing(spark):
-    """method='auto' (the default) probes the shingle fan-out skew
+    """The plan choice probes the shingle fan-out skew
     ratio: a Zipfian corpus (hub shingles + rare tail — every real
     text corpus) must route to PPJoin 'prefix'; a uniform tiny-vocab
     corpus (every shingle equally hot, nothing for prefixes to
@@ -836,7 +883,6 @@ def test_ngram_jaccard_auto_method_routing(spark):
         zipf_rows, "doc_id: bigint, words: array<string>"
     )
     m = NGramJaccardPairsMapper("doc_id", threshold=0.9)
-    assert m.method == "auto"
     assert m._choose_method(zipf) == "prefix"
 
     vocab = [f"v{i}" for i in range(50)]
@@ -853,7 +899,7 @@ def test_ngram_jaccard_auto_method_routing(spark):
     assert m.resolved_method == "join"
     # the memo is keyed on the input plan, not the instance: reusing
     # the SAME mapper on the Zipfian corpus re-probes and flips the
-    # strategy (a stale instance-level memo would keep 'join')
+    # plan (a stale instance-level memo would keep 'join')
     m.map(zipf)
     assert m.resolved_method == "prefix"
     # and returning to the uniform corpus hits the memo (no re-probe
@@ -1040,9 +1086,7 @@ def test_semantic_pairs_match_bruteforce_within_cells(spark):
     # clustered corpus: cell restriction == global exact pair set
     exact = {
         (r.id_a, r.id_b)
-        for r in EmbeddingNearDupPairsMapper(
-            threshold=thr, strategy="broadcast"
-        ).map(df).collect()
+        for r in EmbeddingNearDupPairsMapper(threshold=thr).map(df).collect()
     }
     assert set(got) == exact
 

@@ -131,20 +131,22 @@ def test_ann_plan_construction_runs_no_jobs(spark, sf_dir):
         HyperplaneLSHTopK,
     )
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    before = _jobs_submitted(spark)
-    CosineTopK(k=5, queries_filter="vec_id < 20", strategy="exact_join").map(df)
-    EmbeddingNearDupPairsMapper(threshold=0.35, dims=64, strategy="lsh").map(df)
-    HyperplaneLSHTopK(k=5, num_bits=6, num_tables=4, dims=64).map(df)
-    # auto strategy reads Catalyst stats only — still no job (the
-    # broadcast tier would legitimately collect at build time, so pin
-    # the estimate below the corpus to route auto -> lsh)
     import pytest
 
-    auto = EmbeddingNearDupPairsMapper(threshold=0.35, dims=64)
-    auto.BROADCAST_LIMIT_BYTES = 0
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    # the size router reads Catalyst stats only (file-backed scan:
+    # the estimate is known).  The broadcast tiers would legitimately
+    # collect at build time, so a byte cap of 0 routes CosineTopK to
+    # its exact join and the near-dup mapper to LSH
+    exact = CosineTopK(k=5, queries_filter="vec_id < 20", force_exact=True)
+    exact.BROADCAST_LIMIT_BYTES = 0
+    lsh = EmbeddingNearDupPairsMapper(threshold=0.35, dims=64)
+    lsh.BROADCAST_LIMIT_BYTES = 0
+    before = _jobs_submitted(spark)
+    exact.map(df)
     with pytest.warns(UserWarning, match="approximate LSH"):
-        auto.map(df)
+        lsh.map(df)
+    HyperplaneLSHTopK(k=5, num_bits=6, num_tables=4, dims=64).map(df)
     assert _jobs_submitted(spark) == before
 
 
@@ -266,33 +268,34 @@ def test_text_stats_exchange_budget(spark, sf_dir):
 
 
 def test_ngram_cap_adds_no_extra_exchange(spark, sf_dir):
-    """grouplist path: the hub-shingle frequency cap is a count window
-    over the same hashpartitioning(__s__) the pair-generation groupBy
-    needs — exactly two exchanges total (shingle key + final pair key).
-    A third exchange means the cap's frequency filter stopped reusing
-    the shingle partitioning.  The default join path must stay a plain
-    equi-join: no CartesianProduct, no BroadcastNestedLoopJoin."""
+    """join plan: the hub-shingle frequency cap is a count window over
+    the same hashpartitioning(__s__) the self-join needs — the capped
+    plan has exactly the uncapped plan's three exchanges (the shingle
+    key under each join side + the final pair key).  A fourth means
+    the cap's frequency filter stopped reusing the shingle
+    partitioning.  The join must stay a plain equi-join: no
+    CartesianProduct, no BroadcastNestedLoopJoin."""
     from smashed_spark.functions.dedup import NGramJaccardPairsMapper
 
     df = load(spark, sf_dir, "documents").withColumn(
         "words", F.split("text", " ")
     )
-    grouplist = _explain(
-        NGramJaccardPairsMapper(
-            "doc_id",
-            threshold=0.2,
-            max_shingle_freq=1024,
-            method="grouplist",
-        ).map(df)
+
+    def join_plan(cap):
+        m = NGramJaccardPairsMapper(
+            "doc_id", threshold=0.2, max_shingle_freq=cap
+        )
+        m.AUTO_SKEW_THRESHOLD = float("inf")  # the probe picks join
+        plan = _explain(m.map(df))
+        assert m.resolved_method == "join"
+        return plan
+
+    capped, uncapped = join_plan(1024), join_plan(None)
+    assert capped.count("Exchange (") == uncapped.count("Exchange (") == 3, (
+        capped
     )
-    assert grouplist.count("Exchange (") == 2, grouplist
-    join = _explain(
-        NGramJaccardPairsMapper(
-            "doc_id", threshold=0.2, max_shingle_freq=1024
-        ).map(df)
-    )
-    assert "CartesianProduct" not in join, join
-    assert "BroadcastNestedLoopJoin" not in join, join
+    assert "CartesianProduct" not in capped, capped
+    assert "BroadcastNestedLoopJoin" not in capped, capped
 
 
 def test_curation_chain_single_exchange(spark, sf_dir):

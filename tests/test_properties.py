@@ -94,11 +94,15 @@ def test_mask_range_roundtrip_property(spark):
 
 
 def test_ngram_jaccard_methods_agree_on_random_corpora(spark):
-    """grouplist (windowed hub cap, shared shuffle) and join (streaming
-    two-sided) must produce identical pair sets — including under a
-    binding frequency cap — on seeded-random corpora."""
+    """The join and prefix plans must both produce the pair set of a
+    pure-Python brute-force Jaccard — including under a binding
+    frequency cap — on seeded-random corpora.  Each plan is reached by
+    setting the probe's skew threshold (0 routes to prefix, inf to
+    join)."""
     import random
+    from collections import Counter
 
+    import pytest
     from pyspark.sql import functions as F
 
     from smashed_spark.functions.dedup import NGramJaccardPairsMapper
@@ -119,30 +123,46 @@ def test_ngram_jaccard_methods_agree_on_random_corpora(spark):
     df = spark.createDataFrame(rows, "doc_id: bigint, text: string").withColumn(
         "words", F.split("text", " ")
     )
+
+    def brute(threshold, max_shingle_freq, n=3):
+        # distinct word 3-grams per doc ("".split(" ") is [""]: too
+        # short for a shingle).  Hub shingles over the cap leave the
+        # intersection but not the set sizes, as in the operator
+        sets = {}
+        for doc_id, text in rows:
+            w = text.split(" ")
+            sets[doc_id] = {
+                " ".join(w[k:k + n]) for k in range(len(w) - n + 1)
+            }
+        freq = Counter(s for sh in sets.values() for s in sh)
+        out = {}
+        ids = sorted(sets)
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                inter = sum(
+                    1
+                    for s in sets[a] & sets[b]
+                    if max_shingle_freq is None or freq[s] <= max_shingle_freq
+                )
+                if inter:
+                    jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+                    if round(jac, 6) >= threshold:
+                        out[(a, b)] = jac
+        return out
+
     for cap in (None, 8):
         kw = dict(threshold=0.15, max_shingle_freq=cap)
-        if cap is None:
-            import pytest
-
-            # the deliberate grouplist->join fallback warns; assert it
-            # rather than letting it leak into the run's warning summary
-            with pytest.warns(UserWarning, match="falling back"):
-                a = NGramJaccardPairsMapper(
-                    "doc_id", method="grouplist", **kw
-                )
-        else:
-            a = NGramJaccardPairsMapper("doc_id", method="grouplist", **kw)
-        b = NGramJaccardPairsMapper("doc_id", method="join", **kw)
-        c = NGramJaccardPairsMapper("doc_id", method="prefix", **kw)
-        ra = sorted(map(tuple, a.map(df).collect()))
-        rb = sorted(map(tuple, b.map(df).collect()))
-        rc = sorted(map(tuple, c.map(df).collect()))
-        assert ra == rb, (cap, ra[:5], rb[:5])
-        # PPJoin prefix filtering is exact: identical output incl.
-        # under a binding cap (prefix lengths computed on capped sets)
-        assert rb == rc, (cap, rb[:5], rc[:5])
+        want = brute(**kw)
         if cap == 8:
-            assert ra, "cap test corpus produced no pairs at all"
+            assert want, "cap test corpus produced no pairs at all"
+        for plan, skew in (("join", float("inf")), ("prefix", 0.0)):
+            m = NGramJaccardPairsMapper("doc_id", **kw)
+            m.AUTO_SKEW_THRESHOLD = skew
+            got = {(r.id_a, r.id_b): r.jaccard for r in m.map(df).collect()}
+            assert m.resolved_method == plan
+            assert got.keys() == want.keys(), (cap, plan)
+            for pair, jac in want.items():
+                assert got[pair] == pytest.approx(jac, abs=1e-6), pair
 
 
 def test_pii_redaction_is_idempotent(spark):

@@ -103,7 +103,7 @@ def test_decontaminate_drop_is_anti_join(spark):
 
 def test_decontaminate_join_strategy_matches_broadcast(spark, sf_dir):
     """The shuffled-join path (huge-benchmark tier) must agree with the
-    broadcast path row-for-row, and auto-selection must pick it when
+    broadcast path row-for-row, and the size router must pick it when
     the benchmark's plan-time size exceeds the broadcast cap."""
     docs = _docs(spark)
     bench = docs.filter(F.col("doc_id") == 1)
@@ -111,9 +111,10 @@ def test_decontaminate_join_strategy_matches_broadcast(spark, sf_dir):
         (r.doc_id, r.contaminated, r.n_overlap)
         for r in m.map(docs).collect()
     )
-    assert rows(
-        DecontaminateMapper(bench, shingle_size=8, strategy="join")
-    ) == rows(DecontaminateMapper(bench, shingle_size=8))
+    joined = DecontaminateMapper(bench, shingle_size=8)
+    joined.BROADCAST_LIMIT_BYTES = joined.BROADCAST_LIMIT_ROWS = 0
+    assert joined._resolve_strategy() == "join"
+    assert rows(joined) == rows(DecontaminateMapper(bench, shingle_size=8))
 
     big = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -123,8 +124,6 @@ def test_decontaminate_join_strategy_matches_broadcast(spark, sf_dir):
     auto.BROADCAST_LIMIT_BYTES = 0  # file-backed: estimate is known
     assert auto._resolve_strategy() == "join"
     assert DecontaminateMapper(bench)._resolve_strategy() == "broadcast"
-    with pytest.raises(ValueError, match="unknown strategy"):
-        DecontaminateMapper(bench, strategy="bloom")
 
 
 def test_decontaminate_min_overlap_threshold(spark):
@@ -255,11 +254,13 @@ def test_semantic_decontaminate_benchmark_cap(spark):
 
     corpus = _emb(spark, [(1, [1.0, 0.0])])
     bench = _emb(spark, [(i, [1.0, 0.0]) for i in range(20)])
-    with pytest.raises(ValueError, match="max_benchmark_rows"):
-        SemanticDecontaminateMapper(
-            bench, max_benchmark_rows=10
-        ).map(corpus)
+    over = SemanticDecontaminateMapper(bench)
+    over.MAX_BENCHMARK_ROWS = 10
+    with pytest.raises(ValueError, match="MAX_BENCHMARK_ROWS=10"):
+        over.map(corpus)
     # exactly-at-cap passes
-    SemanticDecontaminateMapper(bench, max_benchmark_rows=20).map(corpus)
+    at_cap = SemanticDecontaminateMapper(bench)
+    at_cap.MAX_BENCHMARK_ROWS = 20
+    at_cap.map(corpus)
     with pytest.raises(ValueError, match="unknown mode"):
         SemanticDecontaminateMapper(bench, mode="quarantine")

@@ -1385,10 +1385,10 @@ nothing superlinear anywhere in the file.
 ## Round-12 streaming_ingest_fuzzy job census (r11 VERDICT ask #6)
 
 The gate is the bench's largest line (11.2 s at sf0.1).  A per-job
-census (tools/query_census.py streaming_ingest_fuzzy — monkeypatched
-timers on count / collect / localCheckpoint / write.parquet
-attributing each job to its smashed_spark call site, warm lap first,
-run at the bench shape)
+census (monkeypatched timers on count / collect / localCheckpoint /
+write.parquet attributing each job to its smashed_spark call site,
+warm lap first, run at the bench shape; `perfbench/run.py --trace 1`
+now gives the same per-layer job attribution without patching)
 decomposes the warm 11.3 s wall into:
 
 * 6.2 s — the three per-batch `localCheckpoint`s (ingest.py:321),

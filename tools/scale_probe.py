@@ -284,7 +284,7 @@ DEEP_TABLES = {
 
 
 def _ngram_choice(spark, sf_dir: str) -> str:
-    """What the gate mapper's method='auto' router picks on this
+    """What the gate mapper's join-or-prefix probe picks on this
     corpus (gate parameters) — recorded per scale so BENCH_SCALE shows
     the prefix/join routing flipping as the blown-up corpus gets more
     Zipfian."""
