@@ -79,17 +79,7 @@ def main() -> None:
     fresh = docs.filter(F.col("doc_id") % 2 == 1)
     day2 = reposts.unionByName(near).unionByName(fresh)
 
-    # a Bloom sketch of the digest index (maintained by OR-merging a
-    # per-day fit as each day commits) pre-splits the batch so only
-    # suspected reposts run the anti-join — the big win is backfill
-    # "batches" too large to broadcast, where the plain join would
-    # exchange every row; output is identical (test-pinned)
-    from smashed_spark.functions.bloom import fit_bloom
-
-    digest_bloom = fit_bloom(digest_index, "digest", 1 << 14, 4)
-    kept2 = dedup_incremental(            # kills exact reposts
-        day2, digest_index, bloom=digest_bloom
-    )
+    kept2 = dedup_incremental(day2, digest_index)  # kills exact reposts
     kept2 = dedup_incremental_fuzzy(               # kills near-reposts
         kept2.withColumn("words", F.split("text", " ")), band_index
     )

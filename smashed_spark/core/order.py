@@ -1,4 +1,4 @@
-"""Ordering utilities.
+"""Ordering utilities and the key contract.
 
 The reference's datasets are implicitly ordered sequences, and several
 operators are order-*sensitive* (SURVEY.md §2.5, risk register §7.1):
@@ -16,13 +16,25 @@ cumulative-offset map (one count per partition, i.e. KB-sized even with
 100k partitions).  When the data has a natural total order (a key
 column), prefer ``sort_by`` + that key directly; the synthetic index is
 only for "encounter order" parity with the reference.
+
+Key contract
+------------
+Operators that order, join back or decide per key need a key that is
+non-NULL and, usually, unique.  :func:`null_key_guard` and
+:func:`unique_key_guard` raise in-plan when it is not, with one message
+shape everywhere.  Each wraps a column the CALLER KEEPS in its output:
+Catalyst prunes a guard together with the column it rides.  The
+uniqueness guard is a count window over the key, so it rides an
+exchange on the key that the caller's join or window pays anyway.
+Nest the NULL guard outside the uniqueness guard so a NULL key raises
+as NULL first.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional, Sequence, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -103,3 +115,58 @@ def with_order_key(
     """
     w = Window.orderBy(*[F.col(c) for c in order_by])
     return df.withColumn(col_name, F.row_number().over(w) - F.lit(1))
+
+
+def _key_list(keys: Union[str, Sequence[str]]) -> list:
+    return [keys] if isinstance(keys, str) else list(keys)
+
+
+def null_key_guard(
+    value: Column, keys: Union[str, Sequence[str]], who: str, name: str
+) -> Column:
+    """``value``, raising in-plan where any of ``keys`` is NULL.
+    ``who`` prefixes the message (the public verb) and ``name`` names
+    the key to the user (``"order_by 'doc_id'"``)."""
+    null = F.lit(False)
+    for k in _key_list(keys):
+        null = null | F.col(k).isNull()
+    return F.when(
+        null,
+        F.raise_error(
+            F.lit(
+                f"{who}: {name} has a NULL value; a NULL key "
+                "cannot be totally ordered, matched or hashed "
+                "deterministically. Filter or fill the key column."
+            )
+        ),
+    ).otherwise(value)
+
+
+def unique_key_guard(
+    value: Column,
+    keys: Union[str, Sequence[str]],
+    who: str,
+    name: str,
+    expected: int = 1,
+) -> Column:
+    """``value``, raising in-plan where a key value has other than
+    ``expected`` rows (a count window over ``keys``; ``expected`` is
+    more than 1 when each key legitimately owns several rows, e.g. one
+    per MinHash band)."""
+    cols = _key_list(keys)
+    n = F.count(F.lit(1)).over(Window.partitionBy(*cols))
+    return F.when(n == F.lit(expected), value).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"{who}: {name} is not unique (value "),
+                F.concat_ws("/", *[F.col(k).cast("string") for k in cols]),
+                F.lit(" appears "),
+                (n / F.lit(expected)).cast("int").cast("string"),
+                F.lit(
+                    " times); duplicate keys fan a join out or merge "
+                    "distinct rows into one decision. Dedup or re-key "
+                    "upstream."
+                ),
+            )
+        )
+    )

@@ -1,25 +1,25 @@
-"""Deterministic, md5-portable Bloom filter for membership
-prefiltering — the missing cheap tier between "no index" and "exact
-anti-join against the index".  The reference has no membership
+"""Deterministic, md5-portable Bloom filter for membership flags —
+the cheap approximate tier between "no index" and "exact anti-join
+against the index".  The reference has no membership
 surface (additive, SURVEY.md §2.10); Spark's own
 ``bloom_filter_agg`` / ``might_contain`` exist only as unregistered
 internal expressions (runtime-filter machinery), so this is built
 from public DataFrame algebra.
 
-Where it pays at 100 TB: :func:`~smashed_spark.functions.dedup.
-dedup_incremental`'s plain anti-join exchanges the WHOLE batch on the
-digest key.  For a backfill "batch" of 10^9 rows where only ~1% are
-actually duplicates, that is a 10^9-row shuffle to drop 10^7 rows.
-A Bloom sketch of the index (fit once, merged incrementally at
-compaction time) splits the batch IN-PLAN into definitely-new rows
-(bit test says no — they skip the join entirely, staying narrow) and
-suspected-dup rows (true dups + the documented false-positive rate),
-so only suspected rows cross the exchange.  False positives only
-cost an exact confirm; false negatives are IMPOSSIBLE for keys the
-sketch was actually fit on — which is the one operational contract:
-the sketch must cover every key in the index it guards (fit it from
-the index, or OR together per-batch sketches as batches commit; a
-STALE sketch silently re-admits duplicates).
+Where it pays at 100 TB: a membership flag against an index far too
+large to join per row — a sketch of a 10^8-key index at 1% FPR is
+128 MiB and rides the probe UDF's closure, so flagging a batch
+costs one narrow pass and no exchange (sample_mix flags its
+survivors against the history digest index this way).  The flag is
+a MAYBE: false positives come at the documented rate, and false
+negatives are IMPOSSIBLE for keys the sketch was actually fit on —
+which is the one operational contract: the sketch must cover every
+key of the index it stands for (fit it from the index, or OR
+together per-batch sketches as batches commit; a STALE sketch
+answers "new" for the keys it missed).  It is not a dedup
+prefilter: the incremental dedup tiers decide by the exact join
+alone, which on one node was faster than a Bloom-split batch in 7
+of the 8 BENCH_SCALE ``bloom_backfill`` cells.
 
 Determinism + portability: positions derive from ONE md5 per key via
 Kirsch-Mitzenmacher double hashing — ``h1 = md5[0:8]``, ``h2 =

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.mapper import SparkMapper
+from ..core.order import null_key_guard, unique_key_guard
 from ..core.sizing import fits
 from .hashing import (
     band_keys,
@@ -46,6 +47,7 @@ from .hashing import (
     minhash_signature,
     simhash,
     unit_rows,
+    vector_dims,
     vector_dot,
     vector_norm,
     word_shingles,
@@ -992,9 +994,13 @@ class EmbeddingNearDupPairsMapper(SparkMapper):
         product anywhere in the plan."""
         from .similarity import exact_cosine_scores, hyperplane_buckets
 
-        dims = self.dims or len(
-            df.select(self.vector_field).limit(1).collect()[0][0]
-        )
+        dims = vector_dims(df, self.vector_field, self.dims)
+        if dims is None:  # empty corpus
+            return df.select(
+                F.col(self.id_field).alias("id_a"),
+                F.col(self.id_field).alias("id_b"),
+                F.lit(0.0).alias("sim"),
+            ).limit(0)
         vec = F.transform(
             F.col(self.vector_field), lambda x: x.cast("double")
         )
@@ -1623,6 +1629,34 @@ def normalize_for_dedup(col: Column) -> Column:
     return F.trim(x)
 
 
+def _check_probe_mode(broadcast_probe) -> None:
+    # a typo'd "auto"/"false"/"none" must not silently coerce truthy
+    # and force an unbounded broadcast
+    if broadcast_probe not in (True, False):
+        raise ValueError(
+            f"broadcast_probe must be True or False; got {broadcast_probe!r}"
+        )
+
+
+def _probe_hits(index: DataFrame, keys: DataFrame) -> DataFrame:
+    """The distinct ``index`` rows the batch's ``keys`` hit, hinted for
+    broadcast: the batch's distinct keys are broadcast INTO an inner
+    probe of the index, so the index crosses the plan as a scan only,
+    and the batch-sized hit set is broadcast into the caller's join."""
+    return F.broadcast(
+        index.join(F.broadcast(keys.distinct()), keys.columns).distinct()
+    )
+
+
+def _join_survivors(
+    df: DataFrame, keep_ids: DataFrame, order_by: str
+) -> DataFrame:
+    """The rows of ``df`` whose ``order_by`` is in ``keep_ids.__id__``."""
+    return df.join(
+        keep_ids.withColumnRenamed("__id__", order_by), order_by
+    ).select(*df.columns)
+
+
 def dedup_incremental(
     new_df: DataFrame,
     seen_digests: DataFrame,
@@ -1630,7 +1664,6 @@ def dedup_incremental(
     order_by: str = "doc_id",
     digest_field: str = "digest",
     broadcast_probe: bool = False,
-    bloom=None,
 ) -> DataFrame:
     """Append-only ingestion dedup: drop rows of ``new_df`` whose text
     digest already exists in ``seen_digests`` (one ``digest`` column —
@@ -1665,40 +1698,14 @@ def dedup_incremental(
     memory — for that regime the plain join's batch+index exchange is
     the correct price.
 
-    ``bloom=`` (a :class:`~smashed_spark.functions.bloom.
-    BloomFilterSketch` fit over the INDEX's digest column) removes
-    definitely-new keys from the index check.  In PROBE mode it
-    filters the slim distinct-digest probe set — one Arrow membership
-    pass over <= |distinct digests| rows, smaller broadcast, wide
-    rows untouched: strictly cheaper, use it freely.  In PLAIN mode
-    (the unbroadcastable backfill) it splits the batch so only
-    suspected dups (true dups + FPR) cross the anti-join exchange.
-    The split is a CLUSTER-ONLY optimization: its win is network
-    shuffle bytes (~row width x new-row count), its costs are the
-    membership UDF plus a second evaluation of the batch plan
-    (checkpoint an expensive batch first) — and on a single node,
-    where "shuffles" are memory copies, the costs win at every row
-    width (measured honestly in BENCH_SCALE ``bloom_backfill`` /
-    ``bloom_backfill_wide``).  On a network-bound cluster the saved
-    bytes are the dominant term the probe cannot see.  OPERATIONAL CONTRACT (loud): the sketch
-    must cover every digest in ``seen_digests`` — fit it from the
-    index, or OR per-batch sketches together as batches commit; a
-    stale sketch silently re-admits duplicates against the missing
-    keys.  False positives only cost exact confirms.
-
-    Determinism: ``order_by`` NULLs raise in-plan (a NULL key cannot
-    be totally ordered); ``order_by`` ties — identical text by
-    construction, since tied rows share a digest (epoch-oversampled
-    mixes feed exactly that) — are pinned by an xxhash64 content
-    tiebreak over all (non-map) columns, so first-wins is a pure
-    function of the data either way.
+    Determinism: ``order_by`` NULLs raise in-plan
+    (:func:`~smashed_spark.core.order.null_key_guard`); ``order_by``
+    ties — identical text by construction, since tied rows share a
+    digest (epoch-oversampled mixes feed exactly that) — are pinned
+    by an xxhash64 content tiebreak over all (non-map) columns, so
+    first-wins is a pure function of the data either way.
     """
-    if broadcast_probe not in (True, False):
-        # a typo'd "auto"/"false"/"none" must not silently coerce
-        # truthy and force an unbounded broadcast
-        raise ValueError(
-            f"broadcast_probe must be True or False; got {broadcast_probe!r}"
-        )
+    _check_probe_mode(broadcast_probe)
     digest = F.md5(F.col(text_field))
     keyed = new_df.withColumn(digest_field, digest)
     # no .distinct() on the index side: LEFT ANTI is semantically
@@ -1706,69 +1713,10 @@ def dedup_incremental(
     # point a distinct here is a ~32 GB full-index exchange per batch
     # for nothing (the streaming-ingest path reads this index every
     # micro-batch)
+    index = seen_digests.select(digest_field)
     if broadcast_probe:
-        probe = keyed.select(digest_field).distinct()
-        if bloom is not None:
-            # probe-mode bloom: filter the SLIM distinct-digest probe
-            # set, not the wide batch — a bloom-negative digest cannot
-            # be a hit, so dropping it is exact, the Arrow membership
-            # UDF runs ONCE over <= |distinct digests| rows, the
-            # broadcast shrinks, and the wide rows are never split or
-            # re-unioned.  Strictly cheaper than the plain-mode split
-            # whenever probe mode applies.
-            from .bloom import with_bloom_flag
-
-            probe = (
-                with_bloom_flag(
-                    probe, digest_field, bloom, "__bloom_maybe__"
-                )
-                .filter(F.coalesce(F.col("__bloom_maybe__"), F.lit(False)))
-                .drop("__bloom_maybe__")
-            )
-        hits = (
-            seen_digests.select(digest_field)
-            .join(F.broadcast(probe), digest_field)
-            .distinct()
-        )
-        fresh = keyed.join(F.broadcast(hits), digest_field, "left_anti")
-    elif bloom is not None:
-        # plain-mode bloom: split the batch so only suspected dups
-        # cross the anti-join exchange.  TWO costs to weigh, both
-        # measured in BENCH_SCALE bloom_backfill: (a) the filter-split
-        # evaluates the batch plan twice — checkpoint an expensive
-        # unmaterialized batch before calling; (b) the crossover
-        # depends on ROW WIDTH: the exchange saved is ~width x rows
-        # while the membership UDF costs ~rows, so kilobyte-narrow
-        # rows can come out slower (the probe's finding) while the
-        # ~100 KB documents this path exists for shift it decisively
-        # toward the bloom.
-        from .bloom import with_bloom_flag
-
-        flagged = with_bloom_flag(
-            keyed, digest_field, bloom, "__bloom_maybe__"
-        )
-        # digest is md5(text): NULL only for NULL text, whose digest
-        # can't be in any index — treat NULL flags as definitely-new
-        maybe = F.coalesce(F.col("__bloom_maybe__"), F.lit(False))
-        negatives = flagged.filter(~maybe).drop("__bloom_maybe__")
-        suspects = flagged.filter(maybe).drop("__bloom_maybe__")
-        fresh = suspects.join(
-            seen_digests.select(digest_field),
-            digest_field,
-            "left_anti",
-        )
-        # definitely-new rows rejoin AFTER the index check and BEFORE
-        # the batch-internal first-wins window: two in-batch copies of
-        # a NEW doc are both bloom-negative (the verdict is a pure
-        # function of the digest), and the window below is what dedups
-        # them — so it must see the union
-        fresh = fresh.unionByName(negatives)
-    else:
-        fresh = keyed.join(
-            seen_digests.select(digest_field),
-            digest_field,
-            "left_anti",
-        )
+        index = _probe_hits(index, keyed.select(digest_field))
+    fresh = keyed.join(index, digest_field, "left_anti")
     # batch-internal dedup: first row (by order_by) per digest within
     # the new batch — row_number()==1 compiles to a WindowGroupLimit
     # (partial per-group limit below the exchange).  Totality of the
@@ -1786,17 +1734,10 @@ def dedup_incremental(
 
     from .hashing import contains_map_type
 
-    guarded_order = F.when(
-        F.col(order_by).isNull(),
-        F.raise_error(
-            F.lit(
-                f"dedup_incremental: order_by {order_by!r} has a "
-                "NULL value; a NULL key cannot be totally ordered "
-                "and first-wins would be nondeterministic. Filter "
-                "or fill the key column."
-            )
-        ),
-    ).otherwise(F.col(order_by))
+    guarded_order = null_key_guard(
+        F.col(order_by), order_by, "dedup_incremental",
+        f"order_by {order_by!r}",
+    )
     # hash every hashable column EXCEPT text/digest: tied rows share a
     # digest, hence identical text — re-hashing ~100 KB of document
     # per row buys nothing.  xxhash64 rejects maps at ANY nesting
@@ -1971,12 +1912,7 @@ def dedup_incremental_fuzzy(
     ``with_minhash_bands(survivors)`` extends the index without
     re-shingling.
     """
-    if broadcast_probe not in (True, False):
-        # a typo'd "auto"/"false"/"none" must not silently coerce
-        # truthy and force an unbounded broadcast
-        raise ValueError(
-            f"broadcast_probe must be True or False; got {broadcast_probe!r}"
-        )
+    _check_probe_mode(broadcast_probe)
     if signature_field not in new_df.columns:
         keyed = MinHashMapper(
             words_field,
@@ -1989,17 +1925,10 @@ def dedup_incremental_fuzzy(
         keyed = new_df
     from .hashing import band_keys
 
-    null_guard = F.when(
-        F.col(order_by).isNull(),
-        F.raise_error(
-            F.lit(
-                f"dedup_incremental_fuzzy: order_by {order_by!r} has "
-                "a NULL value; a NULL key cannot be totally ordered "
-                "and first-wins would be nondeterministic. Filter or "
-                "fill the key column."
-            )
-        ),
-    ).otherwise(F.col(order_by))
+    null_guard = null_key_guard(
+        F.col(order_by), order_by, "dedup_incremental_fuzzy",
+        f"order_by {order_by!r}",
+    )
     from pyspark.sql.window import Window
 
     doc_bands = keyed.select(
@@ -2017,7 +1946,9 @@ def dedup_incremental_fuzzy(
     # order keys — byte-identical docs included): counting post-join
     # rows would break under duplicate INDEX rows (they fan the join),
     # and counting post-join distinct slots would go blind on
-    # byte-identical duplicate ids (identical band keys collapse).
+    # byte-identical duplicate ids (identical band keys collapse).  It
+    # rides the ``__ok__`` marker, which the verdict filters below
+    # carry, so the verify path's candidate branch prunes it.
     # Cost: the per-id exchange this window needs is the same one the
     # post-join per-id verdict window needs — a broadcast index join
     # (small index via Catalyst, or any index via broadcast_probe)
@@ -2026,7 +1957,11 @@ def dedup_incremental_fuzzy(
     # index pays one extra exchange — the regime broadcast_probe
     # exists for.
     doc_bands = doc_bands.withColumn(
-        "__nb__", F.count(F.lit(1)).over(Window.partitionBy("__id__"))
+        "__ok__",
+        unique_key_guard(
+            F.lit(True), "__id__", "dedup_incremental_fuzzy",
+            f"order_by {order_by!r}", expected=bands,
+        ),
     )
     # no .distinct() on the index side: at the 100 TB design point
     # that is a ~144 GB full-band-index exchange per ingestion batch.
@@ -2035,22 +1970,13 @@ def dedup_incremental_fuzzy(
     # construction: every post-join aggregate is duplicate-TOLERANT
     # (a dup fans the left join out, but __dochit__ (max), __min__
     # (min) and __later__ (max of a per-row predicate) are idempotent
-    # under row duplication, and __nb__ was counted before the join).
+    # under row duplication, and the guard counted before the join).
+    index = seen_bands.select("band", "key")
     if broadcast_probe:
-        probe = doc_bands.select("band", "key").distinct()
-        index = F.broadcast(
-            seen_bands.select("band", "key")
-            .join(F.broadcast(probe), ["band", "key"])
-            .distinct()
-            .withColumn("__hit__", F.lit(1))
-        )
-    else:
-        index = seen_bands.select("band", "key").withColumn(
-            "__hit__", F.lit(1)
-        )
-    marked = doc_bands.join(index, ["band", "key"], "left").withColumn(
-        "__hit__", F.coalesce(F.col("__hit__"), F.lit(0))
-    )
+        index = _probe_hits(index, doc_bands.select("band", "key"))
+    marked = doc_bands.join(
+        index.withColumn("__hit__", F.lit(1)), ["band", "key"], "left"
+    ).withColumn("__hit__", F.coalesce(F.col("__hit__"), F.lit(0)))
     # per-doc history verdict first, THEN per-bucket first-wins min
     # over the docs history didn't already claim
     per_id = Window.partitionBy("__id__")
@@ -2067,42 +1993,12 @@ def dedup_incremental_fuzzy(
         F.max(
             (F.col("__id__") > F.col("__min__")).cast("int")
         ).alias("__later__"),
-        F.max("__nb__").alias("__nb__"),
+        F.min("__ok__").alias("__ok__"),
     )
-
-    def _guarded(cond: Column) -> Column:
-        # each doc explodes into exactly `bands` band rows BEFORE the
-        # indicator join (where __nb__ is counted), so a multiple of
-        # that means duplicate order_by values: two docs merged into
-        # one decision, and a survivors join that would fan out.  The
-        # guard roots the filter expression, so it evaluates for every
-        # group — loud raise, exact multiplicity in the message.
-        return F.when(
-            F.col("__nb__") == F.lit(bands), cond
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"dedup_incremental_fuzzy: order_by "
-                        f"{order_by!r} is not unique (value "
-                    ),
-                    F.col("__id__").cast("string"),
-                    F.lit(" appears "),
-                    (F.col("__nb__") / F.lit(bands)).cast("int").cast(
-                        "string"
-                    ),
-                    F.lit(
-                        " times); duplicate keys merge distinct docs "
-                        "into one dedup decision and fan the "
-                        "survivors join out. Dedup or re-key upstream."
-                    ),
-                )
-            ).cast("boolean")
-        )
 
     if verify_threshold is None:
         keep_ids = agg.filter(
-            _guarded((F.col("__h__") == 0) & (F.col("__later__") == 0))
+            F.col("__ok__") & (F.col("__h__") == 0) & (F.col("__later__") == 0)
         ).select("__id__")
     else:
         if words_field not in keyed.columns:
@@ -2115,7 +2011,7 @@ def dedup_incremental_fuzzy(
         # doc) per colliding band bucket — exactly the collisions the
         # greedy pass would drop on.  Verify with real Jaccard; only
         # confirmed pairs drop.
-        hit_free = agg.filter(_guarded(F.col("__h__") == 0)).select(
+        hit_free = agg.filter(F.col("__ok__") & (F.col("__h__") == 0)).select(
             "__id__"
         )
         cand = (
@@ -2142,9 +2038,7 @@ def dedup_incremental_fuzzy(
             F.col("id_b").alias("__id__")
         ).distinct()
         keep_ids = hit_free.join(dropped, "__id__", "left_anti")
-    return keyed.join(
-        keep_ids.withColumnRenamed("__id__", order_by), order_by
-    ).select(*keyed.columns)
+    return _join_survivors(keyed, keep_ids, order_by)
 
 
 def with_semantic_cells(
@@ -2247,8 +2141,6 @@ def dedup_incremental_semantic(
     """
     import numpy as np
 
-    from pyspark.sql.window import Window
-
     from ..core.ship import ensure_shipped
     from .similarity import assign_cells
 
@@ -2259,19 +2151,11 @@ def dedup_incremental_semantic(
             "one with fit_ivf_index and persist it"
         )
     cents = unit_rows(mat)
-    null_guard = F.when(
-        F.col(order_by).isNull(),
-        F.raise_error(
-            F.lit(
-                f"dedup_incremental_semantic: order_by {order_by!r} "
-                "has a NULL value; a NULL key cannot be totally "
-                "ordered and first-wins would be nondeterministic. "
-                "Filter or fill the key column."
-            )
-        ),
-    ).otherwise(F.col(order_by))
     base = new_df.select(
-        null_guard.alias("__id__"),
+        null_key_guard(
+            F.col(order_by), order_by, "dedup_incremental_semantic",
+            f"order_by {order_by!r}",
+        ).alias("__id__"),
         F.transform(
             F.col(vector_field), lambda x: x.cast("double")
         ).alias("__v__"),
@@ -2357,32 +2241,14 @@ def dedup_incremental_semantic(
         cell_verdicts, schema=f"__id__ {id_type}, __keep__ int"
     )
     # duplicate order keys fan the survivors join: raise via a count
-    # window over the BATCH-SIZED flags (same pattern as the fuzzy
-    # guard; cross-cell duplicates are visible here where the per-cell
-    # UDF cannot see them)
-    kcount = F.count(F.lit(1)).over(Window.partitionBy("__id__"))
+    # window over the BATCH-SIZED flags (cross-cell duplicates are
+    # visible here where the per-cell UDF cannot see them)
     flags = flags.withColumn(
         "__keep__",
-        F.when(kcount == 1, F.col("__keep__")).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"dedup_incremental_semantic: order_by "
-                        f"{order_by!r} is not unique (value "
-                    ),
-                    F.col("__id__").cast("string"),
-                    F.lit(" appears "),
-                    kcount.cast("string"),
-                    F.lit(
-                        " times); duplicate keys merge distinct docs "
-                        "into one dedup decision and fan the "
-                        "survivors join out. Dedup or re-key upstream."
-                    ),
-                )
-            )
+        unique_key_guard(
+            F.col("__keep__"), "__id__", "dedup_incremental_semantic",
+            f"order_by {order_by!r}",
         ),
     )
     keep_ids = flags.filter(F.col("__keep__") == 1).select("__id__")
-    return new_df.join(
-        keep_ids.withColumnRenamed("__id__", order_by), order_by
-    ).select(*new_df.columns)
+    return _join_survivors(new_df, keep_ids, order_by)

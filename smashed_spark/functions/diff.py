@@ -19,7 +19,7 @@ FIELDS changed?").  Spark-first design:
   twice in each side yields four joined rows), so both sides carry
   the established count-window guard riding the SAME key
   partitioning the join needs — duplicates raise loudly, no extra
-  exchange (the pattern from sources/loaders.py `_guard_unique_key`);
+  exchange (``core.order.unique_key_guard``);
 * NULL keys raise loudly (a snapshot keyed by NULL is a data bug —
   the same stance as with_prefix_sum's NULL-key check).  Raising is
   also what keeps the join on PLAIN equality: a null-safe join would
@@ -37,53 +37,23 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.order import null_key_guard, unique_key_guard
+
 STATUS_ADDED = "added"
 STATUS_REMOVED = "removed"
 STATUS_CHANGED = "changed"
 STATUS_UNCHANGED = "unchanged"
 
 
-def _guarded(
-    df: DataFrame, keys: List[str], marker: str, side: str
-) -> DataFrame:
-    """Slim projection with a presence marker wrapped in the
-    duplicate-key raise.  The marker is CARRIED into the status
-    computation, so Catalyst cannot prune the guard away (the r9
-    lesson: a guard on a dropped synthetic column is pruned with
-    it)."""
-    from pyspark.sql.window import Window
-
-    kcount = F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    key_ok = F.lit(True)
-    for k in keys:
-        key_ok = key_ok & F.col(k).isNotNull()
-    return df.withColumn(
-        marker,
-        F.when(~key_ok, F.raise_error(
-            F.lit(
-                f"corpus_diff: NULL key {keys!r} in the {side} "
-                "snapshot; a snapshot keyed by NULL is a data bug "
-                "(and NULL keys never match across a plain join)."
-            )
-        )).when(kcount == 1, F.lit(True)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"corpus_diff: key {keys!r} is not unique in "
-                        f"the {side} snapshot (value "
-                    ),
-                    F.concat_ws(
-                        "/", *[F.col(k).cast("string") for k in keys]
-                    ),
-                    F.lit(" appears "),
-                    kcount.cast("string"),
-                    F.lit(
-                        " times); the full-outer join would fan out. "
-                        "Dedup the snapshot or pass a unique key."
-                    ),
-                )
-            )
-        ),
+def _present(keys: List[str], side: str) -> Column:
+    """The side's presence marker, wrapped in the NULL-key and
+    duplicate-key raises (NULL first).  The marker is CARRIED into the
+    status computation, so Catalyst cannot prune the guards away (a
+    guard on a dropped synthetic column is pruned with it)."""
+    name = f"key {keys!r} in the {side} snapshot"
+    return null_key_guard(
+        unique_key_guard(F.lit(True), keys, "corpus_diff", name),
+        keys, "corpus_diff", name,
     )
 
 
@@ -132,16 +102,14 @@ def corpus_diff(
             raise ValueError(
                 f"output column {c!r} collides with a key/compare field"
             )
-    o = _guarded(
-        old.select(*keys, *compare), keys, "__old_present__", "old"
-    ).select(
+    # guard, then rename, in two steps: folded into one select, the
+    # join plans a second exchange per side (test_diff pins one)
+    o = old.withColumn("__old_present__", _present(keys, "old")).select(
         *[F.col(k).alias(f"__ok_{k}__") for k in keys],
         *[F.col(c).alias(f"__o_{c}__") for c in compare],
         "__old_present__",
     )
-    n = _guarded(
-        new.select(*keys, *compare), keys, "__new_present__", "new"
-    ).select(
+    n = new.withColumn("__new_present__", _present(keys, "new")).select(
         *[F.col(k).alias(f"__nk_{k}__") for k in keys],
         *[F.col(c).alias(f"__n_{c}__") for c in compare],
         "__new_present__",

@@ -268,6 +268,15 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return guarded_cosine(vector_dot(da, db), vector_norm(da), vector_norm(db))
 
 
+def vector_dims(df, vector_field: str, dims=None):
+    """``dims`` when given, else the length of the first row's vector
+    (one one-row job), or ``None`` when ``df`` has no rows."""
+    if dims:
+        return dims
+    row = df.select(vector_field).first()
+    return None if row is None else len(row[0])
+
+
 def broadcast_matrix(df, vector_field: str, id_field=None):
     """Collect ``df``'s vectors to the driver and broadcast ``(ids,
     mat, norms)``: int64 ids (``None`` without ``id_field``), the

@@ -53,6 +53,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.order import null_key_guard
 from .classifier import (
     MAX_NARROW_DIMS,
     _feature_index,
@@ -124,17 +125,9 @@ def _gumbel_perturbed_key(
     in.  One definition so the global and grouped draws can never
     silently diverge — the dsir_select gate certifies them against
     the SAME arithmetic."""
-    id_col = F.col(id_field)
-    guarded_id = F.when(
-        id_col.isNull(),
-        F.raise_error(
-            F.lit(
-                f"{fn_name}: id_field {id_field!r} has a NULL — a "
-                "NULL id cannot seed a deterministic draw. Filter or "
-                "fill the id column."
-            )
-        ),
-    ).otherwise(id_col)
+    guarded_id = null_key_guard(
+        F.col(id_field), id_field, fn_name, f"id_field {id_field!r}"
+    )
     w = F.col(weight_field).cast("double")
     guarded_w = F.when(
         w.isNull() | F.isnan(w),

@@ -33,6 +33,7 @@ from .hashing import (
     cosine_rows,
     guarded_cosine,
     unit_rows,
+    vector_dims,
     vector_dot,
     vector_norm,
 )
@@ -375,9 +376,14 @@ class HyperplaneLSHTopK(SparkMapper):
         assert isinstance(dtype, ArrayType)
         # dims must be known to build the plan; pass dims= to avoid the
         # one-row probe job at plan-construction time
-        dims = self.dims or len(
-            df.select(self.vector_field).limit(1).collect()[0][0]
-        )
+        dims = vector_dims(df, self.vector_field, self.dims)
+        if dims is None:  # empty corpus
+            return df.select(
+                F.col(self.id_field).alias("query_id"),
+                F.col(self.id_field).alias("neighbor_id"),
+                F.lit(0.0).alias("sim"),
+                F.lit(0).alias("rank"),
+            ).limit(0)
 
         vec = F.col(self.vector_field)
         base = df.select(

@@ -24,9 +24,9 @@ join exchanges entirely — the helper API stays the same.
 Join semantics: ``join_attributes`` broadcasts the sidecar when it is
 small (one bounded count against the shared key cap of
 core/sizing.py), else a plain equi-join; duplicate sidecar keys raise
-IN-PLAN via the shared ``_guard_unique_key`` window (riding the
-join's own partitioning) — a duplicated attribute row would silently
-multiply corpus rows.
+IN-PLAN via the shared ``core.order.unique_key_guard`` window
+(riding the join's own partitioning) — a duplicated attribute row
+would silently multiply corpus rows.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import sizing
-from .loaders import _guard_unique_key
+from ..core.order import unique_key_guard
 
 __all__ = ["write_attributes", "read_attributes", "join_attributes"]
 
@@ -163,8 +163,12 @@ def join_attributes(
     # not a synthetic dropped column — Catalyst prunes an unused
     # column together with the guard expression inside it (the
     # simhash occupancy-guard lesson).
-    guarded = _guard_unique_key(
-        attrs, key_field, probe_cols[0], "join_attributes"
+    guarded = attrs.withColumn(
+        probe_cols[0],
+        unique_key_guard(
+            F.col(probe_cols[0]), key_field, "join_attributes",
+            f"join key {key_field!r}",
+        ),
     )
     small = sizing.fits(attrs.select(key_field), sizing.BROADCAST_KEYS)
     right = F.broadcast(guarded) if small else guarded

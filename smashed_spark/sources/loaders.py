@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.mapper import SparkMapper
+from ..core.order import unique_key_guard
 
 
 class CsvLoaderMapper(SparkMapper):
@@ -556,8 +557,12 @@ def select_under_token_budget(
         df, token_budget, tokens_field, score_field, key_field,
         keep_field,
     )
-    flags = _guard_unique_key(
-        flags, key_field, keep_field, "select_under_token_budget"
+    flags = flags.withColumn(
+        keep_field,
+        unique_key_guard(
+            F.col(keep_field), key_field, "select_under_token_budget",
+            f"join key {key_field!r}",
+        ),
     )
     out = df.join(flags, key_field).select(*df.columns, keep_field)
     if drop:
@@ -577,8 +582,11 @@ def _budget_flags(
     tokens)`` projection — shared by the global and the per-source
     selectors.  with_prefix_sum requires a total key: (neg score, key)
     is total when key is unique, which dedup upstream guarantees — and
-    which _guard_unique_key ENFORCES on the returned flags before any
-    join-back."""
+    which :func:`~smashed_spark.core.order.unique_key_guard` ENFORCES
+    on the returned flags before any join-back (with_prefix_sum's
+    totality check is on (negscore, key), which duplicate keys with
+    DISTINCT scores pass; the count window rides the hash partitioning
+    the join-back needs, so the slim side pays no extra exchange)."""
     from ..functions.packing import with_prefix_sum
 
     # dict.fromkeys dedupes while preserving order: score_field may BE
@@ -594,47 +602,6 @@ def _budget_flags(
         (F.col("__prefix__") < F.lit(token_budget))
         .cast("int")
         .alias(keep_field),
-    )
-
-
-def _guard_unique_key(
-    flags: DataFrame,
-    key_fields: "str | List[str]",
-    keep_field: str,
-    fn_name: str,
-) -> DataFrame:
-    """Duplicate join keys would fan the keep-flag join-back out and
-    silently multiply corpus rows — and with_prefix_sum's totality
-    check is on (negscore, key), which duplicate keys with DISTINCT
-    scores pass.  A count window over the join key(s) (riding the
-    same hash partitioning the join-back needs — no extra exchange on
-    the slim flags side) raises loudly instead; NULL keys already
-    fail with_prefix_sum's NULL-key check."""
-    from pyspark.sql.window import Window
-
-    keys = [key_fields] if isinstance(key_fields, str) else list(key_fields)
-    kcount = F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    return flags.withColumn(
-        keep_field,
-        F.when(kcount == 1, F.col(keep_field)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"{fn_name}: join key {keys!r} is not unique "
-                        "(value "
-                    ),
-                    F.concat_ws(
-                        "/", *[F.col(k).cast("string") for k in keys]
-                    ),
-                    F.lit(" appears "),
-                    kcount.cast("string"),
-                    F.lit(
-                        " times); the keep-flag join-back would fan "
-                        "out rows. Dedup upstream or pass a unique key."
-                    ),
-                )
-            )
-        ),
     )
 
 
@@ -717,11 +684,13 @@ def select_under_token_budgets(
     # the guard runs on the UNION over the JOIN keys (key, source): a
     # key duplicated within a source fans the join-back out and raises;
     # the same key in another source is a different join key and fine
-    flags = _guard_unique_key(
-        flags,
-        [key_field, source_field],
+    flags = flags.withColumn(
         keep_field,
-        "select_under_token_budgets",
+        unique_key_guard(
+            F.col(keep_field), [key_field, source_field],
+            "select_under_token_budgets",
+            f"join key {[key_field, source_field]!r}",
+        ),
     )
     out = (
         df.join(flags, [key_field, source_field], "left")

@@ -134,13 +134,16 @@ def ingest_dedup_batch(
     semantic_threshold: float = 0.8,
     vector_field: str = "embedding",
     return_stats: bool = False,
-    digest_bloom=None,
     survivors_sink=None,
 ) -> "Optional[dict]":
     """Scrub ONE batch against the running indexes and commit
     survivors + index extensions under ``batch=<batch_id>`` —
     idempotent (overwrite) per batch id.  This is the foreachBatch
     body, also callable directly for a batch backfill.
+
+    Each tier checks the batch against its index with one exact join:
+    a broadcast probe, or the plain join when the index is small or
+    the batch too big to broadcast, routed here once per batch.
 
     ``survivors_sink`` (a ``(DataFrame, batch_id) -> None`` callable,
     mutually exclusive with ``out_dir``) replaces the per-batch
@@ -259,14 +262,6 @@ def ingest_dedup_batch(
         # broadcast, so the plain anti-join runs instead (resolved by
         # the single raw-batch sizing job above)
         broadcast_probe=probe_exact,
-        # optional Bloom prefilter (functions/bloom.py): pays most on
-        # exactly those oversized plain-join backfills — only
-        # suspected-dup rows cross the exchange.  The CALLER maintains
-        # the sketch (fit from the index, or merge() per-batch fits as
-        # batches commit — e.g. fit_bloom over this batch's survivors
-        # after return); a stale sketch re-admits duplicates, see the
-        # bloom module contract.
-        bloom=digest_bloom,
     )
     words_added = False
     if fuzzy:

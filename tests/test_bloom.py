@@ -1,13 +1,12 @@
 """Bloom membership sketch (functions/bloom.py): bit-level python +
 DuckDB replays of the md5/Kirsch-Mitzenmacher positions, the
-no-false-negative contract, fit determinism, merge algebra,
-save/load roundtrip, and the dedup_incremental(bloom=) prefilter."""
+no-false-negative contract, fit determinism, merge algebra and the
+save/load roundtrip."""
 
 import hashlib
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from smashed_spark.functions.bloom import (
     BloomFilterSketch,
@@ -164,69 +163,3 @@ def test_optimal_params_formula_and_validation():
         fit_bloom(None, "d", 100)  # not a word multiple
     with pytest.raises(ValueError, match="num_hashes"):
         fit_bloom(None, "d", 128, num_hashes=0)
-
-
-def test_dedup_incremental_bloom_prefilter_matches_plain(spark):
-    """bloom= must not change the output — same survivors, any FPR —
-    while definitely-new rows skip the join (the plain-mode shuffle
-    shrinks to the suspected-dup side)."""
-    from smashed_spark.functions.dedup import (
-        dedup_incremental,
-        with_digests,
-    )
-
-    hist = spark.createDataFrame(
-        [(i, f"old text {i}") for i in range(50)],
-        "doc_id long, text string",
-    )
-    index = with_digests(hist)
-    # batch: 30 new docs + 10 reposts of history + an in-batch dup pair
-    batch = spark.createDataFrame(
-        [(100 + i, f"new text {i}") for i in range(30)]
-        + [(200 + i, f"old text {i}") for i in range(10)]
-        + [(300, "twin text"), (301, "twin text")],
-        "doc_id long, text string",
-    )
-    sk = fit_bloom(index, "digest", BITS, HASHES)
-    plain = sorted(
-        r["doc_id"] for r in dedup_incremental(batch, index).collect()
-    )
-    bloomed = sorted(
-        r["doc_id"]
-        for r in dedup_incremental(batch, index, bloom=sk).collect()
-    )
-    assert bloomed == plain
-    assert 300 in bloomed and 301 not in bloomed  # in-batch first-wins
-    assert not any(200 <= d < 210 for d in bloomed)  # history drops
-    # probe mode agrees too
-    probed = sorted(
-        r["doc_id"]
-        for r in dedup_incremental(
-            batch, index, bloom=sk, broadcast_probe=True
-        ).collect()
-    )
-    assert probed == plain
-
-
-def test_dedup_incremental_stale_bloom_is_the_documented_hazard(spark):
-    """Pins the operational contract: a sketch missing index keys
-    re-admits those duplicates — the failure mode the docstring
-    warns about (so it is a real contract, not boilerplate)."""
-    from smashed_spark.functions.dedup import (
-        dedup_incremental,
-        with_digests,
-    )
-
-    hist = spark.createDataFrame(
-        [(i, f"old text {i}") for i in range(20)],
-        "doc_id long, text string",
-    )
-    index = with_digests(hist)
-    stale = fit_bloom(
-        with_digests(hist.limit(0)), "digest", BITS, HASHES
-    )  # fit over NOTHING: every key missing
-    batch = spark.createDataFrame(
-        [(500, "old text 3")], "doc_id long, text string"
-    )
-    out = dedup_incremental(batch, index, bloom=stale).collect()
-    assert [r["doc_id"] for r in out] == [500]  # dup re-admitted

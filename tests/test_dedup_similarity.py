@@ -105,10 +105,10 @@ def test_cosine_topk(spark):
 
 
 def _over_cap(mapper):
-    """``mapper`` with both broadcast caps at 0, so the size router
-    sends any corpus past its broadcast tier."""
-    mapper.BROADCAST_LIMIT_BYTES = 0
-    mapper.BROADCAST_LIMIT_ROWS = 0
+    """``mapper`` with both broadcast caps at -1, so the size router
+    sends any corpus, an empty one too, past its broadcast tier."""
+    mapper.BROADCAST_LIMIT_BYTES = -1
+    mapper.BROADCAST_LIMIT_ROWS = -1
     return mapper
 
 
@@ -198,10 +198,18 @@ def test_cosine_topk_zero_norm_vectors(spark):
 
 def test_cosine_operators_empty_corpus(spark):
     """An empty corpus gives an empty result, not a numpy AxisError in
-    the broadcast tier's driver-side norm computation."""
+    the broadcast tier's driver-side norm computation, nor an
+    IndexError in the LSH tiers' one-row dims probe (no ``dims=``)."""
     empty = spark.createDataFrame([], "vec_id: bigint, embedding: array<double>")
     assert CosineTopK(k=2).map(empty).collect() == []
     assert EmbeddingNearDupPairsMapper(dims=2).map(empty).collect() == []
+    lsh_topk = HyperplaneLSHTopK(k=2).map(empty)
+    assert lsh_topk.columns == ["query_id", "neighbor_id", "sim", "rank"]
+    assert lsh_topk.collect() == []
+    with pytest.warns(UserWarning, match="approximate LSH"):
+        lsh_pairs = _over_cap(EmbeddingNearDupPairsMapper()).map(empty)
+    assert lsh_pairs.columns == ["id_a", "id_b", "sim"]
+    assert lsh_pairs.collect() == []
 
 
 def test_embedding_near_dup(spark):

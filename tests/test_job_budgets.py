@@ -1,12 +1,19 @@
 """Job budgets for the verbs that route broadcast-or-shuffle through
-core/sizing.py: each verb's Spark job count on a fixed small input,
-so a change that adds a job (a second sizing probe, a lost known
-count) fails here instead of surfacing later as benchmark drift.
-Both tiers of every routed decision are pinned."""
+core/sizing.py, and for both index-check modes of the incremental
+dedup tiers: each verb's Spark job count on a fixed small input, so a
+change that adds a job (a second sizing probe, a lost known count)
+fails here instead of surfacing later as benchmark drift.  Both tiers
+of every routed decision are pinned."""
 
 from pyspark.sql import functions as F
 
 from smashed_spark.core import sizing
+from smashed_spark.functions.dedup import (
+    dedup_incremental,
+    dedup_incremental_fuzzy,
+    with_digests,
+    with_minhash_bands,
+)
 from smashed_spark.sources.attributes import join_attributes, write_attributes
 from smashed_spark.sources.retention import apply_deletions
 from smashed_spark.sources.snapshot import (
@@ -37,6 +44,35 @@ def test_ingest_batch_job_budget(spark, tmp_path, count_jobs):
     _, first = count_jobs(lambda: ingest_dedup_batch(b0, state, out, 0))
     _, later = count_jobs(lambda: ingest_dedup_batch(b1, state, out, 1))
     assert (first, later) == (10, 14)
+
+
+def test_dedup_incremental_job_budgets(spark, tmp_path, count_jobs):
+    # a 20-doc history index on disk; the batch reposts 5 of its docs
+    hist = _docs(spark, range(20)).withColumn("words", F.split("text", " "))
+    with_digests(hist).write.parquet(str(tmp_path / "digests"))
+    with_minhash_bands(hist).write.parquet(str(tmp_path / "bands"))
+    digests = spark.read.parquet(str(tmp_path / "digests"))
+    bands = spark.read.parquet(str(tmp_path / "bands"))
+    batch = _docs(spark, list(range(5)) + list(range(20, 30)))
+    words = batch.withColumn("words", F.split("text", " "))
+    jobs = {}
+    for probe in (False, True):
+        _, jobs["exact", probe] = count_jobs(
+            lambda: _noop(
+                dedup_incremental(batch, digests, broadcast_probe=probe)
+            )
+        )
+        _, jobs["fuzzy", probe] = count_jobs(
+            lambda: _noop(
+                dedup_incremental_fuzzy(words, bands, broadcast_probe=probe)
+            )
+        )
+    assert jobs == {
+        ("exact", False): 3,
+        ("exact", True): 6,
+        ("fuzzy", False): 7,
+        ("fuzzy", True): 10,
+    }
 
 
 def test_apply_deletions_job_budget(spark, tmp_path, count_jobs, monkeypatch):

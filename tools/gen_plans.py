@@ -995,26 +995,12 @@ past that, keep m fixed and let FPR degrade — saturation**k is
 monitorable, false positives only cost exact confirms, false
 negatives impossible for covered keys.  Mergeable via OR (merge ==
 fit-on-union, test-pinned), so ingestion ORs a per-batch fit into
-the running sketch at commit time.  dedup_incremental(bloom=) uses
-it in TWO mode-specific shapes.  Probe mode: the slim distinct-
-digest probe set is bloom-filtered before the broadcast — one Arrow
-pass over <= |distinct digests| rows, smaller broadcast, wide rows
-untouched; strictly cheaper, no caveats.  Plain mode (the
-unbroadcastable backfill): the batch splits so only suspected dups
-cross the anti-join exchange — and the BENCH_SCALE probes
-(bloom_backfill + the explicit-only bloom_backfill_wide at ~60 KB
-rows) measure it losing at EVERY width on this harness, for a reason
-the probe itself names: local[32] "shuffles" are same-machine memory
-copies, so the bytes the split removes are nearly free locally while
-its membership UDF + double batch evaluation always cost.  The
-split's actual regime is NETWORK-bound cluster shuffles, which a
-single node cannot exhibit — the docs mark it cluster-only and steer
-every probe-eligible caller to probe mode.  Recording a negative
-local result + its mechanism beats extrapolating a win the harness
-cannot show.  The operational
-hazard — a STALE sketch missing index keys re-admits those dups —
-is pinned by a test as the documented contract, and output equality
-bloom-vs-plain is pinned in both join modes.
+the running sketch at commit time.  sample_mix uses it to flag
+survivors against the history digest index.  An earlier dedup
+prefilter built on it (dedup_incremental(bloom=)) was removed: the
+BENCH_SCALE bloom_backfill probes measured it slower than the plain
+exact join in 7 of 8 cells on one node, and a stale sketch silently
+re-admitted duplicates.
 
 ## Round-11 UrlHostMapper custom PSL (r10 VERDICT ask #7)
 

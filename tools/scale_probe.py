@@ -1517,239 +1517,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # r11: the Bloom prefilter's design claim measured — a backfill
-    # "batch" growing 1x/10x/100x against a FIXED index, plain
-    # anti-join vs bloom-prefiltered.  autoBroadcastJoinThreshold is
-    # disabled for BOTH variants to simulate the big-index regime the
-    # feature targets (an index too large to broadcast; at probe scale
-    # Catalyst would otherwise broadcast the 5k-digest index and hide
-    # the batch-side exchange the bloom removes) — same pinning
-    # convention as test_attributes' routing tests.
-    bloom_selected = not only or "bloom_backfill" in only
-
-    def run_bloom_backfill(doc_dir: str, reps: int = 2):
-        from pyspark.sql import functions as F
-
-        from smashed_spark.functions.bloom import fit_bloom
-        from smashed_spark.functions.dedup import (
-            dedup_incremental,
-            with_digests,
-        )
-
-        hist = spark.read.parquet(f"{BASE}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        index = with_digests(hist).localCheckpoint(eager=True)
-        # batch = doc_dir docs word-tagged (all new) + reposts of the
-        # full index content (the dups the join must find)
-        new_part = (
-            spark.read.parquet(f"{doc_dir}/documents.parquet")
-            .select("doc_id", "text")
-            .withColumn(
-                "text",
-                F.array_join(
-                    F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(w, F.lit("bq")),
-                    ),
-                    " ",
-                ),
-            )
-        )
-        batch = new_part.unionByName(
-            hist.withColumn("doc_id", F.col("doc_id") + F.lit(10**13))
-        ).localCheckpoint(eager=True)
-        sk = fit_bloom(index, "digest", 1 << 17, 4)  # untimed
-        old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_adp = spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-        )
-        out = {}
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
-            )
-            for label, bloom, probe_mode in (
-                ("plain", None, False),
-                ("bloom", sk, False),
-                ("probe", None, True),
-                ("probe_bloom", sk, True),
-            ):
-                best = -1.0
-                for _ in range(reps):
-                    isolate()
-                    t0 = time.perf_counter()
-                    dedup_incremental(
-                        batch,
-                        index,
-                        bloom=bloom,
-                        broadcast_probe=probe_mode,
-                    ).write.format("noop").mode("overwrite").save()
-                    dt = time.perf_counter() - t0
-                    best = dt if best < 0 else min(best, dt)
-                out[label] = round(best, 3)
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", old_thr
-            )
-            if old_adp is not None:
-                spark.conf.set(
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold",
-                    old_adp,
-                )
-            else:
-                # previously UNSET: unset again, or the -1 leaks into
-                # every later (deep-phase) measurement with AQE's
-                # shuffle->broadcast demotion silently disabled
-                spark.conf.unset(
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold"
-                )
-            batch.unpersist()
-            index.unpersist()
-        return out
-
-    if bloom_selected:
-        b1 = run_bloom_backfill(BASE)
-        b10 = run_bloom_backfill(scaled_dir)
-        result["queries"]["bloom_backfill"] = {
-            "sec_1x": b1,
-            "sec_10x": b10,
-            "note": (
-                "fixed 5k-digest index; batch = Nx new docs + full "
-                "index reposts; auto-broadcast disabled in all "
-                "variants (big-index regime: the anti-join cannot "
-                "broadcast its right side).  plain/bloom = plain "
-                "anti-join without/with the batch split (split "
-                "crossover depends on ROW WIDTH: exchange saved ~ "
-                "width x rows, membership UDF ~ rows — these probe "
-                "rows are ~1 KB, far below the ~100 KB documents the "
-                "split targets, so the split losing here is the "
-                "documented narrow-row regime, not a surprise); "
-                "probe/probe_bloom = broadcast-probe mode "
-                "without/with the slim distinct-digest bloom filter "
-                "(no wide-row split — strictly-cheaper shape)"
-            ),
-        }
-        print(
-            f"# bloom_backfill: 1x {b1}; 10x {b10}",
-            file=sys.stderr,
-        )
-
-    # r11: the width-crossover claim MEASURED — same A/B but with the
-    # batch text widened ~60x (to ~60 KB/row, the document regime the
-    # plain-mode split targets).  Explicit-selection only ("
-    # bloom_backfill_wide"): the wide shuffle is deliberately
-    # expensive, that being the point.
-    wide_selected = "bloom_backfill_wide" in only
-
-    def run_bloom_wide(reps: int = 2):
-        from pyspark.sql import functions as F
-
-        from smashed_spark.functions.bloom import fit_bloom
-        from smashed_spark.functions.dedup import (
-            dedup_incremental,
-            with_digests,
-        )
-
-        hist = spark.read.parquet(f"{BASE}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        index = with_digests(hist).localCheckpoint(eager=True)
-        widen = F.array_join(
-            F.array_repeat(F.col("text"), 60), " x "
-        )
-        new_part = (
-            spark.read.parquet(f"{BASE}/documents.parquet")
-            .select("doc_id", "text")
-            .withColumn("doc_id", F.col("doc_id") + F.lit(10**12))
-            .withColumn(
-                "text",
-                F.concat(widen, F.lit(" zq"), F.col("doc_id").cast("string")),
-            )
-        )
-        # reposts must carry the INDEXED text (the narrow one) to be
-        # dups — so the width lives in the new rows the split saves
-        batch = new_part.unionByName(
-            hist.withColumn("doc_id", F.col("doc_id") + F.lit(10**13))
-        ).localCheckpoint(eager=True)
-        sk = fit_bloom(index, "digest", 1 << 17, 4)
-        old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_adp = spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-        )
-        out = {}
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
-            )
-            for label, bloom in (("plain", None), ("bloom", sk)):
-                best = -1.0
-                for _ in range(reps):
-                    isolate()
-                    t0 = time.perf_counter()
-                    dedup_incremental(
-                        batch, index, bloom=bloom
-                    ).write.format("noop").mode("overwrite").save()
-                    dt = time.perf_counter() - t0
-                    best = dt if best < 0 else min(best, dt)
-                out[label] = round(best, 3)
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", old_thr
-            )
-            if old_adp is not None:
-                spark.conf.set(
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold",
-                    old_adp,
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold"
-                )
-            batch.unpersist()
-            index.unpersist()
-        return out
-
-    if wide_selected:
-        bw = run_bloom_wide()
-        sp = (
-            round(bw["plain"] / bw["bloom"], 2)
-            if bw["bloom"] > 0 else None
-        )
-        result["queries"]["bloom_backfill_wide"] = {
-            "plain_sec": bw["plain"],
-            "bloom_sec": bw["bloom"],
-            "split_speedup": sp,
-            "note": (
-                "same fixed-index A/B as bloom_backfill but new-row "
-                "text widened ~60x (~60 KB/row); reposts keep the "
-                "indexed narrow text"
-            ),
-            "verdict": (
-                f"wide-row backfill: split {sp}x the plain anti-join "
-                + (
-                    "— the width crossover is real, measured"
-                    if sp is not None and sp > 1.2
-                    else "— the split loses at EVERY width on this "
-                    "harness, and the reason is the harness: "
-                    "local[32] shuffles are same-machine memory "
-                    "copies, so the exchange bytes the split removes "
-                    "are nearly free here while its double batch "
-                    "evaluation always costs.  The split's regime is "
-                    "NETWORK-bound cluster shuffles, which a single "
-                    "node cannot measure — treat it as cluster-only "
-                    "and prefer probe mode wherever probe mode "
-                    "applies (see dedup_incremental docstring)"
-                )
-            ),
-        }
-        print(
-            f"# bloom_backfill_wide: {bw} split_speedup={sp}",
-            file=sys.stderr,
-        )
-
     # r11: the Z-order clustered write (sources/layout.py) — cost is
     # bounds fit (one agg scan) + range-sampling + ONE range exchange
     # + narrow sort + write, all linear terms; num_files held constant
@@ -2154,7 +1921,6 @@ def main() -> None:
         and not ingest_selected
         and not profile_selected
         and not attrs_selected
-        and not bloom_selected
     ):
         with open(out_json, "w") as f:
             json.dump(result, f, indent=1)
@@ -2174,9 +1940,8 @@ def main() -> None:
         # r9: the 128-bit tier gets its second decade too (judge ask
         # #4) — same word-tagged documents blowup
         deep_tables.add("documents")
-    if profile_selected or attrs_selected or bloom_selected:
-        # r11: profiler / sidecar-join / bloom-backfill 100x points
-        # read documents
+    if profile_selected or attrs_selected:
+        # r11: profiler / sidecar-join 100x points read documents
         deep_tables.add("documents")
     if sem_selected:
         # r7: SemDeDup gets its second decade too — k scales another
@@ -2233,34 +1998,6 @@ def main() -> None:
         print(
             f"# ingest_history_sweep: hist_100x={s100}s "
             f"flatness={flat}",
-            file=sys.stderr,
-        )
-    if bloom_selected:
-        b100 = run_bloom_backfill(deep_dir, reps=1)
-        q = result["queries"]["bloom_backfill"]
-        q["sec_100x"] = b100
-        split_sp = (
-            round(b100["plain"] / b100["bloom"], 2)
-            if b100["bloom"] > 0 else None
-        )
-        probe_sp = (
-            round(b100["probe"] / b100["probe_bloom"], 2)
-            if b100["probe_bloom"] > 0 else None
-        )
-        q["split_speedup_100x"] = split_sp
-        q["probe_speedup_100x"] = probe_sp
-        q["verdict"] = (
-            f"500k-row backfill, unbroadcastable index: plain-mode "
-            f"split {split_sp}x (~1 KB rows — the documented "
-            f"narrow-row regime where the split loses; the split "
-            f"targets ~100 KB documents where the exchange is ~100x "
-            f"these bytes), probe-mode slim-digest bloom "
-            f"{probe_sp}x (no wide-row split; expected ~parity here "
-            f"since the probe broadcast is already small)"
-        )
-        print(
-            f"# bloom_backfill: 100x {b100} split_speedup={split_sp} "
-            f"probe_speedup={probe_sp}",
             file=sys.stderr,
         )
     if profile_selected:
