@@ -52,7 +52,10 @@ def ensure_shipped(spark) -> None:
     rebuilt whenever its members differ from the package's sources, so
     a worker never imports an older copy of the package; the rebuild
     writes a temp file in the same directory and renames it onto the
-    path, so a concurrent reader sees the old zip or the new one."""
+    path, so a concurrent reader sees the old zip or the new one.  The
+    zip is world-readable, so other users of a shared temp dir reuse a
+    current one; when the rename is refused (a stale zip another user
+    owns in a sticky temp dir), this session ships its own temp copy."""
     sid = id(spark.sparkContext)
     if sid in _SHIPPED:
         return
@@ -65,7 +68,10 @@ def ensure_shipped(spark) -> None:
             with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
                 for name, data in sources.items():
                     zf.writestr(name, data)
+            os.chmod(tmp, 0o644)
             os.replace(tmp, zip_path)
+        except PermissionError:
+            zip_path = tmp
         except BaseException:
             os.unlink(tmp)
             raise

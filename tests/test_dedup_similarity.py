@@ -1371,6 +1371,29 @@ def test_dedup_incremental_order_key_fail_fast(spark):
             dup2.withColumn("words", F.split("text", " ")), empty_bands
         ).collect()
 
+    # the guard holds on the verify path and in probe mode too, against
+    # an empty index and against one that holds a batch doc's band keys
+    from smashed_spark.functions.dedup import with_minhash_bands
+
+    seen_bands = with_minhash_bands(
+        dup2.where("text = 'aaa bbb ccc'").withColumn(
+            "words", F.split("text", " ")
+        )
+    ).select("band", "key")
+    for index in (empty_bands, seen_bands):
+        for opts in (
+            {"verify_threshold": 0.5},
+            {"broadcast_probe": True},
+            {"verify_threshold": 0.5, "broadcast_probe": True},
+        ):
+            for batch in (dup, dup2):
+                with pytest.raises(Exception, match="not unique"):
+                    dedup_incremental_fuzzy(
+                        batch.withColumn("words", F.split("text", " ")),
+                        index,
+                        **opts,
+                    ).collect()
+
 
 def test_dedup_incremental_fuzzy_verify_threshold(spark):
     """Opt-in in-batch verification: batch-internal band collisions

@@ -49,3 +49,29 @@ def test_stale_package_zip_is_rebuilt(tmp_path, monkeypatch):
     ship.ensure_shipped(second)
     assert second.sparkContext.added == [str(zip_path)]
     assert zip_path.stat().st_mtime_ns == stamp
+    # world-readable, like a zip written under the usual umask, so other
+    # users of a shared temp dir can reuse a current one
+    assert zip_path.stat().st_mode & 0o777 == 0o644
+
+
+def test_refused_rename_ships_a_private_copy(tmp_path, monkeypatch):
+    """A stale zip that another user owns in a sticky temp dir cannot be
+    replaced; the session then ships its own freshly built copy."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(ship, "_SHIPPED", set())
+    zip_path = tmp_path / "smashed_spark_pyfiles.zip"
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        zf.writestr("smashed_spark/__init__.py", "STALE = True\n")
+
+    def refuse(src, dst):
+        raise PermissionError(1, "Operation not permitted", dst)
+
+    monkeypatch.setattr(os, "replace", refuse)
+    session = _Session()
+    ship.ensure_shipped(session)
+    (shipped,) = session.sparkContext.added
+    assert shipped != str(zip_path)
+    with zipfile.ZipFile(shipped) as zf:
+        assert {n: zf.read(n) for n in zf.namelist()} == _sources()
+    with zipfile.ZipFile(zip_path) as zf:  # the other user's zip is untouched
+        assert zf.namelist() == ["smashed_spark/__init__.py"]
